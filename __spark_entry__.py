@@ -9,53 +9,13 @@ All real logic lives in the ``movies_etl_spark`` package; this module is
 the thin registry adapter.
 
 Ordering note: the driver records CORRECTNESS rows for exactly the first
-50 entries of ``queries()``, so cohorts rotate across rounds (r1: the
-first 50 in registration order; r2: the 50 r1 left unverified; r3: the
-16 never-checked + 2 newly-oracled twins + 32 of the 57 r3 additions;
-r4: the 25 r3-overflow + 3 re-rotated ETL composites + 18 r4 additions
-+ 4 refactor re-validations — closing the union at 188/188 checked;
-r5: 14 additions + the 8 post-freeze rewrites VERDICT r4 flagged + 5
-re-validations + 23 r1-cohort re-proofs — union 202/210). Round 6's
-window (_ROUND6_PRIORITY below) leads with the 8 round-5 overflow
-queries (their first driver rows close the union at 210/210), then the
-2 round-6 additions, the full 21-row r1 cohort (the oldest claims in
-the union, 5 rounds stale), 5 re-validations of queries whose conf or
-sketch plumbing round 6 touched, and 14 oldest r2 rows — closing the
-union at 212/212. Round 7's window (_ROUND7_PRIORITY below) is pure
-freshness + re-validation: the 26 r2-stale rows, the 13 queries whose
-banding/HLL-oracle/conf plumbing round 7 touched, and the 11 oldest r3
-rows. Round 8's window (_ROUND8_PRIORITY below): curation_pipeline +
-the 8 other consumers of the r8-rewritten candidate generator /
-connected-components path, the newly oracle-gated approx_stats, the
-one r8 addition (streaming_cms_freq), the re-defaulted
-streaming_sessionize, the 5 consumers of the r8 fused-extraction
-binding (expr.py rewrite), and 33 of the 34 remaining r3-latest rows
-— after r8 one r3-latest name (compact_small_files) plus the r4
-cohort queue for r9. Round 9's window (_ROUND9_PRIORITY below): the 7
-consumers of the r9-rewritten capped candidate generator, the one r9
-addition (ann_frontier_sweep), compact_small_files, the 4 displaced r4
-names, and 37 of the 38 remaining r4-latest rows (similarity_topk
-queues for r10). Round 10's window (_ROUND10_PRIORITY below):
-similarity_topk (the union's only pre-r5 row), the 6 consumers of the
-r10 checkpoint-audit/LUT-cache hygiene rewrites, streaming_lsh_dedup
-(the r10 profiling rewrite's sole consumer), the complete 39-name
-r5-latest cohort, and the 4 oldest r6 rows — after r10 no union row is
-older than r6. Round 11's window (_ROUND11_PRIORITY below): the three
-stale-rewrite certifications VERDICT r10 #1 ordered first
-(dedup_semantic_incremental / kmeans_assign / ann_frontier_sweep —
-driver rows that certified retired code), the r11 verify-shape rewrite
-consumer (streaming_lsh_dedup), the one r11 addition
-(span_dedup_sliding), the complete remaining r6-latest cohort (36),
-and the 9 oldest r7 rows — after r11 no union row is older than r7.
-Round 12's window (_ROUND12_PRIORITY below): the 10 consumers of the
-r12 llm_corpus build-side rewrites (local BPE trainer, map-only
-Lloyd's assignment, cosine-kernel carry) + the streaming-LSH
-per-batch work, the complete 30-name r7-latest cohort, and the 10
-oldest r8 rows — after r12 no union row is older than r8.
+50 entries of ``queries()``, so ``_CURRENT_PRIORITY`` names those 50 and
+everything else follows in registration order. Earlier rounds' windows
+and their rotation ledgers live in git history and NOTES_r*.md.
 
 REGISTRATION POLICY (codified after three rounds of overflow debt):
 new queries register ONLY while the round's window has open slots and
-are placed inside the first 50 of _ROUND{N}_PRIORITY at registration
+are placed inside the first 50 of _CURRENT_PRIORITY at registration
 time. If a late-round query cannot fit, it is NOT registered until the
 next round opens (no more post-freeze registrations riding on local
 verification alone); the one-round-lag path is retired. NOTES_r3–r7.md
@@ -106,7 +66,7 @@ SF_SMOKE_DIR = "/root/testdata/sf0.001"
 #   28-50: the 23 oldest r14-latest rows, union-report order (skipping
 #          streaming_dedup_watermark, already slot 27). After r18 no
 #          union row is older than r14 — VERDICT #1's done criterion.
-_ROUND18_PRIORITY = [
+_CURRENT_PRIORITY = [
     # complete r13-latest cohort, union-report order
     "decontaminate_ngram",
     "domain_mix_sample",
@@ -160,1345 +120,6 @@ _ROUND18_PRIORITY = [
     "dedup_exact_normalized",
     "streaming_hopping_window",
     "lang_id_confusion",
-]
-
-# Round-17 window (exactly 50; registered total 216 after the one r17
-# addition; NOTES_r17.md carries the ledger):
-#   1:     streaming_sessionize — consumer of the r17 sessionizer
-#          rewrite (int64 epoch-micros transport across the Arrow/
-#          pandas boundary: the old TIMESTAMP transport crashed the
-#          Python worker on in-range event times outside pandas
-#          datetime64[ns]'s [1677, 2262] span — the totality sweep's
-#          second in-range cliff). Also an oldest-r13 row, so the slot
-#          serves freshness too.
-#   2:     date_arithmetic — consumer of the r17 bounded_date_add guard
-#          (due_date: in-range order dates within 30 days of 9999-12-31
-#          crashed at collect). Re-validating rewritten-code consumers
-#          outranks pure freshness (the standing rule).
-#   3-4:   ann_recall_eval + ann_recall_clustered — the two consumers of
-#          the r17 shared_local_checkpoint dead-session sweep (ADVICE
-#          r16 low).
-#   5:     similarity_ann_tuned — the r17 addition (VERDICT r16 #6:
-#          recall-targeted cross-family operating-point selection over
-#          the clustered corpus, winner's top-5 emitted), registered
-#          inside the window per the registration policy.
-#   6-33:  the COMPLETE 28-name r12-latest cohort (the union's oldest
-#          rows after r16) in tools/correctness_union.py report order
-#          (VERDICT r16 #1 — re-counted at round start: exactly 28,
-#          matching the judge's histogram).
-#   34-50: the 17 oldest r13-latest rows, same order source (skipping
-#          streaming_sessionize, already slot 1). After r17 no union
-#          row is older than r13.
-_ROUND17_PRIORITY = [
-    # r17 rewrite consumers (standing rule) + the r17 addition
-    "streaming_sessionize",
-    "date_arithmetic",
-    "ann_recall_eval",
-    "ann_recall_clustered",
-    "similarity_ann_tuned",
-    # complete r12-latest cohort, union-report order
-    "array_functions",
-    "map_functions",
-    "null_semantics",
-    "scan_csv_permissive",
-    "pivot_sum",
-    "window_first_last",
-    "text_repetition_ratio",
-    "pii_redact",
-    "train_test_split",
-    "group_quota_sample",
-    "text_lang_id",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "kmeans_assign",
-    "multimodal_extract",
-    "streaming_windowed_agg",
-    "dedup_simhash_pairs",
-    "text_tfidf_topterms",
-    "multimodal_frame_sample",
-    "embedding_normalize",
-    "streaming_session_window",
-    "sessionize_batch",
-    "bucketed_join",
-    "dedup_semantic_clusters",
-    "join_skew_salted",
-    "bloom_join_prune",
-    "dedup_semantic_incremental",
-    # oldest r13-latest rows, union-report order (freshness filler;
-    # streaming_sessionize already holds slot 1)
-    "hierarchy_recursive_cte",
-    "json_typed_roundtrip",
-    "scan_binary_files",
-    "sink_dynamic_partition_overwrite",
-    "upsert_merge",
-    "scd2_intervals",
-    "skew_report",
-    "retention_cohorts",
-    "zscore_outliers",
-    "gapfill_daily",
-    "quantile_bucket",
-    "snapshot_diff",
-    "fuzzy_join_levenshtein",
-    "inverted_index",
-    "bm25_rank",
-    "time_weighted_avg",
-    "rolling_range_window",
-]
-
-# Round-16 window retained for the ledger (NOTES_r16.md references it);
-# _ordered() consumes _CURRENT_PRIORITY.
-# (exactly 50; registered total stays 215 — the surface
-# remains saturated at 46/46 and VERDICT r15 ranked the round as the
-# year-zero date-parse fix + the r11-cohort rotation, so no new
-# registrations; NOTES_r16.md carries the ledger):
-#   1-4:   the 4 registered consumers of the r16 date-family fix
-#          (VERDICT r15 #1: _bound_pydate guards to_date_inferred /
-#          parse_date_column / to_date_std against sub-year-1 and
-#          >9999 results — judge-reproduced crash on "00007").
-#          parse_date_multiform + validated_cast (r13-latest) and
-#          movies_etl_movies + movies_etl_movies_ratings (r12-latest);
-#          the fifth consumer (the fixture pipeline) is test-only.
-#          Re-validating rewritten-code consumers outranks pure
-#          freshness (the standing rule).
-#   5-42:  the COMPLETE 38-name r11-latest cohort (the union's oldest
-#          rows after r15) in tools/correctness_union.py report order
-#          (VERDICT r15 #2 — re-counted at round start: exactly 38,
-#          matching the judge's histogram, including the three
-#          displaced fillers window_running_sum /
-#          sink_parquet_overwrite / sink_append_chunked).
-#   43-50: the 8 oldest r12-latest rows, same order source, skipping
-#          the two r12 names already placed at 3-4. After r16 no
-#          union row is older than r12.
-_ROUND16_PRIORITY = [
-    # r16 date-family fix consumers (VERDICT r15 #1)
-    "parse_date_multiform",
-    "validated_cast",
-    "movies_etl_movies",
-    "movies_etl_movies_ratings",
-    # complete r11-latest cohort, union-report order
-    "sink_parquet_overwrite",
-    "sink_append_chunked",
-    "window_running_sum",
-    "rollup_agg",
-    "cube_agg",
-    "value_counts_array",
-    "groupby_count_salted_aqe_off",
-    "sample_hash",
-    "grouping_sets",
-    "explode_tokens",
-    "json_extract",
-    "partition_pruned_scan",
-    "set_union_all",
-    "set_except_all",
-    "corr_covar",
-    "unpivot_stack",
-    "percentile_by_group",
-    "date_arithmetic",
-    "string_functions",
-    "flagship_user_activity",
-    "aqp_sampled_groupby",
-    "token_count",
-    "text_quality_score",
-    "doc_fingerprint",
-    "dedup_exact",
-    "similarity_ann_ivf",
-    "dedup_incremental",
-    "training_data_filter",
-    "similarity_ivf_nprobe",
-    "span_dedup_sliding",
-    "data_quality_gate",
-    "quantile_sketch_cdf",
-    "regexp_extract_id",
-    "join_list_cell",
-    "strip_citations",
-    "parse_running_time",
-    "strip_money_ranges",
-    "feature_hash_vectorize",
-    # oldest r12-latest rows (union-report order; movies_etl_movies and
-    # movies_etl_movies_ratings already hold slots 3-4) — freshness filler
-    "approx_stats",
-    "scan_orc",
-    "scan_jsonl",
-    "scan_text",
-    "rank_battery",
-    "correlated_subquery",
-    "range_join_bucketed",
-    "asof_join_window",
-]
-
-# Round-15 window retained for the ledger (NOTES_r15.md references it);
-# _ordered() consumes _CURRENT_PRIORITY.
-# (exactly 50; registered total stays 215 — the
-# surface is saturated at 46/46 and VERDICT r14 ranked the round as
-# the anomaly-flag directional fix + the r10-cohort rotation + pin
-# re-mints + exec-side A/B cadence, so no new registrations;
-# NOTES_r15.md carries the ledger):
-#   1:     cms_join_size_estimate — consumer of the r15 ADVICE fixes
-#          (cms_inner_product_pair NULL-cell drop, ADVICE r14 #2; both
-#          exact variants filter null l_partkey + coalesce-to-0,
-#          ADVICE r14 #1). Its union row is r14-fresh; the slot exists
-#          because the operator code changed this round —
-#          re-validating rewritten-code consumers outranks pure
-#          freshness (the standing rule).
-#   2-42:  the COMPLETE 41-name r10-latest cohort (the union's oldest
-#          rows after r14) in tools/correctness_union.py report order
-#          (VERDICT r14 #2 — re-counted at round start: exactly 41,
-#          matching the judge's histogram, including the twice-
-#          displaced value_counts and null_count_per_column).
-#   43-47: the 5 oldest r11-latest rows, same order source
-#          (window_running_sum, sink_parquet_overwrite, and
-#          sink_append_chunked displaced by the three mid-round swaps;
-#          stay r11-latest, rotate r16).
-#   48-49: ann_recall_eval + ann_recall_clustered — the r15 exec-side
-#          A/B adoption #2 (shared-scan recall audits: 4/5 resident
-#          embeddings scans → one lazy-checkpoint materialization,
-#          values identical; tools/ab_recall_shared.py), swapped in
-#          mid-round as rewrite consumers.
-#   50:    concurrency_sweep — the r15 exec-side A/B adoption #1
-#          (one-scan sweep-line endpoints: events scans 4 → 2, values
-#          identical; tools/ab_concurrency_onescan.py), swapped in
-#          mid-round per the r13/r14 precedent.
-_ROUND15_PRIORITY = [
-    # r15 ADVICE-fix consumer (dual-sketch estimator identities made
-    # unconditional)
-    "cms_join_size_estimate",
-    # complete r10-latest cohort, union-report order
-    "null_count_per_column",
-    "value_counts",
-    "describe_stats",
-    "histogram",
-    "constant_column_detector",
-    "join_inner_equi",
-    "join_left_equi",
-    "join_semi",
-    "join_anti",
-    "filter_key_exists",
-    "filter_equality",
-    "filter_conflict_rows",
-    "dropna_column",
-    "prune_null_columns",
-    "select_reorder",
-    "drop_columns",
-    "rename_columns",
-    "canonicalize_keys",
-    "collect_map_column",
-    "dedup_by_key",
-    "set_union",
-    "set_intersect",
-    "set_except",
-    "topk_per_group",
-    "orderby_limit",
-    "cast_typed",
-    "fill_if_zero",
-    "movies_etl_ratings",
-    "groupby_count_salted",
-    "entropy_profile",
-    "embedding_quantize",
-    "similarity_topk",
-    "similarity_ann_multiprobe",
-    "ann_rerank",
-    "streaming_dedup",
-    "triangle_count",
-    "quantile_sketch_merge",
-    "hll_distinct_shards",
-    "heavy_hitters_cms",
-    "quantile_sketch_by_group",
-    "hll_set_overlap",
-    # oldest r11-latest rows (freshness filler; window_running_sum,
-    # sink_parquet_overwrite, and sink_append_chunked displaced by the
-    # three mid-round swaps — stay r11-latest, rotate r16)
-    "fillna_zero",
-    "from_unix_seconds",
-    "scan_json",
-    "scan_csv",
-    "scan_csv_inferred",
-    # exec-side A/B adoption #2 (shared-scan recall audits, mid-round
-    # swap; tools/ab_recall_shared.py)
-    "ann_recall_eval",
-    "ann_recall_clustered",
-    # exec-side A/B adoption #1 (one-scan sweep-line endpoints,
-    # mid-round swap per the r13/r14 precedent;
-    # tools/ab_concurrency_onescan.py)
-    "concurrency_sweep",
-]
-
-# Round-14 window (exactly 50; registered total stays 215 — the
-# surface is saturated at 46/46 and VERDICT r13 ranked the round as
-# the r9-cohort rotation + contention-flag fix + exec-side A/B, so no
-# new registrations; NOTES_r14.md carries the ledger):
-#   1-6:   the r14 dedup rewrite consumers — connected_components now
-#          filters null edge endpoints so the local union-find and the
-#          distributed label loop see the same well-defined edge list
-#          (ADVICE r13 #2), and verify_pairs' sh_all doc_id-uniqueness
-#          guard moved INTO the sh_a/sh_b output columns so it is a
-#          hard contract under Catalyst filter-merging (ADVICE r13 #3).
-#          Consumer set: the 3 components consumers + the 3 other
-#          verify_pairs consumers.
-#   7:     ann_frontier_sweep — the r14 exec-side A/B ADOPTED (VERDICT
-#          r13 #6): candidate generation shares one signature-table
-#          scan per (corpus, family) arm via cfg-tagged probe unions;
-#          84 → 62 exec jobs, identical values
-#          (tools/ab_frontier_shared.py).
-#   8:     streaming_lsh_dedup — its foreachBatch body extracted to
-#          module level (lsh_dedup_batch) for the store-side 100×
-#          measurement (VERDICT r13 #5); behavior-identical, standing
-#          re-validation rule applies.
-#   9:     cms_join_size_estimate — the round's SECOND exec-side A/B
-#          adoption (mid-round swap, r13 precedent): dual-counter
-#          single-pass sketch build + fused exact side (4 → 2 lineitem
-#          scans, 3 → 1 joins; tools/ab_cms_fused.py). Displaced the
-#          slot-50 r10 filler (value_counts — stays r10-latest, rotates
-#          in r15).
-#   10:    funnel_analysis — the fourth exec-side adoption (mid-round
-#          swap): one-pass window-stack funnel, found by the new
-#          tools/audit_scans.py (5 runtime events scans → 1; jobs
-#          11 → 4; tools/ab_funnel_onepass.py). Displaced the slot-50
-#          r10 filler (null_count_per_column — stays r10-latest,
-#          rotates r15).
-#   11-48: the COMPLETE 38-name r9-latest cohort (the union's oldest
-#          rows) in tools/correctness_union.py report order (VERDICT
-#          r13 #1 — the union's count of 38 is authoritative over
-#          NOTES_r13's tail note of 35; reconciliation in NOTES_r14).
-#   49-50: the 2 oldest r10-latest rows, same order source — after r14
-#          no union row is older than r10.
-_ROUND14_PRIORITY = [
-    # r14 dedup rewrite consumers (components null-edge alignment +
-    # verify_pairs hard-contract guard)
-    "curation_pipeline",
-    "dedup_cluster_components",
-    "dedup_survivors",
-    "dedup_minhash_lsh",
-    "dedup_minhash_incremental",
-    "llm_corpus_pipeline",
-    # exec-side A/B adoption (shared signature scans)
-    "ann_frontier_sweep",
-    # per-batch core extraction for the store-side 100× row
-    "streaming_lsh_dedup",
-    # exec-side A/B adoption #2 (fused dual-sketch join-size estimator)
-    "cms_join_size_estimate",
-    # exec-side A/B adoption #4 (one-pass window-stack funnel)
-    "funnel_analysis",
-    # complete r9-latest cohort, union-report order
-    "sink_jdbc_roundtrip",
-    "scan_error_checked",
-    "week_over_week",
-    "hopping_window_agg",
-    "winsorize_robust_scale",
-    "weighted_sample_topk",
-    "similarity_ann_lsh",
-    "dedup_embedding_cosine_vectorized",
-    "embedding_block_guard",
-    "streaming_dedup_watermark",
-    "streaming_foreach_batch_sink",
-    "dedup_survivor_policy",
-    "minhash_jaccard_estimate",
-    "dedup_exact_normalized",
-    "streaming_hopping_window",
-    "lang_id_confusion",
-    "ann_recall_eval",
-    "dedup_containment",
-    "gopher_quality_flags",
-    "compact_small_files",
-    "pivot_dynamic",
-    "fk_violations",
-    "zorder_key",
-    "scan_schema_evolution",
-    "rollup_cascade",
-    "copurchase_pairs",
-    "conditional_agg",
-    "pagerank_parts",
-    "degree_distribution",
-    "rolling_distinct_users",
-    "bigram_perplexity",
-    "topic_tag_rules",
-    "cooccurrence_topk",
-    "group_rare_collapse",
-    "chunk_sliding_window",
-    "oov_rate",
-    "embedding_dim_stats",
-    "stratified_kfold_assign",
-    # oldest r10-latest rows (freshness filler to exactly 50;
-    # value_counts and null_count_per_column displaced by the slot-9
-    # and slot-10 mid-round swaps)
-    "groupby_count",
-    "pivot_counts",
-]
-
-# Round-13 window (exactly 50; registered total stays 215 — the
-# surface is saturated at 46/46 and VERDICT r12 ranked the round as
-# the curation build-side cut + drift-instrument fix + freshness, so
-# no new registrations; NOTES_r13.md carries the ledger):
-#   1:     curation_pipeline — THE r13 target (VERDICT r12 #1):
-#          connected_components rewritten with the count-guarded
-#          driver union-find path (distributed label loop now the
-#          over-cap fallback) — build 28 → 16 jobs.
-#   2-3:   the other two connected_components consumers.
-#   4-7:   the four BPE-trainer consumers (initial_symbols now seeds by
-#          CODE POINT aligning the distributed path with the local
-#          trainer/oracle on non-BMP text — VERDICT r12 #7/ADVICE; the
-#          local gate now also bounds total word chars — ADVICE r12).
-#          llm_corpus_pipeline is also a verify_pairs + exact-dedup
-#          consumer; slots 1-3 are also verify_pairs consumers (the
-#          in-task sh_all doc_id-uniqueness guard — ADVICE r12).
-#   8-9:   the two remaining verify_pairs consumers; 9 is also the
-#          write-audit rewrite (redundant pair-union distinct dropped,
-#          VERDICT r12 #4).
-#   10-44: the COMPLETE 35-name r8-latest cohort (the union's oldest
-#          rows) in tools/correctness_union.py report order
-#          (VERDICT r12 #3 — note: 35, not NOTES_r12's 36; the
-#          double-counted name was dedup_minhash_incremental, already
-#          in slot 9). Includes streaming_cms_freq, which is ALSO the
-#          r13 stream-merge rewrite consumer (AQE off around the
-#          versioned cell merge — VERDICT r12 #6).
-#   45-46: the two other versioned-merge rewrite consumers (the
-#          CMS twin's AQE-off tiny-state merge discipline + explicit
-#          state-read schemas applied to the HLL and hourly-rollup
-#          twins mid-round, 18 → 8 build jobs each; standing
-#          re-validation rule) — streaming_incremental_rollup is
-#          itself an r9-latest row, so the slot serves freshness too.
-#          These displace the two newest r9 fillers (week_over_week,
-#          hopping_window_agg), whose r9 rows stand.
-#   47:    streaming_lsh_dedup — late-r13 explicit-store-schema
-#          rewrite consumer (73 → 67 build jobs), displacing
-#          scan_error_checked (its r9 row stands).
-#   48-50: the 3 oldest r9-latest rows, same order source — after r13
-#          no union row is older than r9.
-_ROUND13_PRIORITY = [
-    # the r13 rewrite consumers (composite leads)
-    "curation_pipeline",
-    "dedup_cluster_components",
-    "dedup_survivors",
-    "llm_corpus_pipeline",
-    "bpe_pack_pipeline",
-    "bpe_train_merges",
-    "bpe_subword_stats",
-    "dedup_minhash_lsh",
-    "dedup_minhash_incremental",
-    # complete r8-latest cohort, union-report order
-    "scan_binary_files",
-    "sink_dynamic_partition_overwrite",
-    "upsert_merge",
-    "scd2_intervals",
-    "skew_report",
-    "funnel_analysis",
-    "retention_cohorts",
-    "zscore_outliers",
-    "gapfill_daily",
-    "quantile_bucket",
-    "snapshot_diff",
-    "fuzzy_join_levenshtein",
-    "inverted_index",
-    "bm25_rank",
-    "concurrency_sweep",
-    "time_weighted_avg",
-    "rolling_range_window",
-    "domain_mix_sample",
-    "sequence_pack",
-    "streaming_sessionize",
-    "similarity_topk_vectorized",
-    "streaming_stream_join",
-    "event_transitions",
-    "session_paths",
-    "vocab_topk",
-    "bigram_lm_counts",
-    "span_dedup",
-    "table_fingerprint",
-    "partition_stats",
-    "mad_outliers",
-    "data_profile",
-    "streaming_cms_freq",
-    "parse_money",
-    "parse_date_multiform",
-    "validated_cast",
-    # the other two versioned-merge rewrite consumers (mid-round)
-    "streaming_incremental_rollup",
-    "streaming_hll_distinct",
-    # late-r13 explicit-store-schema rewrite consumer (its per-batch
-    # index reads each paid a schema-inference job; the minhash twin
-    # is already slot 9) — displaces the newest r9 filler
-    # (scan_error_checked), whose r9 row stands
-    "streaming_lsh_dedup",
-    # late-r13 anti-join distinct-drop consumer (completing the r12
-    # class in the decontamination stage; curation_pipeline, the other
-    # consumer, is slot 1) — displaces sink_jdbc_roundtrip, whose r9
-    # row stands
-    "decontaminate_ngram",
-    # oldest r9-latest rows (freshness filler to exactly 50)
-    "hierarchy_recursive_cte",
-    "json_typed_roundtrip",
-]
-
-# Round-12 window (exactly 50; registered total stays 215 — the
-# surface is saturated at 46/46 and VERDICT r11 ranked the round as
-# the llm_corpus build-side cut + pin refresh + freshness, so no new
-# registrations; NOTES_r12.md carries the ledger):
-#   1:     llm_corpus_pipeline — THE r12 target (VERDICT r11 #1): local
-#          BPE merge loop, map-only k-means assignment, carry_col d2 +
-#          keep_vec through the SemDeDup stage, min(struct) exact
-#          dedup, anti-join distinct drops. Composite leads.
-#   2-4:   the other three BPE-trainer consumers (bpe_train_with_vocab
-#          rewritten: driver-side merge loop under the count guard,
-#          distributed loop now the over-cap fallback).
-#   5-7:   the other cosine-kernel / Lloyd's-assignment consumers
-#          (cosine_pairs_vectorized carry_col; _assign_cells rewritten
-#          map-only: packed-centroid broadcast + array_min argmin
-#          replacing the corpus-wide vec_id window shuffle).
-#   8-9:   kmeans_assign + ann_frontier_sweep — direct consumers of the
-#          map-only assignment (dedup_semantic_incremental rides
-#          kmeans_train_assign through the same _assign_cells).
-#   10:    streaming_lsh_dedup — consumer of the r12 per-batch job-count
-#          work (VERDICT r11 #7).
-#   11-15: the five remaining verify consumers — late-r12 rewrite
-#          consumers (the fused role-explode Jaccard verify,
-#          dedup.verify_pairs, replaced the classic two-join verify in
-#          verified_edges — dedup_survivors / dedup_cluster_components
-#          / curation_pipeline — and, with keep_jaccard, in
-#          dedup_minhash_lsh / dedup_minhash_incremental), displacing
-#          the five newest r8 fillers per the standing re-validation
-#          rule.
-#   16-45: the COMPLETE 30-name r7-latest cohort (the union's oldest
-#          rows) in tools/correctness_union.py report order
-#          (VERDICT r11 #2).
-#   46-50: the 5 oldest r8-latest rows, same order source — after r12
-#          no union row is older than r8.
-_ROUND12_PRIORITY = [
-    # the r12 rewrite consumers (composite leads)
-    "llm_corpus_pipeline",
-    "bpe_pack_pipeline",
-    "bpe_train_merges",
-    "bpe_subword_stats",
-    "dedup_semantic_clusters",
-    "dedup_semantic_incremental",
-    "dedup_embedding_cosine",
-    "kmeans_assign",
-    "ann_frontier_sweep",
-    "streaming_lsh_dedup",
-    # late-r12 verify_pairs rewrite consumers
-    "dedup_survivors",
-    "dedup_cluster_components",
-    "curation_pipeline",
-    "dedup_minhash_lsh",
-    "dedup_minhash_incremental",
-    # complete r7-latest cohort, union-report order
-    "scan_orc",
-    "rank_battery",
-    "correlated_subquery",
-    "range_join_bucketed",
-    "asof_join_window",
-    "array_functions",
-    "map_functions",
-    "null_semantics",
-    "scan_csv_permissive",
-    "pivot_sum",
-    "window_first_last",
-    "text_repetition_ratio",
-    "decontaminate_ngram",
-    "pii_redact",
-    "train_test_split",
-    "group_quota_sample",
-    "text_lang_id",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "multimodal_extract",
-    "streaming_windowed_agg",
-    "dedup_simhash_pairs",
-    "text_tfidf_topterms",
-    "multimodal_frame_sample",
-    "embedding_normalize",
-    "streaming_session_window",
-    "sessionize_batch",
-    "bucketed_join",
-    "join_skew_salted",
-    "bloom_join_prune",
-    # oldest r8-latest rows (freshness filler to exactly 50; the last
-    # five displaced by slots 11-15, their r8 rows stand)
-    "movies_etl_movies",
-    "movies_etl_movies_ratings",
-    "approx_stats",
-    "scan_jsonl",
-    "scan_text",
-]
-
-# Round-11 window (exactly 50; registered total 215 after the one r11
-# addition; NOTES_r11.md carries the ledger). VERDICT r10 next-round #1
-# prescribes the cohort: the three stale-rewrite rows lead, then the
-# complete r6-latest cohort, then oldest r7 rows. The prescribed
-# arithmetic (3 + 37 + 10) double-counts dedup_semantic_incremental
-# (it is BOTH a stale-rewrite name and an r6-cohort member), and round
-# 11's own work adds two names under the standing rules — the
-# verify-shape rewrite consumer and the one new registration — so the
-# realized window is:
-#   1:     dedup_semantic_incremental — r6 row; code rewritten twice in
-#          r10 (delta kernel) AND r11 adds the absolute block bound
-#          (ADVICE r10) — the union's most-overdue certification.
-#   2:     kmeans_assign — r8 row; r10 centroid-boundary restructure.
-#   3:     ann_frontier_sweep — r9 row; r10 lazy-checkpoint rewrite AND
-#          the r11 family-complete unification (LSH+IVF × iso+clustered,
-#          new schema + oracle, VERDICT r10 #5).
-#   4:     streaming_lsh_dedup — consumer of the r11 promoted broadcast
-#          verify shape (_verify_dropped; VERDICT r10 #3). Re-validating
-#          rewritten-code consumers outranks pure freshness (standing
-#          rule).
-#   5:     span_dedup_sliding — the r11 addition (winnowing-based
-#          alignment-robust duplicate-run detection, VERDICT r10 #4),
-#          registered inside the window per the registration policy.
-#   6-7:   similarity_ann_ivf, similarity_ivf_nprobe — late-r11 rewrite
-#          consumers: label_centroids now quantizes means to 6 places
-#          (cross-engine ulp-leak review catch), so both re-enter.
-#   8-43:  the COMPLETE r6-latest cohort minus dedup_semantic_incremental
-#          (36 names) in tools/correctness_union.py report order (stable
-#          on registration order within a round).
-#   44-50: the 7 oldest r7-latest rows, same order source (scan_orc and
-#          rank_battery displaced by slots 6-7; their r7 rows stand).
-#          After r11 the union's oldest rows are the r7 cohort.
-_ROUND11_PRIORITY = [
-    # stale-rewrite certifications (VERDICT r10 #1)
-    "dedup_semantic_incremental",
-    "kmeans_assign",
-    "ann_frontier_sweep",
-    # r11 rewrite consumer + r11 addition
-    "streaming_lsh_dedup",
-    "span_dedup_sliding",
-    # r11 late rewrite consumers: label_centroids now quantizes its
-    # means to 6 places (the _recompute_centroids discipline — a
-    # review catch closed the cross-engine ulp leak in IVF routing),
-    # so its two other registered consumers re-enter the window
-    # (standing rule), displacing the two newest r7 fillers
-    "similarity_ann_ivf",
-    "similarity_ivf_nprobe",
-    # complete r6-latest cohort (minus slot 1), union-report order
-    "fillna_zero",
-    "from_unix_seconds",
-    "scan_json",
-    "scan_csv",
-    "scan_csv_inferred",
-    "sink_parquet_overwrite",
-    "sink_append_chunked",
-    "window_running_sum",
-    "rollup_agg",
-    "cube_agg",
-    "value_counts_array",
-    "sample_hash",
-    "grouping_sets",
-    "explode_tokens",
-    "json_extract",
-    "partition_pruned_scan",
-    "set_union_all",
-    "flagship_user_activity",
-    "aqp_sampled_groupby",
-    "token_count",
-    "text_quality_score",
-    "doc_fingerprint",
-    "dedup_exact",
-    "dedup_incremental",
-    "training_data_filter",
-    "ann_recall_clustered",
-    "data_quality_gate",
-    "quantile_sketch_cdf",
-    "bpe_pack_pipeline",
-    "cms_join_size_estimate",
-    "regexp_extract_id",
-    "join_list_cell",
-    "strip_citations",
-    "parse_running_time",
-    "strip_money_ranges",
-    "feature_hash_vectorize",
-    # oldest r7-latest rows (freshness filler to exactly 50)
-    "groupby_count_salted_aqe_off",
-    "set_except_all",
-    "corr_covar",
-    "unpivot_stack",
-    "percentile_by_group",
-    "date_arithmetic",
-    "string_functions",
-]
-
-# Round-10 window (exactly 50; registered total stays 214 — the
-# surface is saturated at 46/46 and VERDICT r9 ranked the round as
-# freshness + one profiling target + hygiene, so no new registrations;
-# NOTES_r10.md carries the ledger):
-#   1:     similarity_topk — the union's only pre-r5 row (r4-latest,
-#          displaced in r9; VERDICT r9 next-round #1 says it leads).
-#   2-3:   the two curation composites — consumers of the r10
-#          checkpoint-audit routing (caching.tracked_local_checkpoint
-#          now wraps the two r9 stage-boundary localCheckpoints in
-#          queries_curation.py; ADVICE r9 #2). Re-validating
-#          rewritten-code consumers outranks pure freshness (the
-#          established rule), and composites lead.
-#   4-6:   the HLL family — consumers of the r10 LUT-cache swap
-#          (single-slot → WeakKeyDictionary keyed on the session,
-#          jdf-valued to keep the weak key weak; ADVICE r8/r9 carry-
-#          over, VERDICT r9 next-round #4).
-#   7:     streaming_lsh_dedup — the ONLY registered consumer of the
-#          r10-rewritten lsh_dedup_stream (one-pass ntile chunk
-#          scaffolding + explicit batch-side broadcasts; VERDICT r9
-#          next-round #2, per-stage breakdown in NOTES_r10.md).
-#          dedup_minhash_incremental rides the UNTOUCHED
-#          incremental_candidate_pairs path and keeps its r8 row.
-#   8-46:  the COMPLETE 39-name r5-latest cohort in registration order
-#          (the SURVEY §2 core's rows are 5 rounds old — VERDICT r9
-#          next-round #1).
-#   47-50: oldest r6-latest rows in registration order (set_intersect,
-#          set_except, orderby_limit, fill_if_zero) — freshness filler
-#          for the spare slots. After r10 the union's oldest rows are
-#          the remaining 37-name r6 cohort.
-_ROUND10_PRIORITY = [
-    # union's only pre-r5 row
-    "similarity_topk",
-    # consumers of the r10 checkpoint-audit routing (composites lead)
-    "curation_pipeline",
-    "llm_corpus_pipeline",
-    # consumers of the r10 HLL LUT-cache swap
-    "hll_distinct_shards",
-    "streaming_hll_distinct",
-    "hll_set_overlap",
-    # consumer of the r10 streaming-LSH profiling rewrite
-    "streaming_lsh_dedup",
-    # the 39-name r5-latest cohort, registration order
-    "groupby_count",
-    "pivot_counts",
-    "null_count_per_column",
-    "value_counts",
-    "describe_stats",
-    "histogram",
-    "constant_column_detector",
-    "join_inner_equi",
-    "join_left_equi",
-    "join_semi",
-    "join_anti",
-    "filter_key_exists",
-    "filter_equality",
-    "filter_conflict_rows",
-    "dropna_column",
-    "prune_null_columns",
-    "select_reorder",
-    "drop_columns",
-    "rename_columns",
-    "canonicalize_keys",
-    "collect_map_column",
-    "dedup_by_key",
-    "set_union",
-    "topk_per_group",
-    "cast_typed",
-    "movies_etl_ratings",
-    "groupby_count_salted",
-    "entropy_profile",
-    "embedding_quantize",
-    "similarity_ann_multiprobe",
-    "ann_rerank",
-    "streaming_dedup",
-    "triangle_count",
-    "quantile_sketch_merge",
-    "heavy_hitters_cms",
-    "dedup_semantic_clusters",
-    "bpe_train_merges",
-    "bpe_subword_stats",
-    "quantile_sketch_by_group",
-    # oldest r6-latest rows (registration order) — freshness filler
-    "set_intersect",
-    "set_except",
-    "orderby_limit",
-    "fill_if_zero",
-]
-
-_CURRENT_PRIORITY = _ROUND18_PRIORITY
-
-# Round-17 window retained for the ledger (NOTES_r17.md references it);
-# _ordered() consumes _CURRENT_PRIORITY.
-
-# Round-10 window retained for the ledger (NOTES_r10.md references it);
-# _ordered() consumes _CURRENT_PRIORITY.
-
-# Round-9 window retained for the ledger (NOTES_r9.md references it);
-# _ordered() consumes _CURRENT_PRIORITY.
-# (exactly 50; registered total 214 after the one r9
-# addition; NOTES_r9.md carries the ledger):
-#   1-7:   the consumers of the r9-rewritten candidate_pairs_minhash
-#          (the fused CAPPED form — row_number cap ahead of the
-#          aggregate bounds the collect_list buffer at shuffle time,
-#          ADVICE r8 medium). Exactly the registered queries whose
-#          plans route through dedup.candidate_pairs_minhash;
-#          dedup_minhash_incremental / streaming_lsh_dedup ride the
-#          UNCHANGED incremental/window-guard paths and keep their r8
-#          rows. Re-validating rewritten-code consumers outranks pure
-#          freshness (the established rule).
-#   8:     ann_frontier_sweep — the r9 addition (recall-vs-scan
-#          frontier, VERDICT r8 #3), first driver row; registered
-#          inside the window per the registration policy.
-#   9:     compact_small_files — the union's sole r3-latest row.
-#   10-13: the 4 r4 names the r8 expr re-validations displaced
-#          (VERDICT r8 next-round #1).
-#   14-50: the 42-name r4-latest cohort minus the 4 displaced, in
-#          registration order (_ROUND4_PRIORITY positions), first 37 —
-#          the last-registered name (similarity_topk, r4 slot 50)
-#          queues for r10: 7 re-validations + 1 new registration out-
-#          rank one freshness slot, same arithmetic as r8's
-#          displacement. After r9 the union's oldest rows are
-#          similarity_topk (r4) and the r5 cohort.
-_ROUND9_PRIORITY = [  # retained for the ledger; _ordered() consumes _CURRENT_PRIORITY
-    # consumers of the r9 capped candidate generator
-    "curation_pipeline",
-    "llm_corpus_pipeline",
-    "dedup_minhash_lsh",
-    "dedup_cluster_components",
-    "dedup_survivors",
-    "minhash_jaccard_estimate",
-    "dedup_containment",
-    # r9 addition
-    "ann_frontier_sweep",
-    # sole r3-latest row
-    "compact_small_files",
-    # the 4 displaced r4 names (VERDICT r8 #1)
-    "hierarchy_recursive_cte",
-    "json_typed_roundtrip",
-    "sink_jdbc_roundtrip",
-    "scan_error_checked",
-    # r4-latest cohort, registration order (first 37 of 38)
-    "streaming_dedup_watermark",
-    "streaming_foreach_batch_sink",
-    "weighted_sample_topk",
-    "pivot_dynamic",
-    "fk_violations",
-    "similarity_ann_lsh",
-    "zorder_key",
-    "rolling_distinct_users",
-    "bigram_perplexity",
-    "topic_tag_rules",
-    "cooccurrence_topk",
-    "group_rare_collapse",
-    "scan_schema_evolution",
-    "rollup_cascade",
-    "streaming_incremental_rollup",
-    "chunk_sliding_window",
-    "oov_rate",
-    "embedding_dim_stats",
-    "copurchase_pairs",
-    "conditional_agg",
-    "pagerank_parts",
-    "week_over_week",
-    "dedup_survivor_policy",
-    "embedding_block_guard",
-    "degree_distribution",
-    "hopping_window_agg",
-    "winsorize_robust_scale",
-    "similarity_ivf_nprobe",
-    "dedup_exact_normalized",
-    "gopher_quality_flags",
-    "stratified_kfold_assign",
-    "streaming_hopping_window",
-    "lang_id_confusion",
-    "ann_recall_eval",
-    "dedup_embedding_cosine_vectorized",
-    "dedup_embedding_cosine",
-    "similarity_ann_ivf",
-]
-
-# Round-8 window retained for the ledger (NOTES_r8.md references it);
-# _ordered() consumes _ROUND9_PRIORITY.
-# (exactly 50; registered total 213 after the one r8
-# addition; NOTES_r8.md carries the ledger):
-#   1:     curation_pipeline — VERDICT r7 #1: the one consumer of the
-#          guarded banding path whose driver row (r3) predated the r7
-#          guard; it now ALSO consumes the r8 fused candidate
-#          generator, so this row certifies both rewrites.
-#   2-9:   the other banding-machinery consumers, re-validated because
-#          round 8 rewrote candidate_pairs_minhash (fused single-
-#          shuffle collect_list form) and connected_components (eager
-#          edge checkpoint) under all of them.
-#   10:    approx_stats — first driver row under its new error-bounds
-#          oracle (VERDICT r7 #6; previously the union's only
-#          rows-only row).
-#   11:    streaming_cms_freq — the r8 addition (streaming CMS twin,
-#          VERDICT r7 #7), first driver row.
-#   12:    streaming_sessionize — state_partitions default changed to
-#          inherit (ADVICE r7 #4 + the VERDICT #3 reconciliation).
-#   13-17: the 5 consumers of the r8-rewritten fused-extraction binding
-#          (_extract_groups_bound, functions/expr.py — parse_money /
-#          parse_date_multiform plans changed directly; validated_cast
-#          and the two movies composites consume parse_date_column /
-#          parse_money_column). Same rotation rule as slot 1: a row
-#          recorded against pre-rewrite code must not survive the
-#          round that rewrote the code under it.
-#   18-50: 33 of the 34 remaining r3-latest rows (registration order).
-#          The slots the expr re-validations took displace the last-
-#          registered r3 name (compact_small_files) and the 4 oldest
-#          r4 rows to the front of the r9 queue — re-validating
-#          rewritten-code consumers outranks pure freshness (the
-#          VERDICT r7 #1 lesson).
-_ROUND8_PRIORITY = [
-    # banding-machinery re-validation (fused candidate generator +
-    # eager CC checkpoint, r8) — curation_pipeline leads per VERDICT #1
-    "curation_pipeline",
-    "dedup_minhash_lsh",
-    "dedup_minhash_incremental",
-    "dedup_containment",
-    "dedup_survivors",
-    "dedup_cluster_components",
-    "minhash_jaccard_estimate",
-    "streaming_lsh_dedup",
-    "llm_corpus_pipeline",
-    # new-oracle / new-query / changed-default rows
-    "approx_stats",
-    "streaming_cms_freq",
-    "streaming_sessionize",
-    # consumers of the r8 fused-extraction binding (expr.py rewrite)
-    "parse_money",
-    "parse_date_multiform",
-    "validated_cast",
-    "movies_etl_movies",
-    "movies_etl_movies_ratings",
-    # remaining r3-latest cohort (registration order; the last-registered
-    # name, compact_small_files, queues for r9 — displaced by the expr
-    # re-validations above)
-    "scan_jsonl",
-    "scan_text",
-    "scan_binary_files",
-    "sink_dynamic_partition_overwrite",
-    "upsert_merge",
-    "scd2_intervals",
-    "skew_report",
-    "funnel_analysis",
-    "retention_cohorts",
-    "zscore_outliers",
-    "gapfill_daily",
-    "quantile_bucket",
-    "snapshot_diff",
-    "fuzzy_join_levenshtein",
-    "inverted_index",
-    "bm25_rank",
-    "concurrency_sweep",
-    "time_weighted_avg",
-    "rolling_range_window",
-    "domain_mix_sample",
-    "sequence_pack",
-    "kmeans_assign",
-    "similarity_topk_vectorized",
-    "streaming_stream_join",
-    "event_transitions",
-    "session_paths",
-    "vocab_topk",
-    "bigram_lm_counts",
-    "span_dedup",
-    "table_fingerprint",
-    "partition_stats",
-    "mad_outliers",
-    "data_profile",
-]
-
-# Round-7 window retained for the ledger (NOTES_r7.md references it);
-# _ordered() consumes _ROUND8_PRIORITY.
-# (exactly 50; registered total stays 212 — the surface
-# is saturated at 46/46 and VERDICT r6 ranked the round as freshness +
-# the band-bucket scale guard, so no new registrations; NOTES_r7.md
-# carries the ledger):
-#   1-26:  the 26 queries whose latest driver rows are r2 (4 rounds
-#          stale — VERDICT r6 "What's missing #2", the oldest claims in
-#          the union), re-proved on current code.
-#  27-33:  re-validation of queries riding the MinHash banding machinery
-#          round 7 rewrote (guard_band_buckets: the band-bucket size cap
-#          candidate_pairs_minhash / incremental_candidate_pairs /
-#          lsh_dedup_stream now enforce; dedup_cluster_components also
-#          consumes it but already sits in slots 1-26).
-#  34-36:  re-validation of the HLL family — round 7 re-emits the
-#          linear-counting oracle literals as string-cast doubles
-#          ('…'::DOUBLE; ADVICE r6 medium), changing all three oracles'
-#          SQL text.
-#  37-39:  re-validation of the temp_confs users — round 7 tightened
-#          the conf capture to the specific no-default error and made
-#          the apply loop rollback-safe (ADVICE r6 low).
-#  40-50:  oldest r3 rows (11 of 47, registration order) — the
-#          next-oldest claims after the r2 cohort; the rest queue
-#          for r8.
-_ROUND7_PRIORITY = [
-    # r2-stale cohort (registration order)
-    "array_functions",
-    "asof_join_window",
-    "corr_covar",
-    "correlated_subquery",
-    "dedup_cluster_components",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "embedding_normalize",
-    "map_functions",
-    "multimodal_extract",
-    "multimodal_frame_sample",
-    "null_semantics",
-    "percentile_by_group",
-    "pivot_sum",
-    "range_join_bucketed",
-    "rank_battery",
-    "scan_csv_permissive",
-    "set_except_all",
-    "streaming_session_window",
-    "streaming_sessionize",
-    "streaming_windowed_agg",
-    "text_lang_id",
-    "text_tfidf_topterms",
-    "unpivot_stack",
-    "window_first_last",
-    # banding machinery re-validation (band-bucket guard, r7)
-    "dedup_minhash_lsh",
-    "dedup_minhash_incremental",
-    "dedup_containment",
-    "dedup_survivors",
-    "minhash_jaccard_estimate",
-    "streaming_lsh_dedup",
-    "llm_corpus_pipeline",
-    # HLL oracle literal re-emission re-validation (ADVICE r6 medium)
-    "hll_distinct_shards",
-    "streaming_hll_distinct",
-    "hll_set_overlap",
-    # temp_confs hardening re-validation (ADVICE r6 low)
-    "join_skew_salted",
-    "bloom_join_prune",
-    "groupby_count_salted_aqe_off",
-    # oldest r3 rows (registration order)
-    "text_repetition_ratio",
-    "decontaminate_ngram",
-    "pii_redact",
-    "train_test_split",
-    "group_quota_sample",
-    "sessionize_batch",
-    "bucketed_join",
-    "string_functions",
-    "date_arithmetic",
-    "approx_stats",
-    "scan_orc",
-]
-
-# Round-6 window retained for the ledger (NOTES_r6.md references it);
-# _ordered() consumes _ROUND7_PRIORITY.
-# (exactly 50; registered total 212 after the two r6
-# additions; NOTES_r6.md carries the ledger):
-#   1-8:   the round-5 overflow cohort — registered + locally
-#          exact-verified in r5 but past the driver's 50-row line
-#          (NOTES_r5.md §Round-5 overflow); their first driver rows
-#          close the union at 210/210.
-#   9-10:  round-6 additions (the end-to-end LLM-corpus composite and
-#          the clustered-fixture ANN recall audit), registered before
-#          the window froze per the new policy above.
-#  11-31:  the COMPLETE r1 cohort (21 rows — the 9 names VERDICT r5
-#          listed plus the 12 other r1-green rows, all equally 5 rounds
-#          stale), re-proved on current code.
-#  32-36:  re-validation of green queries whose plumbing round 6
-#          touched: the HLL linear-counting branch moved to a
-#          precomputed shared-literal table (hll_distinct_shards,
-#          streaming_hll_distinct; hll_set_overlap rides in slot 4),
-#          and the conf-restore discipline moved to session.temp_confs
-#          (join_skew_salted, bloom_join_prune,
-#          groupby_count_salted_aqe_off).
-#  37-50:  oldest r2 rows (14 of 40) — the next-oldest claims after the
-#          r1 cohort; the rest rotate in r7.
-_ROUND6_PRIORITY = [
-    # r5 overflow cohort — first driver rows
-    "feature_hash_vectorize",
-    "data_quality_gate",
-    "quantile_sketch_cdf",
-    "hll_set_overlap",
-    "bpe_pack_pipeline",
-    "cms_join_size_estimate",
-    "aqp_sampled_groupby",
-    "dedup_semantic_incremental",
-    # round-6 additions
-    "llm_corpus_pipeline",
-    "ann_recall_clustered",
-    # r1 cohort freshness re-proofs (registration order)
-    "scan_json",
-    "scan_csv",
-    "scan_csv_inferred",
-    "orderby_limit",
-    "fillna_zero",
-    "fill_if_zero",
-    "set_except",
-    "set_intersect",
-    "from_unix_seconds",
-    "cube_agg",
-    "explode_tokens",
-    "grouping_sets",
-    "json_extract",
-    "partition_pruned_scan",
-    "rollup_agg",
-    "sample_hash",
-    "set_union_all",
-    "sink_append_chunked",
-    "sink_parquet_overwrite",
-    "value_counts_array",
-    "window_running_sum",
-    # operators/conf plumbing touched in round 6 — re-validation
-    "hll_distinct_shards",
-    "streaming_hll_distinct",
-    "join_skew_salted",
-    "bloom_join_prune",
-    "groupby_count_salted_aqe_off",
-    # oldest r2 rows (next-oldest claims in the union)
-    "flagship_user_activity",
-    "parse_money",
-    "parse_date_multiform",
-    "parse_running_time",
-    "strip_citations",
-    "strip_money_ranges",
-    "regexp_extract_id",
-    "join_list_cell",
-    "dedup_exact",
-    "dedup_incremental",
-    "doc_fingerprint",
-    "text_quality_score",
-    "token_count",
-    "training_data_filter",
-]
-
-# Round-5 window retained for the ledger (NOTES_r5.md references it);
-# _ordered() consumes _ROUND6_PRIORITY.
-# (exactly 50; registered total 202 — all 188 prior
-# queries carry green rows across r1∪r2∪r3∪r4, so that round's window is
-# freshness + the 14 round-5 additions; NOTES_r5.md carries the ledger):
-#   1-14:  round-5 additions (AQE-off salted proof, incremental MinHash
-#          index maintenance, streaming LSH near-dedup, mergeable
-#          quantile sketch + its per-group form, retrieve→rerank,
-#          portable-HLL distinct sketch, count-min heavy hitters,
-#          SemDeDup composite, AQE-off salted skew JOIN, runtime
-#          bloom-filter join pruning, BPE tokenizer training + its
-#          encode/apply stage, streaming HLL distinct maintenance).
-#  15-22:  the VERDICT r4 freshness list — queries whose implementations
-#          were rewritten AFTER the r4 driver run froze (triangle
-#          adjacency form, entropy GROUPING SETS form, the staged/fused
-#          prune_and_validated_cast ETL path + validation family), so
-#          the SHIPPED formulations finally earn driver rows.
-#  23-27:  re-validation of green queries whose underlying operators
-#          round 5 touched (salted_groupby_agg twin, banding machinery
-#          shared with the incremental/streaming paths, int8 functions
-#          now also feeding the retrieve stage).
-#  28-50:  oldest-row freshness rotation — the r1 cohort in registration
-#          order (their rows are 4 rounds old; everything is green, so
-#          the marginal slot is best spent re-proving the oldest claims
-#          against today's code). Nine r1 slots rotated out to fund
-#          the late-r5 additions: the three csv/json scans,
-#          orderby_limit, fillna_zero and fill_if_zero (untouched since
-#          r1; the coalesce logic also rides inside pivot_counts, which
-#          stays in the window), set_except and set_intersect (their
-#          machinery shared with set_union, which stays), and
-#          from_unix_seconds (already re-proved green in r4 via the ETL
-#          re-rotation).
-_ROUND5_PRIORITY = [
-    # round-5 additions
-    "groupby_count_salted_aqe_off",
-    "dedup_minhash_incremental",
-    "streaming_lsh_dedup",
-    "quantile_sketch_merge",
-    "quantile_sketch_by_group",
-    "ann_rerank",
-    "hll_distinct_shards",
-    "heavy_hitters_cms",
-    "dedup_semantic_clusters",
-    "join_skew_salted",
-    "bloom_join_prune",
-    "bpe_train_merges",
-    "bpe_subword_stats",
-    "streaming_hll_distinct",
-    # VERDICT r4 post-freeze-rewrite freshness
-    "triangle_count",
-    "entropy_profile",
-    "movies_etl_movies",
-    "movies_etl_movies_ratings",
-    "movies_etl_ratings",
-    "prune_null_columns",
-    "validated_cast",
-    "cast_typed",
-    # operators touched in round 5 — re-validation
-    "groupby_count_salted",
-    "dedup_minhash_lsh",
-    "similarity_ann_multiprobe",
-    "embedding_quantize",
-    "streaming_dedup",
-    # r1-cohort freshness rotation (registration order)
-    "groupby_count",
-    "pivot_counts",
-    "null_count_per_column",
-    "value_counts",
-    "describe_stats",
-    "histogram",
-    "constant_column_detector",
-    "join_inner_equi",
-    "join_left_equi",
-    "join_semi",
-    "join_anti",
-    "filter_key_exists",
-    "filter_equality",
-    "filter_conflict_rows",
-    "dropna_column",
-    "select_reorder",
-    "drop_columns",
-    "rename_columns",
-    "canonicalize_keys",
-    "collect_map_column",
-    "dedup_by_key",
-    "set_union",
-    "topk_per_group",
-]
-
-# Round-4 window (exactly 50 when the round's additions land):
-#   1-25: the r3 overflow cohort — registered + locally exact-verified in
-#         r3 but past the driver's 50-row line (NOTES_r3.md ledger).
-#  26-28: the three ETL composites, re-rotated post testdata re-encoding
-#         (green in r2; fresh rows prove the NTZ tolerance end-to-end).
-#  29-50: round-4 additions, appended as they are implemented and
-#         budgeted to <=22 so nothing registered this round overflows.
-# Everything past the 50-line is already green in r1 U r2 U r3.
-_ROUND4_PRIORITY = [
-    # r3 overflow cohort (names 51+ of round 3's priority list)
-    "streaming_dedup_watermark",
-    "streaming_foreach_batch_sink",
-    "weighted_sample_topk",
-    "pivot_dynamic",
-    "fk_violations",
-    "similarity_ann_lsh",
-    "zorder_key",
-    "rolling_distinct_users",
-    "bigram_perplexity",
-    "topic_tag_rules",
-    "cooccurrence_topk",
-    "group_rare_collapse",
-    "scan_schema_evolution",
-    "rollup_cascade",
-    "streaming_incremental_rollup",
-    "json_typed_roundtrip",
-    "chunk_sliding_window",
-    "oov_rate",
-    "embedding_dim_stats",
-    "hierarchy_recursive_cte",
-    "copurchase_pairs",
-    "conditional_agg",
-    "pagerank_parts",
-    "week_over_week",
-    "dedup_survivor_policy",
-    # ETL composites, re-rotated (green-r2; testdata re-encoded since)
-    "movies_etl_movies",
-    "movies_etl_movies_ratings",
-    "movies_etl_ratings",
-    # round-4 additions land here (<=22; see NOTES_r4.md ledger)
-    "similarity_ann_multiprobe",
-    "embedding_block_guard",
-    "triangle_count",
-    "degree_distribution",
-    "hopping_window_agg",
-    "entropy_profile",
-    "winsorize_robust_scale",
-    "similarity_ivf_nprobe",
-    "minhash_jaccard_estimate",
-    "dedup_exact_normalized",
-    "gopher_quality_flags",
-    "stratified_kfold_assign",
-    "streaming_hopping_window",
-    "lang_id_confusion",
-    "ann_recall_eval",
-    "dedup_containment",
-    "sink_jdbc_roundtrip",
-    "scan_error_checked",
-    # slots 47-50: re-validation filler — queries already green in
-    # r1-r3 whose UNDERLYING OPERATORS were modified this round
-    # (cosine_pairs_vectorized gained the block guard; topk_ivf gained
-    # the nprobe parameter), so their fresh rows prove the refactors
-    # changed nothing.
-    "dedup_embedding_cosine_vectorized",
-    "dedup_embedding_cosine",
-    "similarity_ann_ivf",
-    "similarity_topk",
-]
-
-# Round-3 priority retained for the ledger (NOTES_r3.md references it);
-# _ordered() consumes _ROUND4_PRIORITY.
-_ROUND3_PRIORITY = [
-    # curation suite (queries_curation.py, registered post-r2-driver)
-    "text_repetition_ratio",
-    "decontaminate_ngram",
-    "pii_redact",
-    "train_test_split",
-    "group_quota_sample",
-    "embedding_quantize",
-    "sessionize_batch",
-    "bucketed_join",
-    # scan/function rotation candidates (registry.py, post-r2-driver)
-    "string_functions",
-    "date_arithmetic",
-    "approx_stats",
-    "scan_orc",
-    "scan_jsonl",
-    "scan_text",
-    "scan_binary_files",
-    "sink_dynamic_partition_overwrite",
-    # formerly rows-only (`no_oracle`) — oracle-gated since r3
-    "dedup_embedding_cosine_vectorized",
-    "similarity_topk_vectorized",
-    # NEW in r3 (registered before this round's driver run, unlike the
-    # r2 late registrations): end-to-end dedup composite, sequence
-    # packing, domain mixing, streaming dedup + stream-stream join
-    "dedup_survivors",
-    "sequence_pack",
-    "domain_mix_sample",
-    "streaming_dedup",
-    "streaming_stream_join",
-    "upsert_merge",
-    "scd2_intervals",
-    "curation_pipeline",
-    "skew_report",
-    "kmeans_assign",
-    # analytics/retrieval suite (queries_analytics.py, new in r3)
-    "funnel_analysis",
-    "retention_cohorts",
-    "zscore_outliers",
-    "gapfill_daily",
-    "quantile_bucket",
-    "snapshot_diff",
-    "fuzzy_join_levenshtein",
-    "inverted_index",
-    "bm25_rank",
-    # time-series suite (queries_analytics.py, new in r3)
-    "concurrency_sweep",
-    "time_weighted_avg",
-    "rolling_range_window",
-    # scale-operations suite (queries_scale.py, new in r3)
-    "event_transitions",
-    "session_paths",
-    "vocab_topk",
-    "bigram_lm_counts",
-    "span_dedup",
-    "table_fingerprint",
-    "partition_stats",
-    "mad_outliers",
-    "data_profile",
-    "compact_small_files",
-    # names 51+ — past the driver's 50-row window by design: the
-    # least-critical new queries overflow to round 4's window, where
-    # they lead the priority list (see NOTES_r3.md rotation ledger).
-    "streaming_dedup_watermark",
-    "streaming_foreach_batch_sink",
-    "weighted_sample_topk",
-    "pivot_dynamic",
-    "fk_violations",
-    "similarity_ann_lsh",
-    "zorder_key",
-    # ML-prep suite (queries_mlprep.py, late r3) — also past the 50-row
-    # window; leads round 4 with the seven names above.
-    "rolling_distinct_users",
-    "bigram_perplexity",
-    "topic_tag_rules",
-    "cooccurrence_topk",
-    "group_rare_collapse",
-    "scan_schema_evolution",
-    "rollup_cascade",
-    "streaming_incremental_rollup",
-    "json_typed_roundtrip",
-    "chunk_sliding_window",
-    "oov_rate",
-    "embedding_dim_stats",
-    "hierarchy_recursive_cte",
-    "copurchase_pairs",
-    "conditional_agg",
-    "pagerank_parts",
-    "week_over_week",
-    "dedup_survivor_policy",
 ]
 
 

@@ -15,9 +15,9 @@ step already broadcasts the entire encoded vocabulary back onto the
 corpus as a join, so collecting the same table to the driver is inside
 the size contract the pipeline already assumes — and it replaces
 ~2 Spark jobs per merge iteration (pair-count shuffle + argmax under
-AQE; 18 jobs for the standard 8-merge train, measured in
-tools/profile_llm_corpus.py) with ONE count + ONE collect. Vocabularies
-over the cap fall back to the original distributed per-iteration loop
+AQE; 18 jobs for the standard 8-merge train, measured r12) with ONE
+count + ONE collect. Vocabularies over the cap fall back to the
+original distributed per-iteration loop
 (weighted pair-count shuffle + 1-row argmax collect — the bounded
 1-row-statistic collect class), which never materializes the vocab on
 the driver.

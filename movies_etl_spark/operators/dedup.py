@@ -14,6 +14,8 @@ Scale design (the whole point of these operators):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -164,13 +166,25 @@ def _shingle_hash_array_sql(toks: str, k: int = 3) -> str:
     )
 
 
+def _plain_name(name: str) -> str:
+    """``name`` unchanged when it is a plain identifier (``\\w+``);
+    ValueError otherwise. The string-input builders paste column names
+    into ``F.expr`` text, where a dotted, spaced or quoted name would
+    parse as a different expression."""
+    if not re.fullmatch(r"\w+", name, re.ASCII):
+        raise ValueError(f"not a plain column name (\\w+): {name!r}")
+    return name
+
+
 def shingled(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, shingles) projection (integer shingle hashes) — compute ONCE
     and persist when several downstream branches (banding + verification)
     reuse it; at 100 TB this is a checkpointed table, not a recompute.
     Built as one parsed expression since r19 (see
     :func:`_shingle_hash_array_sql`); value parity with the Column
-    builders is pinned in test_shingle_band_sql_parity."""
+    builders is pinned in test_shingle_band_sql_parity. ``text_col``
+    must be a plain name (:func:`_plain_name`)."""
+    text_col = _plain_name(text_col)
     return df.select(
         F.col(id_col),
         F.expr(_shingle_hash_array_sql(f"split({text_col}, ' ')")).alias(
@@ -407,9 +421,8 @@ def candidate_pairs_minhash(
     Scale shape: one exchange on (band_id, band_key) + a spillable
     in-partition sort (the window's cost — measured ~1.0–1.1× the r8
     aggregate-first shape on the sf0.1 candidate path, identical pair
-    sets; tools/proto_fused.py is the frozen three-arm A/B), the
-    guarded aggregate reuses the window's partitioning (no second
-    band exchange), pairs emit map-side via double explode of the
+    sets), the guarded aggregate reuses the window's partitioning (no
+    second band exchange), pairs emit map-side via double explode of the
     cap-bounded list (10k bigint ids ≈ 80 KB per bucket row), and the
     final pair ``distinct`` is the only other exchange. ``sh_df`` is a
     (id, shingles) frame — persist it if verification will reuse the
@@ -634,7 +647,8 @@ def dot(a: Column, b: Column) -> Column:
 # finish lambda) in a single round trip. String variants exist for the
 # call sites whose inputs are plain SQL fragments (column names or
 # already-parsed array literals); Column-input call sites keep the
-# python builders above.
+# python builders above. The public *_expr builders take column names
+# only, checked by _plain_name; _dot_sql also takes array literals.
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -655,16 +669,17 @@ def _l2norm_sql(a: str) -> str:
 
 def dot_expr(a: str, b: str) -> Column:
     """:func:`dot` built as ONE parsed expression — identical values."""
-    return F.expr(_dot_sql(a, b))
+    return F.expr(_dot_sql(_plain_name(a), _plain_name(b)))
 
 
 def l2norm_expr(a: str) -> Column:
     """:func:`l2norm` built as ONE parsed expression."""
-    return F.expr(_l2norm_sql(a))
+    return F.expr(_l2norm_sql(_plain_name(a)))
 
 
 def cosine_expr(a: str, b: str) -> Column:
     """:func:`cosine` built as ONE parsed expression."""
+    a, b = _plain_name(a), _plain_name(b)
     return F.expr(
         f"{_dot_sql(a, b)} / ({_l2norm_sql(a)} * {_l2norm_sql(b)})"
     )

@@ -486,10 +486,12 @@ def rp_bucket_n(vec: Column | str, n_planes: int) -> Column:
     remaining ~n_planes×(HOF lambda plumbing) py4j round trips (~0.5 s
     per width-8 invocation) into a single parse. Same expression tree,
     same values (pinned by test_rp_bucket_n_str_matches_column); the
-    Column path remains for composed inputs."""
-    from movies_etl_spark.operators.dedup import _dot_sql, dot
+    Column path remains for composed inputs. A str ``vec`` must be a
+    plain column name (``\\w+``; ValueError otherwise)."""
+    from movies_etl_spark.operators.dedup import _dot_sql, _plain_name, dot
 
     if isinstance(vec, str):
+        vec = _plain_name(vec)
         terms = []
         for j, plane in enumerate(rp_planes_n(n_planes)):
             arr = "array(" + ",".join(f"{v!r}D" for v in plane) + ")"

@@ -48,8 +48,9 @@ def _micros(c) -> "F.Column":
 #: final adaptive plan, one exchange reused): when True the funnel is
 #: one scan + one user_id exchange + a three-window stack + a
 #: partitioning-reusing dedup aggregate. Values identical (the
-#: conditional window min IS the stage join+filter+min). Adjudicated
-#: by tools/ab_funnel_onepass.py — numbers there and in NOTES_r14.
+#: conditional window min IS the stage join+filter+min). Numbers in
+#: NOTES_r14; value identity pinned in
+#: test_funnel_one_pass_matches_per_stage_variant.
 FUNNEL_ONE_PASS = True
 
 
@@ -700,8 +701,8 @@ def q_bm25_rank(spark, sf_dir):
 #: a 2-struct (t, delta) array: same rows, same types (both deltas are
 #: int literals, both timestamps the same ntz cast), so values are
 #: identical by construction; runtime events scans drop 4 → 2.
-#: Adjudicated by tools/ab_concurrency_onescan.py — numbers there and
-#: in NOTES_r15.
+#: Numbers in NOTES_r15; value identity pinned in
+#: test_concurrency_one_scan_matches_union_variant.
 CONCURRENCY_ONE_SCAN = True
 
 

@@ -1736,8 +1736,8 @@ _MINHASH_EST_SQL = " + ".join(
 #: read them, instead of each re-deriving the array_min folds from the
 #: persisted shingles — 3 fold evaluations per doc → 1, for 8 longs/doc
 #: of extra persist. Values identical by construction (same fold, same
-#: band concat). Adjudicated by tools/ab_minhash_sig.py — numbers there
-#: and in NOTES_r14.
+#: band concat). Numbers in NOTES_r14; value identity pinned in
+#: test_minhash_estimate_shared_sig_matches_refold_variant.
 MINHASH_EST_SHARED_SIG = True
 
 @query(
@@ -1975,8 +1975,8 @@ def q_lang_id_confusion(spark, sf_dir):
 #: ONE lazy tracked checkpoint — the frontier's shared-scan pattern —
 #: and every arm reads the LogicalRDD leaf. Candidates/values identical
 #: (the checkpoint materializes the same rows the arms each rebuilt).
-#: Adjudicated by tools/ab_recall_shared.py — numbers there and in
-#: NOTES_r15.
+#: Numbers in NOTES_r15; value identity pinned in
+#: test_recall_shared_scan_matches_per_arm_variant.
 RECALL_SHARED_SCAN = True
 
 
@@ -2183,8 +2183,9 @@ ANN_FRONTIER_IVF_NPROBES: dict[str, list[int]] = {
 #: family) arm — the corpus explodes over the arm's distinct plane
 #: widths and joins once against the cfg-tagged union of every config's
 #: probe rows — instead of one broadcast join (and one corpus scan) per
-#: config. Candidate sets are provably identical per config; adjudicated
-#: by tools/ab_frontier_shared.py (values + interleaved timings).
+#: config. Candidate sets are provably identical per config; the
+#: shared join shape is pinned in
+#: test_ann_frontier_shares_scans_across_configs.
 #: ADOPTED r14: 15-row output identical, exec 84 → 62 jobs, interleaved
 #: warm medians 8.755 → 7.958 s (0.909) at sf0.1 — and the 100-TB shape
 #: is one pass over the corpus-scale signature table per arm instead of

@@ -2608,9 +2608,9 @@ _CMS_JOIN_ORACLE = """
 #: inner-join null semantics), both exact sums coalesce to 0 on empty
 #: input (zero-'R' or empty lineitem), and cms_inner_product_pair drops
 #: NULL-cell rows exactly as the (seed, cell) equi-join did.
-#: Adjudicated by tools/ab_cms_fused.py — numbers there and in
-#: NOTES_r14; degenerate-input identity pinned in
-#: test_cms_join_fused_identity_degenerate_inputs.
+#: Numbers in NOTES_r14; identity pinned in
+#: test_cms_join_fused_matches_per_relation_variant and (degenerate
+#: inputs) test_cms_join_fused_identity_degenerate_inputs.
 CMS_JOIN_FUSED = True
 
 

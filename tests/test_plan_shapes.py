@@ -851,8 +851,8 @@ def test_minhash_guard_plan(spark, sf_dir):
     mean the old standalone window guard got stacked on top — and NO
     join at all (the r7 self-join + broadcast-probe shape paid two
     extra exchanges over a persisted band table — the de-opt this pin
-    exists to catch; tools/proto_fused.py keeps both retired arms
-    frozen for re-measurement). The incremental/streaming paths keep
+    exists to catch; the retired arms stay in git history). The
+    incremental/streaming paths keep
     the standalone window guard by design (small delta-touched subset,
     single lineage eval)."""
     from movies_etl_spark.operators import dedup as D

@@ -1418,9 +1418,7 @@ def test_cms_join_fused_identity_degenerate_inputs(spark, tmp_path):
 
 
 def test_cms_join_fused_matches_per_relation_variant(spark, sf_dir):
-    """Gate-flip identity for the adopted fusion (the same contract
-    tools/ab_cms_fused.py asserts at sf0.1, pinned here at the test
-    SF so a regression cannot hide between A/B runs): both variants of
+    """Gate-flip identity for the adopted fusion: both variants of
     cms_join_size_estimate return the identical single row."""
     from movies_etl_spark.plans import queries_scale as QS
     from movies_etl_spark.plans import registry
@@ -1473,9 +1471,8 @@ def test_with_minhash_bands_sig_cols_matches_refold(spark):
 
 
 def test_minhash_estimate_shared_sig_matches_refold_variant(spark, sf_dir):
-    """Gate-flip identity for the adopted shared-signature form (the
-    same contract tools/ab_minhash_sig.py asserts at sf0.1, pinned
-    here at the test SF)."""
+    """Gate-flip identity for the adopted shared-signature form: both
+    variants of minhash_jaccard_estimate return identical rows."""
     from movies_etl_spark.plans import queries_ext as QE
     from movies_etl_spark.plans import registry
 
@@ -1492,9 +1489,8 @@ def test_minhash_estimate_shared_sig_matches_refold_variant(spark, sf_dir):
 
 
 def test_funnel_one_pass_matches_per_stage_variant(spark, sf_dir):
-    """Gate-flip identity for the adopted one-pass funnel (the same
-    contract tools/ab_funnel_onepass.py asserts at sf0.1, pinned here
-    at the test SF): both variants return identical stage counts."""
+    """Gate-flip identity for the adopted one-pass funnel: both
+    variants return identical stage counts."""
     from movies_etl_spark.plans import queries_analytics as QA
     from movies_etl_spark.plans import registry
 
@@ -1511,10 +1507,9 @@ def test_funnel_one_pass_matches_per_stage_variant(spark, sf_dir):
 
 
 def test_concurrency_one_scan_matches_union_variant(spark, sf_dir):
-    """Gate-flip identity for the r15 one-scan sweep-line endpoints
-    (the same contract tools/ab_concurrency_onescan.py asserts at
-    sf0.1, pinned here at the test SF): the explode form and the
-    two-scan union form return identical per-day concurrency rows."""
+    """Gate-flip identity for the r15 one-scan sweep-line endpoints:
+    the explode form and the two-scan union form return identical
+    per-day concurrency rows."""
     from movies_etl_spark.plans import queries_analytics as QA
     from movies_etl_spark.plans import registry
 
@@ -1531,9 +1526,8 @@ def test_concurrency_one_scan_matches_union_variant(spark, sf_dir):
 
 
 def test_recall_shared_scan_matches_per_arm_variant(spark, sf_dir):
-    """Gate-flip identity for the r15 shared-scan recall audits (the
-    same contract tools/ab_recall_shared.py asserts at sf0.1, pinned
-    here at the test SF): the checkpoint-leaf form and the per-arm
+    """Gate-flip identity for the r15 shared-scan recall audits: the
+    checkpoint-leaf form and the per-arm
     parquet-scan form return identical per-query recall rows for both
     audits."""
     from movies_etl_spark.plans import queries_ext as QE
@@ -1601,3 +1595,49 @@ def test_shingle_band_sql_parity(spark):
     )
     assert new_bands.exceptAll(old_bands).count() == 0
     assert old_bands.exceptAll(new_bands).count() == 0
+
+
+def test_string_builders_reject_non_plain_names(spark):
+    """The string-input builders paste column names into F.expr text, so
+    a name that is not a plain identifier must fail before anything is
+    built; plain names still build the Column builders' values."""
+    from movies_etl_spark.operators import dedup as D
+    from movies_etl_spark.operators import similarity as SIM
+    from movies_etl_spark.operators.text import tokens
+
+    df = spark.createDataFrame(
+        [
+            (1, "a b c d e", [0.5, -1.25, 2.0], [1.0, 0.25, -0.5]),
+            (2, "x y z x y", [-0.75, 0.5, 1.5], [0.125, -2.0, 0.5]),
+        ],
+        "doc_id long, text string, a array<double>, b array<double>",
+    )
+    builders = [
+        lambda n: D.dot_expr(n, "b"),
+        lambda n: D.dot_expr("a", n),
+        D.l2norm_expr,
+        lambda n: D.cosine_expr("a", n),
+        lambda n: D.shingled(df, n, "doc_id"),
+        lambda n: SIM.rp_bucket_n(n, 4),
+        SIM.rp_bucket,
+    ]
+    for build in builders:
+        for bad in ("a.b", "a b"):
+            with pytest.raises(ValueError, match="plain column name"):
+                build(bad)
+
+    a, b = F.col("a"), F.col("b")
+    got = df.select(
+        D.dot_expr("a", "b"), D.l2norm_expr("a"), D.cosine_expr("a", "b"),
+        SIM.rp_bucket_n("a", 3), SIM.rp_bucket("a"),
+    ).collect()
+    want = df.select(
+        D.dot(a, b), D.l2norm(a), D.cosine(a, b),
+        SIM.rp_bucket_n(a, 3), SIM.rp_bucket(a),
+    ).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    sh = sorted(tuple(r) for r in D.shingled(df, "text", "doc_id").collect())
+    ref = df.select(
+        "doc_id", D.shingle_hash_array(tokens(F.col("text"))).alias("shingles")
+    )
+    assert sh == sorted(tuple(r) for r in ref.collect())

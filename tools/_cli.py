@@ -2,9 +2,10 @@
 
 One implementation of the ``--flag VALUE`` / ``--flag=VALUE`` /
 unknown-arg-usage-error loop that r11 found hand-rolled three times
-(ab_verify_prune, survey_build_exec, gen_query_ref) — each copy had
-needed the same guard fixes individually (ADVICE r10 patched one for a
-``startswith`` prefix bug), so the copies diverge by construction.
+(survey_build_exec, gen_query_ref and a since-retired A/B tool) — each
+copy had needed the same guard fixes individually (ADVICE r10 patched
+one for a ``startswith`` prefix bug), so the copies diverge by
+construction.
 """
 
 from __future__ import annotations

@@ -5,19 +5,19 @@ Usage: python tools/dump_final_plans.py OUTDIR SUFFIX q1 q2 ... [--sf DIR]
 
 Unlike tools/dump_plans.py (static `.explain("formatted")`, dumped
 BEFORE execution — AdaptiveSparkPlan isFinalPlan=false, so runtime
-join-strategy changes are invisible), this EXECUTES each query with the
-bench's own noop-sink action and then prints the query execution's
-executedPlan, i.e. the re-optimized plan AQE actually ran
-(isFinalPlan=true, including SMJ→SHJ/BHJ conversions and
-AQEShuffleRead nodes). VERDICT r18 What's-wrong #1 / next-round #5:
+join-strategy changes are invisible), this EXECUTES each query and then
+prints the query execution's executedPlan, i.e. the re-optimized plan
+AQE actually ran (isFinalPlan=true, including SMJ→SHJ/BHJ conversions
+and AQEShuffleRead nodes). VERDICT r18 What's-wrong #1 / next-round #5:
 the r18 SHJ claims need post-execution artifacts, which a static dump
 cannot provide.
 
-Mechanics: `df.write.format("noop")` executes a SEPARATE QueryExecution
-(the write command's), whose child plan is the one that runs — so the
-dump walks the write command's executed plan. Falls back to executing
-via collect() (these queries return small frames) when the write QE is
-not reachable.
+Mechanics: each query runs via `df.collect()` (the registry queries
+return small result frames), which executes that DataFrame's own
+QueryExecution, so its AdaptiveSparkPlan finalizes in place; the dump
+is that QueryExecution's `executedPlan().toString()`. No noop write is
+involved: a write would run a separate QueryExecution whose final plan
+this DataFrame's does not see.
 """
 from __future__ import annotations
 

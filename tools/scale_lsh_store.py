@@ -11,8 +11,8 @@ r14) against pre-built stores at 1×/10×/100× (4k/40k/400k docs), and
 reports the per-batch wall and the 1→10 / 10→100 log-log segment
 slopes.
 
-Fixture: store docs are deterministic ~40-token texts (the
-ab_verify_prune generator); the batch is half exact copies of store
+Fixture: store docs are deterministic ~40-token texts, unique per id
+(see ``synth_docs``); the batch is half exact copies of store
 docs (ids shifted above every store id, so the smaller-id drop rule
 fires and Jaccard verify does real work) and half novel docs. Per rep,
 the batch's own batch=1 output dirs are removed so every rep runs the
@@ -47,7 +47,7 @@ BATCH_ID_OFFSET = 10_000_000_000  # batch ids sit above every store id
 
 def synth_docs(spark, lo: int, hi: int):
     """Deterministic ~40-token docs, UNIQUE per id (r14 continuation
-    fix): the first committed axis used the ab_verify_prune generator
+    fix): the first committed axis used the store-prune A/B generator
     (token values = id·(j+7) mod 997), whose texts depend only on
     id mod 997 — so the store carried exact-duplicate families of
     ~n/997 docs (a survivor store is near-dup-free by construction;
