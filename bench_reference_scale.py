@@ -10,15 +10,17 @@ same row count:
   1. synthesize 26,024,289 deterministic ratings distributed (no driver
      materialization — `spark.range` + expressions),
   2. ratings typing (F10 epoch→timestamp),
-  3. the full A1-A3 block: per-movie rating-bucket counts (explicit-list
-     pivot semantics via conditional aggregation) + fillna(0),
-  4. J2: broadcast left-join onto a 45 K-row movies dimension
-     (the kaggle id space),
+  3-4. the engine's own A1-A3 + J2 operator,
+     `operators.ratings.attach_rating_counts`: per-movie rating-bucket
+     counts (one conditional aggregate, one fact shuffle), broadcast
+     left-joined onto a 45 K-row movies dimension (the kaggle id space),
   5. sink: partitioned parquet write of BOTH output tables
      (`ratings` pass-through and `movies_ratings`).
 
-Prints one JSON line. Not part of the driver's per-round bench (row
-counts make it a ~minute-scale run); run manually:
+Prints one JSON line; ``jobs``, ``stages``, ``shuffle_write_bytes`` and
+``executor_cpu_s`` are the ratings pipeline's counters from Spark's
+status store (`perfbench/probe.StatusProbe`). Not part of bench.py's
+suite (row counts make it a ~minute-scale run); run manually:
 
     python bench_reference_scale.py [--rows N]
 """
@@ -35,8 +37,9 @@ sys.path.insert(0, __file__.rsplit("/", 1)[0])
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from movies_etl_spark.operators.ratings import RATING_BUCKETS  # noqa: E402
+from movies_etl_spark.operators import ratings as R  # noqa: E402
 from movies_etl_spark.session import get_spark  # noqa: E402
+from perfbench.probe import StatusProbe  # noqa: E402
 
 REFERENCE_ROWS = 26_024_289
 REFERENCE_SECONDS = 2846.62
@@ -48,9 +51,7 @@ def synth_ratings(spark, rows: int, hot_fraction: float = 0.0):
     """The deterministic 26M-row ratings fact; ``hot_fraction`` > 0
     plants a hot movieId (id 0 receives that share of ALL rows) — the
     head-key shape of a production feed (one viral title)."""
-    from movies_etl_spark.operators.ratings import RATING_BUCKETS
-
-    buckets = F.array(*[F.lit(b) for b in RATING_BUCKETS])
+    buckets = F.array(*[F.lit(b) for b in R.RATING_BUCKETS])
     spread = F.pmod(F.col("id") * 2_654_435_761, F.lit(N_MOVIES))
     movie = (
         F.when(F.col("id") % 10 < int(hot_fraction * 10), F.lit(0)).otherwise(spread)
@@ -146,8 +147,10 @@ def main() -> None:
     spark = get_spark(app_name="bench_reference_scale")
     shutil.rmtree(OUT, ignore_errors=True)
 
-    buckets = F.array(*[F.lit(b) for b in RATING_BUCKETS])
+    buckets = F.array(*[F.lit(b) for b in R.RATING_BUCKETS])
 
+    probe = StatusProbe(spark)
+    mark = probe.mark()
     t0 = time.perf_counter()
 
     # 1-2: synthesize + type the ratings fact (distributed, deterministic)
@@ -163,28 +166,20 @@ def main() -> None:
         .drop("ts_epoch")
     )
 
-    # 3: A1-A3 + F16 — ONE shuffle of the fact table
-    counts = ratings.groupBy("movieId").agg(
-        *[
-            F.count(F.when(F.col("rating") == b, 1)).alias(f"rating_{b}")
-            for b in RATING_BUCKETS
-        ]
-    )
-
-    # 4: J2 — broadcast join onto the movies dimension
+    # 3-4: A1-A3 + F16 (ONE shuffle of the fact table) and J2 (broadcast
+    # join onto the movies dimension)
     movies = spark.range(N_MOVIES).select(
         F.col("id").alias("kaggle_id"),
         F.concat(F.lit("movie_"), F.col("id")).alias("title"),
     )
-    movies_ratings = movies.join(
-        F.broadcast(counts), movies["kaggle_id"] == counts["movieId"], "left"
-    ).drop("movieId")
+    movies_ratings = R.attach_rating_counts(movies, ratings)
 
     # 5: sinks (the reference's `ratings` and `movies_ratings` loads)
     ratings.write.mode("overwrite").parquet(f"{OUT}/ratings")
     movies_ratings.write.mode("overwrite").parquet(f"{OUT}/movies_ratings")
 
     elapsed = time.perf_counter() - t0
+    counters = probe.since(mark)
     n_out = spark.read.parquet(f"{OUT}/ratings").count()
     mr = spark.read.parquet(f"{OUT}/movies_ratings").count()
 
@@ -205,6 +200,10 @@ def main() -> None:
                 "speedup_vs_reference": round(
                     (REFERENCE_SECONDS / (REFERENCE_ROWS / n_out)) / elapsed, 1
                 ),
+                "jobs": counters.jobs,
+                "stages": counters.stages,
+                "shuffle_write_bytes": counters.shuffle_write_bytes,
+                "executor_cpu_s": round(counters.executor_cpu_s, 2),
                 "wiki_parse_rows": wiki_rows,
                 "wiki_parse_sec": round(wiki_elapsed, 2),
                 "wiki_parse_rows_per_sec": round(wiki_rows / wiki_elapsed),

@@ -1,15 +1,16 @@
-"""The ratings aggregation block: groupBy → pivot → prefix → fillna → join
-(SURVEY.md §2.4 A1-A3 + F16 + J2; reference challenge.py:276-285).
+"""The ratings aggregation block: groupBy → bucket counts → prefix →
+fill → join (SURVEY.md §2.4 A1-A3 + F16 + J2; reference
+challenge.py:276-285).
 
 This is the only part of the reference touching the 26M-row table, and the
 part whose Spark plan matters most at 100 TB:
 
-- A1+A2 share the ``movieId`` hash partitioning: Spark's pivot with an
-  EXPLICIT value list compiles to a single hash aggregate over movieId
-  with one count per pivot bucket — ONE shuffle over the fact table total
-  (vs. groupBy-then-pivot's two if the value list were discovered by an
-  extra distinct scan).
-- The pivoted result is dimension-sized (one row per movie) →
+- A1+A2 are ONE hash aggregate over ``movieId`` with one conditional count
+  per rating bucket — ONE shuffle of (map-side partial) rows over the fact
+  table. Spark's ``.pivot()`` would plan two aggregates with two
+  Exchanges, first on ``(movieId, rating)`` and then on ``movieId``, even
+  with an explicit value list.
+- The counted result is dimension-sized (one row per movie) →
   broadcast-joined to the movies table, no second fact shuffle.
 """
 
@@ -38,28 +39,28 @@ def pivot_counts(
     prefix: str = "",
     fill_zero: bool = True,
 ) -> DataFrame:
-    """A2+A3+F16: pivot `pivot_key` values into count columns, one row per
-    `group_key` (challenge.py:278-283).
+    """A2+A3+F16: count `pivot_key` values into one column each, one row
+    per `group_key` (challenge.py:278-283).
 
-    Passing the explicit ``values`` list avoids the extra distinct-scan job
-    AND fixes the output schema (oracle-stable). Column names get
-    ``prefix`` + the pandas ``str(value)`` rendering (``str(0.5)='0.5'``,
-    ``str(1.0)='1.0'``) for golden-output parity."""
-    out = df.groupBy(group_key).pivot(pivot_key, list(values)).count()
-    renames = {str(v): f"{prefix}{v}" for v in values}
-    out = out.withColumnsRenamed({k: v for k, v in renames.items() if k != v})
-    if fill_zero:
-        # NB: explicit coalesce, not fillna(subset=...) — pandas-parity
-        # names like "rating_0.5" contain dots, which fillna's resolver
-        # mis-parses as struct field paths.
-        out = out.select(
-            F.col(group_key),
-            *[
-                F.coalesce(F.col(f"`{prefix}{v}`"), F.lit(0)).alias(f"{prefix}{v}")
-                for v in values
-            ],
-        )
-    return out
+    Same output as ``groupBy(group_key).pivot(pivot_key, values).count()``
+    but planned as one aggregate with one Exchange (conditional
+    aggregation). Pivot's matching rules are kept: each value is cast to
+    the pivot column's type and compared null-safely, so a ``None`` value
+    counts null keys. Empty buckets are 0 with ``fill_zero`` and null
+    (pivot's own convention) without it. Column names are ``prefix`` + the
+    pandas ``str(value)`` rendering (``str(0.5)='0.5'``,
+    ``str(1.0)='1.0'``) for golden-output parity; every count is bigint."""
+    key = F.col(pivot_key)
+    key_type = df.schema[pivot_key].dataType
+    agg = F.count if fill_zero else F.sum
+    return df.groupBy(group_key).agg(
+        *[
+            agg(F.when(key.eqNullSafe(F.lit(v).cast(key_type)), 1)).alias(
+                f"{prefix}{v}"
+            )
+            for v in values
+        ]
+    )
 
 
 def rating_counts(ratings: DataFrame, prefix: str = "rating_") -> DataFrame:
@@ -74,8 +75,8 @@ def rating_counts(ratings: DataFrame, prefix: str = "rating_") -> DataFrame:
 def attach_rating_counts(
     movies: DataFrame, ratings: DataFrame, movies_key: str = "kaggle_id"
 ) -> DataFrame:
-    """J2: movies LEFT JOIN pivoted counts on kaggle_id = movieId
-    (challenge.py:285). The pivoted side is dimension-sized → broadcast."""
+    """J2: movies LEFT JOIN bucket counts on kaggle_id = movieId
+    (challenge.py:285). The counts side is dimension-sized → broadcast."""
     counts = rating_counts(ratings)
     return movies.join(
         F.broadcast(counts), movies[movies_key] == counts["movieId"], "left"

@@ -3,8 +3,9 @@ test tables (SURVEY.md §7.1 step 1).
 
 Shape-for-shape the reference's only big-data path (challenge.py:276-285):
 take the fact table (events ≈ ratings, 26M rows at production scale),
-aggregate per entity × category (groupBy + explicit-list pivot = ONE
-shuffle), fill missing buckets with 0, then LEFT-join the dimension-sized
+aggregate per entity × category (one conditional count per category in
+one hash aggregate = ONE shuffle; Spark's ``.pivot()`` would plan two),
+fill missing buckets with 0, then LEFT-join the dimension-sized
 result onto the entity dimension (customer ≈ movies) — as a broadcast, so
 the fact table is shuffled exactly once end-to-end.
 """

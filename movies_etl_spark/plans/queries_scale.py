@@ -723,10 +723,12 @@ def q_compact_small_files(spark, sf_dir):
 )
 def q_pivot_dynamic(spark, sf_dir):
     """Pivot WITHOUT an explicit value list: Spark first runs a
-    distinct-values job on the pivot column, then plans the same
-    conditional aggregation `pivot_counts` writes by hand. The trade-off
-    this query exists to demonstrate: inferred pivots cost one extra
-    collect-to-driver pass over the column, and the default
+    distinct-values job on the pivot column, then plans its pivot as two
+    aggregates behind two Exchanges, first on (event_type, bucket) and
+    then on event_type — where `pivot_counts` writes one conditional
+    aggregate with one Exchange. The trade-off this query exists to
+    demonstrate: inferred pivots cost one extra pass that collects the
+    column's distinct values, and the default
     spark.sql.pivotMaxValues=10000 cap is the guard that keeps an
     accidental high-cardinality pivot from planning a 10k-column
     aggregate. Use explicit values (pivot_counts) in production jobs at

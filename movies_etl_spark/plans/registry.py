@@ -115,9 +115,10 @@ EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
     """,
 )
 def q_pivot_counts(spark, sf_dir):
-    """A2+A3+F16 (challenge.py:278-283). The EXPLICIT value list makes the
-    pivot a single hash aggregate (no distinct-discovery job) — one
-    shuffle over the fact table, output is dimension-sized."""
+    """A2+A3+F16 (challenge.py:278-283). The EXPLICIT value list becomes
+    one conditional count per bucket in a single hash aggregate (no
+    distinct-discovery job, no second pivot aggregate) — one shuffle over
+    the fact table, output is dimension-sized."""
     ev = _t(spark, sf_dir, "events")
     return R.pivot_counts(
         ev, "user_id", "event_type", EVENT_TYPES, prefix="cnt_", fill_zero=True
@@ -1002,7 +1003,7 @@ def q_movies_etl_movies(spark, sf_dir):
 
 @query("movies_etl_movies_ratings", oracle=_OG.MOVIES_ETL_MOVIES_RATINGS_ORACLE)
 def q_movies_etl_movies_ratings(spark, sf_dir):
-    """Pipeline output 2: `movies_ratings` (A1-A3 pivot block + J2)."""
+    """Pipeline output 2: `movies_ratings` (A1-A3 bucket counts + J2)."""
     out = _pipeline_outputs(spark, sf_dir)["movies_ratings"]
     return out.withColumn("release_date", F.col("release_date").cast("timestamp"))
 

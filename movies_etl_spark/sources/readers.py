@@ -93,6 +93,16 @@ def read_json_records(
 
     ``multiline=True`` handles a single top-level JSON array (the reference's
     input shape); JSON-lines files set it False and stay splittable.
+
+    Known cost, not yet fixed: under Spark 4.1's default
+    ``spark.sql.json.enableExactStringParsing``, every array-valued cell
+    in a string-typed column re-opens the file for a positioned read of
+    its raw text. clean_wiki over a 527 KB wiki file reads 20.3 MB that
+    way (1.1 MB with the option off), about 0.2-0.4 s more executor CPU
+    per pass on 4 vCPUs. Turning it off also re-renders list cells
+    (``["A", "B"]`` → ``["A","B"]``), and it would shrink perfbench
+    etl_reference's input-byte denominator, so it waits for a change to
+    that benchmark.
     """
     reader = spark.read.option("multiLine", "true" if multiline else "false")
     if schema is not None:

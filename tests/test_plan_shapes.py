@@ -394,6 +394,23 @@ def test_conditional_agg_single_aggregate(spark, sf_dir):
     assert _exchanges(plan) == 1, plan
 
 
+def test_pivot_counts_single_exchange(spark, sf_dir):
+    """The explicit-value bucket counts are ONE hash aggregate with one
+    Exchange: conditional aggregation, not Spark's pivot, which plans a
+    second aggregate (pivotfirst) behind a second Exchange."""
+    from movies_etl_spark.operators import ratings as R
+
+    plan = _plan(spark, sf_dir, "pivot_counts")
+    assert _exchanges(plan) == 1, plan
+    assert "pivotfirst" not in plan, plan
+    ratings = spark.createDataFrame(
+        [(1, 0.5), (1, 5.0), (2, 3.5), (3, None)], "movieId int, rating double"
+    )
+    plan = _formatted(spark, R.rating_counts(ratings))
+    assert _exchanges(plan) == 1, plan
+    assert "pivotfirst" not in plan, plan
+
+
 def test_pagerank_single_fact_scan(spark, sf_dir):
     """The PageRank edge table is built once (persisted) from one scan
     of the fact table; the per-round joins must consume the cached edge

@@ -1641,3 +1641,58 @@ def test_string_builders_reject_non_plain_names(spark):
         "doc_id", D.shingle_hash_array(tokens(F.col("text"))).alias("shingles")
     )
     assert sh == sorted(tuple(r) for r in ref.collect())
+
+
+def _pivot_reference(df, group_key, pivot_key, values, prefix, fill_zero):
+    """Spark's own pivot plus a rename and zero fill. Renamed by position:
+    Spark names a None value's column "null", not str(None)."""
+    out = df.groupBy(group_key).pivot(pivot_key, list(values)).count()
+    out = out.toDF(group_key, *[f"{prefix}{v}" for v in values])
+    if fill_zero:
+        out = out.select(
+            F.col(group_key),
+            *[
+                F.coalesce(F.col(f"`{prefix}{v}`"), F.lit(0)).alias(f"{prefix}{v}")
+                for v in values
+            ],
+        )
+    return out
+
+
+def test_pivot_counts_matches_spark_pivot(spark):
+    """pivot_counts' conditional counts equal Spark's pivot row for row
+    and type for type: values cast to the pivot column's type (a string
+    "0.50" never matches 0.5), a None value counts null keys, a rating
+    outside the list is not counted, and empty buckets are 0 with
+    fill_zero and null without."""
+    from movies_etl_spark.operators import ratings as R
+
+    doubles = spark.createDataFrame(
+        [
+            (1, 0.5), (1, 0.5), (1, 5.0), (2, 1.0), (2, None),
+            (None, 0.5), (None, 4.0), (3, 3.25), (3, None), (4, 2.5),
+        ],
+        "movieId int, rating double",
+    )
+    strings = spark.createDataFrame(
+        [
+            (1, "0.5"), (1, "0.50"), (1, "1.0"), (2, "1"), (2, None),
+            (None, "5.0"), (3, "x"), (3, "0.5"),
+        ],
+        "movieId int, rating string",
+    )
+    cases = [
+        (doubles, R.RATING_BUCKETS, "rating_"),
+        (doubles, [0.5, 1.0, None, 9.0], "r"),
+        (strings, [0.5, 1.0, 5.0], "rating_"),
+        (strings, ["0.5", "0.50", None, "missing"], ""),
+    ]
+    for df, values, prefix in cases:
+        for fill_zero in (True, False):
+            got = R.pivot_counts(df, "movieId", "rating", values, prefix, fill_zero)
+            want = _pivot_reference(df, "movieId", "rating", values, prefix, fill_zero)
+            assert got.schema == want.schema, (values, fill_zero)
+            rows = sorted(map(tuple, got.collect()), key=repr)
+            assert rows == sorted(map(tuple, want.collect()), key=repr), (
+                values, fill_zero,
+            )
