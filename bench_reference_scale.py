@@ -19,7 +19,12 @@ same row count:
 
 Prints one JSON line; ``jobs``, ``stages``, ``shuffle_write_bytes`` and
 ``executor_cpu_s`` are the ratings pipeline's counters from Spark's
-status store (`perfbench/probe.StatusProbe`). Not part of bench.py's
+status store (`perfbench/probe.StatusProbe`). ``movies_ratings_dense``
+and ``movies_ratings_reference_shaped`` carry the same counters for a
+warm `movies_ratings` run into the noop sink over two dimensions: every
+one of the 45 K rated movies, and 6 K of them (the reference's merged
+movies keep about 6 K of 45 K rated ids), where counting only kept
+movies shrinks the shuffle. Not part of bench.py's
 suite (row counts make it a ~minute-scale run); run manually:
 
     python bench_reference_scale.py [--rows N]
@@ -135,6 +140,45 @@ def bench_skew_suite(spark, rows: int) -> dict:
     return out
 
 
+def bench_dimension_shapes(spark, ratings) -> dict:
+    """Warm counters of `attach_rating_counts` into the noop sink for a
+    dense dimension (all N_MOVIES rated ids) and a reference-shaped one
+    (2 of every 15 ids: 6,000, about the reference's 6,052 merged
+    movies). Each shape runs once uncounted first, so the
+    counted run excludes codegen warm-up and the cache fill.
+
+    Each dimension is cached, as ``merge_movies`` caches the merged
+    movies: a cached frame carries no filter Catalyst could infer onto
+    the counts side of the left join (from ``id % 15 < 2`` it would
+    otherwise prune the fact scan itself, which no join-built dimension
+    allows)."""
+    out = {}
+    all_ids = spark.range(N_MOVIES)
+    for name, ids in [
+        ("movies_ratings_dense", all_ids),
+        ("movies_ratings_reference_shaped", all_ids.filter(F.col("id") % 15 < 2)),
+    ]:
+        movies = ids.select(
+            F.col("id").alias("kaggle_id"),
+            F.concat(F.lit("movie_"), F.col("id")).alias("title"),
+        ).persist()
+        out_df = R.attach_rating_counts(movies, ratings)
+        out_df.write.format("noop").mode("overwrite").save()
+        probe = StatusProbe(spark)
+        mark = probe.mark()
+        out_df.write.format("noop").mode("overwrite").save()
+        c = probe.since(mark)
+        out[name] = {
+            "movies": movies.count(),
+            "jobs": c.jobs,
+            "stages": c.stages,
+            "shuffle_write_bytes": c.shuffle_write_bytes,
+            "executor_cpu_s": round(c.executor_cpu_s, 2),
+        }
+        movies.unpersist()
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=REFERENCE_ROWS)
@@ -183,6 +227,7 @@ def main() -> None:
     n_out = spark.read.parquet(f"{OUT}/ratings").count()
     mr = spark.read.parquet(f"{OUT}/movies_ratings").count()
 
+    shapes = bench_dimension_shapes(spark, ratings)
     wiki_rows, wiki_elapsed = bench_wiki_parse(spark)
     skew = {} if args.skip_skew else bench_skew_suite(spark, args.rows)
 
@@ -204,6 +249,7 @@ def main() -> None:
                 "stages": counters.stages,
                 "shuffle_write_bytes": counters.shuffle_write_bytes,
                 "executor_cpu_s": round(counters.executor_cpu_s, 2),
+                **shapes,
                 "wiki_parse_rows": wiki_rows,
                 "wiki_parse_sec": round(wiki_elapsed, 2),
                 "wiki_parse_rows_per_sec": round(wiki_rows / wiki_elapsed),

@@ -10,7 +10,11 @@ part whose Spark plan matters most at 100 TB:
   table. Spark's ``.pivot()`` would plan two aggregates with two
   Exchanges, first on ``(movieId, rating)`` and then on ``movieId``, even
   with an explicit value list.
-- The counted result is dimension-sized (one row per movie) →
+- Before that shuffle the ratings are semi-joined against a broadcast of
+  the movies' keys, so the partial aggregate and its Exchange carry only
+  movies the final join can keep (a semi-join reducer): the reference
+  counts ~45 K rated movies to keep 6 K of them.
+- The counted result is dimension-sized (at most one row per movie) →
   broadcast-joined to the movies table, no second fact shuffle.
 """
 
@@ -76,8 +80,20 @@ def attach_rating_counts(
     movies: DataFrame, ratings: DataFrame, movies_key: str = "kaggle_id"
 ) -> DataFrame:
     """J2: movies LEFT JOIN bucket counts on kaggle_id = movieId
-    (challenge.py:285). The counts side is dimension-sized → broadcast."""
-    counts = rating_counts(ratings)
+    (challenge.py:285).
+
+    Only ratings whose movieId matches a movie key are counted: a
+    broadcast LEFT SEMI join on the same condition runs before the
+    aggregate, so its one Exchange carries no count the left join would
+    discard. Rows, names, bigint types and nullability equal the
+    unfiltered join's. ``movies`` is read twice (keys and join side), so
+    callers pass a cached frame when it is expensive to rebuild. The
+    counts side is dimension-sized → broadcast."""
+    keys = movies.select(movies_key)
+    kept = ratings.join(
+        F.broadcast(keys), ratings["movieId"] == keys[movies_key], "left_semi"
+    )
+    counts = rating_counts(kept)
     return movies.join(
         F.broadcast(counts), movies[movies_key] == counts["movieId"], "left"
     ).drop(counts["movieId"])

@@ -154,6 +154,27 @@ def test_checkpointed_frames_never_enter_tracked_release_list(spark):
     assert df.count() == 4
 
 
+def test_merge_movies_is_tracked_and_released(spark):
+    """merge_movies returns a persisted frame registered with caching;
+    release_tracked() unpersists it, as it does clean_wiki's cache."""
+    from movies_etl_spark.plans import pipeline
+
+    caching.release_tracked()
+    wiki = spark.createDataFrame(
+        [("tt1", "W", 100)], "imdb_id string, title string, running_time int"
+    )
+    kaggle = spark.createDataFrame(
+        [("tt1", 5, "K", 0)], "imdb_id string, id bigint, title string, runtime int"
+    )
+    movies = pipeline.merge_movies(wiki, kaggle)
+    assert any(df is movies for df in caching._TRACKED)
+    assert movies.storageLevel.useMemory
+    assert movies.collect()[0]["runtime"] == 100
+    caching.release_tracked()
+    assert not caching._TRACKED
+    assert not movies.storageLevel.useMemory
+
+
 def test_every_round_priority_name_is_registered():
     missing = [
         n for n in entrymod._CURRENT_PRIORITY if n not in registry.QUERIES

@@ -411,6 +411,55 @@ def test_pivot_counts_single_exchange(spark, sf_dir):
     assert "pivotfirst" not in plan, plan
 
 
+def test_attach_rating_counts_semi_join_before_aggregate(spark):
+    """The ratings are cut to the movies' keys before they are counted:
+    a broadcast LeftSemi join sits below the partial aggregate, and the
+    aggregate's one Exchange (on movieId) is the plan's only shuffle."""
+    from movies_etl_spark.operators import ratings as R
+
+    movies = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (9, "c")], "kaggle_id bigint, title string"
+    )
+    ratings = spark.createDataFrame(
+        [(1, 0.5), (1, 5.0), (2, 3.5), (3, 1.0)], "movieId int, rating double"
+    )
+    plan = _formatted(spark, R.attach_rating_counts(movies, ratings))
+    assert _exchanges(plan) == 1, plan
+    assert re.search(
+        r"\(\d+\) Exchange\s+Input[^\n]*\nArguments: hashpartitioning\(movieId#", plan
+    ), plan
+    semi = re.search(
+        r"\((\d+)\) BroadcastHashJoin\n(?:[^\n]+\n)*?Join type: LeftSemi", plan
+    )
+    partial = re.search(
+        r"\((\d+)\) HashAggregate\n(?:[^\n]+\n)*?Functions[^\n]*partial_count", plan
+    )
+    assert semi and partial, plan
+    # formatted plans number children before parents
+    assert int(semi.group(1)) < int(partial.group(1)), plan
+
+
+def _leaves(df):
+    """(node name, output schema) of the optimized plan's leaves; an
+    InMemoryRelation is a leaf, its cached plan is not walked."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [
+        (leaves.apply(i).nodeName(), leaves.apply(i).schema().simpleString())
+        for i in range(leaves.size())
+    ]
+
+
+def test_movies_ratings_reads_cached_movies(spark, sf_dir):
+    """The pipeline's movies_ratings plan reads the merged movies from
+    the cache merge_movies fills, for both the key broadcast and the
+    join side; only the ratings CSV is scanned live."""
+    leaves = _leaves(QUERIES["movies_etl_movies_ratings"](spark, sf_dir))
+    cached = [s for n, s in leaves if n == "InMemoryRelation"]
+    assert len(cached) == 2 and all("kaggle_id:" in s for s in cached), leaves
+    live = [s for n, s in leaves if n != "InMemoryRelation"]
+    assert len(live) == 1 and "movieId:" in live[0], leaves
+
+
 def test_pagerank_single_fact_scan(spark, sf_dir):
     """The PageRank edge table is built once (persisted) from one scan
     of the fact table; the per-round joins must consume the cached edge

@@ -1696,3 +1696,39 @@ def test_pivot_counts_matches_spark_pivot(spark):
             assert rows == sorted(map(tuple, want.collect()), key=repr), (
                 values, fill_zero,
             )
+
+
+def test_attach_rating_counts_matches_unfiltered_join(spark):
+    """Counting only the ratings whose movieId is a movie key gives the
+    unfiltered count-then-left-join row for row and type for type: a
+    movie with no ratings keeps null buckets, ratings of movies absent
+    from the dimension and null keys on either side are dropped either
+    way, a duplicated movie key repeats its counts, and an int movieId
+    matches a bigint kaggle_id."""
+    from movies_etl_spark.operators import ratings as R
+
+    movies = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (2, "b-dup"), (7, "unrated"), (None, "no key")],
+        "kaggle_id bigint, title string",
+    )
+    ratings = spark.createDataFrame(
+        [
+            (1, 0.5), (1, 0.5), (1, 5.0), (2, 3.5), (2, None),
+            (3, 4.0), (4, 1.0), (None, 2.0), (None, None),
+        ],
+        "movieId int, rating double",
+    )
+    counts = R.rating_counts(ratings)
+    want = movies.join(
+        F.broadcast(counts), movies["kaggle_id"] == counts["movieId"], "left"
+    ).drop(counts["movieId"])
+    got = R.attach_rating_counts(movies, ratings)
+    assert got.schema == want.schema
+    got_rows = got.collect()
+    rows = sorted(map(tuple, got_rows), key=repr)
+    assert rows == sorted(map(tuple, want.collect()), key=repr)
+    by_title = {r["title"]: r for r in got_rows}
+    assert by_title["unrated"]["rating_0.5"] is None
+    assert by_title["no key"]["rating_5.0"] is None
+    assert by_title["a"]["rating_0.5"] == 2
+    assert by_title["b-dup"]["rating_3.5"] == 1
