@@ -47,16 +47,23 @@ def equidepth_centroids(
     df: DataFrame,
     value_col: str,
     shard_col: str,
-    order_cols: Sequence[str],
     k: int = 100,
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Per-shard partial sketch: rank values within the shard
-    (deterministic tie-break via ``order_cols``), cut into ``k``
-    equi-depth buckets, and reduce each bucket to a (mean, weight)
+    """Per-shard partial sketch: rank values within the shard, cut into
+    ``k`` equi-depth buckets, and reduce each bucket to a (mean, weight)
     centroid. Returns (*group_cols, shard, bucket, m, w) —
     ``group_cols`` scopes everything (sketch per group per shard, e.g.
     per (priority, day)), empty for a global sketch.
+
+    The rank orders by the value alone. Ties cannot change the output:
+    once a shard is sorted by value, its i-th row holds the i-th
+    smallest value however equal values are ordered, so every bucket
+    receives the same multiset of values and hence the same mean and
+    weight (nulls sort first either way). No tie-break columns are
+    needed, so the input is narrowed to (*group_cols, shard, v) before
+    the windows run and the rank window's Exchange carries only those
+    columns.
 
     The rank window shuffles each shard's values once — the same shuffle
     class as any per-shard sort — and the centroid reduction is a
@@ -64,15 +71,15 @@ def equidepth_centroids(
     physical partition (day, source file group), so the window never
     crosses partitions and the output is ~groups·shards·k rows."""
     gcols = list(group_cols)
-    w_rank = Window.partitionBy(*gcols, shard_col).orderBy(
-        F.col(value_col), *[F.col(c) for c in order_cols]
+    base = df.select(
+        *gcols, F.col(shard_col).alias("shard"), F.col(value_col).alias("v")
     )
-    w_shard = Window.partitionBy(*gcols, shard_col)
-    ranked = df.select(
+    w_shard = Window.partitionBy(*gcols, "shard")
+    ranked = base.select(
         *gcols,
-        F.col(shard_col).alias("shard"),
-        F.col(value_col).alias("v"),
-        (F.row_number().over(w_rank) - 1).alias("rn"),
+        "shard",
+        "v",
+        (F.row_number().over(w_shard.orderBy("v")) - 1).alias("rn"),
         F.count(F.lit(1)).over(w_shard).alias("n_s"),
     )
     bucket = F.floor(F.col("rn") * k / F.col("n_s")).cast("bigint")

@@ -1401,20 +1401,16 @@ def q_quantile_sketch_merge(spark, sf_dir):
     recomputes the identical sketch, and the bounds witness
     (tests/test_property_parity.py) independently asserts every estimate
     sits inside the exact ±2% rank window, surviving recomputation at 4
-    and 16 shards. Shuffle cost: one rank window per shard + one
-    ~shards·k-row centroid merge — the values shuffle once, the merge
-    moves only centroids."""
+    and 16 shards. Shuffle cost: one rank window per shard that moves
+    only (shard, value) + one ~shards·k-row centroid merge — the values
+    shuffle once, the merge moves only centroids."""
     from movies_etl_spark.operators import sketch as SK
 
     li = _t(spark, sf_dir, "lineitem").select(
         (F.col("l_orderkey") % 8).alias("shard"),
         F.floor(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
-        "l_orderkey",
-        "l_linenumber",
     )
-    cent = SK.equidepth_centroids(
-        li, "cents", "shard", ["l_orderkey", "l_linenumber"], k=100
-    )
+    cent = SK.equidepth_centroids(li, "cents", "shard", k=100)
     out = SK.merge_centroid_quantiles(cent, [0.1, 0.5, 0.9, 0.95, 0.99])
     return out.select("q", F.round(F.col("est") / 100, 2).alias("est"))
 
@@ -2115,19 +2111,18 @@ def q_quantile_sketch_by_group(spark, sf_dir):
     dashboards merge daily shard sketches instead of re-ranking raw
     values. Same exact-integer-cents portability and single-rounding
     discipline as the global query; shuffle cost is one rank window per
-    (group, shard) plus a ~groups·shards·k-row centroid merge, and the
-    quantile probes are a |groups|·|qs|-row broadcast side."""
+    (group, shard) that moves only (group, shard, value) plus a
+    ~groups·shards·k-row centroid merge, and the quantile probes are a
+    |groups|·|qs|-row broadcast side."""
     from movies_etl_spark.operators import sketch as SK
 
     o = _t(spark, sf_dir, "orders").select(
         F.col("o_orderpriority"),
         (F.col("o_orderkey") % 4).alias("shard_in"),
         F.floor(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        "o_orderkey",
     )
     cent = SK.equidepth_centroids(
-        o, "cents", "shard_in", ["o_orderkey"], k=100,
-        group_cols=["o_orderpriority"],
+        o, "cents", "shard_in", k=100, group_cols=["o_orderpriority"]
     )
     out = SK.merge_centroid_quantiles(
         cent, [0.25, 0.5, 0.95], group_cols=["o_orderpriority"]
@@ -2289,21 +2284,18 @@ def q_quantile_sketch_cdf(spark, sf_dir):
     centroid tables quantile_sketch_merge consumes — one stored sketch
     serves both lookup directions ("what price is p95?" and "what
     fraction of lines cost ≤ $X?"), which is the operational point of
-    keeping partials as data. Probes are a tiny broadcast side against
-    the ~shards·k-row centroid table; integer weight sums with one
-    division at the end, rounded once. Error inherits the ~1/k-per-
-    shard rank contract (bounds witness in test_property_parity.py)."""
+    keeping partials as data. The rank window moves only (shard, value);
+    probes are a tiny broadcast side against the ~shards·k-row centroid
+    table; integer weight sums with one division at the end, rounded
+    once. Error inherits the ~1/k-per-shard rank contract (bounds
+    witness in test_property_parity.py)."""
     from movies_etl_spark.operators import sketch as SK
 
     li = _t(spark, sf_dir, "lineitem").select(
         (F.col("l_orderkey") % 8).alias("shard_in"),
         F.floor(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
-        "l_orderkey",
-        "l_linenumber",
     )
-    cent = SK.equidepth_centroids(
-        li, "cents", "shard_in", ["l_orderkey", "l_linenumber"], k=100
-    )
+    cent = SK.equidepth_centroids(li, "cents", "shard_in", k=100)
     out = SK.cdf_from_centroids(
         cent, [100000.0, 500000.0, 2000000.0, 5000000.0, 9000000.0]
     )

@@ -744,6 +744,29 @@ def test_sketch_queries_plan_shapes(spark, sf_dir):
         assert _nodes(plan, "HashAggregate") >= 2, name  # partial+final
 
 
+def test_sketch_rank_window_shuffles_only_shard_and_value(spark, sf_dir):
+    """The per-shard rank window's Exchange carries only the group,
+    shard and value columns: ties cannot change an equi-depth bucket,
+    so no tie-break column is ranked, shuffled or even scanned."""
+    plans = {
+        name: _plan(spark, sf_dir, name)
+        for name in ("quantile_sketch_merge", "quantile_sketch_by_group")
+    }
+    for name, width in {
+        "quantile_sketch_merge": 2,  # (shard, v)
+        "quantile_sketch_by_group": 3,  # (o_orderpriority, shard, v)
+    }.items():
+        rank_inputs = re.findall(
+            r"\(\d+\) Exchange\nInput \[(\d+)\]: [^\n]*\n"
+            r"Arguments: hashpartitioning\([^)]*\bshard#",
+            plans[name],
+        )
+        assert rank_inputs == [str(width)], (name, plans[name])
+    plan = plans["quantile_sketch_merge"]
+    read = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    assert read and not any("l_linenumber" in s for s in read), plan
+
+
 def test_kmeans_assignment_pass_is_map_only_over_corpus(spark):
     """The r12 map-only Lloyd's assignment (`similarity._assign_cells`):
     centroids pack into ONE broadcast row and the argmin is an

@@ -717,9 +717,7 @@ def test_quantile_sketch_bounds_survive_sharded_recompute(spark, sf_dir, duck):
             "l_orderkey",
             "l_linenumber",
         )
-        cent = SK.equidepth_centroids(
-            sharded, "cents", "shard", ["l_orderkey", "l_linenumber"], k=100
-        )
+        cent = SK.equidepth_centroids(sharded, "cents", "shard", k=100)
         got = {
             r["q"]: r["est"] / 100
             for r in SK.merge_centroid_quantiles(cent, QS).collect()
@@ -871,8 +869,7 @@ def test_grouped_quantile_sketch_bounds_per_group(spark, sf_dir, duck):
             "o_orderkey",
         )
         cent = SK.equidepth_centroids(
-            sharded, "cents", "shard", ["o_orderkey"], k=100,
-            group_cols=["o_orderpriority"],
+            sharded, "cents", "shard", k=100, group_cols=["o_orderpriority"]
         )
         got = {
             (r["o_orderpriority"], r["q"]): r["est"] / 100
@@ -883,6 +880,74 @@ def test_grouped_quantile_sketch_bounds_per_group(spark, sf_dir, duck):
         assert set(got) == set(windows)
         for key, (lo, hi) in windows.items():
             assert lo - 0.01 <= got[key] <= hi + 0.01, (n_shards, key, got[key], lo, hi)
+
+
+def _tie_broken_centroids(df, value_col, shard_col, order_cols, k, group_cols=()):
+    """The equi-depth sketch with the rank tie-broken by ``order_cols``:
+    the reference that shows ties cannot change the centroids."""
+    from pyspark.sql import Window
+
+    gcols = list(group_cols)
+    w_rank = Window.partitionBy(*gcols, shard_col).orderBy(
+        F.col(value_col), *[F.col(c) for c in order_cols]
+    )
+    w_shard = Window.partitionBy(*gcols, shard_col)
+    ranked = df.select(
+        *gcols,
+        F.col(shard_col).alias("shard"),
+        F.col(value_col).alias("v"),
+        (F.row_number().over(w_rank) - 1).alias("rn"),
+        F.count(F.lit(1)).over(w_shard).alias("n_s"),
+    )
+    bucket = F.floor(F.col("rn") * k / F.col("n_s")).cast("bigint")
+    return ranked.groupBy(*gcols, "shard", bucket.alias("bucket")).agg(
+        F.avg("v").alias("m"), F.count(F.lit(1)).alias("w")
+    )
+
+
+@pytest.mark.parametrize(
+    "val, shard, group_cols",
+    [
+        # 7 distinct values over ~667 rows per shard: each value's ties
+        # span many of the 100 buckets
+        pytest.param("id % 7", "id % 3", (), id="heavy_ties"),
+        pytest.param(
+            "CASE WHEN id % 5 != 0 THEN id % 11 END", "id % 3", (),
+            id="null_values",
+        ),
+        pytest.param("id % 13", "id % 3", ("g",), id="group_cols"),
+        # shard 3 holds 59 rows (< k) and shard 4 a single row
+        pytest.param(
+            "id % 7",
+            "CASE WHEN id < 1940 THEN id % 3 WHEN id < 1999 THEN 3 ELSE 4 END",
+            (),
+            id="small_shards",
+        ),
+    ],
+)
+def test_equidepth_centroids_match_tie_broken_rank(spark, val, shard, group_cols):
+    """Ranking by the value alone gives exactly the centroids of a rank
+    tie-broken by other columns: a shard sorted by value holds the same
+    multiset in each bucket however ties are ordered."""
+    from movies_etl_spark.operators import sketch as SK
+
+    df = spark.range(2000).selectExpr(
+        "id % 2 AS g",
+        f"{shard} AS s",
+        f"{val} AS val",
+        "id * 7919 % 2000 AS tb",  # a tie-break unrelated to id order
+    )
+    got = SK.equidepth_centroids(df, "val", "s", k=100, group_cols=group_cols)
+    want = _tie_broken_centroids(df, "val", "s", ["tb"], 100, group_cols)
+    assert got.schema == want.schema
+
+    def rows(frame):
+        return sorted(
+            (tuple(r) for r in frame.collect()),
+            key=lambda r: tuple((x is None, x) for x in r),
+        )
+
+    assert rows(got) == rows(want)
 
 
 def test_sketch_cdf_bounds_vs_exact_rank(spark, sf_dir, duck):

@@ -13,12 +13,16 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 
+QUERIES_MD = os.path.join(ROOT, "QUERIES.md")
 
-def main() -> None:
+
+def render() -> str:
+    """QUERIES.md's full text for the current registry."""
     qs, osql = entrymod.queries(), entrymod.oracle_sql()
     rows = []
     for name in sorted(qs):
@@ -38,11 +42,14 @@ def main() -> None:
         "(each with a twin/golden/bounds test).**\n\n"
         "| query | check | summary |\n|---|---|---|\n"
     )
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       "QUERIES.md")
-    with open(out, "w") as f:
-        f.write(hdr + "\n".join(rows) + "\n")
-    print(f"QUERIES.md: {n} queries, {len(osql)} oracle-paired")
+    return hdr + "\n".join(rows) + "\n"
+
+
+def main() -> None:
+    with open(QUERIES_MD, "w") as f:
+        f.write(render())
+    qs, osql = entrymod.queries(), entrymod.oracle_sql()
+    print(f"QUERIES.md: {len(qs)} queries, {len(osql)} oracle-paired")
 
 
 if __name__ == "__main__":
