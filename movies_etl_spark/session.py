@@ -7,6 +7,18 @@ Arrow enabled for any Pandas-UDF path, and a pinned UTC session timezone
 so results compare bit-for-bit against external oracles (DuckDB is
 UTC-naive).
 
+One codec, zstd (:data:`COMPRESSION_CODEC`), compresses everything the
+engine stores or moves: the parquet it writes, and through
+``spark.io.compression.codec`` every shuffle map output, spill file and
+torrent-broadcast block. Shuffle is most of what a short query writes
+(the quantile sketch's rank window, the dedup and similarity joins), and
+zstd at Spark's default level 1 roughly halves those bytes against the
+lz4 default for about the same CPU. The block codec is a SparkContext
+(static) conf: only a session this builder creates gets it.
+:func:`pin_session_conf` re-pins the runtime confs on a session built
+elsewhere (a driver harness's ``getOrCreate()``), and such a session
+keeps its own block codec.
+
 At cluster scale the same builder applies; only `master` and the memory
 knobs change. Every query in this engine is declarative, so moving from
 local[N] to a 1000-executor cluster changes the physical plan (Catalyst
@@ -21,6 +33,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+COMPRESSION_CODEC = "zstd"
 
 
 @contextlib.contextmanager
@@ -140,7 +153,12 @@ def get_spark(
         # stream landing zones): better ratio than snappy at similar
         # speed (guide §6); measured neutral-to-faster on the
         # write-heavy queries locally, and strictly fewer bytes at scale.
-        .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.sql.parquet.compression.codec", COMPRESSION_CODEC)
+        # The same codec for shuffle map outputs, spill files and
+        # broadcast blocks (lz4 by default), at Spark's zstd defaults
+        # (level 1, buffer pool on). Static: a session built elsewhere
+        # keeps its own codec, and pin_session_conf cannot change it.
+        .config("spark.io.compression.codec", COMPRESSION_CODEC)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -158,7 +176,8 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
 
     The driver harness hands us its own SparkSession; these settings are
     the ones correctness depends on (UTC timestamps for oracle parity,
-    AQE for sane local plans). All are runtime-settable.
+    AQE for sane local plans). All are runtime-settable. The shuffle,
+    spill and broadcast codec is not: such a session keeps its own.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -209,7 +228,9 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
             spark.conf.get("spark.sql.parquet.compression.codec", "snappy")
             == "snappy"
         ):
-            spark.conf.set("spark.sql.parquet.compression.codec", "zstd")
+            spark.conf.set(
+                "spark.sql.parquet.compression.codec", COMPRESSION_CODEC
+            )
     spark.conf.set("spark.movies_etl.shufflePinned", "1")
     # Early testdata generations stored events.ts as TIMESTAMP(NANOS),
     # which Spark's parquet reader rejects by default; read nanos as long
