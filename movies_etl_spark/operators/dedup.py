@@ -68,19 +68,6 @@ MINHASH_SEEDS: list[tuple[int, int]] = [
 ]
 
 
-def token_shingles(toks: Column, k: int = 3) -> Column:
-    """k-token shingles ("a b c" for consecutive triples). Empty array if
-    fewer than k tokens."""
-    n = F.size(toks)
-    starts = F.sequence(F.lit(0), n - k)  # 0-based start indices
-    mk = lambda i: F.concat_ws(
-        " ", *[F.element_at(toks, i + j + 1) for j in range(k)]
-    )
-    return F.when(n >= k, F.transform(starts, mk)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def _affine(a: int, b: int):
     """Single-arg lambda factory. NB: do NOT write ``lambda h, a=a: ...``
     with pyspark higher-order functions — they count DEFAULTED params and

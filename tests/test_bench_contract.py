@@ -1,0 +1,105 @@
+"""bench.py's output contract and the helpers the tools share with it.
+
+bench.py measures and reports; it does not normalise or judge its wall
+times (performance claims are settled by ``perfbench/``). The contract
+test runs a copy with a two-query headline in its own process, because
+``get_spark`` there would re-pin this session's shuffle partitions.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import re
+import subprocess
+import sys
+from pathlib import Path
+
+import bench
+
+ROOT = Path(__file__).resolve().parent.parent
+CONTRACT_QUERIES = ["groupby_count", "dedup_cc_distributed"]
+#: words of the ambient-load correction bench.py no longer carries
+JUDGING_WORDS = ("calibration", "drift", "contended", "settle", "page_cache")
+
+
+def test_bench_output_contract(tmp_path, sf_dir):
+    src, n = re.subn(
+        r"^HEADLINE = \[.*?^\]$",
+        f"HEADLINE = {CONTRACT_QUERIES!r}",
+        (ROOT / "bench.py").read_text(encoding="utf-8"),
+        flags=re.M | re.S,
+    )
+    assert n == 1
+    (tmp_path / "bench.py").write_text(src, encoding="utf-8")
+    repo_detail = (ROOT / "BENCH_DETAIL.json").read_bytes()
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join(
+            p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p
+        ),
+        "SPARK_GRAFT_SF_DIR": sf_dir,
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    run = subprocess.run(
+        [sys.executable, "bench.py"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-4000:]
+
+    line = json.loads(run.stdout.strip().splitlines()[-1])
+    assert line["metric"] == "headline_suite_wall"
+    assert line["value"] > 0
+    assert set(line["queries"]) <= set(CONTRACT_QUERIES)
+    assert line["detail_file"] == "BENCH_DETAIL.json"
+    assert line["cc_modes_by_query"]["dedup_cc_distributed"]["mode"] == "distributed"
+
+    detail = json.loads((tmp_path / "BENCH_DETAIL.json").read_text(encoding="utf-8"))
+    assert set(detail["queries"]) == set(CONTRACT_QUERIES)
+    for key in [*line, *detail]:
+        assert not any(w in key for w in JUDGING_WORDS), key
+    assert (ROOT / "BENCH_DETAIL.json").read_bytes() == repo_detail
+
+
+def test_shared_cli_parser():
+    """tools/_cli.parse_args — the one flag-parsing loop the three
+    diagnostic tools share (r11 consolidated three hand-rolled copies
+    that had each needed the same guard fixes individually)."""
+    import importlib.util
+    import os
+
+    import pytest
+
+    spec = importlib.util.spec_from_file_location(
+        "_cli", os.path.join(os.path.dirname(__file__), "..", "tools", "_cli.py")
+    )
+    cli = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cli)
+
+    flags = {"--top": int, "--dry-run": cli.BOOL}
+    vals, pos = cli.parse_args(
+        ["--top", "3", "a", "b"], flags, "u", positionals=True
+    )
+    assert vals == {"top": 3} and pos == ["a", "b"]
+    vals, pos = cli.parse_args(["--top=7", "--dry-run"], flags, "u")
+    assert vals == {"top": 7, "dry-run": True} and pos == []
+    # exact-match only: '--topology' is NOT '--top' (the ADVICE r10 bug)
+    with pytest.raises(SystemExit):
+        cli.parse_args(["--topology"], flags, "u")
+    with pytest.raises(SystemExit):  # missing value
+        cli.parse_args(["--top"], flags, "u")
+    with pytest.raises(SystemExit):  # bool flag takes no value
+        cli.parse_args(["--dry-run=x"], flags, "u")
+    with pytest.raises(SystemExit):  # positionals rejected by default
+        cli.parse_args(["stray"], flags, "u")
+
+
+def test_engine_fingerprint_stable_on_clean_tree():
+    """On a clean checkout the fingerprint is deterministic (two calls
+    agree) and has the tree-blob two-part shape; a dirty engine tree
+    would return None, which the caller treats as unknown."""
+    a = bench._engine_fingerprint()
+    b = bench._engine_fingerprint()
+    assert a == b
+    if a is not None:
+        assert len(a.split("-")) == 2

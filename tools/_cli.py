@@ -1,11 +1,10 @@
 """Shared flag parsing for the diagnostic tools.
 
 One implementation of the ``--flag VALUE`` / ``--flag=VALUE`` /
-unknown-arg-usage-error loop that r11 found hand-rolled three times
-(survey_build_exec, gen_query_ref and a since-retired A/B tool) — each
-copy had needed the same guard fixes individually (ADVICE r10 patched
-one for a ``startswith`` prefix bug), so the copies diverge by
-construction.
+unknown-arg-usage-error loop, used by audit_scans, scale_lsh_store and
+survey_build_exec. Hand-rolled copies of it had each needed the same
+guard fixes individually (one was a ``startswith`` prefix bug), so
+copies diverge by construction.
 """
 
 from __future__ import annotations
