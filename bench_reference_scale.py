@@ -17,9 +17,12 @@ same row count:
   5. sink: partitioned parquet write of BOTH output tables
      (`ratings` pass-through and `movies_ratings`).
 
-Prints one JSON line; ``jobs``, ``stages``, ``shuffle_write_bytes`` and
-``executor_cpu_s`` are the ratings pipeline's counters from Spark's
-status store (`perfbench/probe.StatusProbe`). ``movies_ratings_dense``
+Prints one JSON line; ``jobs``, ``stages``, ``shuffle_write_bytes``,
+``output_bytes`` (the parquet both sinks write) and ``executor_cpu_s``
+are the ratings pipeline's counters from Spark's status store
+(`perfbench/probe.StatusProbe`). The synthesized timestamps ascend with
+the row id, so the `ratings` sink's timestamp column compresses better
+than a real feed's would. ``movies_ratings_dense``
 and ``movies_ratings_reference_shaped`` carry the same counters for a
 warm `movies_ratings` run into the noop sink over two dimensions: every
 one of the 45 K rated movies, and 6 K of them (the reference's merged
@@ -248,6 +251,7 @@ def main() -> None:
                 "jobs": counters.jobs,
                 "stages": counters.stages,
                 "shuffle_write_bytes": counters.shuffle_write_bytes,
+                "output_bytes": counters.output_bytes,
                 "executor_cpu_s": round(counters.executor_cpu_s, 2),
                 **shapes,
                 "wiki_parse_rows": wiki_rows,

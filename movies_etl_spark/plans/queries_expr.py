@@ -74,10 +74,13 @@ def q_strip_citations(spark, sf_dir):
     oracle="""
     SELECT o_orderkey,
            CASE o_orderkey % 5
-             WHEN 0 THEN round(o_totalprice / 1000, 1) * 1e6
-             WHEN 1 THEN round(o_totalprice / 100000, 2) * 1e9
+             WHEN 0 THEN round(CAST(CAST(o_totalprice / 1000 AS VARCHAR)
+                                     AS DECIMAL(38,18)), 1) * 1e6
+             WHEN 1 THEN round(CAST(CAST(o_totalprice / 100000 AS VARCHAR)
+                                     AS DECIMAL(38,18)), 2) * 1e9
              WHEN 2 THEN CAST(CAST(round(o_totalprice) AS BIGINT) + 1000 AS DOUBLE)
-             WHEN 3 THEN round(o_totalprice / 1000, 1) * 1e6
+             WHEN 3 THEN round(CAST(CAST(o_totalprice / 1000 AS VARCHAR)
+                                     AS DECIMAL(38,18)), 1) * 1e6
              ELSE NULL
            END AS amount
     FROM orders
@@ -95,6 +98,11 @@ def q_parse_money(spark, sf_dir):
          would correctly parse to null and diverge from the oracle)
       3: "$A–$B million" (range) → upper bound B*1e6 (F3 strips "$A–")
       4: "N/A"                   → null
+
+    Spark's ``round`` of a double rounds its shortest decimal string half
+    up (443500.00 / 100000 = 4.435 → 4.44), while DuckDB's rounds the
+    binary double (4.43). The oracle therefore rounds the quotient's
+    shortest string as a DECIMAL in the branches that divide.
     """
     o = _t(spark, sf_dir, "orders")
     mod = F.col("o_orderkey") % 5

@@ -112,3 +112,35 @@ def test_pin_session_conf_decides_once(spark):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_pin_session_conf_replaces_stock_int96_once(spark):
+    """Spark's stock INT96 timestamp encoding is replaced by the engine's
+    int64 micros on the first pin; a harness that sets INT96 again AFTER
+    that pin keeps it (same sentinel as the shuffle-partition pin). A
+    ``newSession`` starts without the sentinel and leaves the fixture
+    session's confs alone."""
+    from movies_etl_spark.session import PARQUET_TIMESTAMP_TYPE, pin_session_conf
+
+    key = "spark.sql.parquet.outputTimestampType"
+    fresh = spark.newSession()
+    fresh.conf.set(key, "INT96")
+    pin_session_conf(fresh)
+    assert fresh.conf.get(key) == PARQUET_TIMESTAMP_TYPE
+    fresh.conf.set(key, "INT96")
+    pin_session_conf(fresh)
+    assert fresh.conf.get(key) == "INT96"
+    assert spark.conf.get(key) == PARQUET_TIMESTAMP_TYPE
+
+
+def test_pin_session_conf_keep_env_leaves_int96(spark, monkeypatch):
+    """SPARK_GRAFT_KEEP_SESSION_CONFS=1 skips the timestamp-type pin like
+    every other perf pin."""
+    from movies_etl_spark.session import pin_session_conf
+
+    key = "spark.sql.parquet.outputTimestampType"
+    monkeypatch.setenv("SPARK_GRAFT_KEEP_SESSION_CONFS", "1")
+    fresh = spark.newSession()
+    fresh.conf.set(key, "INT96")
+    pin_session_conf(fresh)
+    assert fresh.conf.get(key) == "INT96"

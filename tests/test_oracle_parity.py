@@ -66,3 +66,38 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+def test_parse_money_oracle_at_rounding_ties(spark, tmp_path):
+    """Order totals whose rounded quotient is an exact decimal half.
+    Spark rounds the quotient's shortest decimal string half up, so the
+    oracle must too: DuckDB's ``round`` of the binary double gives 4.43
+    for 443500.00 / 100000 = 4.435, not 4.44. Keys 1, 6, 11 take the
+    billions branch (/100000); keys 0, 5, 3, 8 the millions and range
+    branches (/1000: 12.35, 443.55, 2.45), where DuckDB's double rounding
+    lands on the same side."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    totals = {1: 443_500.00, 6: 14_500.00, 11: 100_500.00, 16: 443_499.99,
+              0: 12_350.00, 5: 443_550.00, 3: 2_450.00, 8: 12_350.00,
+              2: 443_500.00, 4: 443_500.00}
+    keys = sorted(totals)
+    pq.write_table(
+        pa.table({"o_orderkey": pa.array(keys, pa.int64()),
+                  "o_totalprice": pa.array([totals[k] for k in keys], pa.float64())}),
+        str(tmp_path / "orders.parquet"),
+    )
+    got = {
+        r["o_orderkey"]: r["amount"]
+        for r in QUERIES["parse_money"](spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW orders AS SELECT * FROM read_parquet('{tmp_path}/orders.parquet')"
+    )
+    want = dict(con.execute(ORACLES["parse_money"]).fetchall())
+    con.close()
+    assert got == want
+    assert got[1] == 4.44 * 1e9 and got[6] == 0.15 * 1e9 and got[11] == 1.01 * 1e9

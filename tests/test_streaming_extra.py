@@ -189,6 +189,49 @@ def test_incremental_rollup_retry_does_not_double_count(spark, tmp_path):
     assert retried[0]["cnt"] == 5 and retried[0]["sum_cents"] == 150
 
 
+def test_rollup_state_written_as_int96_merges_into_int64(spark, tmp_path):
+    """A rollup store whose ``v=0`` was written under Spark's INT96
+    timestamps (before the engine wrote int64 micros) merges its next
+    batch into ``v=1`` exactly as a store written in int64 throughout."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from movies_etl_spark.session import temp_confs
+    from movies_etl_spark.streaming.ops import _merge_versioned
+
+    schema = "h STRING, cnt LONG, sum_cents LONG"
+    part0 = spark.createDataFrame(
+        [("1850-03-01 07:00:00", 1, 7), ("2026-01-01 10:00:00", 2, 100),
+         ("2026-01-01 11:00:00", 4, 40)], schema,
+    ).withColumn("h", F.col("h").cast("timestamp"))
+    part1 = spark.createDataFrame(
+        [("2026-01-01 10:00:00", 3, 50), ("2026-01-01 12:00:00", 1, 9)], schema,
+    ).withColumn("h", F.col("h").cast("timestamp"))
+
+    def physical(path):
+        return {
+            pq.ParquetFile(f).metadata.schema.column(0).physical_type
+            for f in glob.glob(f"{path}/part-*.parquet")
+        }
+
+    old, new = str(tmp_path / "int96"), str(tmp_path / "int64")
+    with temp_confs(spark, {"spark.sql.parquet.outputTimestampType": "INT96"}):
+        _merge_versioned(spark, old, part0, 0)
+    _merge_versioned(spark, old, part1, 1)
+    _merge_versioned(spark, new, part0, 0)
+    _merge_versioned(spark, new, part1, 1)
+    assert physical(f"{old}/agg/v=0") == {"INT96"}
+    assert physical(f"{old}/agg/v=1") == physical(f"{new}/agg/v=1") == {"INT64"}
+
+    upgraded = sorted(spark.read.parquet(f"{old}/agg/v=1").collect())
+    assert upgraded == sorted(spark.read.parquet(f"{new}/agg/v=1").collect())
+    assert [(str(r["h"]), r["cnt"], r["sum_cents"]) for r in upgraded] == [
+        ("1850-03-01 07:00:00", 1, 7), ("2026-01-01 10:00:00", 5, 150),
+        ("2026-01-01 11:00:00", 4, 40), ("2026-01-01 12:00:00", 1, 9),
+    ]
+
+
 def test_hll_rollup_retry_regenerates_same_version(spark, tmp_path):
     """Register-table sibling of the rollup retry test: a retried batch
     must regenerate v=batch_id from the version strictly below it. Max
