@@ -27,7 +27,7 @@ def word_ngrams(toks: Column, k: int) -> Column:
 
     Sliding window via iterated ``zip_with`` over shifted ``slice``s — NOT
     ``element_at`` inside a per-element lambda, which Catalyst inlines
-    into every element access (O(n²); see dedup.shingle_hash_array for
+    into every element access (O(n²); see dedup._shingle_hash_array_sql for
     the same pattern over integer hashes)."""
     n = F.size(toks)
     acc = toks

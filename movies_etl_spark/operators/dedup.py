@@ -19,7 +19,7 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from movies_etl_spark.operators.text import token_hash  # noqa: F401 (shingle_hash_array)
+from movies_etl_spark.operators.text import token_hash
 
 # MinHash configuration: 8 hashes, 4 bands × 2 rows.
 N_MINHASH = 8
@@ -68,63 +68,11 @@ MINHASH_SEEDS: list[tuple[int, int]] = [
 ]
 
 
-def _affine(a: int, b: int):
-    """Single-arg lambda factory. NB: do NOT write ``lambda h, a=a: ...``
-    with pyspark higher-order functions — they count DEFAULTED params and
-    would call the lambda as (element, index), silently binding the
-    constant to the index Column."""
-    return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-
-def minhash_signature(shingles: Column, n_hashes: int = N_MINHASH) -> list[Column]:
-    """MinHash signature via a universal hash family over INTEGER shingle
-    hashes (see shingle_hash_array): per seed i, min over shingles of
-    (a_i·h + b_i) mod P. Engine-portable — the SQL oracle reproduces the
-    identical arithmetic on the identical md5-based token hashes."""
-    return [
-        F.array_min(F.transform(shingles, _affine(a, b)))
-        for a, b in MINHASH_SEEDS[:n_hashes]
-    ]
-
-
-def band_keys(sig: list[Column], n_bands: int = N_BANDS) -> list[Column]:
-    """LSH band keys: concat of each signature slice. Docs sharing ANY
-    band key become candidate pairs (bucket join, never n²)."""
-    r = len(sig) // n_bands
-    return [
-        F.concat_ws("|", *[c.cast("string") for c in sig[b * r : (b + 1) * r]])
-        for b in range(n_bands)
-    ]
-
-
 #: shingle-combination constants (primes): h(s_i..s_i+2) =
 #: (th_i·C1 + th_i+1·C2 + th_i+2) mod P.  th < 2^31, C2 < 2^17 → products
 #: < 2^48, sums < 2^49: exact in 64-bit on any engine.
 SHINGLE_C1 = 7_919
 SHINGLE_C2 = 104_729
-
-
-def shingle_hash_array(toks: Column, k: int = 3) -> Column:
-    """Integer shingle hashes: md5 ONCE PER TOKEN (not per shingle), then
-    each k-shingle hash is an arithmetic combination of consecutive token
-    hashes. Eliminates both shingle-string construction and per-shingle
-    md5 — the dominant costs of text near-dedup at corpus scale. 31-bit
-    space; within-document-pair collisions (~10^-5) are shared exactly by
-    any engine replicating the arithmetic."""
-    th = F.transform(toks, lambda t: token_hash(t) % F.lit(MINHASH_P))
-    n = F.size(toks)
-    # Sliding window via zip_with over shifted slices — NOT element_at
-    # inside a per-element lambda: Catalyst inlines the md5-transform
-    # array into every element access, turning O(n) hashing into O(n²).
-    # zip_with evaluates each array operand once per ROW (3 evals total);
-    # its null padding at the tail is sliced off.
-    shifted1 = F.slice(th, 2, n)
-    shifted2 = F.slice(th, 3, n)
-    s1 = F.zip_with(th, shifted1, lambda x, y: x * SHINGLE_C1 + y * SHINGLE_C2)
-    s2 = F.zip_with(s1, shifted2, lambda x, y: (x + y) % MINHASH_P)
-    return F.when(n >= k, F.slice(s2, 1, n - (k - 1))).otherwise(
-        F.array().cast("array<bigint>")
-    )
 
 
 def _token_hash_sql(tok: str) -> str:
@@ -133,13 +81,22 @@ def _token_hash_sql(tok: str) -> str:
 
 
 def _shingle_hash_array_sql(toks: str, k: int = 3) -> str:
-    """SQL text of :func:`shingle_hash_array` over a token-array
-    fragment — the identical expression tree (the repeated ``th``/``n``
-    subtrees below are textual duplicates, exactly as reusing the same
-    Column object inserts the same subtree by value), in ONE parse.
-    Construction of the python-HOF version cost ~0.13 s of py4j round
-    trips per call — paid once per micro-batch in the streaming LSH
-    path and once per minhash query (r19, guide §1.2 build cost)."""
+    """SQL text of the integer k-shingle hashes of a token-array
+    fragment: md5 ONCE PER TOKEN (not per shingle), then each k-shingle
+    hash is an arithmetic combination of consecutive token hashes. That
+    drops both shingle-string construction and per-shingle md5, the
+    dominant costs of text near-dedup at corpus scale. 31-bit space;
+    within-document-pair collisions (~10^-5) are shared exactly by any
+    engine replicating the arithmetic.
+
+    The sliding window is zip_with over shifted slices, NOT element_at
+    inside a per-element lambda: Catalyst would inline the md5-transform
+    array into every element access, turning O(n) hashing into O(n²).
+    zip_with evaluates each array operand once per ROW; its null padding
+    at the tail is sliced off. One F.expr parse builds the whole tree
+    (the repeated ``th``/``n`` subtrees are textual duplicates), where a
+    python higher-order-function build cost ~0.13 s of py4j round trips
+    per call."""
     th = f"transform({toks}, t -> {_token_hash_sql('t')} % {MINHASH_P})"
     n = f"size({toks})"
     s1 = (
@@ -163,48 +120,52 @@ def _plain_name(name: str) -> str:
     return name
 
 
+def shingle_hashes(text_col: str) -> Column:
+    """Integer 3-shingle hashes (array<bigint>) of a text column's
+    single-space tokens — see :func:`_shingle_hash_array_sql`; empty
+    when the text has fewer than 3 tokens. ``text_col`` must be a plain
+    name (:func:`_plain_name`)."""
+    return F.expr(_shingle_hash_array_sql(f"split({_plain_name(text_col)}, ' ')"))
+
+
 def shingled(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, shingles) projection (integer shingle hashes) — compute ONCE
     and persist when several downstream branches (banding + verification)
     reuse it; at 100 TB this is a checkpointed table, not a recompute.
-    Built as one parsed expression since r19 (see
-    :func:`_shingle_hash_array_sql`); value parity with the Column
-    builders is pinned in test_shingle_band_sql_parity. ``text_col``
-    must be a plain name (:func:`_plain_name`)."""
-    text_col = _plain_name(text_col)
-    return df.select(
-        F.col(id_col),
-        F.expr(_shingle_hash_array_sql(f"split({text_col}, ' ')")).alias(
-            "shingles"
-        ),
-    )
+    ``text_col`` must be a plain name (:func:`_plain_name`)."""
+    return df.select(F.col(id_col), shingle_hashes(text_col).alias("shingles"))
+
+
+def _minhash_sig_sql() -> list[str]:
+    """SQL text of the MinHash signature of the ``shingles`` column: per
+    seed i, min over shingles of (a_i·h + b_i) mod P — the universal
+    hash family of :data:`MINHASH_SEEDS`. Engine-portable: the SQL
+    oracle reproduces the identical arithmetic on the identical
+    md5-based token hashes."""
+    return [
+        f"array_min(transform(shingles, h -> ({a} * h + {b}) % {MINHASH_P}))"
+        for a, b in MINHASH_SEEDS[:N_MINHASH]
+    ]
 
 
 def with_minhash_bands(
     sh_df: DataFrame, id_col: str, sig_cols: list[str] | None = None
 ) -> DataFrame:
-    """(id, shingles) → exploded (id, band_id, band_key) rows.
+    """(id, shingles) → exploded (id, band_id, band_key) rows. A band
+    key is the concat of one signature slice; docs sharing ANY band key
+    become candidate pairs (bucket join, never n²).
 
-    ``sig_cols`` (r14): names of PRECOMPUTED signature columns on
-    ``sh_df`` to band from, instead of re-deriving the 8 array_min
-    folds from ``shingles``. Callers that already materialize the
-    signature for their own output (minhash_jaccard_estimate persists
-    it once and reads it three times) pass the column names; the
-    default ``None`` recomputes exactly as before — band keys are the
-    same concat arithmetic either way."""
-    # band-array column in ONE parse (r19): the python path built 8
-    # affine-min folds + 4 concat_ws + the struct array through ~0.2 s
-    # of py4j calls per invocation (once per streaming micro-batch);
-    # the SQL text is the identical tree — same affine grouping
-    # (a*h + b) % P, same int literals (every seed < 2^31), same
-    # casts. Parity pinned in test_shingle_band_sql_parity.
+    ``sig_cols``: names of PRECOMPUTED signature columns on ``sh_df``
+    to band from, instead of re-deriving the 8 array_min folds from
+    ``shingles`` (minhash_jaccard_estimate persists the signature once
+    and reads it three times). Each must be a plain name
+    (:func:`_plain_name`). The band array is built as ONE parsed
+    expression, which a python build of 8 folds + 4 concat_ws paid
+    ~0.2 s of py4j calls for, once per streaming micro-batch."""
     if sig_cols is not None:
-        sig_sql = list(sig_cols)
+        sig_sql = [_plain_name(c) for c in sig_cols]
     else:
-        sig_sql = [
-            f"array_min(transform(shingles, h -> ({a} * h + {b}) % {MINHASH_P}))"
-            for a, b in MINHASH_SEEDS[:N_MINHASH]
-        ]
+        sig_sql = _minhash_sig_sql()
     r = len(sig_sql) // N_BANDS
     band_sql = [
         "concat_ws('|', "
@@ -613,33 +574,17 @@ def simhash16(toks: Column) -> Column:
     return out.cast("long")
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Double-precision dot product as a left-to-right fold
-    (bit-reproducible across engines that fold sequentially)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 # ---------------------------------------------------------------------------
-# Single-parse SQL builders for the fold kernels (r19, guide §1.2 build
-# cost): each python-side HOF construction (F.aggregate/F.zip_with with
-# python lambdas) costs ~30-60 py4j round trips; query builders that
-# assemble dozens of fold expressions (the ANN sweeps build ~29 dots
-# per invocation) paid ~1s of pure driver chatter per build. One
-# F.expr parse produces the semantically identical ArrayAggregate tree
-# (same casts, same fold order, same 0.0D seed, same default identity
-# finish lambda) in a single round trip. String variants exist for the
-# call sites whose inputs are plain SQL fragments (column names or
-# already-parsed array literals); Column-input call sites keep the
-# python builders above. The public *_expr builders take column names
-# only, checked by _plain_name; _dot_sql also takes array literals.
+# Vector fold kernels: double-precision left-to-right folds (bit-
+# reproducible across engines that fold sequentially), each built as ONE
+# F.expr parse — a python-side F.aggregate/F.zip_with build costs ~30-60
+# py4j round trips, and the ANN sweeps build ~29 dots per invocation.
+# The public builders take column names only, checked by _plain_name;
+# _dot_sql also takes array literals.
 
 
 def _dot_sql(a: str, b: str) -> str:
-    """SQL text of :func:`dot` over two SQL fragments."""
+    """SQL text of the dot product of two SQL array fragments."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * "
         f"cast(y as double)), 0.0D, (acc, v) -> acc + v)"
@@ -647,7 +592,7 @@ def _dot_sql(a: str, b: str) -> str:
 
 
 def _l2norm_sql(a: str) -> str:
-    """SQL text of :func:`l2norm` over a SQL fragment."""
+    """SQL text of the Euclidean norm of a SQL array fragment."""
     return (
         f"sqrt(aggregate(transform({a}, x -> cast(x as double) * "
         f"cast(x as double)), 0.0D, (acc, v) -> acc + v))"
@@ -655,41 +600,25 @@ def _l2norm_sql(a: str) -> str:
 
 
 def dot_expr(a: str, b: str) -> Column:
-    """:func:`dot` built as ONE parsed expression — identical values."""
+    """Dot product of two array columns (0.0 for empty arrays)."""
     return F.expr(_dot_sql(_plain_name(a), _plain_name(b)))
 
 
 def l2norm_expr(a: str) -> Column:
-    """:func:`l2norm` built as ONE parsed expression."""
+    """Euclidean norm of an array column. Precompute it per ROW before
+    any pairwise join — recomputing norms per pair multiplies the fold
+    cost by the average bucket size."""
     return F.expr(_l2norm_sql(_plain_name(a)))
 
 
 def cosine_expr(a: str, b: str) -> Column:
-    """:func:`cosine` built as ONE parsed expression."""
+    """Cosine similarity of two array columns. For pairwise workloads
+    prefer dot_expr(a, b) / (norm_a·norm_b) with the norms precomputed
+    per row — identical value, one fold per pair."""
     a, b = _plain_name(a), _plain_name(b)
     return F.expr(
         f"{_dot_sql(a, b)} / ({_l2norm_sql(a)} * {_l2norm_sql(b)})"
     )
-
-
-def l2norm(a: Column) -> Column:
-    """Euclidean norm with the same fold discipline. Precompute this per
-    ROW before any pairwise join — recomputing norms per pair multiplies
-    the fold cost by the average bucket size."""
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float arrays (see dot/l2norm; for
-    pairwise workloads prefer dot(a,b)/(norm_a·norm_b) with norms
-    precomputed per row — identical value, one fold per pair)."""
-    return dot(a, b) / (l2norm(a) * l2norm(b))
 
 
 #: hard cap on rows per cosine block: b=10k rows → ~5·10⁷ pair-sims and

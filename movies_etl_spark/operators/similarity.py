@@ -18,7 +18,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from movies_etl_spark.operators.dedup import cosine_expr  # noqa: F401
+from movies_etl_spark.operators.dedup import (
+    _dot_sql,
+    _plain_name,
+    cosine_expr,
+    dot_expr,
+    l2norm_expr,
+)
 
 #: Hard cap on the probe-side collect in :func:`topk_bruteforce_vectorized`
 #: — the MAX_LOCAL_EDGES discipline (dedup.py) applied to the query frame.
@@ -31,6 +37,13 @@ from movies_etl_spark.operators.dedup import cosine_expr  # noqa: F401
 #: over-cap probe frame fails loudly with remediation instead of
 #: silently OOMing the driver at 100 TB.
 MAX_LOCAL_QUERIES = 100_000
+
+
+def _double_vec(vec_col: str) -> Column:
+    """``vec_col`` cast element-wise to array<double>. ``vec_col`` must
+    be a plain name (:func:`dedup._plain_name`): it is pasted into the
+    parsed expression."""
+    return F.expr(f"transform({_plain_name(vec_col)}, x -> cast(x as double))")
 
 
 def topk_bruteforce(
@@ -164,7 +177,7 @@ def topk_ivf(
 
 def sq_dist(a: Column, b: Column) -> Column:
     """Squared euclidean distance as a left-to-right double fold (same
-    bit-reproducibility discipline as dedup.dot/l2norm)."""
+    bit-reproducibility discipline as dedup.dot_expr/l2norm_expr)."""
     diff = F.zip_with(
         a,
         b,
@@ -282,9 +295,7 @@ def kmeans_assign(
     frame) skips a whole shuffle-join back onto the embedding table;
     float→double casts are exact, so downstream cosine over ``vd`` is
     bit-identical to cosine over the raw column."""
-    v = corpus.select(
-        id_col, F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("vd")
-    )
+    v = corpus.select(id_col, _double_vec(vec_col).alias("vd"))
     cents = v.filter(F.col(id_col) < k).select(
         F.col(id_col).alias("cell"), F.col("vd").alias("centroid")
     )
@@ -465,76 +476,55 @@ def multiprobe_offsets(n_planes: int, radius: int) -> list[int]:
     ]
 
 
-def rp_bucket_n(vec: Column | str, n_planes: int) -> Column:
+def rp_bucket_n(vec: str, n_planes: int) -> Column:
     """Parametrized sign-LSH bucket in [0, 2^n_planes) over the shared
     md5 plane family — :func:`rp_bucket` is the n_planes=8 member (same
     rounding discipline: projection rounded to 6 before the sign test).
     Pure per-row map, same scale shape as rp_bucket.
 
-    Each plane's literal array is built as ONE parsed SQL expression
-    (``array(0.12D, …)``) instead of dim ``F.lit`` py4j calls: the
-    width-16 bucket column cost ~1.4 s of pure driver chatter per
-    invocation the literal way (r11 measurement) vs ~30 ms parsed. The
-    parsed ``xD`` double literals produce the identical
-    CreateArray(Literal double) tree, so values, codegen, and the
-    prefix-nesting property are unchanged (pinned by
-    test_rp_bucket_n_8_matches_rp_bucket).
-
-    r19 (guide §1.2 build cost): pass ``vec`` as a column NAME (str)
-    and the ENTIRE bucket column — per-plane dot folds, rounding, sign
-    CASEs, sum — is built as one parsed expression, collapsing the
-    remaining ~n_planes×(HOF lambda plumbing) py4j round trips (~0.5 s
-    per width-8 invocation) into a single parse. Same expression tree,
-    same values (pinned by test_rp_bucket_n_str_matches_column); the
-    Column path remains for composed inputs. A str ``vec`` must be a
-    plain column name (``\\w+``; ValueError otherwise)."""
-    from movies_etl_spark.operators.dedup import _dot_sql, _plain_name, dot
-
-    if isinstance(vec, str):
-        vec = _plain_name(vec)
-        terms = []
-        for j, plane in enumerate(rp_planes_n(n_planes)):
-            arr = "array(" + ",".join(f"{v!r}D" for v in plane) + ")"
-            terms.append(
-                f"(CASE WHEN round({_dot_sql(vec, arr)}, 6) >= 0 "
-                f"THEN {1 << j} ELSE 0 END)"
-            )
-        return F.expr("0 + " + " + ".join(terms))
-    bucket = F.lit(0)
+    ``vec`` is the NAME of an array column; it must be a plain name
+    (``\\w+``; ValueError otherwise). The whole bucket column — each
+    plane as a parsed ``array(0.12D, …)`` double literal, the per-plane
+    dot folds, rounding, sign CASEs and their sum — is ONE parsed
+    expression: building it from python Columns cost ~0.5 s of py4j
+    round trips per width-8 invocation, and ~1.4 s at width 16 with
+    per-value ``F.lit`` planes. Values are pinned against an
+    independent python fold in tests/test_ann_recall.py."""
+    vec = _plain_name(vec)
+    terms = []
     for j, plane in enumerate(rp_planes_n(n_planes)):
-        lit_plane = F.expr(
-            "array(" + ",".join(f"{v!r}D" for v in plane) + ")"
+        arr = "array(" + ",".join(f"{v!r}D" for v in plane) + ")"
+        terms.append(
+            f"(CASE WHEN round({_dot_sql(vec, arr)}, 6) >= 0 "
+            f"THEN {1 << j} ELSE 0 END)"
         )
-        bit = F.when(
-            F.round(dot(vec, lit_plane), 6) >= 0, F.lit(1 << j)
-        ).otherwise(F.lit(0))
-        bucket = bucket + bit
-    return bucket
+    return F.expr("0 + " + " + ".join(terms))
 
 
-def lsh_candidates_param(
+def lsh_candidates(
     corpus: DataFrame,
     queries: DataFrame,
     n_planes: int,
-    radius: int,
+    offsets: list[int],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Scored multi-probe candidates (query_id, neighbor_id, sim) for
-    an arbitrary (planes, radius) point on the recall-vs-scan frontier
-    — the candidate stage of :func:`topk_multiprobe_lsh`, parametrized
-    and exposed so the frontier sweep can meter SCAN WORK (candidate
-    row count) separately from result quality (recall of the top-k cut).
+    """Scored multi-probe sign-LSH candidates (query_id, neighbor_id,
+    bucket, sim): each query probes its own ``n_planes``-bit bucket
+    XORed with every mask in ``offsets``, and every corpus row in a
+    probed bucket (bar the query itself) is scored by exact cosine
+    rounded to 6. The candidate stage of :func:`topk_multiprobe_lsh`
+    and :func:`topk_multiprobe_lsh_param`, exposed so a sweep can meter
+    SCAN WORK (candidate row count) separately from result quality
+    (recall of the top-k cut).
 
-    Same scale shape as topk_multiprobe_lsh: probes are queries ×
-    Σ C(n_planes, ≤radius) XOR offsets — still a broadcast-sized frame
-    — and candidate generation is a pure equi-join on the probe bucket;
-    the corpus is bucketed in its own scan and never shuffled. At scale
-    the bucket is the layout partition key, so a probe set prunes to
-    its buckets at the FILE level regardless of (planes, radius)."""
-    from movies_etl_spark.operators.dedup import dot_expr, l2norm_expr
-
-    offs = multiprobe_offsets(n_planes, radius)
+    Scale shape: probes are queries × len(offsets) — a broadcast-sized
+    frame — and candidate generation is a pure EQUI-join on the probe
+    bucket (never a Hamming theta-join against the corpus). Probe
+    buckets per query are distinct, so no candidate dedup pass is
+    needed. The corpus is bucketed in its own scan and never shuffled;
+    at scale the bucket is the layout partition key, so a probe set
+    prunes to its buckets at the FILE level."""
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cvec"),
@@ -548,7 +538,7 @@ def lsh_candidates_param(
         l2norm_expr(vec_col).alias("qnrm"),
     )
     probes = q.withColumn(
-        "off", F.explode(F.array(*[F.lit(o) for o in offs]))
+        "off", F.explode(F.array(*[F.lit(o) for o in offsets]))
     ).select(
         "query_id",
         "qvec",
@@ -564,7 +554,16 @@ def lsh_candidates_param(
             (F.col("bucket") == F.col("probe_bucket"))
             & (F.col("neighbor_id") != F.col("query_id")),
         )
-        .select("query_id", "neighbor_id", sim.alias("sim"))
+        .select("query_id", "neighbor_id", "bucket", sim.alias("sim"))
+    )
+
+
+def _topk_by_sim(cands: DataFrame, k: int) -> DataFrame:
+    """Top-``k`` candidates per query by (sim desc, neighbor_id asc),
+    with their 1-based ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return cands.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
     )
 
 
@@ -577,19 +576,18 @@ def topk_multiprobe_lsh_param(
     vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
-    """Top-k cut of :func:`lsh_candidates_param` — the tunable
+    """Top-k cut of :func:`lsh_candidates` over every probe within
+    Hamming ``radius`` of an ``n_planes``-bit signature — the tunable
     operating-point form of :func:`topk_multiprobe_lsh` (which is the
     frozen n_planes=8/radius=2 member). The ISOTROPIC operating point
-    the r9 frontier sweep selected: n_planes=8, radius=3 — recall@5
+    the frontier sweep selected: n_planes=8, radius=3 — recall@5
     0.625 at a 37% scan budget (0.675 at 39% for 10/4; see SCALE.md's
     frontier table and the ann_frontier_sweep query) — against the
     honest isotropic ceiling where recall-per-scan caps near ~1.7×;
     clustered corpora reach 0.97@5 at 14% with radius 1."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        lsh_candidates_param(corpus, queries, n_planes, radius, id_col, vec_col)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+    offs = multiprobe_offsets(n_planes, radius)
+    return _topk_by_sim(
+        lsh_candidates(corpus, queries, n_planes, offs, id_col, vec_col), k
     )
 
 #: clustered-fixture noise scale: cluster member = center + NOISE·self.
@@ -635,7 +633,7 @@ def clustered_fixture(
     )
 
 
-def rp_bucket(vec: Column | str) -> Column:
+def rp_bucket(vec: str) -> Column:
     """Sign-LSH bucket id in [0, 2^RP_N_PLANES): bit j is the sign of the
     dot product with hyperplane j (dot rounded to 6 places before the
     sign test so a near-zero projection cannot flip between engines).
@@ -643,13 +641,9 @@ def rp_bucket(vec: Column | str) -> Column:
     reads it, and at scale the bucket doubles as the layout partition
     key exactly like the IVF cell.
 
-    Since r19 this is literally :func:`rp_bucket_n`'s n=8 member
-    (planes 0..7 of the md5 family ARE :data:`RP_PLANES` — the prefix
-    property in rp_planes_n's doc; value parity was already pinned by
-    test_rp_bucket_n_8_matches_rp_bucket): the old per-plane
-    ``F.array(*[F.lit(v) …])`` construction cost ~512 py4j literal
-    calls per invocation. Pass a column NAME for the single-parse
-    build."""
+    This is :func:`rp_bucket_n`'s n=8 member (planes 0..7 of the md5
+    family ARE :data:`RP_PLANES` — the prefix property in rp_planes_n's
+    doc), so ``vec`` is likewise a plain column NAME."""
     return rp_bucket_n(vec, RP_N_PLANES)
 
 
@@ -670,49 +664,14 @@ def topk_multiprobe_lsh(
     theoretic ceiling for ANY pruning index; clustered real embeddings
     are where the same machinery reaches high recall cheaply).
 
-    Scale shape: the probe expansion is queries × 37 XOR offsets — still
-    a tiny broadcast side — and candidate generation stays a pure
-    EQUI-join on the probe bucket (never a Hamming theta-join against
-    the corpus). Probe buckets per query are distinct, so no candidate
-    dedup pass is needed. The corpus is bucketed in its own scan and
-    never shuffled; at scale the bucket is the layout partition key, so
-    a 37-probe query prunes to 37 of 256 partitions at the FILE level."""
-    from movies_etl_spark.operators.dedup import dot, l2norm
-
+    The top-k cut of :func:`lsh_candidates` at RP_N_PLANES planes, with
+    ``offsets`` defaulting to MULTIPROBE_OFFSETS_H2: the probe expansion
+    is queries × 37 XOR offsets, and a 37-probe query prunes to 37 of
+    256 partitions at the FILE level at scale. Output: (query_id,
+    neighbor_id, bucket, sim, rank)."""
     offs = MULTIPROBE_OFFSETS_H2 if offsets is None else offsets
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        rp_bucket(vec_col).cast("int").alias("bucket"),
-        l2norm(F.col(vec_col)).alias("cnrm"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        rp_bucket(vec_col).cast("int").alias("qbucket"),
-        l2norm(F.col(vec_col)).alias("qnrm"),
-    )
-    probes = q.withColumn(
-        "off", F.explode(F.array(*[F.lit(o) for o in offs]))
-    ).select(
-        "query_id",
-        "qvec",
-        "qnrm",
-        F.col("qbucket").bitwiseXOR(F.col("off")).cast("int").alias("probe_bucket"),
-    )
-    sim = F.round(
-        dot(F.col("qvec"), F.col("cvec")) / (F.col("qnrm") * F.col("cnrm")), 6
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        c.join(
-            F.broadcast(probes),
-            (F.col("bucket") == F.col("probe_bucket"))
-            & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select("query_id", "neighbor_id", "bucket", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+    return _topk_by_sim(
+        lsh_candidates(corpus, queries, RP_N_PLANES, offs, id_col, vec_col), k
     )
 
 
@@ -759,10 +718,9 @@ def retrieve_quantized_multiprobe(
     the STORED index at 100 TB (the float vectors live in the rerank
     store, fetched only for the ~n_candidates winners)."""
     from movies_etl_spark.operators.curation import int8_quantize, int8_scale
-    from movies_etl_spark.operators.dedup import l2norm_expr
 
     def prep(df, prefix):
-        d = F.expr(f"transform({vec_col}, x -> cast(x as double))")
+        d = _double_vec(vec_col)
         sc = int8_scale(d)
         return df.select(
             F.col(id_col).alias(f"{prefix}id"),
@@ -896,9 +854,7 @@ def kmeans_train_assign(
     iterations — kmeans_assign(c) ≡ kmeans_train_assign(c, c)); the
     final training centroids then assign ``assign``'s vectors. Returns
     (id, cell, d2 rounded 4)."""
-    vt = train.select(
-        id_col, F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("vd")
-    )
+    vt = train.select(id_col, _double_vec(vec_col).alias("vd"))
     cents = vt.filter(F.col(id_col) < k).select(
         F.col(id_col).alias("cell"), F.col("vd").alias("centroid")
     )
@@ -906,9 +862,7 @@ def kmeans_train_assign(
     for _ in range(iters - 1):
         cents = _recompute_centroids(assigned)
         assigned = _assign_cells(vt, cents)
-    va = assign.select(
-        id_col, F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("vd")
-    )
+    va = assign.select(id_col, _double_vec(vec_col).alias("vd"))
     return _assign_cells(va, _centroid_boundary(cents)).select(
         id_col, "cell", F.round(F.col("d2"), 4).alias("d2")
     )

@@ -43,17 +43,6 @@ def _micros(c) -> "F.Column":
 # ===========================================================================
 
 
-#: r14 exec-side adoption #4 (found by tools/audit_scans.py — the
-#: per-stage funnel read the events fact table FIVE times at runtime,
-#: final adaptive plan, one exchange reused): when True the funnel is
-#: one scan + one user_id exchange + a three-window stack + a
-#: partitioning-reusing dedup aggregate. Values identical (the
-#: conditional window min IS the stage join+filter+min). Numbers in
-#: NOTES_r14; value identity pinned in
-#: test_funnel_one_pass_matches_per_stage_variant.
-FUNNEL_ONE_PASS = True
-
-
 @query(
     "funnel_analysis",
     oracle="""
@@ -79,99 +68,66 @@ def q_funnel_analysis(spark, sf_dir):
     users reaching each stage, where each stage's timestamp must strictly
     follow the previous stage's first occurrence.
 
-    ONE-PASS form (r14 continuation — found by tools/audit_scans.py:
-    the per-stage form read the events FACT table five times at
-    runtime): one scan, one user_id exchange, then a stack of three
-    unordered window minimums over the SAME partitioning (each stage's
-    conditional min references the previous stage's partition-constant
-    — no sort, no re-exchange, and the window's spillable row buffer
-    instead of an aggregation buffer holding per-user arrays), a
-    partitioning-reusing per-user dedup aggregate, and one global
-    count row fanned out to the three stage rows. The per-stage form
-    (kept behind FUNNEL_ONE_PASS) re-scanned and re-shuffled per stage
-    with two joins; values identical — the window minimum over the
-    'ts > previous stage' predicate IS the per-stage join+filter+min."""
+    One scan, one user_id exchange, then a stack of three unordered
+    window minimums over the SAME partitioning (each stage's conditional
+    min references the previous stage's partition-constant: no sort, no
+    re-exchange, and the window's spillable row buffer instead of an
+    aggregation buffer holding per-user arrays), a partitioning-reusing
+    per-user dedup aggregate, and one global count row fanned out to the
+    three stage rows. The window minimum over the 'ts > previous stage'
+    predicate IS the oracle's per-stage join+filter+min."""
     e = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    if FUNNEL_ONE_PASS:
-        w = Window.partitionBy("user_id")
-        et = F.col("event_type")
-        s1 = e.withColumn(
-            "t_view", F.min(F.when(et == "view", F.col("ts"))).over(w)
-        )
-        s2 = s1.withColumn(
-            "t_click",
-            F.min(
-                F.when(
-                    (et == "click") & (F.col("ts") > F.col("t_view")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-        s3 = s2.withColumn(
-            "t_purchase",
-            F.min(
-                F.when(
-                    (et == "purchase") & (F.col("ts") > F.col("t_click")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-        per_user = s3.groupBy("user_id").agg(
-            F.max("t_view").alias("t_view"),
-            F.max("t_click").alias("t_click"),
-            F.max("t_purchase").alias("t_purchase"),
-        )
-        counts = per_user.agg(
-            F.count("t_view").alias("n_view"),
-            F.count("t_click").alias("n_click"),
-            F.count("t_purchase").alias("n_purchase"),
-        )
-        return counts.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit("1_view").alias("stage"),
-                        F.col("n_view").cast("long").alias("users"),
-                    ),
-                    F.struct(
-                        F.lit("2_click").alias("stage"),
-                        F.col("n_click").cast("long").alias("users"),
-                    ),
-                    F.struct(
-                        F.lit("3_purchase").alias("stage"),
-                        F.col("n_purchase").cast("long").alias("users"),
-                    ),
-                )
-            ).alias("s")
-        ).select("s.stage", "s.users")
-    v = (
-        e.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_view"))
+    w = Window.partitionBy("user_id")
+    et = F.col("event_type")
+    s1 = e.withColumn(
+        "t_view", F.min(F.when(et == "view", F.col("ts"))).over(w)
     )
-    c = (
-        e.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("ts") > F.col("t_view"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_click"))
+    s2 = s1.withColumn(
+        "t_click",
+        F.min(
+            F.when(
+                (et == "click") & (F.col("ts") > F.col("t_view")),
+                F.col("ts"),
+            )
+        ).over(w),
     )
-    p = (
-        e.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts") > F.col("t_click"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_purchase"))
+    s3 = s2.withColumn(
+        "t_purchase",
+        F.min(
+            F.when(
+                (et == "purchase") & (F.col("ts") > F.col("t_click")),
+                F.col("ts"),
+            )
+        ).over(w),
     )
-
-    def stage(df, name):
-        return df.agg(
-            F.lit(name).alias("stage"), F.count(F.lit(1)).cast("long").alias("users")
-        )
-
-    return stage(v, "1_view").unionAll(stage(c, "2_click")).unionAll(
-        stage(p, "3_purchase")
+    per_user = s3.groupBy("user_id").agg(
+        F.max("t_view").alias("t_view"),
+        F.max("t_click").alias("t_click"),
+        F.max("t_purchase").alias("t_purchase"),
     )
+    counts = per_user.agg(
+        F.count("t_view").alias("n_view"),
+        F.count("t_click").alias("n_click"),
+        F.count("t_purchase").alias("n_purchase"),
+    )
+    return counts.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.lit("1_view").alias("stage"),
+                    F.col("n_view").cast("long").alias("users"),
+                ),
+                F.struct(
+                    F.lit("2_click").alias("stage"),
+                    F.col("n_click").cast("long").alias("users"),
+                ),
+                F.struct(
+                    F.lit("3_purchase").alias("stage"),
+                    F.col("n_purchase").cast("long").alias("users"),
+                ),
+            )
+        ).alias("s")
+    ).select("s.stage", "s.users")
 
 
 @query(
@@ -693,19 +649,6 @@ def q_bm25_rank(spark, sf_dir):
 # Time-series ops: sweep-line concurrency, TWAP, rolling range windows
 # ===========================================================================
 
-#: r15 exec-side A/B (the VERDICT r14 #5 named candidate, queued from
-#: the r14 scan-audit board): the sweep's ±1 endpoint union read the
-#: events fact table twice, and BOTH two-phase prefix-sum consumers
-#: (per-shard cumsum + shard totals) re-derive it — four runtime scans
-#: total. When True the endpoints come from ONE scan via an explode of
-#: a 2-struct (t, delta) array: same rows, same types (both deltas are
-#: int literals, both timestamps the same ntz cast), so values are
-#: identical by construction; runtime events scans drop 4 → 2.
-#: Numbers in NOTES_r15; value identity pinned in
-#: test_concurrency_one_scan_matches_union_variant.
-CONCURRENCY_ONE_SCAN = True
-
-
 @query(
     "concurrency_sweep",
     oracle="""
@@ -741,7 +684,9 @@ def q_concurrency_sweep(spark, sf_dir):
     of the global order). Intervals spanning midnight are handled by
     construction: their -1 lands in the next day's shard but the prefix
     carries the open count across. Ends sort before starts at the same
-    instant (delta -1 < +1), making intervals half-open."""
+    instant (delta -1 < +1), making intervals half-open. Both endpoints
+    come from ONE events scan via an explode of a 2-struct (t, delta)
+    array, so the two prefix-sum consumers scan events twice in all."""
     from movies_etl_spark.operators import curation as C
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "value")
@@ -754,30 +699,23 @@ def q_concurrency_sweep(spark, sf_dir):
         .cast("timestamp_ntz")
         .alias("t1"),
     )
-    if CONCURRENCY_ONE_SCAN:
-        pts = iv.select(
-            "event_id",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("t0").alias("t"), F.lit(1).alias("delta")
-                    ),
-                    F.struct(
-                        F.col("t1").alias("t"), F.lit(-1).alias("delta")
-                    ),
-                )
-            ).alias("pt"),
-        ).select(
-            "event_id",
-            F.col("pt.t").alias("t"),
-            F.col("pt.delta").alias("delta"),
-        )
-    else:
-        pts = iv.select(
-            "event_id", F.col("t0").alias("t"), F.lit(1).alias("delta")
-        ).unionAll(
-            iv.select("event_id", F.col("t1").alias("t"), F.lit(-1).alias("delta"))
-        )
+    pts = iv.select(
+        "event_id",
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col("t0").alias("t"), F.lit(1).alias("delta")
+                ),
+                F.struct(
+                    F.col("t1").alias("t"), F.lit(-1).alias("delta")
+                ),
+            )
+        ).alias("pt"),
+    ).select(
+        "event_id",
+        F.col("pt.t").alias("t"),
+        F.col("pt.delta").alias("delta"),
+    )
     pts = pts.withColumn("day", F.to_date("t"))
     off = C.global_running_offset(
         pts, "delta", "day", [F.col("t"), F.col("delta"), F.col("event_id")]

@@ -414,13 +414,14 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     """n-gram Jaccard within blocking keys (lang, n_chars): pairwise
     verification runs ONLY inside blocks — the blocked-join pattern that
     keeps near-dedup sub-quadratic at corpus scale. Shingles are integer
-    hashes (shingle_hash_array) — set semantics survive hashing."""
+    hashes (dedup.shingle_hashes, the same SQL dedup.shingled runs) —
+    set semantics survive hashing."""
     d = _t(spark, sf_dir, "documents")
     sh = d.select(
         "doc_id",
         "lang",
         "n_chars",
-        D.shingle_hash_array(TX.tokens(F.col("text"))).alias("shingles"),
+        D.shingle_hashes("text").alias("shingles"),
     ).filter(F.size("shingles") > 0)
     a = sh.select(
         F.col("doc_id").alias("id_a"), "lang", "n_chars", F.col("shingles").alias("sh_a")
@@ -1729,16 +1730,6 @@ _MINHASH_EST_SQL = " + ".join(
     f"(CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END)" for i in range(D.N_MINHASH)
 )
 
-#: r14 exec-side experiment #3: when True, minhash_jaccard_estimate
-#: materializes the 8 signature columns INTO its tracked persist and
-#: its three signature consumers (banding inside
-#: candidate_pairs_minhash via sig_cols, and the a/b verify sides)
-#: read them, instead of each re-deriving the array_min folds from the
-#: persisted shingles — 3 fold evaluations per doc → 1, for 8 longs/doc
-#: of extra persist. Values identical by construction (same fold, same
-#: band concat). Numbers in NOTES_r14; value identity pinned in
-#: test_minhash_estimate_shared_sig_matches_refold_variant.
-MINHASH_EST_SHARED_SIG = True
 
 @query(
     "minhash_jaccard_estimate",
@@ -1775,48 +1766,30 @@ def q_minhash_jaccard_estimate(spark, sf_dir):
 
     Costs nothing new at scale: signatures and shingles are already
     computed for banding; the estimate is 8 integer equality checks per
-    candidate pair riding the existing verify join. With
-    MINHASH_EST_SHARED_SIG the 8 array_min folds run ONCE per doc at
-    persist time (the signature columns ride the tracked persist) and
-    banding + both join sides read them, instead of each of the three
-    consumers re-deriving the folds from the persisted shingles."""
+    candidate pair riding the existing verify join. The 8 array_min
+    folds run ONCE per doc at persist time (the signature columns ride
+    the tracked persist), and banding plus both join sides read them."""
     corpus = _near_corpus(spark, sf_dir)
-    sig = D.minhash_signature(F.col("shingles"))
-    if MINHASH_EST_SHARED_SIG:
-        m_cols = [f"m{i}" for i in range(D.N_MINHASH)]
-        sh_all = caching.tracked_persist(
-            D.shingled(corpus, "text", "doc_id").select(
-                "doc_id",
-                "shingles",
-                *[s.alias(c) for s, c in zip(sig, m_cols)],
-            )
+    m_cols = [f"m{i}" for i in range(D.N_MINHASH)]
+    sh_all = caching.tracked_persist(
+        D.shingled(corpus, "text", "doc_id").select(
+            "doc_id",
+            "shingles",
+            *[F.expr(s).alias(c) for s, c in zip(D._minhash_sig_sql(), m_cols)],
         )
-        pairs = D.candidate_pairs_minhash(sh_all, "doc_id", sig_cols=m_cols)
-        sh = sh_all.filter(F.size("shingles") > 0)
-        a = sh.select(
-            F.col("doc_id").alias("id_a"),
-            F.col("shingles").alias("sh_a"),
-            *[F.col(c).alias(f"ma{i}") for i, c in enumerate(m_cols)],
-        )
-        b = sh.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("shingles").alias("sh_b"),
-            *[F.col(c).alias(f"mb{i}") for i, c in enumerate(m_cols)],
-        )
-    else:
-        sh_all = caching.tracked_persist(D.shingled(corpus, "text", "doc_id"))
-        pairs = D.candidate_pairs_minhash(sh_all, "doc_id")
-        sh = sh_all.filter(F.size("shingles") > 0)
-        a = sh.select(
-            F.col("doc_id").alias("id_a"),
-            F.col("shingles").alias("sh_a"),
-            *[s.alias(f"ma{i}") for i, s in enumerate(sig)],
-        )
-        b = sh.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("shingles").alias("sh_b"),
-            *[s.alias(f"mb{i}") for i, s in enumerate(sig)],
-        )
+    )
+    pairs = D.candidate_pairs_minhash(sh_all, "doc_id", sig_cols=m_cols)
+    sh = sh_all.filter(F.size("shingles") > 0)
+    a = sh.select(
+        F.col("doc_id").alias("id_a"),
+        F.col("shingles").alias("sh_a"),
+        *[F.col(c).alias(f"ma{i}") for i, c in enumerate(m_cols)],
+    )
+    b = sh.select(
+        F.col("doc_id").alias("id_b"),
+        F.col("shingles").alias("sh_b"),
+        *[F.col(c).alias(f"mb{i}") for i, c in enumerate(m_cols)],
+    )
     agree = sum(
         F.when(F.col(f"ma{i}") == F.col(f"mb{i}"), 1).otherwise(0)
         for i in range(D.N_MINHASH)
@@ -1967,19 +1940,6 @@ def q_lang_id_confusion(spark, sf_dir):
     )
 
 
-#: r15 exec-side A/B (the board's two standing eval-harness rows): the
-#: recall audits scanned embeddings once per arm — corpus + query-set
-#: derivation on both the exact and LSH sides (4 resident scans for
-#: ann_recall_eval; 5 for ann_recall_clustered, whose arms also re-ran
-#: the clustered_fixture join). When True the corpus (or fixture) rides
-#: ONE lazy tracked checkpoint — the frontier's shared-scan pattern —
-#: and every arm reads the LogicalRDD leaf. Candidates/values identical
-#: (the checkpoint materializes the same rows the arms each rebuilt).
-#: Numbers in NOTES_r15; value identity pinned in
-#: test_recall_shared_scan_matches_per_arm_variant.
-RECALL_SHARED_SCAN = True
-
-
 @query(
     "ann_recall_eval",
     oracle=f"""
@@ -2006,8 +1966,8 @@ def q_ann_recall_eval(spark, sf_dir):
     Plan: both sides reuse their own scale shapes (broadcast queries ×
     one corpus scan; bucketed probe equi-join), and the recall join runs
     on two k·|queries|-row frames — negligible next to either input.
-    r15: the corpus rides ONE lazy checkpoint (the frontier's shared-
-    scan pattern) so the exact arm, the LSH arm, and both query-set
+    The corpus rides ONE lazy checkpoint (the frontier's shared-scan
+    pattern), so the exact arm, the LSH arm, and both query-set
     derivations read a LogicalRDD leaf instead of four parquet scans —
     at 100 TB the eval's arms share one pass over the stored corpus."""
     from movies_etl_spark.operators import caching
@@ -2016,13 +1976,8 @@ def q_ann_recall_eval(spark, sf_dir):
     # shared (memoized) per session+sf: a multi-rep bench session reuses
     # one resident corpus copy instead of pinning one per rep (ADVICE
     # r15 #3); the projection is immutable parquet, so reuse is sound.
-    base = (
-        caching.shared_local_checkpoint(
-            e.select("vec_id", "embedding"),
-            key=("recall_corpus", sf_dir),
-        )
-        if RECALL_SHARED_SCAN
-        else e
+    base = caching.shared_local_checkpoint(
+        e.select("vec_id", "embedding"), key=("recall_corpus", sf_dir)
     )
     qset = base.filter(F.col("vec_id") < 8)
     exact = SIM.topk_bruteforce(base, qset, k=5).select(
@@ -2120,20 +2075,18 @@ def q_ann_recall_clustered(spark, sf_dir):
     — so exact top-k, probe tables, and the recall arithmetic all
     replay bit-identically in the DuckDB oracle: the recall CLAIM
     itself sits under the driver's value gate, like ann_recall_eval.
-    r15: the fixture rides ONE lazy checkpoint (RECALL_SHARED_SCAN) so
-    neither arm re-runs the fixture's broadcast join or re-scans
-    parquet — five resident scans become one materialization."""
+    The fixture rides ONE lazy checkpoint, so neither arm re-runs the
+    fixture's broadcast join or re-scans parquet — five resident scans
+    become one materialization."""
     from movies_etl_spark.operators import caching
 
     e = _t(spark, sf_dir, "embeddings")
-    cl = SIM.clustered_fixture(e)
-    if RECALL_SHARED_SCAN:
-        # memoized per session+sf (ADVICE r15 #3): the fixture is pure
-        # deterministic arithmetic on immutable parquet, so bench reps
-        # reuse one resident copy instead of pinning one per rep.
-        cl = caching.shared_local_checkpoint(
-            cl, key=("recall_clustered_fixture", sf_dir)
-        )
+    # memoized per session+sf: the fixture is pure deterministic
+    # arithmetic on immutable parquet, so bench reps reuse one resident
+    # copy instead of pinning one per rep.
+    cl = caching.shared_local_checkpoint(
+        SIM.clustered_fixture(e), key=("recall_clustered_fixture", sf_dir)
+    )
     qset = cl.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
     exact = SIM.topk_bruteforce(cl, qset, k=5).select("query_id", "neighbor_id")
     ann = SIM.topk_multiprobe_lsh(
@@ -2177,20 +2130,6 @@ ANN_FRONTIER_IVF_NPROBES: dict[str, list[int]] = {
     "iso": [1, 2, 3],
     "clus": [1, 2],
 }
-
-#: r14 exec-side experiment (VERDICT r13 #6): when True the frontier's
-#: candidate generation shares ONE signature-table scan per (corpus,
-#: family) arm — the corpus explodes over the arm's distinct plane
-#: widths and joins once against the cfg-tagged union of every config's
-#: probe rows — instead of one broadcast join (and one corpus scan) per
-#: config. Candidate sets are provably identical per config; the
-#: shared join shape is pinned in
-#: test_ann_frontier_shares_scans_across_configs.
-#: ADOPTED r14: 15-row output identical, exec 84 → 62 jobs, interleaved
-#: warm medians 8.755 → 7.958 s (0.909) at sf0.1 — and the 100-TB shape
-#: is one pass over the corpus-scale signature table per arm instead of
-#: one per config.
-FRONTIER_SHARED_SCAN = True
 
 
 def _frontier_row_sql(
@@ -2439,9 +2378,10 @@ def q_ann_frontier_sweep(spark, sf_dir):
     wide shared subtrees; data computes once on the query's first
     action). The clustered-IVF cell table and centroids are likewise
     checkpointed at the trained-artifact boundary, exactly where a
-    production run would write the quantizer to storage. Each config is
-    a broadcast probe equi-join producing a TAGGED candidate frame; the
-    15 frames union once and share ONE metric tail (one top-5 window
+    production run would write the quantizer to storage. Each arm
+    (family × corpus) is ONE broadcast probe equi-join producing a
+    cfg-TAGGED candidate frame over all its configs; the four frames
+    union once and share ONE metric tail (one top-5 window
     partitioned by (config, query), one hit join against the tagged
     exact union, tiny grouped aggregates joined back onto a 15-row
     literal meta frame — which also guarantees a zero-candidate config
@@ -2505,7 +2445,7 @@ def q_ann_frontier_sweep(spark, sf_dir):
         6,
     )
 
-    # ---- fused metric tail (r11): every config contributes a TAGGED
+    # ---- fused metric tail: every arm contributes one cfg-TAGGED
     # candidate frame; one union, ONE top-5 window, ONE hit join, and
     # tiny grouped aggregates replace 15 copies of
     # (agg + window + join + 2 crossJoins) — same semantics and values,
@@ -2515,66 +2455,22 @@ def q_ann_frontier_sweep(spark, sf_dir):
     # the 15-row meta frame is the preserved side of the final joins.
     meta_rows = []
 
-    def tag(cand, corpus_tag, family, cfg, n_probes):
-        meta_rows.append((corpus_tag, family, cfg, n_probes))
-        return cand.select(
-            F.lit(corpus_tag).alias("corpus"),
-            F.lit(family).alias("family"),
-            F.lit(cfg).alias("cfg"),
-            "query_id",
-            "neighbor_id",
-            "sim",
-        )
-
     def lsh_cands(corpus_tag, c_all, q_all, configs):
-        out = []
-        for p, r in configs:
-            offs = SIM.multiprobe_offsets(p, r)
-            # one parsed array literal, not len(offs) F.lit py4j calls
-            # (the 697-offset config alone cost 0.38 s the literal way)
-            probes = q_all.withColumn(
-                "off",
-                F.explode(F.expr("array(" + ",".join(map(str, offs)) + ")")),
-            ).select(
-                "query_id",
-                "qvec",
-                "qnrm",
-                (F.col("qbucket") % F.lit(1 << p))
-                .bitwiseXOR(F.col("off"))
-                .cast("int")
-                .alias("probe_bucket"),
-            )
-            cand = c_all.join(
-                F.broadcast(probes),
-                ((F.col("bucket") % F.lit(1 << p)) == F.col("probe_bucket"))
-                & (F.col("neighbor_id") != F.col("query_id")),
-            ).select("query_id", "neighbor_id", sim.alias("sim"))
-            out.append(tag(cand, corpus_tag, "lsh", f"p{p}_r{r}", len(offs)))
-        return out
-
-    def lsh_cands_shared(corpus_tag, c_all, q_all, configs):
-        """ONE corpus scan for the whole LSH arm (r14, VERDICT r13 #6):
-        the per-config joins each rescan c_all with a different bucket
-        modulus; here the corpus explodes over the arm's DISTINCT plane
-        widths (4 rows/vector iso, 1 clustered) and joins once against
-        the cfg-tagged union of every config's probe rows on the
-        (width, probe_bucket) equi key. Identical candidate sets per
-        config: a vector has exactly one bucket at each width and a
-        config's probe buckets are distinct, so each (cfg, query,
-        neighbor) matches at most once, exactly as the per-config join.
-        At 100 TB this is the difference between len(configs) passes
-        over the corpus-scale signature table and one pass with a small
-        constant row expansion."""
+        """ONE corpus scan for the whole LSH arm: the corpus explodes
+        over the arm's DISTINCT plane widths (4 rows/vector iso, 1
+        clustered) and joins once against every config's cfg-tagged
+        probe rows on the (width, probe_bucket) equi key. A vector has
+        exactly one bucket at each width and a config's probe buckets
+        are distinct, so each (cfg, query, neighbor) matches at most
+        once. At 100 TB this is one pass over the corpus-scale
+        signature table with a small constant row expansion, not one
+        pass per config."""
         widths = sorted({p for p, _ in configs})
-        # ONE probe frame for the whole arm (r18 opt round): the r14
-        # shape built one analyzed subtree per config and chained
-        # len(configs)-1 unionByName calls — every union re-analyzes
-        # the growing tree, and the N-way union then sits under every
-        # downstream analysis of the fused tail. A single explode over
-        # one parsed (cfg, qp, off) struct-array literal emits the
-        # identical row multiset (same per-config offsets, same
-        # probe_bucket arithmetic: qbucket mod 2^p is the same int op
-        # written per-row), in one analyzed select.
+        # ONE probe frame for the whole arm: a single explode over one
+        # parsed (cfg, qp, off) struct-array literal (qbucket mod 2^p
+        # written per-row), in one analyzed select — a per-config
+        # subtree plus a unionByName chain would re-analyze the growing
+        # tree at every union and under the whole fused tail.
         items = []
         for p, r in configs:
             offs = SIM.multiprobe_offsets(p, r)
@@ -2609,7 +2505,7 @@ def q_ann_frontier_sweep(spark, sf_dir):
             "kbucket",
             F.expr("cast(bucket % shiftleft(1, pp) as int)"),
         )
-        cand = c_exp.join(
+        return c_exp.join(
             F.broadcast(probes),
             (F.col("pp") == F.col("qp"))
             & (F.col("kbucket") == F.col("probe_bucket"))
@@ -2622,11 +2518,12 @@ def q_ann_frontier_sweep(spark, sf_dir):
             "neighbor_id",
             sim.alias("sim"),
         )
-        return [cand]
 
     def ivf_cands(corpus_tag, cells, cent, q_all, nprobes):
         """cells: (neighbor_id, cvec, cnrm, cell); cent: (cell,
-        centroid) — broadcast; one routed frame shared across nprobes."""
+        centroid), broadcast. ONE cells scan for the whole IVF arm:
+        every nprobe's cfg-tagged routed probe rows (sum of nprobes rows
+        per query) join once on the cell equi key."""
         routed = q_all.crossJoin(F.broadcast(cent)).select(
             "query_id",
             "qvec",
@@ -2640,41 +2537,8 @@ def q_ann_frontier_sweep(spark, sf_dir):
             F.desc("csim"), F.asc("cell")
         )
         best = routed.withColumn("r", F.row_number().over(wq))
-        out = []
-        for n in nprobes:
-            bnp = best.filter(F.col("r") <= n).select(
-                "query_id", "qvec", "qnrm", "cell"
-            )
-            cand = cells.join(F.broadcast(bnp), "cell").filter(
-                F.col("neighbor_id") != F.col("query_id")
-            ).select("query_id", "neighbor_id", sim.alias("sim"))
-            out.append(tag(cand, corpus_tag, "ivf", f"np{n}", n))
-        return out
-
-    def ivf_cands_shared(corpus_tag, cells, cent, q_all, nprobes):
-        """ONE cells scan for the whole IVF arm (r14): the per-nprobe
-        joins each rescan the cell-keyed corpus; here the cfg-tagged
-        union of every nprobe's routed probe rows joins once on the
-        cell equi key. Probe-row volume is identical to the per-config
-        form (sum of nprobes rows per query either way); only the
-        corpus-side scan count changes."""
-        routed = q_all.crossJoin(F.broadcast(cent)).select(
-            "query_id",
-            "qvec",
-            "qnrm",
-            "cell",
-            F.round(cosine_expr("qvec", "centroid"), 6).alias(
-                "csim"
-            ),
-        )
-        wq = Window.partitionBy("query_id").orderBy(
-            F.desc("csim"), F.asc("cell")
-        )
-        best = routed.withColumn("r", F.row_number().over(wq))
-        # ONE probe frame for the whole arm (r18 opt round, same move
-        # as the LSH arm): explode a (cfg, np) struct-array literal and
-        # filter r <= np — the identical row multiset the per-nprobe
-        # filters + unionByName chain produced, in one analyzed select.
+        # ONE probe frame for the whole arm, as in the LSH arm: explode
+        # a (cfg, np) struct-array literal and filter r <= np.
         items = []
         for n in nprobes:
             meta_rows.append((corpus_tag, "ivf", f"np{n}", n))
@@ -2699,7 +2563,7 @@ def q_ann_frontier_sweep(spark, sf_dir):
                 "cell",
             )
         )
-        cand = (
+        return (
             cells.join(F.broadcast(bnp), "cell")
             .filter(F.col("neighbor_id") != F.col("query_id"))
             .select(
@@ -2711,26 +2575,22 @@ def q_ann_frontier_sweep(spark, sf_dir):
                 sim.alias("sim"),
             )
         )
-        return [cand]
-
-    _lsh = lsh_cands_shared if FRONTIER_SHARED_SCAN else lsh_cands
-    _ivf = ivf_cands_shared if FRONTIER_SHARED_SCAN else ivf_cands
 
     max_p = max(p for p, _ in ANN_FRONTIER_CONFIGS)
     cands = []
 
     # ---- isotropic corpus ----
     ci, qi, exact_i, denom_i = corpus_frames(e, 0, 8, max_p, cell_col="label")
-    cands += _lsh("iso", ci, qi, ANN_FRONTIER_CONFIGS)
+    cands.append(lsh_cands("iso", ci, qi, ANN_FRONTIER_CONFIGS))
     cent_i = SIM.label_centroids(ci, "cvec", "cell")
-    cands += _ivf("iso", ci, cent_i, qi, ANN_FRONTIER_IVF_NPROBES["iso"])
+    cands.append(ivf_cands("iso", ci, cent_i, qi, ANN_FRONTIER_IVF_NPROBES["iso"]))
 
     # ---- clustered fixture ----
     cf = caching.tracked_local_checkpoint(
         SIM.clustered_fixture(e), eager=False
     )
     cc, qc, exact_c, denom_c = corpus_frames(cf, 8, 16, 8)
-    cands += _lsh("clus", cc, qc, ANN_FRONTIER_LSH_CLUSTERED)
+    cands.append(lsh_cands("clus", cc, qc, ANN_FRONTIER_LSH_CLUSTERED))
     # trained coarse quantizer: Lloyd's k=8 cells + their centroids,
     # checkpointed at the trained-artifact boundary
     assigned = caching.tracked_local_checkpoint(
@@ -2744,8 +2604,8 @@ def q_ann_frontier_sweep(spark, sf_dir):
     cent_c = SIM.label_centroids(
         cf.join(assigned, "vec_id"), "embedding", "cell"
     ).select("cell", "centroid")
-    cands += _ivf(
-        "clus", cells_c, cent_c, qc, ANN_FRONTIER_IVF_NPROBES["clus"]
+    cands.append(
+        ivf_cands("clus", cells_c, cent_c, qc, ANN_FRONTIER_IVF_NPROBES["clus"])
     )
 
     cand_all = cands[0]

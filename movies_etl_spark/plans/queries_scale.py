@@ -2588,26 +2588,6 @@ _CMS_JOIN_ORACLE = """
 """
 
 
-#: r14 exec-side experiment #2 (the VERDICT r13 #6 budget, second
-#: target): when True, cms_join_size_estimate builds BOTH sketches from
-#: ONE lineitem pass (the filtered side is a predicate-subset of the
-#: base, so a dual-counter cell table — sketch.cms_partials_pair —
-#: reproduces both sketches cell-aligned and the inner product needs no
-#: (seed, cell) join at all), and the exact-rides-along term fuses its
-#: two groupBys + equi-join into one conditional aggregate. Values
-#: identical UNCONDITIONALLY as of r15 (ADVICE r14 #1/#2): subset ⇒
-#: same cells; cnt_tag = the filtered sketch's cnt; zero-tag cells
-#: contribute 0 exactly as the join's dropped rows; null keys are
-#: filtered on both exact sides (the old path dropped them only via
-#: inner-join null semantics), both exact sums coalesce to 0 on empty
-#: input (zero-'R' or empty lineitem), and cms_inner_product_pair drops
-#: NULL-cell rows exactly as the (seed, cell) equi-join did.
-#: Numbers in NOTES_r14; identity pinned in
-#: test_cms_join_fused_matches_per_relation_variant and (degenerate
-#: inputs) test_cms_join_fused_identity_degenerate_inputs.
-CMS_JOIN_FUSED = True
-
-
 @query("cms_join_size_estimate", oracle=_CMS_JOIN_ORACLE)
 def q_cms_join_size_estimate(spark, sf_dir):
     """Join-size estimation from stored sketches — the count-min inner
@@ -2618,8 +2598,8 @@ def q_cms_join_size_estimate(spark, sf_dir):
     at 100 TB (the sub-relation is a predicate-subset of the base, so
     ONE scan builds a dual-counter ≤ d·w cell table and the inner
     product is cell-local — no (seed, cell) join, and neither fact
-    table ever moves; the per-relation two-table path is kept behind
-    CMS_JOIN_FUSED for independently-stored sketches). Width 65536 here (the point-query sketch's 1024
+    table ever moves; sketch.cms_inner_product joins two independently
+    stored sketches). Width 65536 here (the point-query sketch's 1024
     would drown this pair's |A|·|B|/w ≈ 880k additive bound; at 64k the
     bound is ~14k against a 621k true size — sizing w to the workload
     is the estimator's one design decision, stated in the docstring
@@ -2630,58 +2610,31 @@ def q_cms_join_size_estimate(spark, sf_dir):
 
     li = _t(spark, sf_dir, "lineitem")
     is_r = F.col("l_returnflag") == "R"
-    # Null join keys never equi-match, so the exact side of BOTH
-    # variants filters them explicitly (the old path dropped them only
-    # implicitly via the inner join's null semantics) and both sums
-    # coalesce to 0 on empty input — the gate-flip identity is
-    # unconditional, not TPC-H-schema-conditional (ADVICE r14 #1).
+    # Null join keys never equi-match, so the exact side filters them
+    # explicitly, and the sum coalesces to 0 on empty input (zero-'R'
+    # or empty lineitem): exact_join_rows is 0 there, never NULL.
     li_k = li.filter(F.col("l_partkey").isNotNull())
-    if CMS_JOIN_FUSED:
-        la = li.select(
-            (F.col("l_orderkey") % 4).alias("shard"), "l_partkey", is_r.alias("is_r")
+    la = li.select(
+        (F.col("l_orderkey") % 4).alias("shard"), "l_partkey", is_r.alias("is_r")
+    )
+    merged = SK.cms_merge_pair(
+        SK.cms_partials_pair(la, "l_partkey", "shard", F.col("is_r"), width=65536)
+    )
+    est = SK.cms_inner_product_pair(merged).select(
+        F.col("est").cast("long").alias("est_join_rows")
+    )
+    exact = (
+        li_k.groupBy("l_partkey")
+        .agg(
+            F.count(F.lit(1)).alias("ca"),
+            F.count_if(is_r).alias("cb"),
         )
-        merged = SK.cms_merge_pair(
-            SK.cms_partials_pair(la, "l_partkey", "shard", F.col("is_r"), width=65536)
+        .agg(
+            F.coalesce(
+                F.sum(F.col("ca") * F.col("cb")), F.lit(0)
+            ).alias("exact_join_rows")
         )
-        est = SK.cms_inner_product_pair(merged).select(
-            F.col("est").cast("long").alias("est_join_rows")
-        )
-        exact = (
-            li_k.groupBy("l_partkey")
-            .agg(
-                F.count(F.lit(1)).alias("ca"),
-                F.count_if(is_r).alias("cb"),
-            )
-            .agg(
-                F.coalesce(
-                    F.sum(F.col("ca") * F.col("cb")), F.lit(0)
-                ).alias("exact_join_rows")
-            )
-        )
-    else:
-        la = li.select((F.col("l_orderkey") % 4).alias("shard"), "l_partkey")
-        lb = li.filter(is_r).select(
-            (F.col("l_orderkey") % 4).alias("shard"), "l_partkey"
-        )
-        ca = SK.cms_merge(SK.cms_partials(la, "l_partkey", "shard", width=65536))
-        cb = SK.cms_merge(SK.cms_partials(lb, "l_partkey", "shard", width=65536))
-        est = SK.cms_inner_product(ca, cb).select(
-            F.col("est").cast("long").alias("est_join_rows")
-        )
-        fa = li_k.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("ca"))
-        fb = (
-            li_k.filter(is_r)
-            .groupBy("l_partkey")
-            .agg(F.count(F.lit(1)).alias("cb"))
-        )
-        exact = (
-            fa.join(fb, "l_partkey")
-            .agg(
-                F.coalesce(
-                    F.sum(F.col("ca") * F.col("cb")), F.lit(0)
-                ).alias("exact_join_rows")
-            )
-        )
+    )
     return est.crossJoin(exact).select(
         "est_join_rows",
         "exact_join_rows",

@@ -93,12 +93,12 @@ def test_multiprobe_scan_fraction_bounded(spark, recall_frames):
     n_queries = q.count()
     c = e.select(
         F.col("vec_id").alias("neighbor_id"),
-        SIM.rp_bucket(F.col("embedding")).cast("int").alias("bucket"),
+        SIM.rp_bucket("embedding").cast("int").alias("bucket"),
     )
     probes = (
         q.select(
             F.col("vec_id").alias("query_id"),
-            SIM.rp_bucket(F.col("embedding")).cast("int").alias("qbucket"),
+            SIM.rp_bucket("embedding").cast("int").alias("qbucket"),
         )
         .withColumn(
             "off", F.explode(F.array(*[F.lit(o) for o in SIM.MULTIPROBE_OFFSETS_H2]))
@@ -131,46 +131,52 @@ def test_rp_bucket_n_8_matches_rp_bucket(spark, recall_frames):
     bit-for-bit (same planes, same rounding discipline)."""
     e, _, _ = recall_frames
     both = e.select(
-        SIM.rp_bucket(F.col("embedding")).cast("int").alias("b8"),
-        SIM.rp_bucket_n(F.col("embedding"), 8).cast("int").alias("bn"),
+        SIM.rp_bucket("embedding").cast("int").alias("b8"),
+        SIM.rp_bucket_n("embedding", 8).cast("int").alias("bn"),
     )
     assert both.filter(F.col("b8") != F.col("bn")).count() == 0
 
 
 def test_rp_bucket_n_str_matches_column(spark, recall_frames):
-    """The r19 single-parse string path (whole bucket column built as
-    one F.expr) is value-identical to the Column path at both widths,
-    and the single-parse fold kernels (dot_expr/l2norm_expr/cosine_expr)
-    match their python-HOF builders bit-for-bit."""
+    """The single-parse bucket column matches an independent python
+    left fold over doubles at both widths (plane dot rounded to 6, sign
+    test per bit), and so do the fold kernels dot_expr, l2norm_expr
+    and cosine_expr."""
+    import math
+
     from movies_etl_spark.operators import dedup as D
 
     e, _, _ = recall_frames
-    for width in (8, 16):
-        both = e.select(
-            SIM.rp_bucket_n(F.col("embedding"), width)
-            .cast("int")
-            .alias("bc"),
-            SIM.rp_bucket_n("embedding", width).cast("int").alias("bs"),
-        )
-        assert both.filter(F.col("bc") != F.col("bs")).count() == 0
-    pair = e.select(
+
+    def fold(xs):
+        acc = 0.0
+        for x in xs:
+            acc += x
+        return acc
+
+    rows = e.select(
         F.col("embedding").alias("a"),
         F.reverse(F.col("embedding")).alias("b"),
-    )
-    kernels = pair.select(
-        D.dot(F.col("a"), F.col("b")).alias("d_col"),
-        D.dot_expr("a", "b").alias("d_str"),
-        D.l2norm(F.col("a")).alias("n_col"),
-        D.l2norm_expr("a").alias("n_str"),
-        D.cosine(F.col("a"), F.col("b")).alias("c_col"),
-        D.cosine_expr("a", "b").alias("c_str"),
-    )
-    bad = kernels.filter(
-        (F.col("d_col") != F.col("d_str"))
-        | (F.col("n_col") != F.col("n_str"))
-        | (F.col("c_col") != F.col("c_str"))
-    )
-    assert bad.count() == 0
+        SIM.rp_bucket_n("embedding", 8).cast("int").alias("b8"),
+        SIM.rp_bucket_n("embedding", 16).cast("int").alias("b16"),
+        D.dot_expr("a", "b").alias("d"),
+        D.l2norm_expr("a").alias("n"),
+        D.cosine_expr("a", "b").alias("c"),
+    ).collect()
+    planes = SIM.rp_planes_n(16)
+    for r in rows:
+        a, b = [float(x) for x in r["a"]], [float(x) for x in r["b"]]
+        bits = [
+            1 << j
+            for j, p in enumerate(planes)
+            if round(fold(x * y for x, y in zip(a, p)), 6) >= 0
+        ]
+        assert r["b8"] == sum(x for x in bits if x < 1 << 8), r
+        assert r["b16"] == sum(bits), r
+        d = fold(x * y for x, y in zip(a, b))
+        na = math.sqrt(fold(x * x for x in a))
+        nb = math.sqrt(fold(x * x for x in b))
+        assert (r["d"], r["n"], r["c"]) == (d, na, d / (na * nb)), r
 
 
 def test_frontier_operating_point_floor(spark, recall_frames):

@@ -336,13 +336,12 @@ def test_hash_fingerprints_match_python_witnesses(spark, sf_dir):
     want_b = {int(r.vec_id): bucket(r.embedding) for r in emb.itertuples()}
     from movies_etl_spark.operators import similarity as SIM
     from movies_etl_spark.sources import readers
-    from pyspark.sql import functions as F2
 
     e = readers.load_table(spark, sf_dir, "embeddings")
     got_b = {
         r["vec_id"]: r["bucket"]
         for r in e.select(
-            "vec_id", SIM.rp_bucket(F2.col("embedding")).cast("int").alias("bucket")
+            "vec_id", SIM.rp_bucket("embedding").cast("int").alias("bucket")
         ).collect()
     }
     assert got_b == want_b

@@ -144,3 +144,40 @@ def test_pin_session_conf_keep_env_leaves_int96(spark, monkeypatch):
     fresh.conf.set(key, "INT96")
     pin_session_conf(fresh)
     assert fresh.conf.get(key) == "INT96"
+
+
+def test_no_module_level_bool_gates():
+    """No engine module binds an UPPER_CASE name to a True/False literal
+    at module level: each query and kernel has one code path, not an
+    A/B switch with a retired arm."""
+    import ast
+    import os
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "movies_etl_spark",
+    )
+    gates = []
+    for dirpath, _, files in os.walk(root):
+        for fn in sorted(files):
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in tree.body:
+                if isinstance(node, ast.Assign):
+                    targets, value = node.targets, node.value
+                elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                    targets, value = [node.target], node.value
+                else:
+                    continue
+                if not (
+                    isinstance(value, ast.Constant) and isinstance(value.value, bool)
+                ):
+                    continue
+                for t in targets:
+                    if isinstance(t, ast.Name) and t.id.isupper():
+                        rel = os.path.relpath(path, root)
+                        gates.append(f"{rel}:{node.lineno} {t.id}")
+    assert not gates, gates

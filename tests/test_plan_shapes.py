@@ -1126,58 +1126,25 @@ def test_funnel_one_pass_scans_events_once(spark, sf_dir):
 
 
 def test_concurrency_sweep_scans_events_twice(spark, sf_dir):
-    """r15 one-scan sweep-line endpoints (the VERDICT r14 #5 named
-    candidate): the ±1 endpoint union read events twice and BOTH
-    two-phase prefix-sum consumers re-derived it — four scans in the
-    plan. The explode form leaves exactly the two consumer scans (the
+    """One-scan sweep-line endpoints: both ±1 endpoints come from one
+    explode, so the plan holds exactly the two consumer scans (the
     per-shard cumsum pass and the shard-totals pass — the prefix-sum
-    correctness design), each fed by one explode."""
-    from movies_etl_spark.plans import queries_analytics as QA
+    correctness design). A two-scan endpoint union would show four."""
     from movies_etl_spark.plans import registry
 
-    fn = registry.QUERIES["concurrency_sweep"]
-    df = fn(spark, sf_dir)
+    df = registry.QUERIES["concurrency_sweep"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     scans = plan.count("events.parquet")
     assert scans == 2, f"endpoint union back? events scans={scans}"
-    saved = QA.CONCURRENCY_ONE_SCAN
-    try:
-        QA.CONCURRENCY_ONE_SCAN = False
-        plan_u = (
-            fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        )
-    finally:
-        QA.CONCURRENCY_ONE_SCAN = saved
-    assert plan_u.count("events.parquet") == 4, "union baseline moved"
 
 
 def test_recall_audits_share_one_corpus_scan(spark, sf_dir):
-    """r15 shared-scan recall audits (the board's two standing
-    eval-harness rows): with RECALL_SHARED_SCAN the corpus (or the
-    clustered fixture) is a lazy-checkpoint leaf, so the exact arm,
-    the LSH arm, and both query-set derivations reference ZERO parquet
-    subtrees — 4 (eval) / 5 (clustered) resident scans become one
-    materialization. The flipped gate restores the per-arm baselines,
-    pinning both shapes."""
-    from movies_etl_spark.plans import queries_ext as QE
-
-    # per-arm baselines count PLAN-STRING parquet references (the
-    # formatted explain), not the audit's resident-scan count: the
-    # clustered fixture references embeddings twice per derivation
-    # (corpus + broadcast centers), so its per-arm plan shows 8 refs
-    # where the executed-plan audit counted 5 resident scans.
-    for name, per_arm_scans in (
-        ("ann_recall_eval", 4),
-        ("ann_recall_clustered", 8),
-    ):
+    """Shared-scan recall audits: the corpus (or the clustered fixture)
+    is a lazy-checkpoint leaf, so the exact arm, the LSH arm, and both
+    query-set derivations reference ZERO parquet subtrees — one
+    materialization instead of a parquet scan per arm."""
+    for name in ("ann_recall_eval", "ann_recall_clustered"):
         plan = _plan(spark, sf_dir, name)
         assert "Scan ExistingRDD" in plan, f"{name}: no checkpoint leaf"
         n = plan.count("embeddings.parquet")
         assert n == 0, f"{name}: parquet subtrees back ({n})"
-        saved = QE.RECALL_SHARED_SCAN
-        try:
-            QE.RECALL_SHARED_SCAN = False
-            n_u = _plan(spark, sf_dir, name).count("embeddings.parquet")
-        finally:
-            QE.RECALL_SHARED_SCAN = saved
-        assert n_u == per_arm_scans, f"{name}: baseline moved ({n_u})"

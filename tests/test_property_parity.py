@@ -739,7 +739,7 @@ def test_ann_rerank_containment_and_scorer_parity(spark, sf_dir):
 
     import __spark_entry__ as m
     from movies_etl_spark.operators import similarity as SIM
-    from movies_etl_spark.operators.dedup import cosine
+    from movies_etl_spark.operators.dedup import cosine_expr
     from movies_etl_spark.sources import readers
 
     out = m.queries()["ann_rerank"](spark, sf_dir).toPandas()
@@ -764,7 +764,7 @@ def test_ann_rerank_containment_and_scorer_parity(spark, sf_dir):
     fold = {
         (r["query_id"], r["neighbor_id"]): r["c"]
         for r in pair_df.select(
-            "query_id", "neighbor_id", F.round(cosine(F.col("a"), F.col("b")), 6).alias("c")
+            "query_id", "neighbor_id", F.round(cosine_expr("a", "b"), 6).alias("c")
         ).collect()
     }
     for r in out.itertuples():
@@ -1431,32 +1431,18 @@ def test_cms_inner_product_pair_null_keys_match_equi_join(spark):
 
 
 def test_cms_join_fused_identity_degenerate_inputs(spark, tmp_path):
-    """ADVICE r14 #1: the fused/per-relation gate-flip identity on the
-    two degenerate shapes TPC-H can't produce — NULL l_partkey rows
-    (old equi-join dropped them implicitly; both variants now filter
-    explicitly) and zero 'R' rows (old path's sum-over-empty-join read
-    NULL; both sums now coalesce to 0)."""
-    from pyspark.sql import functions as F
-
-    from movies_etl_spark.plans import queries_scale as QS
+    """cms_join_size_estimate on the two degenerate shapes TPC-H can't
+    produce: NULL l_partkey rows (null keys never equi-match, so the
+    exact size counts only non-null keys, and the overestimate-only
+    sketch still bounds it from above) and zero 'R' rows (the exact
+    size reads 0, not NULL)."""
     from movies_etl_spark.plans import registry
 
     fn = registry.QUERIES["cms_join_size_estimate"]
-    saved = QS.CMS_JOIN_FUSED
-
-    def both(sf_dir):
-        try:
-            QS.CMS_JOIN_FUSED = False
-            base = [tuple(r) for r in fn(spark, sf_dir).collect()]
-            QS.CMS_JOIN_FUSED = True
-            fused = [tuple(r) for r in fn(spark, sf_dir).collect()]
-        finally:
-            QS.CMS_JOIN_FUSED = saved
-        return base, fused
 
     # shape 1: null join keys mixed in, some 'R' rows
     d1 = str(tmp_path / "nullkeys")
-    spark.range(100).select(
+    li = spark.range(100).select(
         F.col("id").alias("l_orderkey"),
         F.when(F.col("id") % 5 == 0, F.lit(None))
         .otherwise(F.col("id") % 11)
@@ -1464,11 +1450,16 @@ def test_cms_join_fused_identity_degenerate_inputs(spark, tmp_path):
         F.when(F.col("id") % 3 == 0, F.lit("R"))
         .otherwise(F.lit("N"))
         .alias("l_returnflag"),
-    ).write.parquet(f"{d1}/lineitem.parquet")
-    base, fused = both(d1)
-    assert base == fused, (base, fused)
-    # the exact side must have dropped the null-key rows on both paths
-    assert base[0][1] > 0
+    )
+    li.write.parquet(f"{d1}/lineitem.parquet")
+    pdf = li.toPandas().dropna(subset=["l_partkey"])
+    ca = pdf.groupby("l_partkey").size()
+    cb = pdf[pdf.l_returnflag == "R"].groupby("l_partkey").size()
+    want = int((ca * cb).dropna().sum())
+    assert want > 0
+    ((est, exact, overest),) = [tuple(r) for r in fn(spark, d1).collect()]
+    assert exact == want, (exact, want)
+    assert est >= exact and overest == est - exact, (est, exact, overest)
 
     # shape 2: zero 'R' rows — exact_join_rows must read 0, not NULL
     d2 = str(tmp_path / "nor")
@@ -1477,31 +1468,13 @@ def test_cms_join_fused_identity_degenerate_inputs(spark, tmp_path):
         (F.col("id") % 7).alias("l_partkey"),
         F.lit("N").alias("l_returnflag"),
     ).write.parquet(f"{d2}/lineitem.parquet")
-    base, fused = both(d2)
-    assert base == fused, (base, fused)
-    assert base[0][1] == 0 and base[0][1] is not None
-
-
-def test_cms_join_fused_matches_per_relation_variant(spark, sf_dir):
-    """Gate-flip identity for the adopted fusion: both variants of
-    cms_join_size_estimate return the identical single row."""
-    from movies_etl_spark.plans import queries_scale as QS
-    from movies_etl_spark.plans import registry
-
-    fn = registry.QUERIES["cms_join_size_estimate"]
-    saved = QS.CMS_JOIN_FUSED
-    try:
-        QS.CMS_JOIN_FUSED = False
-        base = [tuple(r) for r in fn(spark, sf_dir).collect()]
-        QS.CMS_JOIN_FUSED = True
-        fused = [tuple(r) for r in fn(spark, sf_dir).collect()]
-    finally:
-        QS.CMS_JOIN_FUSED = saved
-    assert base == fused, (base, fused)
+    ((est, exact, _),) = [tuple(r) for r in fn(spark, d2).collect()]
+    assert exact is not None and exact == 0
+    assert est == 0
 
 
 def test_with_minhash_bands_sig_cols_matches_refold(spark):
-    """The r14 shared-signature passthrough: banding from precomputed
+    """The shared-signature passthrough: banding from precomputed
     signature columns must emit the identical (id, band_id, band_key)
     rows as re-deriving the folds from shingles — same fold, same band
     concat, so any drift means the sig_cols path wired the wrong
@@ -1518,10 +1491,11 @@ def test_with_minhash_bands_sig_cols_matches_refold(spark):
         ).alias("text"),
     )
     sh = D.shingled(docs, "text", "doc_id")
-    sig = D.minhash_signature(F.col("shingles"))
     m_cols = [f"m{i}" for i in range(D.N_MINHASH)]
     sh_sig = sh.select(
-        "doc_id", "shingles", *[s.alias(c) for s, c in zip(sig, m_cols)]
+        "doc_id",
+        "shingles",
+        *[F.expr(s).alias(c) for s, c in zip(D._minhash_sig_sql(), m_cols)],
     )
     want = sorted(
         tuple(r) for r in D.with_minhash_bands(sh, "doc_id").collect()
@@ -1535,177 +1509,146 @@ def test_with_minhash_bands_sig_cols_matches_refold(spark):
     assert got == want
 
 
-def test_minhash_estimate_shared_sig_matches_refold_variant(spark, sf_dir):
-    """Gate-flip identity for the adopted shared-signature form: both
-    variants of minhash_jaccard_estimate return identical rows."""
-    from movies_etl_spark.plans import queries_ext as QE
-    from movies_etl_spark.plans import registry
+def _py_shingles(text: str) -> list[int]:
+    """Independent python witness of dedup.shingle_hashes: md5 48-bit
+    token hashes mod P, combined per 3-token window."""
+    import hashlib
 
-    fn = registry.QUERIES["minhash_jaccard_estimate"]
-    saved = QE.MINHASH_EST_SHARED_SIG
-    try:
-        QE.MINHASH_EST_SHARED_SIG = False
-        base = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
-        QE.MINHASH_EST_SHARED_SIG = True
-        shared = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
-    finally:
-        QE.MINHASH_EST_SHARED_SIG = saved
-    assert base == shared, (base[:3], shared[:3])
+    from movies_etl_spark.operators.dedup import MINHASH_P, SHINGLE_C1, SHINGLE_C2
 
-
-def test_funnel_one_pass_matches_per_stage_variant(spark, sf_dir):
-    """Gate-flip identity for the adopted one-pass funnel: both
-    variants return identical stage counts."""
-    from movies_etl_spark.plans import queries_analytics as QA
-    from movies_etl_spark.plans import registry
-
-    fn = registry.QUERIES["funnel_analysis"]
-    saved = QA.FUNNEL_ONE_PASS
-    try:
-        QA.FUNNEL_ONE_PASS = False
-        base = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
-        QA.FUNNEL_ONE_PASS = True
-        onepass = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
-    finally:
-        QA.FUNNEL_ONE_PASS = saved
-    assert base == onepass, (base, onepass)
+    th = [
+        int(hashlib.md5(t.encode()).hexdigest()[:12], 16) % MINHASH_P
+        for t in text.split(" ")
+    ]
+    return [
+        (th[i] * SHINGLE_C1 + th[i + 1] * SHINGLE_C2 + th[i + 2]) % MINHASH_P
+        for i in range(len(th) - 2)
+    ]
 
 
-def test_concurrency_one_scan_matches_union_variant(spark, sf_dir):
-    """Gate-flip identity for the r15 one-scan sweep-line endpoints:
-    the explode form and the two-scan union form return identical
-    per-day concurrency rows."""
-    from movies_etl_spark.plans import queries_analytics as QA
-    from movies_etl_spark.plans import registry
+def _py_bands(shingles: list[int]) -> list[tuple[int, str]]:
+    """Independent python witness of with_minhash_bands' (band_id,
+    band_key) rows for one document (none when it has no shingles)."""
+    from movies_etl_spark.operators.dedup import (
+        MINHASH_P,
+        MINHASH_SEEDS,
+        N_BANDS,
+        N_MINHASH,
+    )
 
-    fn = registry.QUERIES["concurrency_sweep"]
-    saved = QA.CONCURRENCY_ONE_SCAN
-    try:
-        QA.CONCURRENCY_ONE_SCAN = False
-        base = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
-        QA.CONCURRENCY_ONE_SCAN = True
-        onescan = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
-    finally:
-        QA.CONCURRENCY_ONE_SCAN = saved
-    assert base == onescan, (base, onescan)
+    if not shingles:
+        return []
+    sig = [
+        min((a * h + b) % MINHASH_P for h in shingles)
+        for a, b in MINHASH_SEEDS[:N_MINHASH]
+    ]
+    r = N_MINHASH // N_BANDS
+    return [
+        (i, "|".join(str(v) for v in sig[i * r : (i + 1) * r]))
+        for i in range(N_BANDS)
+    ]
 
 
-def test_recall_shared_scan_matches_per_arm_variant(spark, sf_dir):
-    """Gate-flip identity for the r15 shared-scan recall audits: the
-    checkpoint-leaf form and the per-arm
-    parquet-scan form return identical per-query recall rows for both
-    audits."""
-    from movies_etl_spark.plans import queries_ext as QE
-    from movies_etl_spark.plans import registry
-
-    saved = QE.RECALL_SHARED_SCAN
-    for name in ("ann_recall_eval", "ann_recall_clustered"):
-        fn = registry.QUERIES[name]
-        try:
-            QE.RECALL_SHARED_SCAN = False
-            base = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
-            QE.RECALL_SHARED_SCAN = True
-            shared = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
-        finally:
-            QE.RECALL_SHARED_SCAN = saved
-        assert base == shared, (name, base, shared)
+def _py_fold(xs) -> float:
+    """Left-to-right double sum from 0.0, the fold order of the kernels."""
+    acc = 0.0
+    for x in xs:
+        acc += x
+    return acc
 
 
 def test_shingle_band_sql_parity(spark):
-    """The r19 single-parse shingle/band builders are value-identical to
-    the python-HOF Column builders they replaced: shingled() vs
-    shingle_hash_array(tokens(col)), and with_minhash_bands' parsed
-    band array vs band_keys(minhash_signature(shingles)) — same md5
-    token hashing, same affine grouping, same concat casts."""
+    """shingled() and with_minhash_bands() match the python md5
+    witnesses (the arithmetic tests/test_ground_truth.py replays):
+    same token hashing, same affine grouping, same band concat."""
     from movies_etl_spark.operators import dedup as D
-    from movies_etl_spark.operators.text import tokens
 
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d e f g"),
-            (2, "a b"),                      # under-k: empty shingles
-            (3, ""),                         # degenerate
-            (4, "x y z x y z x y z q r s"),
-            (5, "lorem ipsum dolor sit amet consectetur"),
-        ],
-        "doc_id long, text string",
-    )
-    new_sh = D.shingled(docs, "text", "doc_id")
-    old_sh = docs.select(
-        F.col("doc_id"),
-        D.shingle_hash_array(tokens(F.col("text"))).alias("shingles"),
-    )
-    assert new_sh.exceptAll(old_sh).count() == 0
-    assert old_sh.exceptAll(new_sh).count() == 0
+    texts = {
+        1: "a b c d e f g",
+        2: "a b",  # under-k: empty shingles
+        3: "",  # degenerate
+        4: "x y z x y z x y z q r s",
+        5: "lorem ipsum dolor sit amet consectetur",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    sh = D.shingled(docs, "text", "doc_id")
+    got_sh = {r["doc_id"]: list(r["shingles"]) for r in sh.collect()}
+    want_sh = {d: _py_shingles(t) for d, t in texts.items()}
+    assert got_sh == want_sh
 
-    new_bands = D.with_minhash_bands(new_sh, "doc_id")
-    sig = D.minhash_signature(F.col("shingles"))
-    old_banded = old_sh.select(
-        F.col("doc_id"),
-        F.array(
-            *[
-                F.struct(F.lit(i).alias("band_id"), b.alias("band_key"))
-                for i, b in enumerate(D.band_keys(sig))
-            ]
-        ).alias("bands"),
+    got_bands = sorted(tuple(r) for r in D.with_minhash_bands(sh, "doc_id").collect())
+    want_bands = sorted(
+        (d, i, key) for d, s in want_sh.items() for i, key in _py_bands(s)
     )
-    old_bands = (
-        old_banded.select("doc_id", F.explode("bands").alias("b"))
-        .select(
-            "doc_id",
-            F.col("b.band_id").alias("band_id"),
-            F.col("b.band_key").alias("band_key"),
-        )
-        .filter(F.col("band_key") != "")
-    )
-    assert new_bands.exceptAll(old_bands).count() == 0
-    assert old_bands.exceptAll(new_bands).count() == 0
+    assert got_bands == want_bands
 
 
 def test_string_builders_reject_non_plain_names(spark):
     """The string-input builders paste column names into F.expr text, so
     a name that is not a plain identifier must fail before anything is
-    built; plain names still build the Column builders' values."""
+    built; plain names build values equal to independent python folds
+    and md5 witnesses."""
+    import math
+
     from movies_etl_spark.operators import dedup as D
     from movies_etl_spark.operators import similarity as SIM
-    from movies_etl_spark.operators.text import tokens
 
+    def vec(seed):
+        return [((i * 37 + seed * 11) % 17 - 8) / 4.0 for i in range(SIM.RP_DIM)]
+
+    rows = [(1, "a b c d e", vec(1), vec(2)), (2, "x y z x y", vec(3), vec(5))]
     df = spark.createDataFrame(
-        [
-            (1, "a b c d e", [0.5, -1.25, 2.0], [1.0, 0.25, -0.5]),
-            (2, "x y z x y", [-0.75, 0.5, 1.5], [0.125, -2.0, 0.5]),
-        ],
-        "doc_id long, text string, a array<double>, b array<double>",
+        rows, "doc_id long, text string, a array<double>, b array<double>"
     )
+    sh = D.shingled(df, "text", "doc_id")
     builders = [
         lambda n: D.dot_expr(n, "b"),
         lambda n: D.dot_expr("a", n),
         D.l2norm_expr,
         lambda n: D.cosine_expr("a", n),
+        D.shingle_hashes,
         lambda n: D.shingled(df, n, "doc_id"),
+        lambda n: D.with_minhash_bands(sh, "doc_id", sig_cols=["shingles", n]),
         lambda n: SIM.rp_bucket_n(n, 4),
         SIM.rp_bucket,
+        lambda n: SIM.kmeans_assign(df, id_col="doc_id", vec_col=n),
+        lambda n: SIM.kmeans_train_assign(df, df, id_col="doc_id", vec_col=n),
+        lambda n: SIM.retrieve_quantized_multiprobe(df, df, "doc_id", n),
     ]
     for build in builders:
         for bad in ("a.b", "a b"):
             with pytest.raises(ValueError, match="plain column name"):
                 build(bad)
 
-    a, b = F.col("a"), F.col("b")
     got = df.select(
-        D.dot_expr("a", "b"), D.l2norm_expr("a"), D.cosine_expr("a", "b"),
-        SIM.rp_bucket_n("a", 3), SIM.rp_bucket("a"),
+        "doc_id",
+        D.dot_expr("a", "b"),
+        D.l2norm_expr("a"),
+        D.cosine_expr("a", "b"),
+        SIM.rp_bucket_n("a", 3),
+        SIM.rp_bucket("a"),
+        D.shingle_hashes("text"),
     ).collect()
-    want = df.select(
-        D.dot(a, b), D.l2norm(a), D.cosine(a, b),
-        SIM.rp_bucket_n(a, 3), SIM.rp_bucket(a),
-    ).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    sh = sorted(tuple(r) for r in D.shingled(df, "text", "doc_id").collect())
-    ref = df.select(
-        "doc_id", D.shingle_hash_array(tokens(F.col("text"))).alias("shingles")
-    )
-    assert sh == sorted(tuple(r) for r in ref.collect())
+
+    def bucket(v, n_planes):
+        return sum(
+            1 << j
+            for j, plane in enumerate(SIM.rp_planes_n(n_planes))
+            if round(_py_fold(x * p for x, p in zip(v, plane)), 6) >= 0
+        )
+
+    want = []
+    for doc_id, text, a, b in rows:
+        d = _py_fold(x * y for x, y in zip(a, b))
+        na = math.sqrt(_py_fold(x * x for x in a))
+        nb = math.sqrt(_py_fold(x * x for x in b))
+        want.append(
+            (
+                doc_id, d, na, d / (na * nb),
+                bucket(a, 3), bucket(a, SIM.RP_N_PLANES), _py_shingles(text),
+            )
+        )
+    assert [tuple(r) for r in got] == want
 
 
 def _pivot_reference(df, group_key, pivot_key, values, prefix, fill_zero):
