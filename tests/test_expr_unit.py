@@ -19,6 +19,8 @@ MONEY_CASES = [
     "$3 bilion", "$79.6–80.2 million", "$79.6—80.2 million",
     "N/A", "unknown", "$12", "12 million", "$1.5  million",
     "$ 900,000", "$1,234", "over $20 million", None,
+    # mixed-case units: the unit letter is matched in either case
+    "$1.5 Million", "$2 BILLION", "$3.2 MiLLioN", "$4 Bilion", "$7 mIlion",
 ]
 
 
@@ -49,17 +51,19 @@ def _oracle_money(s):
 
 
 def test_parse_money_matches_oracle(spark):
+    """The fused parser and the composed F3+F5+F6 form both match."""
     df = spark.createDataFrame([(s,) for s in MONEY_CASES], "s string")
-    got = {
-        r["s"]: r["v"]
-        for r in df.select("s", E.parse_money_column(F.col("s")).alias("v")).collect()
-    }
-    for s in MONEY_CASES:
-        want = _oracle_money(s)
-        if want is None:
-            assert got[s] is None, f"{s!r}: {got[s]} != None"
-        else:
-            assert got[s] == pytest.approx(want), f"{s!r}"
+    composed = E.parse_dollars(E.extract_money(E.strip_money_ranges(F.col("s"))))
+    rows = df.select(
+        "s", E.parse_money_column(F.col("s")).alias("v"), composed.alias("w")
+    ).collect()
+    for r in rows:
+        want = _oracle_money(r["s"])
+        for got in (r["v"], r["w"]):
+            if want is None:
+                assert got is None, f"{r['s']!r}: {got} != None"
+            else:
+                assert got == pytest.approx(want), f"{r['s']!r}"
 
 
 DATE_CASES = [

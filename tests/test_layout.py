@@ -181,3 +181,24 @@ def test_no_module_level_bool_gates():
                         rel = os.path.relpath(path, root)
                         gates.append(f"{rel}:{node.lineno} {t.id}")
     assert not gates, gates
+
+
+def test_parse_kernels_have_no_case_mapping_calls():
+    """The parse-kernel modules call no lower/upper/initcap and no ilike
+    (which rewrites to lower): the first case mapping in a JVM builds
+    Spark's ICU title-case table over every code point. Caught here
+    before any plan is built; test_plan_shapes guards the plans."""
+    import os
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "movies_etl_spark",
+    )
+    pat = re.compile(r"\bF\.(?:lower|upper|initcap)\(|\.ilike\(")
+    hits = []
+    for rel in ("functions/expr.py", "operators/normalize.py"):
+        with open(os.path.join(root, rel)) as f:
+            for no, line in enumerate(f, 1):
+                if pat.search(line):
+                    hits.append(f"{rel}:{no} {line.strip()}")
+    assert not hits, hits

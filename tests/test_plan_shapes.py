@@ -93,6 +93,51 @@ def test_expression_queries_have_no_shuffle(spark, sf_dir):
         assert _exchanges(plan) == 0, f"{name} is a pure map — no shuffle"
 
 
+_CASE_MAPPINGS = {"Lower", "Upper", "InitCap", "ILike"}
+
+
+def _expression_classes(df) -> set[str]:
+    """Simple class names of every node and expression in the optimized
+    plan, read from its JSON form (lambda bodies included)."""
+    import json
+
+    found = set()
+
+    def walk(v):
+        if isinstance(v, dict):
+            if isinstance(v.get("class"), str):
+                found.add(v["class"].rsplit(".", 1)[-1])
+            for x in v.values():
+                walk(x)
+        elif isinstance(v, list):
+            for x in v:
+                walk(x)
+
+    walk(json.loads(df._jdf.queryExecution().optimizedPlan().toJSON()))
+    return found
+
+
+def test_parse_kernels_never_case_map(spark, sf_dir, tmp_path):
+    """The money and date parsers dispatch on captured letters, never on
+    a lowered or uppercased string: the first Lower/Upper/InitCap in a
+    JVM builds Spark's ICU title-case table over every code point, a
+    one-time executor CPU cost a fresh ETL job would otherwise pay."""
+    from movies_etl_spark.plans import fixtures, pipeline
+    from movies_etl_spark.sources import readers
+
+    frames = {
+        name: QUERIES[name](spark, sf_dir)
+        for name in ("parse_money", "parse_date_multiform")
+    }
+    wiki, _, _ = fixtures.write_fixture_files(str(tmp_path))
+    raw = readers.read_json_records(spark, wiki, multiline=True)
+    frames["clean_wiki"] = pipeline.clean_wiki(raw, persist=False)
+    for name, df in frames.items():
+        classes = _expression_classes(df)
+        assert "RegExpReplace" in classes, (name, sorted(classes))
+        assert not classes & _CASE_MAPPINGS, (name, classes & _CASE_MAPPINGS)
+
+
 def test_orderby_limit_uses_take_ordered(spark, sf_dir):
     plan = _plan(spark, sf_dir, "orderby_limit")
     assert "TakeOrderedAndProject" in plan, "top-k must not global-sort"
