@@ -479,7 +479,8 @@ def parse_running_time(c: Column) -> Column:
 
 def cast_int(c: Column) -> Column:
     """F12: string → int, null on bad (reference ``astype(int)`` raises;
-    drop-on-failure semantics live in operators.normalize.validated_cast)."""
+    drop-on-failure semantics live in
+    operators.normalize.validated_cast_many)."""
     return c.try_cast("int")
 
 

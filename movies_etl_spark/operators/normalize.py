@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from movies_etl_spark.operators import caching
+
 # The 19 synonym renames of challenge.py:63-81, as canonical → ordered
 # synonyms. Order matters for tie cases: the reference's per-record
 # ``movie[new] = movie.pop(old)`` means the *last rename executed* wins,
@@ -80,6 +82,10 @@ ALT_TITLE_KEYS: list[str] = [
     "Yiddish",
 ]
 
+#: The reference's prune line (challenge.py:95-97): a column at least 90%
+#: null is dropped.
+NULL_PRUNE_THRESHOLD = 0.9
+
 
 def canonicalize_keys(
     df: DataFrame, synonyms: dict[str, list[str]] | None = None
@@ -128,41 +134,53 @@ def collect_map_column(
     return out
 
 
-def null_ratio_prune(
-    df: DataFrame, threshold: float = 0.9, keep_always: Sequence[str] = ()
-) -> DataFrame:
+def _null_count(c: str) -> Column:
+    """Null count of column ``c``: the tally every null-ratio decision
+    and the per-column null-count query read."""
+    return F.sum(F.col(f"`{c}`").isNull().cast("long"))
+
+
+def _prune_aggs(columns: Sequence[str]) -> list[Column]:
+    """Row count plus one ``null__<col>`` tally per column — the prune
+    half of the one auxiliary aggregate."""
+    return [
+        F.count(F.lit(1)).alias("__total__"),
+        *[_null_count(c).alias(f"null__{c}") for c in columns],
+    ]
+
+
+def _prune_keep(columns: Sequence[str], tallies: dict) -> list[str]:
+    """The null-ratio prune rule: keep a column whose null share is under
+    :data:`NULL_PRUNE_THRESHOLD`. An empty frame, or one where every
+    column is over it, keeps everything — the reference warns and leaves
+    the frame unchanged rather than projecting to nothing
+    (challenge.py:95-97)."""
+    total = tallies["__total__"] or 0
+    if total == 0:
+        return list(columns)
+    keep = [
+        c
+        for c in columns
+        if (tallies[f"null__{c}"] or 0) / total < NULL_PRUNE_THRESHOLD
+    ]
+    return keep or list(columns)
+
+
+def null_ratio_prune(df: DataFrame) -> DataFrame:
     """P5: data-dependent projection — keep columns whose null ratio is
-    below ``threshold`` (reference: < 90% null, challenge.py:95-97).
+    below :data:`NULL_PRUNE_THRESHOLD` (challenge.py:95-97).
 
     Two jobs by design: a single 1-row aggregate (null count per column +
     total count, one pass over the data) collected to the driver, then a
-    plain ``select``. The aggregate is the only driver-side collect in the
-    whole engine and is O(#columns), scale-safe at any row count."""
-    aggs = [F.count(F.lit(1)).alias("__total__")] + [
-        F.sum(F.col(f"`{c}`").isNull().cast("long")).alias(c) for c in df.columns
-    ]
-    row = df.agg(*aggs).collect()[0].asDict()
-    total = row.pop("__total__") or 0
-    if total == 0:
-        return df
-    keep = [
-        c
-        for c in df.columns
-        if c in keep_always or (row.get(c, 0) / total) < threshold
-    ]
-    if not keep:
-        # Parity with the reference's guarded edge (challenge.py:95-97):
-        # when EVERY column exceeds the threshold it leaves the frame
-        # unchanged (warn-and-continue) rather than projecting to nothing.
-        return df
-    return df.select(*[F.col(f"`{c}`") for c in keep])
+    plain ``select``. The aggregate is O(#columns), scale-safe at any row
+    count."""
+    row = df.agg(*_prune_aggs(df.columns)).collect()[0].asDict()
+    return df.select(*[F.col(f"`{c}`") for c in _prune_keep(df.columns, row)])
 
 
 def null_counts(df: DataFrame) -> DataFrame:
     """A4: per-column null counts as a 1-row frame (challenge.py:95)."""
-    return df.select(
-        *[F.sum(F.col(f"`{c}`").isNull().cast("long")).alias(c) for c in df.columns]
-    )
+    return df.select(*[_null_count(c).alias(c) for c in df.columns])
 
 
 def normalize_mixed_cell(c: Column) -> Column:
@@ -178,49 +196,6 @@ def normalize_mixed_cell(c: Column) -> Column:
     return F.when(
         c.isNotNull() & c.startswith("["), F.coalesce(F.nullif(joined, F.lit("")), c)
     ).otherwise(c)
-
-
-def validated_cast(
-    df: DataFrame,
-    column: str,
-    parsed: Column,
-    fail_when: str = "any",
-) -> tuple[DataFrame, dict[str, int]]:
-    """§2.8/§4.3: column-level fault tolerance — validate-then-commit.
-
-    The reference wraps each transform in try/except and drops the WHOLE
-    column if the transform raises (challenge.py:129-230). Spark casts are
-    lazy and null-on-error, so the contract becomes: compute the parsed
-    column, count parse failures (non-null input → null output) in one
-    aggregate pass, and drop the column when the reference's raise
-    condition holds:
-
-    - ``fail_when='any'``  — any non-null un-castable value raises
-      (``errors='raise'`` casts, F12/F13)
-    - ``fail_when='all'``  — only a fully-unparseable column is dropped
-      (regex extraction pipelines that NaN quietly, F5/F7: the reference
-      only raises on systemic failure, e.g. wrong dtype)
-
-    Returns (new_df, stats). Cost: one extra aggregate job per validated
-    column; at scale, batch several validations into one ``agg`` via
-    :func:`validated_cast_many`.
-    """
-    out = df.withColumn(f"__parsed__{column}", parsed)
-    stats_row = out.agg(
-        F.count(F.col(f"`{column}`")).alias("n_input"),
-        F.count(F.col(f"__parsed__{column}")).alias("n_parsed"),
-    ).collect()[0]
-    n_input, n_parsed = stats_row["n_input"], stats_row["n_parsed"]
-    failed = (
-        (n_parsed < n_input) if fail_when == "any" else (n_parsed == 0 and n_input > 0)
-    )
-    stats = {"n_input": n_input, "n_parsed": n_parsed, "dropped": int(failed)}
-    if failed:
-        return df.drop(column), stats
-    return (
-        out.drop(column).withColumnRenamed(f"__parsed__{column}", column),
-        stats,
-    )
 
 
 def _attach_parsed(
@@ -246,7 +221,7 @@ def _commit_validated(
     """Shared back half: apply each spec's ``fail_when`` rule to the
     ``in__``/``ok__`` tallies and build the survivor projection over the
     ``kept`` columns. The single source of truth for the failure rule —
-    validated_cast_many, prune_and_validated_cast, and apply_validation
+    validated_cast_many, prune_and_validated_cast and its staged twin
     all commit through here."""
     all_stats: dict[str, dict[str, int]] = {}
     final_cols: list[Column] = []
@@ -284,81 +259,15 @@ def _commit_validated(
     return final_cols, all_stats
 
 
-def _prune_keep(
-    columns: Sequence[str],
-    tallies: dict,
-    total: int,
-    threshold: float,
-    keep_always: Sequence[str],
-) -> list[str]:
-    """Shared null-ratio prune rule: keep a column when it is protected,
-    the frame is empty, or its null share is under the threshold; an
-    all-pruned outcome keeps everything (null_ratio_prune's no-survivor
-    edge). One definition for the in-memory and disk-staged twins."""
-    if total == 0:
-        return list(columns)
-    keep = [
-        c
-        for c in columns
-        if c in keep_always or (tallies[f"null__{c}"] or 0) / total < threshold
-    ]
-    return keep if keep else list(columns)
-
-
-def validated_cast_staged(
-    df: DataFrame, specs: dict[str, tuple[Column, str]]
-):
-    """§4.3.1 single-pass variant: attach the validation counts as
-    ``observe()`` metrics so they ride along with whatever action first
-    materializes the frame (e.g. the stage-table write) — NO separate
-    validation scan.
-
-    Usage::
-
-        staged, obs = validated_cast_staged(df, specs)
-        staged.write.parquet(stage_path)          # one pass: parse+count
-        final = apply_validation(
-            spark.read.parquet(stage_path), specs, obs.get)
-
-    Returns (staged_df, Observation). The staged frame carries both the
-    original and ``__parsed__<col>`` columns; ``apply_validation``
-    projects the survivors from the already-materialized staging data,
-    so nothing is computed twice. This is the 100 TB shape of the
-    reference's try/except column-drop (challenge.py:129-230)."""
-    from pyspark.sql import Observation
-
-    obs = Observation("validated_cast")
-    out, metrics = _attach_parsed(df, specs)
-    out = out.observe(obs, metrics[0], *metrics[1:])
-    return out, obs
-
-
-def apply_validation(
-    staged: DataFrame, specs: dict[str, tuple[Column, str]], metrics: dict
-) -> DataFrame:
-    """Second half of the staged validation: given the observed metric
-    dict, project survivors (parsed value under the original name) and
-    drop columns whose failure condition matched (see validated_cast)."""
-    columns = [c for c in staged.columns if not c.startswith("__parsed__")]
-    final_cols, _ = _commit_validated(columns, set(columns), specs, metrics)
-    return staged.select(*final_cols)
-
-
 def prune_and_validated_cast(
-    df: DataFrame,
-    specs: dict[str, tuple[Column, str]],
-    threshold: float = 0.9,
-    keep_always: Sequence[str] = (),
-    persist: bool = False,
+    df: DataFrame, specs: dict[str, tuple[Column, str]]
 ) -> tuple[DataFrame, dict[str, dict[str, int]]]:
     """P5 + §2.8 fused: ONE auxiliary aggregate computes both the
     per-column null ratios (the 90%-null prune decision) and the parse
     validation tallies (the column-drop-on-corruption decision), then one
     select commits both. Separately they cost two full-input scans before
-    the final action; fused, the wiki path runs exactly two passes total
-    (aux aggregate + final action) — measured on the 1 M-row
-    reference-scale wiki bench: 17.2 → 15.2 s cold, 10.4 → 8.5 s warm
-    (NOTES_r4.md).
+    the final action; fused, the source is scanned once for the aggregate
+    and the final action reads the cache.
 
     Semantics match prune-then-validate exactly: a spec column that fails
     the null prune is dropped without a parse commit (its tallies are
@@ -366,61 +275,28 @@ def prune_and_validated_cast(
     scan), and the no-survivor edge keeps the frame unchanged like
     null_ratio_prune.
 
-    ``persist`` (default OFF — a library caller gets no surprise pinned
-    cache; managed paths like the query registry / clean_wiki opt in
-    because they release tracked caches themselves) caches the
-    attached-parse frame with
-    spill-to-disk between the auxiliary aggregate and the caller's final
-    action, so an expensive source (ragged JSON: parse + synonym
-    coalesce + dedup shuffle + regex battery) is computed ONCE instead
-    of once per action. Cold single-shot cost is a wash (the cache write
-    offsets the saved recompute); the win is every SUBSEQUENT action on
-    the result (measured: repeat full-pipeline run 10.1 → 2.5 s on the
-    1 M-row wiki bench — Spark's CacheManager keys on the canonicalized
-    plan, so repeated runs over the same input reuse one cache entry
-    rather than accumulating copies). When the single cold pass itself
-    must be fast, or cluster-scale fault tolerance matters (a lost
-    executor recomputes from source under persist), use the
-    parquet-staged twin :func:`prune_and_validated_cast_staged`
-    (measured: 22.6 → 16.9 s cold on the same bench).
-
-    Cache lifetime under ``persist=True``: the query registry releases
-    the tracked cache when the next query builds. Callers OUTSIDE the
-    registry that opt in should call
-    ``operators.caching.release_tracked()`` once they have materialized
-    their result, or use the staged twin — otherwise the frame stays
-    pinned until process exit (bounded at one CacheManager entry per
-    distinct input plan, but still held)."""
+    The attached-parse frame is cached (``caching.tracked_persist``; the
+    default level spills to disk) between the auxiliary aggregate and the
+    caller's final action, so an expensive source (ragged JSON: parse +
+    synonym coalesce + dedup shuffle + regex battery) is computed ONCE
+    instead of once per action. The query registry releases the tracked
+    cache when the next query builds; a caller outside it calls
+    ``caching.release_tracked()`` once its result is materialized, or the
+    entry stays pinned until the session stops (one CacheManager entry
+    per distinct input plan). When the source scan dominates, the
+    parquet-staged twin :func:`prune_and_validated_cast_staged` does less
+    work: one job fewer and about 40% fewer input bytes on the 1 M-row
+    wiki bench (counters in ``pipeline.clean_wiki``)."""
     out, aggs = _attach_parsed(df, specs)
-    if persist:
-        # tracked: the registry releases it when the NEXT query builds,
-        # so cached parse frames can't accumulate over a 100+-query
-        # driver session (DataFrame.persist() default level already
-        # spills to disk)
-        from movies_etl_spark.operators.caching import tracked_persist
-
-        out = tracked_persist(out)
-    aggs = [
-        F.count(F.lit(1)).alias("__total__"),
-        *[
-            F.sum(F.col(f"`{c}`").isNull().cast("long")).alias(f"null__{c}")
-            for c in df.columns
-        ],
-        *aggs,
-    ]
-    row = out.agg(*aggs).collect()[0].asDict()
-    total = row.pop("__total__") or 0
-    keep = _prune_keep(df.columns, row, total, threshold, keep_always)
+    out = caching.tracked_persist(out)
+    row = out.agg(*_prune_aggs(df.columns), *aggs).collect()[0].asDict()
+    keep = _prune_keep(df.columns, row)
     final_cols, all_stats = _commit_validated(df.columns, set(keep), specs, row)
     return out.select(*final_cols), all_stats
 
 
 def prune_and_validated_cast_staged(
-    df: DataFrame,
-    specs: dict[str, tuple[Column, str]],
-    stage_path: str,
-    threshold: float = 0.9,
-    keep_always: Sequence[str] = (),
+    df: DataFrame, specs: dict[str, tuple[Column, str]], stage_path: str
 ) -> tuple[DataFrame, dict[str, dict[str, int]]]:
     """Disk-staged twin of :func:`prune_and_validated_cast` for expensive
     sources (ragged JSON, CSV): ONE pass computes the parse columns and
@@ -448,23 +324,14 @@ def prune_and_validated_cast_staged(
     stage_path = f"{stage_path.rstrip('/')}-{uuid.uuid4().hex[:12]}"
 
     out, aggs = _attach_parsed(df, specs)
-    metrics = [
-        F.count(F.lit(1)).alias("__total__"),
-        *[
-            F.sum(F.col(f"`{c}`").isNull().cast("long")).alias(f"null__{c}")
-            for c in df.columns
-        ],
-        *aggs,
-    ]
     obs = Observation("prune_validated_stage")
-    out = out.observe(obs, metrics[0], *metrics[1:])
+    out = out.observe(obs, *_prune_aggs(df.columns), *aggs)
     staged_cols = [c for c in out.columns if c not in specs]
     out.select(*[F.col(f"`{c}`") for c in staged_cols]).write.mode(
         "overwrite"
     ).parquet(stage_path)
-    row = dict(obs.get)
-    total = row.pop("__total__") or 0
-    keep = _prune_keep(df.columns, row, total, threshold, keep_always)
+    row = obs.get
+    keep = _prune_keep(df.columns, row)
     final_cols, all_stats = _commit_validated(df.columns, set(keep), specs, row)
     staged = df.sparkSession.read.parquet(stage_path)
     return staged.select(*final_cols), all_stats
@@ -473,9 +340,23 @@ def prune_and_validated_cast_staged(
 def validated_cast_many(
     df: DataFrame, specs: dict[str, tuple[Column, str]]
 ) -> tuple[DataFrame, dict[str, dict[str, int]]]:
-    """Batch form of :func:`validated_cast`: one aggregate pass validates
-    every column, then one select commits the survivors. At 100 TB this is
-    the difference between 1 and N validation scans."""
+    """§2.8/§4.3: column-level fault tolerance — validate-then-commit.
+
+    The reference wraps each transform in try/except and drops the WHOLE
+    column if the transform raises (challenge.py:129-230). Spark casts are
+    lazy and null-on-error, so the contract becomes: attach each spec's
+    parsed column, count parse failures (non-null input → null output) in
+    ONE aggregate pass over every spec, and drop a column when the
+    reference's raise condition holds:
+
+    - ``fail_when='any'``  — any non-null un-castable value raises
+      (``errors='raise'`` casts, F12/F13)
+    - ``fail_when='all'``  — only a fully-unparseable column is dropped
+      (regex extraction pipelines that NaN quietly, F5/F7: the reference
+      only raises on systemic failure, e.g. wrong dtype)
+
+    Then one select commits the survivors, each parsed value under its
+    original name. Returns (new_df, per-spec stats)."""
     out, aggs = _attach_parsed(df, specs)
     row = out.agg(*aggs).collect()[0].asDict()
     final_cols, all_stats = _commit_validated(

@@ -69,11 +69,7 @@ MOVIES_RENAME_MAP = {
 MIXED_CELL_PARSE_COLUMNS = ["Box office", "Budget", "Release date", "Running time"]
 
 
-def clean_wiki(
-    wiki_raw: DataFrame,
-    stage_dir: str | None = None,
-    persist: bool = True,
-) -> DataFrame:
+def clean_wiki(wiki_raw: DataFrame, stage_dir: str | None = None) -> DataFrame:
     """Wiki-side normalization (challenge.py:34-174).
 
     P1 key-existence filter → P10 alt-title map → P9 synonym coalesce →
@@ -86,8 +82,12 @@ def clean_wiki(
     parquet (validation tallies ride the same pass as observe metrics)
     and every downstream action reads the staging table instead of
     re-parsing the raw JSON — the right shape when the source scan
-    dominates (measured: 1 M-row wiki bench 22.6 → 16.9 s cold,
-    10.1 → 8.1 s warm).
+    dominates. Measured on ``bench_reference_scale.bench_wiki_parse``'s
+    1 M generated records (989,690 output rows, identical on both paths),
+    read → clean_wiki → parquet write, 3 alternating fresh-JVM pairs on
+    4 vCPU: the in-memory path runs 6 jobs, reads 939.6 MB and uses
+    62.2-66.8 executor CPU-s; the staged path runs 5 jobs, reads
+    558.6 MB and uses 45.8-56.3 executor CPU-s.
     """
     df = wiki_raw
     # Capture scan order BEFORE any shuffle so dedup can keep the pandas
@@ -133,17 +133,13 @@ def clean_wiki(
         specs["Running time"] = (E.parse_running_time(cell), "all")
     if stage_dir is not None:
         df, _stats = N.prune_and_validated_cast_staged(
-            df, specs, f"{stage_dir}/wiki_staged", threshold=0.9
+            df, specs, f"{stage_dir}/wiki_staged"
         )
     else:
-        # persist=True (the default here) caches the attached-parse frame
-        # across the tally aggregate and the caller's final action; the
-        # query registry releases tracked caches when the next query
-        # builds, and direct callers can pass persist=False (or use
-        # stage_dir) to avoid pinning a cache entry until process exit.
-        df, _stats = N.prune_and_validated_cast(
-            df, specs, threshold=0.9, persist=persist
-        )
+        # caches the attached-parse frame across the tally aggregate and
+        # the caller's final action; the query registry releases tracked
+        # caches when the next query builds
+        df, _stats = N.prune_and_validated_cast(df, specs)
     renames = {
         "Box office": "box_office",
         "Budget": "budget",
@@ -183,7 +179,7 @@ def merge_movies(wiki: DataFrame, kaggle: DataFrame) -> DataFrame:
     """J1 + P7 + F15×3 + P6 + P8 (challenge.py:235-271).
 
     The merged frame is persisted and registered with ``caching``, as
-    ``clean_wiki(persist=True)`` does: it feeds the ``movies`` sink, the
+    ``clean_wiki``'s parse frame is: it feeds the ``movies`` sink, the
     rating counts' key broadcast and the ``movies_ratings`` sink, and the
     first action fills the cache the others read. It lives until
     ``caching.release_tracked()`` — which the query registry calls when

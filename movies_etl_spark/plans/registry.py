@@ -439,7 +439,7 @@ def q_prune_null_columns(spark, sf_dir):
         ).alias("rare_flag"),
         F.when(F.col("o_orderstatus") == "P", 1).alias("is_pending"),
     )
-    return N.null_ratio_prune(base, threshold=0.9)
+    return N.null_ratio_prune(base)
 
 
 @query(
@@ -698,8 +698,9 @@ def q_orderby_limit(spark, sf_dir):
 def q_cast_typed(spark, sf_dir):
     """F12/F13/F14/F9 (challenge.py:183-220): guarded string→typed casts,
     null on corrupt values (every 7th key is corrupted here). The
-    reference's raise-then-drop semantics live in validated_cast; this
-    query checks the cast layer itself."""
+    reference's raise-then-drop semantics live in
+    ``operators.normalize.validated_cast_many``; this query checks the
+    cast layer itself."""
     o = _t(spark, sf_dir, "orders")
     key_str = F.col("o_orderkey").cast("string")
     corrupt = F.when(

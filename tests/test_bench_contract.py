@@ -15,6 +15,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 import bench
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -66,9 +68,6 @@ def test_shared_cli_parser():
     diagnostic tools share (r11 consolidated three hand-rolled copies
     that had each needed the same guard fixes individually)."""
     import importlib.util
-    import os
-
-    import pytest
 
     spec = importlib.util.spec_from_file_location(
         "_cli", os.path.join(os.path.dirname(__file__), "..", "tools", "_cli.py")
@@ -88,10 +87,37 @@ def test_shared_cli_parser():
         cli.parse_args(["--topology"], flags, "u")
     with pytest.raises(SystemExit):  # missing value
         cli.parse_args(["--top"], flags, "u")
+    with pytest.raises(SystemExit):  # value the parser rejects
+        cli.parse_args(["--top", "x"], flags, "u")
     with pytest.raises(SystemExit):  # bool flag takes no value
         cli.parse_args(["--dry-run=x"], flags, "u")
     with pytest.raises(SystemExit):  # positionals rejected by default
         cli.parse_args(["stray"], flags, "u")
+
+
+@pytest.mark.parametrize(
+    "tool, argv",
+    [
+        ("dump_plans", ["out", "sfx", "q", "--sf"]),
+        ("dump_plans", ["out", "sfx"]),
+        ("dump_final_plans", ["out", "sfx", "q", "--sf"]),
+        ("dump_final_plans", []),
+        ("build_exec_split", ["q", "--reps"]),
+        ("build_exec_split", ["q", "--reps=x"]),
+        ("build_exec_split", ["--sf", "dir"]),
+    ],
+)
+def test_tool_flag_errors_exit_with_usage(tool, argv, tmp_path):
+    """A trailing flag without its value, or missing positionals, ends
+    in the usage message before any Spark session starts — never in a
+    traceback."""
+    proc = subprocess.run(
+        [sys.executable, str(ROOT / "tools" / f"{tool}.py"), *argv],
+        cwd=tmp_path, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 1, proc.stderr
+    assert f"usage: {tool}.py" in proc.stderr
+    assert "Traceback" not in proc.stderr
 
 
 def test_engine_fingerprint_stable_on_clean_tree():

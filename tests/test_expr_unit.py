@@ -309,43 +309,43 @@ def test_money_nan_on_mixed_separator(spark):
     assert v is None
 
 
-def test_validated_cast_staged_single_pass(spark, tmp_path):
-    """observe()-based validation: counts come from the staging write
-    itself (one pass), survivors are projected from staged data."""
-    from pyspark.sql import functions as F
-
-    from movies_etl_spark.operators.normalize import (
-        apply_validation,
-        validated_cast_staged,
-    )
-
-    df = spark.createDataFrame(
-        [("1", "x"), ("2", "3")], "good string, bad string"
-    )
-    specs = {
-        "good": (F.col("good").try_cast("long"), "any"),
-        "bad": (F.col("bad").try_cast("long"), "any"),
-    }
-    staged, obs = validated_cast_staged(df, specs)
-    stage_path = str(tmp_path / "stage")
-    staged.write.mode("overwrite").parquet(stage_path)  # the ONE pass
-    metrics = obs.get
-    assert metrics == {"in__good": 2, "ok__good": 2, "in__bad": 2, "ok__bad": 1}
-    final = apply_validation(spark.read.parquet(stage_path), specs, metrics)
-    assert "bad" not in final.columns
-    assert sorted(r["good"] for r in final.collect()) == [1, 2]
-
-
 def test_null_ratio_prune_keeps_frame_when_all_pruned(spark):
-    """ADVICE r1 parity fix: every column over the threshold → frame
-    returned unchanged (challenge.py:95-97 warns and keeps), never a
-    zero-column projection."""
+    """ADVICE r1 parity fix: every column at or over the 90% threshold →
+    frame returned unchanged (challenge.py:95-97 warns and keeps), never
+    a zero-column projection."""
     from movies_etl_spark.operators.normalize import null_ratio_prune
 
-    df = spark.createDataFrame([(None, None), (None, None)], "a string, b string")
-    out = null_ratio_prune(df, threshold=0.5)
+    # a: 9 of 10 null (exactly 90%), b: all null
+    df = spark.createDataFrame(
+        [("x", None)] + [(None, None)] * 9, "a string, b string"
+    )
+    out = null_ratio_prune(df)
     assert out.columns == ["a", "b"]
-    assert out.count() == 2
+    assert out.count() == 10
+
+
+def test_null_prune_threshold_boundary(spark):
+    """The reference keeps a column only when under 90% null: exactly 90%
+    is pruned and 80% is kept, by the standalone prune and the fused
+    prune+validate alike."""
+    from movies_etl_spark.operators import caching
+    from movies_etl_spark.operators.normalize import (
+        NULL_PRUNE_THRESHOLD,
+        null_ratio_prune,
+        prune_and_validated_cast,
+    )
+
+    assert NULL_PRUNE_THRESHOLD == 0.9
+    rows = [(str(i), "9" if i < 1 else None, "8" if i < 2 else None)
+            for i in range(10)]
+    df = spark.createDataFrame(rows, "k string, p90 string, p80 string")
+    assert null_ratio_prune(df).columns == ["k", "p80"]
+    specs = {"p80": (F.col("p80").try_cast("long"), "any")}
+    out, stats = prune_and_validated_cast(df, specs)
+    assert out.columns == ["k", "p80"]
+    assert stats["p80"] == {"n_input": 2, "n_parsed": 2, "dropped": 0}
+    assert sorted(r["p80"] for r in out.collect() if r["p80"]) == [8, 8]
+    caching.release_tracked()
 
 
 def test_staged_prune_validate_matches_in_memory(spark, tmp_path):
@@ -353,6 +353,7 @@ def test_staged_prune_validate_matches_in_memory(spark, tmp_path):
     stats as the in-memory fused prune+validate — staging must change
     the execution shape, never the semantics. Covers all three column
     fates: committed parse, validation drop, null-ratio prune."""
+    from movies_etl_spark.operators import caching
     from movies_etl_spark.operators.normalize import (
         prune_and_validated_cast,
         prune_and_validated_cast_staged,
@@ -360,10 +361,9 @@ def test_staged_prune_validate_matches_in_memory(spark, tmp_path):
 
     df = spark.createDataFrame(
         [
-            ("1", "x", None, "a"),
-            ("2", "3", None, "b"),
-            ("4", "5", "rare", "c"),
-            ("6", "7", None, "d"),
+            (str(2 * i), "x" if i == 0 else str(2 * i + 1),
+             "rare" if i == 2 else None, chr(ord("a") + i))
+            for i in range(10)
         ],
         "good string, bad string, sparse string, keep string",
     )
@@ -371,17 +371,18 @@ def test_staged_prune_validate_matches_in_memory(spark, tmp_path):
         "good": (F.col("good").try_cast("long"), "any"),
         "bad": (F.col("bad").try_cast("long"), "any"),
     }
-    mem, mem_stats = prune_and_validated_cast(df, specs, threshold=0.7)
+    mem, mem_stats = prune_and_validated_cast(df, specs)
     staged, st_stats = prune_and_validated_cast_staged(
-        df, specs, str(tmp_path / "stage"), threshold=0.7
+        df, specs, str(tmp_path / "stage")
     )
-    assert staged.columns == mem.columns
-    assert "sparse" not in staged.columns  # 75% null ≥ 0.7 → pruned
+    assert staged.columns == mem.columns == ["good", "keep"]
+    assert "sparse" not in staged.columns  # 90% null ≥ 0.9 → pruned
     assert "bad" not in staged.columns  # one unparseable value → dropped
     assert st_stats == mem_stats
     assert sorted(map(tuple, staged.collect())) == sorted(map(tuple, mem.collect()))
     # the staged plan must read the staging parquet, not the source
     assert "stage" in staged._jdf.queryExecution().executedPlan().toString()
+    caching.release_tracked()
 
 
 def test_staged_reinvocation_does_not_clobber_live_result(spark, tmp_path):
@@ -409,19 +410,21 @@ def test_pruned_spec_column_recorded_in_stats(spark):
     with the dropped_by_null_prune marker (its tallies were computed in
     the same pass), so stats consumers can tell it from a column that was
     never specced (ADVICE r4)."""
+    from movies_etl_spark.operators import caching
     from movies_etl_spark.operators.normalize import prune_and_validated_cast
 
     df = spark.createDataFrame(
-        [("1", None), ("2", None), ("3", None), ("4", "9")],
+        [(str(i), "9" if i == 3 else None) for i in range(10)],
         "good string, mostly_null string",
     )
     specs = {
         "good": (F.col("good").try_cast("long"), "any"),
         "mostly_null": (F.col("mostly_null").try_cast("long"), "any"),
     }
-    out, stats = prune_and_validated_cast(df, specs, threshold=0.7)
-    assert "mostly_null" not in out.columns  # 75% null ≥ 0.7 → pruned
+    out, stats = prune_and_validated_cast(df, specs)
+    assert "mostly_null" not in out.columns  # 90% null ≥ 0.9 → pruned
     assert stats["mostly_null"]["dropped"] == 1
     assert stats["mostly_null"]["dropped_by_null_prune"] == 1
     assert stats["mostly_null"]["n_input"] == 1  # tallies kept, not lost
     assert "dropped_by_null_prune" not in stats["good"]
+    caching.release_tracked()

@@ -122,6 +122,7 @@ def test_parse_kernels_never_case_map(spark, sf_dir, tmp_path):
     a lowered or uppercased string: the first Lower/Upper/InitCap in a
     JVM builds Spark's ICU title-case table over every code point, a
     one-time executor CPU cost a fresh ETL job would otherwise pay."""
+    from movies_etl_spark.operators import caching
     from movies_etl_spark.plans import fixtures, pipeline
     from movies_etl_spark.sources import readers
 
@@ -131,11 +132,17 @@ def test_parse_kernels_never_case_map(spark, sf_dir, tmp_path):
     }
     wiki, _, _ = fixtures.write_fixture_files(str(tmp_path))
     raw = readers.read_json_records(spark, wiki, multiline=True)
-    frames["clean_wiki"] = pipeline.clean_wiki(raw, persist=False)
-    for name, df in frames.items():
-        classes = _expression_classes(df)
-        assert "RegExpReplace" in classes, (name, sorted(classes))
-        assert not classes & _CASE_MAPPINGS, (name, classes & _CASE_MAPPINGS)
+    # the returned frame reads clean_wiki's cache: its optimized plan is
+    # an InMemoryRelation whose JSON carries the cached parse plan
+    frames["clean_wiki"] = pipeline.clean_wiki(raw)
+    try:
+        for name, df in frames.items():
+            classes = _expression_classes(df)
+            assert "RegExpReplace" in classes, (name, sorted(classes))
+            assert not classes & _CASE_MAPPINGS, (name, classes & _CASE_MAPPINGS)
+        assert "InMemoryRelation" in _expression_classes(frames["clean_wiki"])
+    finally:
+        caching.release_tracked()
 
 
 def test_orderby_limit_uses_take_ordered(spark, sf_dir):

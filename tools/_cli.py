@@ -1,10 +1,12 @@
 """Shared flag parsing for the diagnostic tools.
 
 One implementation of the ``--flag VALUE`` / ``--flag=VALUE`` /
-unknown-arg-usage-error loop, used by audit_scans, scale_lsh_store and
-survey_build_exec. Hand-rolled copies of it had each needed the same
-guard fixes individually (one was a ``startswith`` prefix bug), so
-copies diverge by construction.
+unknown-arg-usage-error loop, used by audit_scans, build_exec_split,
+dump_final_plans, dump_plans, scale_lsh_store and survey_build_exec.
+Hand-rolled copies of it had each needed the same guard fixes
+individually (one was a ``startswith`` prefix bug; others raised
+``IndexError`` on a trailing ``--sf``), so copies diverge by
+construction.
 """
 
 from __future__ import annotations
@@ -24,7 +26,8 @@ def parse_args(
 ) -> tuple[dict[str, Any], list[str]]:
     """Parse ``argv`` against ``flags`` ({"--name": parser_callable or
     BOOL}). Accepts ``--name value`` and ``--name=value`` forms; exits
-    with ``usage`` on a missing value or unknown flag. Returns
+    with ``usage`` on a missing or unparseable value or an unknown flag.
+    Returns
     (values keyed WITHOUT the leading dashes, positional args) —
     positional args are rejected unless ``positionals`` is True."""
     vals: dict[str, Any] = {}
@@ -40,13 +43,16 @@ def parse_args(
                 if eq:
                     sys.exit(f"{key} takes no value\n{usage}")
                 vals[name] = True
-            elif eq:
-                vals[name] = parser(inline)  # type: ignore[operator]
             else:
-                if i + 1 >= len(argv):
-                    sys.exit(f"{key} requires a value\n{usage}")
-                i += 1
-                vals[name] = parser(argv[i])  # type: ignore[operator]
+                if not eq:
+                    if i + 1 >= len(argv):
+                        sys.exit(f"{key} requires a value\n{usage}")
+                    i += 1
+                    inline = argv[i]
+                try:
+                    vals[name] = parser(inline)  # type: ignore[operator]
+                except ValueError:
+                    sys.exit(f"bad value {inline!r} for {key}\n{usage}")
         elif a.startswith("-"):
             sys.exit(f"unknown arg {a!r}\n{usage}")
         elif positionals:

@@ -9,21 +9,22 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
 
+import _cli  # noqa: E402  (tools/_cli.py — shared flag parsing)
 from movies_etl_spark.session import get_spark  # noqa: E402
+
+USAGE = "usage: build_exec_split.py [--reps N] [--sf DIR] name [name ...]"
 
 
 def main() -> None:
-    argv = sys.argv[1:]
-    args, reps, sf = [], 3, "/root/testdata/sf0.1"
-    i = 0
-    while i < len(argv):
-        if argv[i] == "--reps":
-            reps = int(argv[i + 1]); i += 2
-        elif argv[i] == "--sf":
-            sf = argv[i + 1]; i += 2
-        else:
-            args.append(argv[i]); i += 1
+    vals, args = _cli.parse_args(
+        sys.argv[1:], {"--reps": int, "--sf": str}, USAGE, positionals=True
+    )
+    if not args:
+        sys.exit(USAGE)
+    reps = vals.get("reps", 3)
+    sf = vals.get("sf", "/root/testdata/sf0.1")
     from movies_etl_spark.plans import flagship, registry  # noqa: F401
     from movies_etl_spark.plans import queries_analytics  # noqa: F401
     from movies_etl_spark.plans import queries_curation  # noqa: F401

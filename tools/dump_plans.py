@@ -12,18 +12,20 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
 
+import _cli  # noqa: E402  (tools/_cli.py — shared flag parsing)
 from movies_etl_spark.session import get_spark  # noqa: E402
+
+USAGE = "usage: dump_plans.py OUTDIR SUFFIX q1 [q2 ...] [--sf DIR]"
 
 
 def main() -> None:
-    argv = sys.argv[1:]
-    sf = "/root/testdata/sf0.1"
-    if "--sf" in argv:
-        i = argv.index("--sf")
-        sf = argv[i + 1]
-        del argv[i : i + 2]
-    outdir, suffix, names = argv[0], argv[1], argv[2:]
+    vals, args = _cli.parse_args(sys.argv[1:], {"--sf": str}, USAGE, positionals=True)
+    if len(args) < 3:
+        sys.exit(USAGE)
+    sf = vals.get("sf", "/root/testdata/sf0.1")
+    outdir, suffix, names = args[0], args[1], args[2:]
     os.makedirs(outdir, exist_ok=True)
     from movies_etl_spark.plans import flagship, registry  # noqa: F401
     from movies_etl_spark.plans import queries_analytics  # noqa: F401
