@@ -274,12 +274,8 @@ def _ann_recall(spark) -> dict[str, float]:
 
 
 def main() -> None:
-    from movies_etl_spark.plans import flagship, registry  # noqa: F401
-    from movies_etl_spark.plans import queries_analytics  # noqa: F401
-    from movies_etl_spark.plans import queries_curation  # noqa: F401
-    from movies_etl_spark.plans import queries_expr, queries_ext  # noqa: F401
-    from movies_etl_spark.plans import queries_mlprep  # noqa: F401
-    from movies_etl_spark.plans import queries_scale  # noqa: F401
+    import __spark_entry__  # noqa: F401  (registers every query module)
+    from movies_etl_spark.plans import registry
     from movies_etl_spark.operators import dedup
 
     spark = get_spark(app_name="movies_etl_bench")

@@ -207,12 +207,7 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
     # them). Replace ONLY the untouched stock default, and only ONCE per
     # session (the sentinel conf records that the decision was made): a
     # harness that deliberately re-tunes to 200 AFTER the first pin is no
-    # longer clobbered on subsequent pin calls, and a value-200 harness
-    # can opt out up front via SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS=1
-    # (documented in SCALE.md). The remaining ambiguity — a harness that
-    # deliberately chose exactly 200 BEFORE the first pin, with no opt-out
-    # — is undetectable from conf state alone and resolves to the engine
-    # default.
+    # longer clobbered on subsequent pin calls.
     already_decided = (
         spark.conf.get("spark.movies_etl.shufflePinned", "") == "1"
     )
@@ -220,16 +215,12 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
     # deliberately set the STOCK values (200 partitions, SMJ preferred,
     # snappy, INT96) before the first pin is indistinguishable from an
     # untouched default, so it can declare the intent up front —
-    # SPARK_GRAFT_KEEP_SESSION_CONFS=1 skips every perf pin below; the
-    # older SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS=1 keeps covering the
-    # shuffle pin alone (documented in SCALE.md).
+    # SPARK_GRAFT_KEEP_SESSION_CONFS=1 skips every perf pin below
+    # (documented in SCALE.md).
     keep_all = os.environ.get("SPARK_GRAFT_KEEP_SESSION_CONFS") == "1"
-    keep_env = keep_all or (
-        os.environ.get("SPARK_GRAFT_KEEP_SHUFFLE_PARTITIONS") == "1"
-    )
     if (
         not already_decided
-        and not keep_env
+        and not keep_all
         and spark.conf.get("spark.sql.shuffle.partitions", "200") == "200"
     ):
         spark.conf.set(

@@ -13,6 +13,19 @@ with a watermark swapped in for the available-now trigger.
 
 Local smoke contract: memory sink + awaitTermination, per the public
 Spark docs pattern. Results are deterministic on the bounded test data.
+
+The foreachBatch operators keep their state in batch-id-versioned
+parquet stores instead of the Spark state store: the hourly, HLL and
+CMS rollups (``agg/v=N``) and the LSH band/shingle index
+(``bands/batch=N``, ``shingles/batch=N``). One discipline serves all
+four, written once:
+
+- :func:`_versions` lists a store's committed versions (dirs holding
+  ``_SUCCESS``), optionally strictly below a batch id;
+- :func:`_merge_versioned` folds a batch's partials into the newest
+  committed version below it, per a :class:`VersionedState` spec;
+- :func:`_drain` runs a bounded stream's foreachBatch to completion;
+- :func:`_versioned_rollup` lands, drains and merges one rollup.
 """
 
 from __future__ import annotations
@@ -20,14 +33,17 @@ from __future__ import annotations
 import hashlib
 import os
 import uuid
-from contextlib import contextmanager
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movies_etl_spark.session import temp_confs
+
 #: events parquet schema when ts is TIMESTAMP(NANOS) read with nanosAsLong
 #: (ts = nanos since epoch); the µs encoding instead reads as TIMESTAMP_NTZ
-#: — _events_stream_schema picks per-dataset by peeking at the batch schema
+#: — events_stream picks per-dataset by peeking at the batch schema
 #: (file stream sources need an explicit schema, so auto-infer can't help).
 EVENTS_STREAM_SCHEMA_NANOS = (
     "event_id BIGINT, ts BIGINT, user_id BIGINT, "
@@ -72,41 +88,35 @@ def _events_ts_is_nanos_long(spark: SparkSession, sf_dir: str) -> bool:
     return dict(batch.dtypes).get("ts") == "bigint"
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_stream(
+    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
     """File-source stream over the events table, normalized to a
     session-timezone TimestampType `ts` (same contract as the batch
-    loader) for either parquet encoding of the column."""
+    loader) for either parquet encoding of the column.
+    ``max_files_per_trigger`` caps the files each micro-batch reads."""
     nanos = _events_ts_is_nanos_long(spark, sf_dir)
     schema = EVENTS_STREAM_SCHEMA_NANOS if nanos else EVENTS_STREAM_SCHEMA_MICROS
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(_stream_source_dir(sf_dir))
-    )
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    raw = reader.format("parquet").load(_stream_source_dir(sf_dir))
     if nanos:
         return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-@contextmanager
-def _state_partitions(spark: SparkSession, n: int):
-    """Scope the state-store partition count for one stateful stream.
-
-    Stateful streaming operators read ``spark.sql.shuffle.partitions``
-    at FIRST start as the state partition count (then it's fixed into
-    the checkpoint) — it is a per-query sizing knob, not a session
-    property. Each state partition costs store instances + checkpoint
-    files + a task per micro-batch, so over-provisioning dominates small
-    runs: the stream-stream join carries FOUR stores per partition per
-    side, and 32 partitions cost ~24 s on the bounded test input vs ~3 s
-    at a right-sized count, identical results. Production unbounded runs
-    size this to ~2× cores before the first start."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+#: State-store partition count for the stateful streams, set with
+#: ``temp_confs`` around each one. Stateful operators read
+#: ``spark.sql.shuffle.partitions`` at FIRST start as the state partition
+#: count (then it's fixed into the checkpoint) — a per-query sizing knob,
+#: not a session property. Each state partition costs store instances +
+#: checkpoint files + a task per micro-batch, so over-provisioning
+#: dominates small runs: the stream-stream join carries FOUR stores per
+#: partition per side, and 32 partitions cost ~24 s on the bounded test
+#: input vs ~3 s at a right-sized count, identical results. Production
+#: unbounded runs size this to ~2× cores before the first start.
+_STATE_PARTITIONS = {"spark.sql.shuffle.partitions": "8"}
 
 
 def _run_to_memory(agg: DataFrame, output_mode: str) -> DataFrame:
@@ -225,7 +235,6 @@ def sessionize(
     )
     sessions = sessionize_stateful(ev)
     from movies_etl_spark.functions import expr as E
-    from movies_etl_spark.session import temp_confs
 
     def finish(out: DataFrame) -> DataFrame:
         return out.select(
@@ -342,7 +351,7 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .dropDuplicates(["text_hash"])
     )
-    with _state_partitions(spark, 8):
+    with temp_confs(spark, _STATE_PARTITIONS):
         return _run_to_memory(deduped, "append")
 
 
@@ -390,7 +399,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (F.col("p_ts").cast("long") - F.col("c_ts").cast("long")).alias("lag_sec"),
     )
-    with _state_partitions(spark, 8):
+    with temp_confs(spark, _STATE_PARTITIONS):
         return _run_to_memory(joined, "append")
 
 
@@ -410,23 +419,7 @@ def windowed_counts_watermarked(
     watermark horizon never emit. That is correct streaming semantics,
     not a bug; the bounded-data tests assert the emitted set is the
     complete set minus the un-finalized tail."""
-    ev = events_stream(spark, sf_dir)
-    if max_files_per_trigger:
-        # re-read with the trigger cap (option lives on the reader)
-        nanos = _events_ts_is_nanos_long(spark, sf_dir)
-        schema = (
-            EVENTS_STREAM_SCHEMA_NANOS if nanos else EVENTS_STREAM_SCHEMA_MICROS
-        )
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
-            .format("parquet")
-            .load(_stream_source_dir(sf_dir))
-        )
-        if nanos:
-            ev = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        else:
-            ev = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    ev = events_stream(spark, sf_dir, max_files_per_trigger)
     agg = (
         ev.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
@@ -452,14 +445,26 @@ def foreach_batch_to_parquet(
         batch_df.write.mode("overwrite").parquet(f"{target_dir}/batch={batch_id}")
         seen.append(batch_id)
 
-    q = (
-        ev.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{target_dir}/_checkpoint")
-        .start()
-    )
-    q.awaitTermination()
+    _drain(ev, sink, f"{target_dir}/_checkpoint")
     return len(seen)
+
+
+def _drain(
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint: str,
+) -> None:
+    """Run ``fn(batch_df, batch_id)`` over every micro-batch of a bounded
+    file stream and return once the stream is drained (available-now
+    trigger). ``checkpoint`` holds the offsets, so a restarted drain
+    resumes at the first uncommitted batch id."""
+    (
+        stream.writeStream.foreachBatch(fn)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint)
+        .start()
+        .awaitTermination()
+    )
 
 
 def dedup_stream_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -486,7 +491,7 @@ def dedup_stream_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     dups = ev.filter(F.col("event_id") % 100 == 0)
     deduped = dedup_within_watermark(ev.unionByName(dups), ["event_id"], "s")
-    with _state_partitions(spark, 8):
+    with temp_confs(spark, _STATE_PARTITIONS):
         return _run_to_memory(deduped, "append")
 
 
@@ -533,7 +538,6 @@ def incremental_hourly_rollup(
     by construction; ADVICE r18 #5). Returns the final version —
     exactly the batch hourly aggregate, the oracle-checked invariant."""
     ev = _load_events_batch(spark, sf_dir)
-    src = f"{work_dir}/src"
     # deterministic-key split into the landing files (r18 opt round,
     # guide §2.5): keyless repartition(n) pays a local sort of its
     # input (sortBeforeRepartition) to make retries reproducible; a
@@ -542,43 +546,22 @@ def incremental_hourly_rollup(
     # the versioned merge is an associative sum, so ANY split of the
     # same rows yields the identical final aggregate (the oracle
     # replays the whole input either way).
-    ev.select(
+    landed = ev.select(
         F.date_trunc("hour", F.date_trunc("second", F.col("ts")))
         .cast("timestamp")
         .alias("h"),
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     ).repartition(
         n_source_files, F.pmod(F.xxhash64("h", "cents"), F.lit(64 * n_source_files))
-    ).write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema("h TIMESTAMP, cents BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(src)
     )
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # tiny-state merge: AQE off for the |hours|-row plan (r13, see
-        # _tiny_merge_confs — 4 → 2 jobs per batch on the CMS twin)
-        with _tiny_merge_confs(spark):
-            part = batch_df.groupBy("h").agg(
-                F.count(F.lit(1)).cast("long").alias("cnt"),
-                F.sum("cents").alias("sum_cents"),
-            )
-            _merge_versioned(spark, work_dir, part, batch_id)
+    def partials(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("h").agg(
+            F.count(F.lit(1)).cast("long").alias("cnt"),
+            F.sum("cents").alias("sum_cents"),
+        )
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{work_dir}/_ckpt")
-        .start()
-    )
-    q.awaitTermination()
-    last = _agg_versions(work_dir)[-1]
-    return spark.read.schema(ROLLUP_STATE_SCHEMA).parquet(
-        f"{work_dir}/agg/v={last}"
-    )
+    return _versioned_rollup(spark, landed, work_dir, partials, ROLLUP_STATE)
 
 
 def _tiny_merge_confs(spark: SparkSession):
@@ -586,13 +569,13 @@ def _tiny_merge_confs(spark: SparkSession):
     r12 #6): every incremental rollup's state table is bounded and tiny
     — |hours| rows (hourly), days × 1024 registers (HLL), ≤ 2·d·w ≈ 8k
     cells (CMS) — so the merge plan is a fixed two-stage aggregate
-    where adaptive stage materialization has nothing to decide and
-    costs ~2 extra Spark jobs per micro-batch (measured on the CMS
-    twin: 4 → 2 jobs/batch, values bit-identical). AQE off + a narrow
-    shuffle for the duration of the merge only; the streaming query
-    itself is planned outside the block."""
-    from movies_etl_spark.session import temp_confs
-
+    where adaptive stage materialization has nothing to decide. With
+    AQE on, a merge into a prior version runs its shuffle-map stage as
+    a job of its own: 2 jobs per merge; inside this block the same
+    merge is 1 job of 2 stages, values bit-identical
+    (test_streaming_extra pins both counts for all three states). AQE
+    off + a narrow shuffle for the duration of the merge only; the
+    streaming query itself is planned outside the block."""
     return temp_confs(
         spark,
         {
@@ -616,47 +599,105 @@ HLL_STATE_SCHEMA = "day date, register bigint, rho int"
 CMS_STATE_SCHEMA = "seed int, cell bigint, cnt bigint"
 
 
-def _agg_versions(work_dir: str, upto: int | None = None) -> list[int]:
-    """On-disk aggregate version ids (optionally strictly below ``upto``).
+class VersionedState(NamedTuple):
+    """A versioned rollup store: its on-disk ``schema``, the ``keys`` a
+    batch's partials merge on, and the ``merge`` aggregates (SQL) that
+    fold them into the prior version."""
 
-    The on-disk listing — not an in-process dict — is the source of
-    truth for "previous version": if a micro-batch retries AFTER its
-    versioned write succeeded but BEFORE the checkpoint committed, the
-    retry must merge into the version strictly below its own batch_id,
-    or the batch's partials would be double-counted."""
+    schema: str
+    keys: tuple[str, ...]
+    merge: tuple[str, ...]
+
+
+ROLLUP_STATE = VersionedState(
+    ROLLUP_STATE_SCHEMA, ("h",), ("sum(cnt) AS cnt", "sum(sum_cents) AS sum_cents")
+)
+HLL_STATE = VersionedState(HLL_STATE_SCHEMA, ("day", "register"), ("max(rho) AS rho",))
+CMS_STATE = VersionedState(CMS_STATE_SCHEMA, ("seed", "cell"), ("sum(cnt) AS cnt",))
+
+
+def _versions(root: str, prefix: str, below: int | None = None) -> list[int]:
+    """Ascending ids of the committed versions in one store directory:
+    the ``<prefix>N`` subdirs of ``root`` that hold ``_SUCCESS``,
+    optionally only those strictly below ``below``.
+
+    Spark writes ``_SUCCESS`` when the write job commits, so a torn
+    write (a crash mid-write) is never read as state; its batch
+    rewrites the dir on retry. The on-disk listing — not an in-process
+    dict — is the source of truth for "previous version": a batch that
+    retries AFTER its versioned write succeeded but BEFORE the
+    checkpoint committed must read only the versions strictly below its
+    own id, or it would fold its own output back in."""
     try:
-        found = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(f"{work_dir}/agg")
-            if d.startswith("v=")
-        ]
+        names = os.listdir(root)
     except FileNotFoundError:
         return []
-    return sorted(v for v in found if upto is None or v < upto)
+    found = [
+        int(d[len(prefix):])
+        for d in names
+        if d.startswith(prefix) and os.path.isfile(f"{root}/{d}/_SUCCESS")
+    ]
+    return sorted(v for v in found if below is None or v < below)
 
 
 def _merge_versioned(
-    spark: SparkSession, work_dir: str, part: DataFrame, batch_id: int
+    spark: SparkSession,
+    work_dir: str,
+    part: DataFrame,
+    batch_id: int,
+    state: VersionedState,
 ) -> None:
-    """Merge a batch's hourly partials into version ``batch_id``.
+    """Merge a batch's partials into version ``batch_id`` of the store
+    at ``<work_dir>/agg``.
 
-    Reads the largest on-disk version STRICTLY below batch_id as the
+    Reads the newest committed version STRICTLY below batch_id as the
     previous state, so a retried batch regenerates v=batch_id from the
-    same input (idempotent) instead of folding its own output back in."""
-    prior = _agg_versions(work_dir, upto=batch_id)
+    same input (idempotent) instead of folding its own output back in.
+    For the sums (hourly, CMS) that is load-bearing: sum is not
+    idempotent, and a retry folded into its own prior attempt would
+    double-count. The HLL register max is idempotent anyway; there the
+    discipline keeps readers off half-written versions."""
+    prior = _versions(f"{work_dir}/agg", "v=", batch_id)
     if prior:
-        prev = spark.read.schema(ROLLUP_STATE_SCHEMA).parquet(
+        prev = spark.read.schema(state.schema).parquet(
             f"{work_dir}/agg/v={prior[-1]}"
         )
         part = (
             prev.unionByName(part)
-            .groupBy("h")
-            .agg(
-                F.sum("cnt").cast("long").alias("cnt"),
-                F.sum("sum_cents").alias("sum_cents"),
-            )
+            .groupBy(*state.keys)
+            .agg(*(F.expr(e) for e in state.merge))
         )
     part.write.mode("overwrite").parquet(f"{work_dir}/agg/v={batch_id}")
+
+
+def _versioned_rollup(
+    spark: SparkSession,
+    landed: DataFrame,
+    work_dir: str,
+    partials: Callable[[DataFrame], DataFrame],
+    state: VersionedState,
+) -> DataFrame:
+    """The shared body of the incremental rollups: land ``landed`` in
+    ``<work_dir>/src`` (one file per partition), stream it back one file
+    per micro-batch, merge each batch's ``partials`` into the versioned
+    store under :func:`_tiny_merge_confs`, and return the last version
+    — the whole-input aggregate, since every merge is associative."""
+    src = f"{work_dir}/src"
+    landed.write.mode("overwrite").parquet(src)
+    stream = (
+        spark.readStream.schema(landed.schema)
+        .option("maxFilesPerTrigger", "1")
+        .format("parquet")
+        .load(src)
+    )
+
+    def upsert(batch_df: DataFrame, batch_id: int) -> None:
+        with _tiny_merge_confs(spark):
+            _merge_versioned(spark, work_dir, partials(batch_df), batch_id, state)
+
+    _drain(stream, upsert, f"{work_dir}/_ckpt")
+    last = _versions(f"{work_dir}/agg", "v=")[-1]
+    return spark.read.schema(state.schema).parquet(f"{work_dir}/agg/v={last}")
 
 
 def _verify_dropped(
@@ -711,24 +752,6 @@ def _verify_dropped(
     )
 
 
-def _lsh_batches_below(work_dir: str, kind: str, batch_id: int) -> list[str]:
-    """Index dirs of ``kind`` (bands/shingles) for batches STRICTLY
-    below ``batch_id`` — the retry-idempotence read rule: a retried
-    batch regenerates identical output because it never sees its own
-    prior write."""
-    try:
-        ids = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(f"{work_dir}/{kind}")
-            if d.startswith("batch=")
-        ]
-    except FileNotFoundError:
-        return []
-    return [
-        f"{work_dir}/{kind}/batch={i}" for i in sorted(ids) if i < batch_id
-    ]
-
-
 def lsh_dedup_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -742,7 +765,8 @@ def lsh_dedup_batch(
     measures the EXACT shipped per-batch plan against pre-built stores
     instead of a reimplementation that could drift. Shingles + bands the
     batch's own documents, reads the accumulated band/shingle index for
-    batches strictly below ``batch_id``, candidate-joins batch-touched
+    the committed batches strictly below ``batch_id``, candidate-joins
+    batch-touched
     buckets, Jaccard-verifies, and writes survivors/bands/shingles into
     ``batch=N``-addressed dirs (overwrite → retry-idempotent)."""
     from movies_etl_spark.operators import dedup as D
@@ -759,7 +783,7 @@ def lsh_dedup_batch(
     # caches through actions the batch must pay anyway, so every
     # broadcast build afterwards is a cache read. Write order within
     # the batch is free to choose: a retried batch never reads its own
-    # writes (_lsh_batches_below is strictly-below) and every write
+    # writes (_versions lists strictly below it) and every write
     # overwrites its own batch=N dir, so idempotence is unchanged; a
     # guard trip now lands after the index writes, which a retry (or
     # the next manual run) overwrites identically.
@@ -769,16 +793,20 @@ def lsh_dedup_batch(
     sh_b.write.mode("overwrite").parquet(
         f"{work_dir}/shingles/batch={batch_id}"
     )
-    band_dirs = _lsh_batches_below(work_dir, "bands", batch_id)
-    if band_dirs:
+    # a batch joins the index only once BOTH its dirs are committed
+    ids = sorted(
+        set(_versions(f"{work_dir}/bands", "batch=", batch_id))
+        & set(_versions(f"{work_dir}/shingles", "batch=", batch_id))
+    )
+    if ids:
         # explicit index schemas (r13): the per-batch store reads
         # each paid a schema-inference job (see the state-schema
         # constants above for the rationale)
         index_bands = spark.read.schema(LSH_BAND_SCHEMA).parquet(
-            *band_dirs
+            *(f"{work_dir}/bands/batch={i}" for i in ids)
         )
         index_sh = spark.read.schema(LSH_SHINGLE_SCHEMA).parquet(
-            *_lsh_batches_below(work_dir, "shingles", batch_id)
+            *(f"{work_dir}/shingles/batch={i}" for i in ids)
         )
     else:
         index_bands = bands_b.limit(0)
@@ -933,13 +961,7 @@ def lsh_dedup_stream(
         .format("parquet")
         .load(src)
     )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{work_dir}/_ckpt")
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream, process, f"{work_dir}/_ckpt")
     assert globmod.glob(f"{work_dir}/out/batch=*"), "no batches processed"
     return spark.read.parquet(f"{work_dir}/out/batch=*")
 
@@ -949,30 +971,6 @@ def _load_events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movies_etl_spark.sources import readers
 
     return readers.load_table(spark, sf_dir, "events")
-
-
-
-def _merge_versioned_regs(
-    spark: SparkSession, work_dir: str, part: DataFrame, batch_id: int
-) -> None:
-    """Register-table sibling of _merge_versioned: merge a batch's
-    (day, register, rho) partials into version ``batch_id`` by
-    REGISTER-MAX against the largest on-disk version strictly below it
-    — the same retry-idempotence discipline (a retried batch
-    regenerates its version from the same prior instead of folding its
-    own output back in; max is idempotent anyway, but the discipline
-    also keeps readers off half-written versions)."""
-    prior = _agg_versions(work_dir, upto=batch_id)
-    if prior:
-        prev = spark.read.schema(HLL_STATE_SCHEMA).parquet(
-            f"{work_dir}/agg/v={prior[-1]}"
-        )
-        part = (
-            prev.unionByName(part)
-            .groupBy("day", "register")
-            .agg(F.max("rho").alias("rho"))
-        )
-    part.write.mode("overwrite").parquet(f"{work_dir}/agg/v={batch_id}")
 
 
 def incremental_distinct_rollup(
@@ -998,11 +996,10 @@ def incremental_distinct_rollup(
     from movies_etl_spark.operators import sketch as SK
 
     ev = _load_events_batch(spark, sf_dir)
-    src = f"{work_dir}/src"
     # deterministic-key split, same rationale as the hourly twin (the
     # register-max merge is associative AND idempotent, so batch
     # composition cannot change the final register table)
-    ev.select(
+    landed = ev.select(
         F.date_trunc("day", F.date_trunc("second", F.col("ts")))
         .cast("date")
         .alias("day"),
@@ -1010,61 +1007,15 @@ def incremental_distinct_rollup(
     ).repartition(
         n_source_files,
         F.pmod(F.xxhash64("day", "user_id"), F.lit(64 * n_source_files)),
-    ).write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema("day DATE, user_id BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(src)
     )
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # tiny-state merge: AQE off for the (day, register) plan (r13,
-        # see _tiny_merge_confs)
-        with _tiny_merge_confs(spark):
-            part = SK.hll_partials(
-                batch_df, "user_id", "day"
-            ).withColumnRenamed("shard", "day")
-            _merge_versioned_regs(spark, work_dir, part, batch_id)
+    def partials(batch_df: DataFrame) -> DataFrame:
+        return SK.hll_partials(batch_df, "user_id", "day").withColumnRenamed(
+            "shard", "day"
+        )
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{work_dir}/_ckpt")
-        .start()
-    )
-    q.awaitTermination()
-    last = _agg_versions(work_dir)[-1]
-    regs = spark.read.schema(HLL_STATE_SCHEMA).parquet(
-        f"{work_dir}/agg/v={last}"
-    )
+    regs = _versioned_rollup(spark, landed, work_dir, partials, HLL_STATE)
     return SK.hll_estimate(regs, ["day"])
-
-
-def _merge_versioned_cells(
-    spark: SparkSession, work_dir: str, part: DataFrame, batch_id: int
-) -> None:
-    """CMS sibling of _merge_versioned_regs: merge a batch's
-    (seed, cell, cnt) partials into version ``batch_id`` by CELL-SUM
-    against the largest on-disk version strictly below it. For the
-    additive merge this versioning discipline is LOAD-BEARING, not just
-    tidy: max (HLL) is idempotent, so re-folding a retried batch into
-    its own output would still be correct there — but sum is NOT, and a
-    retried batch that folded into state containing its own prior
-    attempt would double-count. Regenerating version v from the largest
-    version < v makes the retry produce the identical file instead."""
-    prior = _agg_versions(work_dir, upto=batch_id)
-    if prior:
-        prev = spark.read.schema(CMS_STATE_SCHEMA).parquet(
-            f"{work_dir}/agg/v={prior[-1]}"
-        )
-        part = (
-            prev.unionByName(part)
-            .groupBy("seed", "cell")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    part.write.mode("overwrite").parquet(f"{work_dir}/agg/v={batch_id}")
 
 
 def incremental_cms_rollup(
@@ -1084,7 +1035,7 @@ def incremental_cms_rollup(
     additive merge is NOT idempotent, so the versioned-state
     discipline (regenerate version v from the largest version < v;
     readers see only complete versions) is what makes retries safe —
-    see _merge_versioned_cells. Because md5 cell hashing is
+    see _merge_versioned. Because md5 cell hashing is
     deterministic and summation associative, the post-stream cell
     table equals the one-shot whole-corpus sketch EXACTLY, so the
     point estimates match the batch oracle's replay bit-for-bit — the
@@ -1093,7 +1044,10 @@ def incremental_cms_rollup(
     Scale shape: per batch the work is one map-side-combinable
     aggregate of the batch (O(batch rows)) plus a ≤ d·w + d·w row
     merge (O(1) in corpus size) — frequency dashboards stay current
-    without ever re-scanning history. The returned frame joins the
+    without ever re-scanning history. Under _tiny_merge_confs the
+    partials, the prior-version read and the versioned write run as
+    ONE Spark job of two stages per batch (two jobs with AQE on; see
+    _tiny_merge_confs). The returned frame joins the
     exact top-20 candidates (computed once, batch-side, from the same
     materialized source) against the streamed sketch's estimates,
     exposing the overestimate-only error contract as data."""
@@ -1113,47 +1067,18 @@ def incremental_cms_rollup(
             )
         ).alias("bigram")
     )
-    src = f"{work_dir}/src"
     # deterministic-key split, same rationale as the hourly twin (the
     # cell-sum merge is associative; exact/candidate tails read the
     # whole landing zone, so the split never reaches the output)
-    bg.repartition(
+    landed = bg.repartition(
         n_source_files, F.pmod(F.xxhash64("bigram"), F.lit(64 * n_source_files))
-    ).write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema("bigram STRING")
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(src)
     )
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # tiny-state merge (r13 job audit, VERDICT r12 #6): the merge
-        # plan is fixed two-stage over ≤ 2·d·w ≈ 8k rows, so adaptive
-        # stage materialization bought nothing and cost ~2 extra jobs
-        # per micro-batch (measured 4 → 2 jobs/batch, query build
-        # 19 → 13 jobs, values bit-identical). The remaining 2 jobs per
-        # batch are the floor: the prior-version read and the versioned
-        # state write — the durability contract itself.
-        with _tiny_merge_confs(spark):
-            part = SK.cms_partials(batch_df, "bigram", F.lit(0)).drop(
-                "shard"
-            )
-            _merge_versioned_cells(spark, work_dir, part, batch_id)
+    def partials(batch_df: DataFrame) -> DataFrame:
+        return SK.cms_partials(batch_df, "bigram", F.lit(0)).drop("shard")
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{work_dir}/_ckpt")
-        .start()
-    )
-    q.awaitTermination()
-    last = _agg_versions(work_dir)[-1]
-    merged = spark.read.schema(CMS_STATE_SCHEMA).parquet(
-        f"{work_dir}/agg/v={last}"
-    )
-    bgb = spark.read.schema("bigram STRING").parquet(src)
+    merged = _versioned_rollup(spark, landed, work_dir, partials, CMS_STATE)
+    bgb = spark.read.schema("bigram STRING").parquet(f"{work_dir}/src")
     exact = bgb.groupBy("bigram").agg(F.count(F.lit(1)).alias("exact_cnt"))
     cands = exact.orderBy(F.col("exact_cnt").desc(), "bigram").limit(20)
     est = SK.cms_point_estimate(merged, cands.select("bigram"), "bigram")

@@ -3,6 +3,9 @@ MERGE emulation."""
 
 from __future__ import annotations
 
+import datetime
+
+import pytest
 from pyspark.sql import functions as F
 
 from movies_etl_spark.streaming import ops
@@ -169,7 +172,7 @@ def test_incremental_rollup_retry_does_not_double_count(spark, tmp_path):
     previous in-process-dict implementation double-counted here."""
     from pyspark.sql import functions as F
 
-    from movies_etl_spark.streaming.ops import _merge_versioned
+    from movies_etl_spark.streaming.ops import ROLLUP_STATE, _merge_versioned
 
     work = str(tmp_path / "retry")
     part0 = spark.createDataFrame(
@@ -178,12 +181,12 @@ def test_incremental_rollup_retry_does_not_double_count(spark, tmp_path):
     part1 = spark.createDataFrame(
         [("2026-01-01 10:00:00", 3, 50)], "h STRING, cnt LONG, sum_cents LONG"
     ).withColumn("h", F.col("h").cast("timestamp"))
-    _merge_versioned(spark, work, part0, 0)
-    _merge_versioned(spark, work, part1, 1)
+    _merge_versioned(spark, work, part0, 0, ROLLUP_STATE)
+    _merge_versioned(spark, work, part1, 1, ROLLUP_STATE)
     first = spark.read.parquet(f"{work}/agg/v=1").collect()
     # simulate the retry: same batch partials, same batch_id, with v=1
     # already on disk from the "failed" attempt
-    _merge_versioned(spark, work, part1, 1)
+    _merge_versioned(spark, work, part1, 1, ROLLUP_STATE)
     retried = spark.read.parquet(f"{work}/agg/v=1").collect()
     assert first == retried
     assert retried[0]["cnt"] == 5 and retried[0]["sum_cents"] == 150
@@ -198,7 +201,7 @@ def test_rollup_state_written_as_int96_merges_into_int64(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from movies_etl_spark.session import temp_confs
-    from movies_etl_spark.streaming.ops import _merge_versioned
+    from movies_etl_spark.streaming.ops import ROLLUP_STATE, _merge_versioned
 
     schema = "h STRING, cnt LONG, sum_cents LONG"
     part0 = spark.createDataFrame(
@@ -217,10 +220,10 @@ def test_rollup_state_written_as_int96_merges_into_int64(spark, tmp_path):
 
     old, new = str(tmp_path / "int96"), str(tmp_path / "int64")
     with temp_confs(spark, {"spark.sql.parquet.outputTimestampType": "INT96"}):
-        _merge_versioned(spark, old, part0, 0)
-    _merge_versioned(spark, old, part1, 1)
-    _merge_versioned(spark, new, part0, 0)
-    _merge_versioned(spark, new, part1, 1)
+        _merge_versioned(spark, old, part0, 0, ROLLUP_STATE)
+    _merge_versioned(spark, old, part1, 1, ROLLUP_STATE)
+    _merge_versioned(spark, new, part0, 0, ROLLUP_STATE)
+    _merge_versioned(spark, new, part1, 1, ROLLUP_STATE)
     assert physical(f"{old}/agg/v=0") == {"INT96"}
     assert physical(f"{old}/agg/v=1") == physical(f"{new}/agg/v=1") == {"INT64"}
 
@@ -240,7 +243,7 @@ def test_hll_rollup_retry_regenerates_same_version(spark, tmp_path):
     merged registers equal the max of both batches."""
     from pyspark.sql import functions as F
 
-    from movies_etl_spark.streaming.ops import _merge_versioned_regs
+    from movies_etl_spark.streaming.ops import HLL_STATE, _merge_versioned
 
     work = str(tmp_path / "hllretry")
     p0 = spark.createDataFrame(
@@ -251,13 +254,13 @@ def test_hll_rollup_retry_regenerates_same_version(spark, tmp_path):
         [("2026-01-01", 7, 4), ("2026-01-01", 11, 2)],
         "day STRING, register LONG, rho INT",
     ).withColumn("day", F.col("day").cast("date"))
-    _merge_versioned_regs(spark, work, p0, 0)
-    _merge_versioned_regs(spark, work, p1, 1)
+    _merge_versioned(spark, work, p0, 0, HLL_STATE)
+    _merge_versioned(spark, work, p1, 1, HLL_STATE)
     first = sorted(
         (r["register"], r["rho"])
         for r in spark.read.parquet(f"{work}/agg/v=1").collect()
     )
-    _merge_versioned_regs(spark, work, p1, 1)  # retry after successful write
+    _merge_versioned(spark, work, p1, 1, HLL_STATE)  # retry after successful write
     retried = sorted(
         (r["register"], r["rho"])
         for r in spark.read.parquet(f"{work}/agg/v=1").collect()
@@ -270,7 +273,7 @@ def test_cms_rollup_retry_regenerates_same_version(spark, tmp_path):
     LOAD-BEARING: sum-merge is not idempotent, so a retry that folded
     into its own prior output would double-count. The retried version
     must equal the first write exactly (regenerated from v=0)."""
-    from movies_etl_spark.streaming.ops import _merge_versioned_cells
+    from movies_etl_spark.streaming.ops import CMS_STATE, _merge_versioned
 
     work = str(tmp_path / "cmsretry")
     p0 = spark.createDataFrame(
@@ -279,13 +282,13 @@ def test_cms_rollup_retry_regenerates_same_version(spark, tmp_path):
     p1 = spark.createDataFrame(
         [(0, 5, 3), (2, 9, 6)], "seed INT, cell BIGINT, cnt BIGINT"
     )
-    _merge_versioned_cells(spark, work, p0, 0)
-    _merge_versioned_cells(spark, work, p1, 1)
+    _merge_versioned(spark, work, p0, 0, CMS_STATE)
+    _merge_versioned(spark, work, p1, 1, CMS_STATE)
     first = sorted(
         (r["seed"], r["cell"], r["cnt"])
         for r in spark.read.parquet(f"{work}/agg/v=1").collect()
     )
-    _merge_versioned_cells(spark, work, p1, 1)  # retry after a write
+    _merge_versioned(spark, work, p1, 1, CMS_STATE)  # retry after a write
     retried = sorted(
         (r["seed"], r["cell"], r["cnt"])
         for r in spark.read.parquet(f"{work}/agg/v=1").collect()
@@ -310,3 +313,82 @@ def test_streaming_cms_equals_batch_sketch(spark, sf_dir):
         for r in qs["heavy_hitters_cms"](spark, sf_dir).collect()
     }
     assert streamed == batch and len(streamed) == 20
+
+
+def test_torn_version_is_not_read_as_prior_state(spark, tmp_path):
+    """An ``agg/v=N`` whose ``_SUCCESS`` is gone (a write torn before its
+    commit) is not prior state: the next merge folds into the newest
+    COMMITTED version below it, here v=0."""
+    import os
+
+    from movies_etl_spark.streaming.ops import CMS_STATE, _merge_versioned
+
+    work = str(tmp_path / "torn")
+    for batch_id, cnt in enumerate((10, 3, 1)):
+        part = spark.createDataFrame([(0, 5, cnt)], CMS_STATE.schema)
+        _merge_versioned(spark, work, part, batch_id, CMS_STATE)
+        if batch_id == 1:
+            os.remove(f"{work}/agg/v=1/_SUCCESS")
+    got = [tuple(r) for r in spark.read.parquet(f"{work}/agg/v=2").collect()]
+    assert got == [(0, 5, 11)]
+
+
+def test_lsh_torn_index_batch_is_not_read(spark, tmp_path):
+    """A ``bands/batch=N`` dir whose ``_SUCCESS`` is gone does not join
+    the index the next batch dedups against (nor does its committed
+    ``shingles/batch=N`` twin): the next batch's survivors equal its
+    recompute on a store that never held batch N."""
+    import os
+
+    from movies_etl_spark.streaming.ops import lsh_dedup_batch
+
+    text = "the quick brown fox jumps over the lazy dog by the river bank"
+    schema = "doc_id BIGINT, text STRING"
+    b0 = spark.createDataFrame([(1, text)], schema)
+    b1 = spark.createDataFrame(
+        [(2, text), (3, "versioned parquet stores list committed dirs only")],
+        schema,
+    )
+    torn, fresh = str(tmp_path / "torn"), str(tmp_path / "fresh")
+    lsh_dedup_batch(spark, b0, 0, torn)
+    os.remove(f"{torn}/bands/batch=0/_SUCCESS")
+    lsh_dedup_batch(spark, b1, 1, torn)
+    lsh_dedup_batch(spark, b1, 1, fresh)
+
+    def survivors(store):
+        out = spark.read.parquet(f"{store}/out/batch=1").collect()
+        return sorted(r.doc_id for r in out)
+
+    assert survivors(torn) == survivors(fresh) == [2, 3]
+
+
+@pytest.mark.parametrize(
+    "state_name,row",
+    [
+        ("ROLLUP_STATE", (datetime.datetime(2026, 1, 1, 10), 2, 100)),
+        ("HLL_STATE", (datetime.date(2026, 1, 1), 7, 3)),
+        ("CMS_STATE", (0, 5, 10)),
+    ],
+)
+def test_tiny_merge_confs_make_a_merge_one_job(spark, tmp_path, state_name, row):
+    """Why ``_tiny_merge_confs`` exists: a merge into a prior version
+    runs as 1 job of 2 stages inside it, and as 2 jobs under the
+    session's AQE, which runs the shuffle-map stage as a job of its
+    own."""
+    from perfbench.probe import StatusProbe
+
+    state = getattr(ops, state_name)
+    work = str(tmp_path / "merge")
+    part = spark.createDataFrame([row], state.schema)
+    ops._merge_versioned(spark, work, part, 0, state)
+    probe = StatusProbe(spark)
+
+    def merge(batch_id):
+        mark = probe.mark()
+        ops._merge_versioned(spark, work, part, batch_id, state)
+        c = probe.since(mark)
+        return c.jobs, c.stages
+
+    with ops._tiny_merge_confs(spark):
+        assert merge(1) == (1, 2)
+    assert merge(2)[0] == 2

@@ -27,6 +27,7 @@ import time
 
 import pytest
 
+from movies_etl_spark.session import temp_confs
 from movies_etl_spark.streaming import ops
 
 pytestmark = pytest.mark.slow
@@ -94,7 +95,7 @@ def test_dedup_within_watermark_state_plateaus(spark, tmp_path):
         .select("event_id", F.timestamp_seconds(F.col("ts_s")).alias("s"))
     )
     deduped = ops.dedup_within_watermark(ev, ["event_id"], "s")
-    with ops._state_partitions(spark, 4):
+    with temp_confs(spark, {"spark.sql.shuffle.partitions": "4"}):
         totals = _run_and_progress(deduped, "append", str(tmp_path / "chk"))
 
     assert len(totals) == N_BATCHES
@@ -126,7 +127,7 @@ def test_sessionize_state_plateaus_at_user_count(spark, tmp_path):
         .parquet(f"{src}/*.parquet")
     )
     sessions = ops.sessionize_stateful(ev)
-    with ops._state_partitions(spark, 4):
+    with temp_confs(spark, {"spark.sql.shuffle.partitions": "4"}):
         totals = _run_and_progress(sessions, "append", str(tmp_path / "chk"))
 
     assert len(totals) == N_BATCHES

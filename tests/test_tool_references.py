@@ -6,6 +6,7 @@ describe past rounds and are deliberately not scanned."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -40,3 +41,26 @@ def test_every_named_tool_exists():
         if not (ROOT / "tools" / f"{name}.py").is_file()
     )
     assert not dangling, dangling
+
+
+def test_no_tool_puts_a_literal_absolute_path_on_sys_path():
+    """Each tool finds the checkout it lives in from ``__file__``: a
+    literal absolute path on ``sys.path`` would make a run from any
+    other checkout import and check that fixed tree instead."""
+    offenders = []
+    for tool in sorted((ROOT / "tools").glob("*.py")):
+        for node in ast.walk(ast.parse(tool.read_text(encoding="utf-8"))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in {"insert", "append"}
+                and ast.unparse(node.func.value) == "sys.path"
+                and any(
+                    isinstance(a, ast.Constant)
+                    and isinstance(a.value, str)
+                    and a.value.startswith("/")
+                    for a in node.args
+                )
+            ):
+                offenders.append(f"{tool.name}:{node.lineno}")
+    assert not offenders, offenders

@@ -36,12 +36,8 @@ def main() -> None:
         else:
             args.append(argv[i])
             i += 1
-    from movies_etl_spark.plans import flagship, registry  # noqa: F401
-    from movies_etl_spark.plans import queries_analytics  # noqa: F401
-    from movies_etl_spark.plans import queries_curation  # noqa: F401
-    from movies_etl_spark.plans import queries_expr, queries_ext  # noqa: F401
-    from movies_etl_spark.plans import queries_mlprep  # noqa: F401
-    from movies_etl_spark.plans import queries_scale  # noqa: F401
+    import __spark_entry__  # noqa: F401  (registers every query module)
+    from movies_etl_spark.plans import registry
 
     spark = get_spark(app_name="ab_time")
     # warm

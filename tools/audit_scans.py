@@ -96,13 +96,8 @@ def main() -> None:
     # import the full query surface the way the driver contract does —
     # registry alone holds only the §2 core; the suites register on
     # their module import
-    from movies_etl_spark.plans import flagship, registry  # noqa: F401
-    from movies_etl_spark.plans import queries_analytics  # noqa: F401
-    from movies_etl_spark.plans import queries_curation  # noqa: F401
-    from movies_etl_spark.plans import queries_expr  # noqa: F401
-    from movies_etl_spark.plans import queries_ext  # noqa: F401
-    from movies_etl_spark.plans import queries_mlprep  # noqa: F401
-    from movies_etl_spark.plans import queries_scale  # noqa: F401
+    import __spark_entry__  # noqa: F401  (registers every query module)
+    from movies_etl_spark.plans import registry
 
     spark = get_spark(app_name="audit_scans")
     flagged: list[dict] = []

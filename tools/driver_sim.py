@@ -6,10 +6,11 @@ values against the DuckDB oracle — stricter than the driver's hash
 gotcha)."""
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession
