@@ -392,3 +392,50 @@ def test_tiny_merge_confs_make_a_merge_one_job(spark, tmp_path, state_name, row)
     with ops._tiny_merge_confs(spark):
         assert merge(1) == (1, 2)
     assert merge(2)[0] == 2
+
+
+def test_cms_rollup_batch_is_one_job_of_three_stages(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """One real CMS rollup batch, streamed from the landing zone: every
+    batch after the first runs its partials, the prior-version read and
+    the versioned write as one job of three stages under
+    ``_tiny_merge_confs``: batch scan to the partials' shuffle, partials
+    and prior version to the merge's shuffle, merge and write."""
+    from perfbench.probe import StatusProbe
+
+    probe = StatusProbe(spark)
+    merge = ops._merge_versioned
+    counts = {}
+
+    def counted(spark_, work_dir, part, batch_id, state):
+        mark = probe.mark()
+        merge(spark_, work_dir, part, batch_id, state)
+        c = probe.since(mark)
+        counts[batch_id] = (c.jobs, c.stages)
+
+    monkeypatch.setattr(ops, "_merge_versioned", counted)
+    ops.incremental_cms_rollup(spark, sf_dir, str(tmp_path / "cms"))
+    assert sorted(counts) == [0, 1, 2, 3]
+    assert {counts[b] for b in (1, 2, 3)} == {(1, 3)}
+
+
+def test_store_commits_when_session_turns_success_marker_off(spark, tmp_path):
+    """A session built with ``marksuccessfuljobs`` off still leaves
+    ``_SUCCESS`` in every store version, so the next merge reads its
+    prior state and the next LSH batch dedups against the index."""
+    from movies_etl_spark.session import temp_confs
+
+    off = {"mapreduce.fileoutputcommitter.marksuccessfuljobs": "false"}
+    text = "the quick brown fox jumps over the lazy dog by the river bank"
+    schema = "doc_id BIGINT, text STRING"
+    work, store = str(tmp_path / "cms"), str(tmp_path / "lsh")
+    with temp_confs(spark, off):
+        for batch_id, cnt in enumerate((10, 3)):
+            part = spark.createDataFrame([(0, 5, cnt)], ops.CMS_STATE.schema)
+            ops._merge_versioned(spark, work, part, batch_id, ops.CMS_STATE)
+        ops.lsh_dedup_batch(spark, spark.createDataFrame([(1, text)], schema), 0, store)
+        ops.lsh_dedup_batch(spark, spark.createDataFrame([(2, text)], schema), 1, store)
+    got = [tuple(r) for r in spark.read.parquet(f"{work}/agg/v=1").collect()]
+    assert got == [(0, 5, 13)]
+    assert spark.read.parquet(f"{store}/out/batch=1").count() == 0
