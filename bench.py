@@ -251,7 +251,9 @@ def _ann_recall(spark) -> dict[str, float]:
         "lsh_multiprobe_h2": SIM.topk_multiprobe_lsh(emb, qset, k=5),
         # the frontier-selected isotropic operating point
         # (planes=8, radius=3: ≥0.6@5 at a ~37% scan budget)
-        "lsh_multiprobe_8p_r3": SIM.topk_multiprobe_lsh_param(emb, qset, 8, 3, k=5),
+        "lsh_multiprobe_8p_r3": SIM.topk_multiprobe_lsh(
+            emb, qset, k=5, offsets=SIM.multiprobe_offsets(8, 3)
+        ),
         "ivf_nprobe1": SIM.topk_ivf(emb, qset, k=5),
         "ivf_nprobe3": SIM.topk_ivf(emb, qset, k=5, nprobe=3),
     }

@@ -505,8 +505,3 @@ def fill_if_zero(keep: Column, fallback: Column) -> Column:
     then take the wiki value (challenge.py:240-246). ``keep == 0`` is false
     for null keep → null stays null, matching pandas."""
     return F.when(keep == 0, fallback).otherwise(keep)
-
-
-def minutes_from_hours(hours: Column, minutes: Column) -> Column:
-    """F18: unit conversion arithmetic (challenge.py:169)."""
-    return hours * 60 + minutes

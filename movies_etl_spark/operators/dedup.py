@@ -212,8 +212,9 @@ def jaccard(a: Column, b: Column) -> Column:
 MAX_BAND_BUCKET_ROWS = 10_000
 
 
-def _bucket_overflow_message(max_bucket_rows: int) -> Column:
-    """Failure text for an over-cap band bucket, with the remediation."""
+def _bucket_overflow_message(max_bucket_rows: int, size: Column) -> Column:
+    """Failure text for an over-cap band bucket holding ``size`` rows (a
+    string column), with the remediation."""
     return F.concat_ws(
         "",
         F.lit("LSH band bucket (band_id="),
@@ -221,7 +222,7 @@ def _bucket_overflow_message(max_bucket_rows: int) -> Column:
         F.lit(", band_key="),
         F.substring(F.col("band_key"), 1, 64),
         F.lit(") holds "),
-        F.col("__bucket_n").cast("string"),
+        size,
         F.lit(
             f" rows (cap {max_bucket_rows}): the band self-join would "
             "square this bucket into an unboundable candidate set. "
@@ -248,11 +249,9 @@ def guard_band_buckets(
     shuffle+sort is negligible. The full-corpus batch path needs NO
     standalone guard at all: :func:`candidate_pairs_minhash` (r8) fuses
     the cap check into the collect_list aggregate candidate generation
-    already requires, so the guard there costs one `count` column. To
-    guard a PERSISTED band table without generating pairs (e.g. when
-    publishing the incremental band index), use
-    :func:`guard_band_buckets_broadcast`. The failure message carries
-    the remediation (see MAX_BAND_BUCKET_ROWS)."""
+    already requires, so the guard there costs one `count` column. The
+    failure message carries the remediation (see
+    MAX_BAND_BUCKET_ROWS)."""
     w = Window.partitionBy("band_id", "band_key")
     counted = bands.withColumn("__bucket_n", F.count(F.lit(1)).over(w))
     # The guard lives in a FILTER whose predicate is a non-foldable
@@ -261,79 +260,13 @@ def guard_band_buckets(
     # and predicate pushdown cannot move it below the window it reads.
     ok = F.when(
         F.col("__bucket_n") > F.lit(max_bucket_rows),
-        F.raise_error(_bucket_overflow_message(max_bucket_rows)).cast(
-            "boolean"
-        ),
+        F.raise_error(
+            _bucket_overflow_message(
+                max_bucket_rows, F.col("__bucket_n").cast("string")
+            )
+        ).cast("boolean"),
     ).otherwise(F.lit(True))
     return counted.filter(ok).drop("__bucket_n")
-
-
-def guard_band_buckets_broadcast(
-    cached_bands: DataFrame, max_bucket_rows: int = MAX_BAND_BUCKET_ROWS
-) -> DataFrame:
-    """Standalone guard for a PERSISTED band table (e.g. validating the
-    incremental band index before publishing an append) — same
-    hard-fail contract as :func:`guard_band_buckets`, but instead of
-    window-counting (which shuffles and sorts the ENTIRE band table) it
-    aggregates per-bucket counts, keeps only the VIOLATING buckets —
-    empty on every healthy corpus — and broadcast-left-joins them back;
-    a row landing in a broadcast-matched bucket raises with the same
-    remediation. Healthy-path cost: one map-side-combinable count
-    aggregate plus an empty broadcast — no extra full-table shuffle, no
-    sort (measured 1.13× cheaper end-to-end than the window form at
-    sf0.1, identical pair sets). The batch CANDIDATE path no longer
-    routes through this function: :func:`candidate_pairs_minhash` (r8)
-    fuses the same cap into the collect_list aggregate it needs anyway,
-    which beat this guard-then-self-join shape by a further 0.7× —
-    this form remains for guarding a band table you are NOT about to
-    pair-expand.
-
-    ``cached_bands`` MUST be persisted (or otherwise cheap to re-read):
-    the hot-bucket aggregate is a second consumer of it, and an
-    unpersisted expensive lineage (minhash banding) would be computed
-    twice — measured 1.7× SLOWER than the window form when miswired
-    that way. The violating set is limit-capped before broadcast: ONE
-    violating bucket in the broadcast is enough to trip the guard, so
-    the cap cannot mask a violation, it only bounds driver memory when
-    a degenerate corpus violates in thousands of buckets at once."""
-    hot = (
-        cached_bands.groupBy("band_id", "band_key")
-        .agg(F.count(F.lit(1)).alias("__bucket_n"))
-        .filter(F.col("__bucket_n") > F.lit(max_bucket_rows))
-        .limit(512)
-    )
-    joined = cached_bands.join(
-        F.broadcast(hot), ["band_id", "band_key"], "left"
-    )
-    ok = F.when(
-        F.col("__bucket_n").isNotNull(),
-        F.raise_error(_bucket_overflow_message(max_bucket_rows)).cast(
-            "boolean"
-        ),
-    ).otherwise(F.lit(True))
-    # re-select in the input's column order (the join moves its keys
-    # first) so both guard forms are drop-in interchangeable
-    return joined.filter(ok).select(*cached_bands.columns)
-
-
-def _bucket_overflow_message_capped(max_bucket_rows: int) -> Column:
-    """Failure text for the capped fused form: the row_number cap stops
-    counting at ``max_bucket_rows + 1``, so the exact bucket size is
-    unknowable by design — the message says "at least" instead."""
-    return F.concat_ws(
-        "",
-        F.lit("LSH band bucket (band_id="),
-        F.col("band_id").cast("string"),
-        F.lit(", band_key="),
-        F.substring(F.col("band_key"), 1, 64),
-        F.lit(f") holds at least {max_bucket_rows + 1}"),
-        F.lit(
-            f" rows (cap {max_bucket_rows}): the band self-join would "
-            "square this bucket into an unboundable candidate set. "
-            "Exact-dedup identical documents first, raise ROWS_PER_BAND "
-            "for more selective bands, or sub-split the bucket key."
-        ),
-    )
 
 
 def candidate_pairs_minhash(
@@ -393,7 +326,9 @@ def candidate_pairs_minhash(
     ok = F.when(
         F.col("__bucket_n") > F.lit(max_bucket_rows),
         F.raise_error(
-            _bucket_overflow_message_capped(max_bucket_rows)
+            _bucket_overflow_message(
+                max_bucket_rows, F.lit(f"at least {max_bucket_rows + 1}")
+            )
         ).cast("boolean"),
     ).otherwise(F.lit(True))
     g = g.filter(ok).filter(F.col("__bucket_n") >= 2)
@@ -638,6 +573,7 @@ def cosine_pairs_vectorized(
     threshold: float = 0.3,
     max_block_rows: int = MAX_COSINE_BLOCK_ROWS,
     carry_col: str | None = None,
+    cut: int | None = None,
 ) -> DataFrame:
     """Numpy fast path for within-block cosine near-dup pairs: each block
     is scored with ONE BLAS gram matrix (applyInPandas per block) instead
@@ -645,7 +581,17 @@ def cosine_pairs_vectorized(
     leaves a block. Output sims are rounded to 4 places (threshold on 6),
     which absorbs the fold-vs-BLAS last-ulp difference, so the fold
     twin's oracle gates this one too; pair-set equality with the fold
-    twin is additionally asserted in tests.
+    twin is additionally asserted in tests. Pairs are (id_a < id_b).
+
+    ``cut`` (incremental gating): rows with ``id >= cut`` are the append,
+    rows below it the existing corpus, and each block is scored as ONE
+    rectangular delta×block matmul — emitting exactly the pairs an
+    append introduces (delta×existing plus delta×delta upper-triangle)
+    and never computing existing×existing entries, which the base
+    ingestion already decided. Per-block cost is O(|delta|·|block|), the
+    incremental-maintenance contract, not the full-gram O(|block|²).
+    ``cut=None`` makes every row delta: the rectangle is then the full
+    upper triangle.
 
     ``carry_col`` (r12, VERDICT r11 #1): optionally ride a per-row
     attribute through the kernel as ``{carry}_a``/``{carry}_b`` on each
@@ -654,44 +600,74 @@ def cosine_pairs_vectorized(
     carrying them costs two numpy gathers and deletes the two
     shuffle-joins consumers otherwise pay to stitch the attribute back
     on (llm_corpus_pipeline's d2 joins). Default None leaves the output
-    schema and plan byte-identical to pre-r12.
+    schema unchanged.
 
-    The O(b²)-per-block cost is GUARDED, not just documented: each task
-    asserts its block is under ``max_block_rows`` and fails with the
-    remediation (sub-bucket or band) in the message — executed
+    The per-task cost is GUARDED, not just documented: TWO bounds hold
+    the float64 element count to ``max_block_rows²`` — the rectangular
+    gram (|delta|·|block| ≤ cap², i.e. |block| ≤ cap when every row is
+    delta) AND the stacked/normalized block matrix itself (|block|·dim ≤
+    cap²; with a tiny delta the gram bound alone would admit an
+    arbitrarily large block, ADVICE r10). A breach fails the task with
+    the remediation (sub-bucket or band) in the message — executed
     distributed, costing zero extra jobs, so an oversized block can
     never silently absorb a cluster (the embedding_block_guard query is
-    the monitoring view of the same bound)."""
+    the monitoring view of the same bound). Arrow group transfer of the
+    raw block rows is upstream of the guard, so a pathological block can
+    still cost transfer before it fails."""
     import numpy as np
     import pandas as pd
 
+    def too_big(pdf: pd.DataFrame, what: str) -> ValueError:
+        return ValueError(
+            f"cosine block {pdf[block_col].iloc[0]!r} has {what} (envelope "
+            f"{max_block_rows}^2 elements): it would not fit a task. "
+            f"Sub-bucket the block key (e.g. AND with similarity.rp_bucket) "
+            f"or switch to LSH banding."
+        )
+
     def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_block_rows:
-            raise ValueError(
-                f"cosine block {pdf[block_col].iloc[0]!r} has {len(pdf)} rows "
-                f"(cap {max_block_rows}): O(b^2) scoring would not fit a "
-                f"task. Sub-bucket the block key (e.g. AND with "
-                f"similarity.rp_bucket) or switch to LSH banding."
-            )
         ids = pdf[id_col].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
+
+        def emit(a, b, sim) -> pd.DataFrame:
+            out = {
+                "id_a": ids[a],
+                "id_b": ids[b],
+                block_col: pdf[block_col].iloc[0],
+                "sim": sim,
+            }
+            if carry_col is not None:
+                carry = pdf[carry_col].to_numpy()[order]
+                out[f"{carry_col}_a"] = carry[a]
+                out[f"{carry_col}_b"] = carry[b]
+            return pd.DataFrame(out)
+
+        n = len(ids)
+        # ids sorted, so delta rows are the tail
+        n_exist = 0 if cut is None else int((ids < cut).sum())
+        n_delta = n - n_exist
+        if n_delta == 0:  # all-existing block: nothing new to score
+            none = np.array([], dtype=np.int64)
+            return emit(none, none, np.array([], dtype=np.float64))
+        if n_delta * n > max_block_rows * max_block_rows:
+            raise too_big(pdf, f"{n_delta} delta × {n} total rows")
+        dim = len(pdf[vec_col].iloc[0])
+        if n * dim > max_block_rows * max_block_rows:
+            raise too_big(pdf, f"{n} rows × dim {dim}: the block matrix itself")
         v = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
         v /= np.linalg.norm(v, axis=1, keepdims=True)
-        sims = v @ v.T
-        iu, ju = np.triu_indices(len(ids), k=1)
-        sel = np.round(sims[iu, ju], 6) >= threshold
-        out = {
-            "id_a": ids[iu[sel]],
-            "id_b": ids[ju[sel]],
-            block_col: pdf[block_col].iloc[0],
-            "sim": np.round(sims[iu, ju][sel], 4),
-        }
-        if carry_col is not None:
-            carry = pdf[carry_col].to_numpy()[order]
-            out[f"{carry_col}_a"] = carry[iu[sel]]
-            out[f"{carry_col}_b"] = carry[ju[sel]]
-        return pd.DataFrame(out)
+        sims = v[n_exist:] @ v.T  # (n_delta, n)
+        cols = np.arange(n)[None, :]
+        rows_g = (n_exist + np.arange(n_delta))[:, None]
+        # keep delta×existing (col < n_exist) and delta×delta strictly
+        # above the diagonal (col > global row) — never existing×existing
+        keep = (cols < n_exist) | (cols > rows_g)
+        di, cj = np.nonzero(keep & (np.round(sims, 6) >= threshold))
+        gi = n_exist + di
+        return emit(
+            np.minimum(gi, cj), np.maximum(gi, cj), np.round(sims[di, cj], 4)
+        )
 
     block_type = df.schema[block_col].dataType.simpleString()
     cols = [id_col, vec_col, block_col]
@@ -702,105 +678,6 @@ def cosine_pairs_vectorized(
         schema += f", {carry_col}_a {carry_type}, {carry_col}_b {carry_type}"
     return df.select(*cols).groupBy(block_col).applyInPandas(
         per_block, schema
-    )
-
-
-def cosine_pairs_vectorized_delta(
-    df: DataFrame,
-    cut: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
-    threshold: float = 0.3,
-    max_block_rows: int = MAX_COSINE_BLOCK_ROWS,
-) -> DataFrame:
-    """Delta-aware variant of cosine_pairs_vectorized for incremental
-    gating: rows with ``id >= cut`` are the append, rows below it the
-    existing corpus, and the kernel scores ONE rectangular delta×block
-    matmul per block — emitting exactly the pairs an append introduces
-    (delta×existing plus delta×delta upper-triangle) and never computing
-    existing×existing entries, which the base ingestion already decided.
-    Per-block cost is O(|delta|·|block|), the incremental-maintenance
-    contract, not the full-gram O(|block|²) — with a large stored corpus
-    and a small daily batch the difference is the whole point.
-
-    Output schema and value discipline are identical to the full-gram
-    kernel (ids sorted so id_a < id_b; sims rounded to 4, threshold on
-    6, the same fold-vs-BLAS rounding adjudication). TWO guards bound
-    the per-task float64 element count to the full kernel's envelope at
-    its cap (max_block_rows² elements): the rectangular gram
-    (|delta|·|block| ≤ cap²) AND the stacked/normalized block matrix
-    itself (|block|·dim ≤ cap²) — the second closes the ADVICE r10 gap
-    where n_delta=1 let an arbitrarily large block pass the gram bound
-    yet still materialize as one applyInPandas group plus an n×dim
-    matrix. The bounds cover the matrices this kernel allocates; Arrow
-    group transfer of the raw block rows is upstream of the guard, so a
-    pathological block can still cost transfer before it fails — the
-    failure is guaranteed, zero-cost admission is not."""
-    import numpy as np
-    import pandas as pd
-
-    def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids_raw = pdf[id_col].to_numpy()
-        n_delta = int((ids_raw >= cut).sum())
-        empty = pd.DataFrame(
-            {
-                "id_a": np.array([], dtype=np.int64),
-                "id_b": np.array([], dtype=np.int64),
-                block_col: pdf[block_col].iloc[:0],
-                "sim": np.array([], dtype=np.float64),
-            }
-        )
-        if n_delta == 0:
-            return empty
-        if n_delta * len(pdf) > max_block_rows * max_block_rows:
-            raise ValueError(
-                f"cosine block {pdf[block_col].iloc[0]!r} has "
-                f"{n_delta} delta × {len(pdf)} total rows (envelope "
-                f"{max_block_rows}^2): the rectangular gram would not fit "
-                f"a task. Sub-bucket the block key (e.g. AND with "
-                f"similarity.rp_bucket) or switch to LSH banding."
-            )
-        dim = len(pdf[vec_col].iloc[0])
-        if len(pdf) * dim > max_block_rows * max_block_rows:
-            # absolute block bound (ADVICE r10): even with a tiny delta,
-            # the stacked n×dim float64 matrix must fit the same cap²
-            # element envelope as the gram
-            raise ValueError(
-                f"cosine block {pdf[block_col].iloc[0]!r} has "
-                f"{len(pdf)} rows × dim {dim} (envelope "
-                f"{max_block_rows}^2 elements): the block matrix itself "
-                f"would not fit a task. Sub-bucket the block key (e.g. "
-                f"AND with similarity.rp_bucket) or switch to LSH banding."
-            )
-        order = np.argsort(ids_raw)
-        ids = ids_raw[order]
-        v = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
-        v /= np.linalg.norm(v, axis=1, keepdims=True)
-        n = len(ids)
-        n_exist = n - n_delta  # ids sorted, so delta rows are the tail
-        sims = v[n_exist:] @ v.T  # (n_delta, n)
-        cols = np.arange(n)[None, :]
-        rows_g = (n_exist + np.arange(n_delta))[:, None]
-        # keep delta×existing (col < n_exist) and delta×delta strictly
-        # above the diagonal (col > global row) — never existing×existing
-        keep = (cols < n_exist) | (cols > rows_g)
-        sel = keep & (np.round(sims, 6) >= threshold)
-        di, cj = np.nonzero(sel)
-        gi = n_exist + di
-        return pd.DataFrame(
-            {
-                "id_a": np.minimum(ids[gi], ids[cj]),
-                "id_b": np.maximum(ids[gi], ids[cj]),
-                block_col: pdf[block_col].iloc[0],
-                "sim": np.round(sims[di, cj], 4),
-            }
-        )
-
-    block_type = df.schema[block_col].dataType.simpleString()
-    return df.select(id_col, vec_col, block_col).groupBy(block_col).applyInPandas(
-        per_block,
-        f"id_a bigint, id_b bigint, {block_col} {block_type}, sim double",
     )
 
 

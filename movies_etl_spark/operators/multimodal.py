@@ -13,6 +13,14 @@ audio changes nothing in the operator. Deeper media decode (image pixel
 decode, video codecs) would hang off the same Arrow batch shape via
 PIL/av/ffmpeg, which this container does not ship.
 
+Worker independence: Python workers must not need ``movies_etl_spark``
+importable (a caller may start Spark from any cwd). The module is
+therefore registered with cloudpickle's ``register_pickle_by_value`` (at
+the bottom of this file), so a UDF body that calls a codec here ships
+the codec's code with it instead of a reference to this module. Each
+codec is written once and called by every UDF that needs it, rather than
+inlined into each UDF body.
+
 Scale notes: `mapInPandas` streams Arrow batches, so payload bytes never
 materialize per-row in Python object form; batch size is controlled by
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` (drop it for multi-MB
@@ -22,9 +30,11 @@ with the scan."""
 from __future__ import annotations
 
 import struct
+import sys
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -115,34 +125,13 @@ def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     declared size). Real pipelines read the bytes from object storage;
     here the payload is a VALID PCM WAV file whose sample data is the
     utf-8 encoding of the text column — deterministic, oracle-checkable,
-    and genuinely parseable by any WAV reader.
-
-    The synth runs as an Arrow-batched scalar pandas UDF (binary out);
-    everything it calls is defined inside so cloudpickle serializes by
-    value (workers need no ``movies_etl_spark`` on sys.path)."""
+    and genuinely parseable by any WAV reader. The synth
+    (:func:`synth_wav_bytes`) runs as an Arrow-batched scalar pandas UDF
+    (binary out)."""
 
     @F.pandas_udf("binary")
     def wav_payload(texts: pd.Series) -> pd.Series:
-        import struct as _struct
-
-        def synth(t: str) -> bytes:
-            data = t.encode("utf-8")
-            n = len(data)
-            ch = n % 2 + 1
-            sr = 8000 + (n % 7) * 1000
-            ba = ch * 2
-            return (
-                b"RIFF"
-                + _struct.pack("<I", 36 + n)
-                + b"WAVE"
-                + b"fmt "
-                + _struct.pack("<IHHIIHH", 16, 1, ch, sr, sr * ba, ba, 16)
-                + b"data"
-                + _struct.pack("<I", n)
-                + data
-            )
-
-        return texts.map(synth)
+        return texts.map(lambda t: synth_wav_bytes(t.encode("utf-8")))
 
     return df.withColumn("payload", wav_payload(F.col(text_col))).withColumn(
         "media_meta",
@@ -157,52 +146,46 @@ def extract_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Arrow-batched feature extraction over the binary payload column:
     a real RIFF/WAVE header parse per payload (see
     :func:`decode_wav_header`) — the canonical shape for decode / resize /
-    frame-sample operators at scale.
-
-    IMPORTANT: everything the UDF calls is defined INSIDE this function so
-    cloudpickle serializes it by value — Python workers must not need
-    ``movies_etl_spark`` importable on their own sys.path (the driver
-    harness may run from any cwd)."""
+    frame-sample operators at scale."""
+    cols = ["n_bytes", "sample_rate", "n_channels", "n_samples", "duration_ms"]
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        def decode(payload: bytes) -> dict:
-            # inlined decode_wav_header (by-value pickling — see above)
-            if payload is None:
-                raise ValueError("no payload")
-            if len(payload) < 44 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE payload")
-            fmt = None
-            data_size = None
-            pos = 12
-            while pos + 8 <= len(payload):
-                cid = payload[pos : pos + 4]
-                (csz,) = _struct.unpack("<I", payload[pos + 4 : pos + 8])
-                if cid == b"fmt " and csz >= 16:
-                    fmt = _struct.unpack("<HHIIHH", payload[pos + 8 : pos + 24])
-                elif cid == b"data":
-                    data_size = csz
-                pos += 8 + csz + (csz & 1)
-            if fmt is None or data_size is None:
-                raise ValueError("missing fmt/data chunk")
-            _, n_channels, sample_rate, _, block_align, _ = fmt
-            n_samples = data_size // block_align
-            return {
-                "n_bytes": len(payload),
-                "sample_rate": sample_rate,
-                "n_channels": n_channels,
-                "n_samples": n_samples,
-                "duration_ms": n_samples * 1000 // sample_rate,
-            }
-
         for pdf in batches:
-            feats = pdf["payload"].map(decode)
-            out = pd.DataFrame(list(feats))
+            out = pd.DataFrame(
+                [decode_wav_header(p) for p in pdf["payload"]], columns=cols
+            )
             out.insert(0, "doc_id", pdf[id_col].values)
             yield out
 
     return df.select(F.col(id_col), "payload").mapInPandas(op, FEATURE_SCHEMA)
+
+
+def frame_offsets(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """1:N frame sampling over the WAV payload column: one output row per
+    sampled frame (every 2nd :data:`FRAME_SAMPLES`-sample frame) with its
+    byte offset into the container — the shape of a video/audio
+    frame-extraction stage. The frame grid comes from the real header
+    parse (:func:`decode_wav_header`): n_samples and block_align are
+    recovered from the RIFF/WAVE bytes, and offsets point at actual
+    sample-data positions (44-byte canonical header + frame index ×
+    frame stride). Output: (doc_id, frame_idx, frame_offset)."""
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+                h = decode_wav_header(payload)
+                n_frames = (h["n_samples"] + FRAME_SAMPLES - 1) // FRAME_SAMPLES
+                stride = FRAME_SAMPLES * h["block_align"]
+                for i in range(0, n_frames, 2):  # sample every 2nd frame
+                    rows.append((doc_id, i, WAV_HEADER_BYTES + i * stride))
+            yield pd.DataFrame(
+                rows, columns=["doc_id", "frame_idx", "frame_offset"]
+            )
+
+    return df.select(F.col(id_col), "payload").mapInPandas(
+        op, "doc_id bigint, frame_idx bigint, frame_offset bigint"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -295,46 +278,19 @@ MIXED_FEATURE_SCHEMA = (
 
 
 def with_mixed_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Mixed-modality ingest simulator: even doc_ids carry a valid BMP,
-    odd doc_ids a valid PCM WAV, both synthesized from the text column
+    """Mixed-modality ingest simulator: even doc_ids carry a valid BMP
+    (:func:`synth_bmp_bytes`), odd doc_ids a valid PCM WAV
+    (:func:`synth_wav_bytes`), both synthesized from the text column
     with length-derived oracle-predictable parameters. Arrow-batched
-    scalar pandas UDF; everything inlined for by-value pickling."""
+    scalar pandas UDF."""
 
     @F.pandas_udf("binary")
     def payload_udf(doc_ids: pd.Series, texts: pd.Series) -> pd.Series:
-        import struct as _struct
-
-        def wav(data):
-            n = len(data)
-            ch = n % 2 + 1
-            sr = 8000 + (n % 7) * 1000
-            ba = ch * 2
-            return (
-                b"RIFF" + _struct.pack("<I", 36 + n) + b"WAVE"
-                + b"fmt "
-                + _struct.pack("<IHHIIHH", 16, 1, ch, sr, sr * ba, ba, 16)
-                + b"data" + _struct.pack("<I", n) + data
-            )
-
-        def bmp(data):
-            n = len(data)
-            w = n % 13 + 4
-            h = n % 7 + 3
-            stride = (3 * w + 3) // 4 * 4
-            need = stride * h
-            reps = need // max(n, 1) + 1 if n else 0
-            pixels = (data * reps)[:need] if n else b"\x00" * need
-            return (
-                b"BM" + _struct.pack("<IHHI", 54 + need, 0, 0, 54)
-                + _struct.pack(
-                    "<IiiHHIIiiII", 40, w, h, 1, 24, 0, need, 2835, 2835, 0, 0
-                )
-                + pixels
-            )
-
         return pd.Series(
             [
-                bmp(t.encode("utf-8")) if i % 2 == 0 else wav(t.encode("utf-8"))
+                (synth_bmp_bytes if i % 2 == 0 else synth_wav_bytes)(
+                    t.encode("utf-8")
+                )
                 for i, t in zip(doc_ids, texts)
             ]
         )
@@ -343,56 +299,27 @@ def with_mixed_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def extract_mixed_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Mixed-modality decode: sniff the magic bytes per payload, route to
-    the matching REAL header parser, and emit the union feature schema
-    (audio columns null for images and vice versa). One Arrow-batched
-    map — no shuffle, colocated with the scan; the per-kind parsers are
-    the same chunk-walk / struct-unpack code paths as the single-kind
-    operators. Inlined for by-value pickling."""
+    """Mixed-modality decode: sniff the magic bytes per payload
+    (:func:`sniff_media_kind`), route to the matching REAL header parser
+    (:func:`decode_wav_header` / :func:`decode_bmp_header`), and emit the
+    union feature schema (audio columns null for images and vice versa).
+    One Arrow-batched map — no shuffle, colocated with the scan."""
+
+    def features(doc_id, p) -> tuple:
+        kind = sniff_media_kind(p)
+        audio, image = (None, None), (None, None, None)
+        if kind == "audio/wav":
+            h = decode_wav_header(p)
+            audio = (h["sample_rate"], h["duration_ms"])
+        elif kind == "image/bmp":
+            h = decode_bmp_header(p)
+            image = (h["width"], h["height"], h["pixel_bytes"])
+        return (doc_id, kind, len(p), *audio, *image)
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        def wav_meta(p):
-            fmt = None
-            data_size = None
-            pos = 12
-            while pos + 8 <= len(p):
-                cid = p[pos : pos + 4]
-                (csz,) = _struct.unpack("<I", p[pos + 4 : pos + 8])
-                if cid == b"fmt " and csz >= 16:
-                    fmt = _struct.unpack("<HHIIHH", p[pos + 8 : pos + 24])
-                elif cid == b"data":
-                    data_size = csz
-                pos += 8 + csz + (csz & 1)
-            _, ch, sr, _, ba, _ = fmt
-            ns = data_size // ba
-            return sr, ns * 1000 // sr
-
-        def bmp_meta(p):
-            (_, w, h, _, bpp, _) = _struct.unpack("<IiiHHI", p[14:34])
-            stride = (w * bpp // 8 + 3) // 4 * 4
-            return w, abs(h), stride * abs(h)
-
         for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf[id_col], pdf["payload"]):
-                if len(p) >= 12 and p[:4] == b"RIFF" and p[8:12] == b"WAVE":
-                    sr, dur = wav_meta(p)
-                    rows.append(
-                        (doc_id, "audio/wav", len(p), sr, dur, None, None, None)
-                    )
-                elif p[:2] == b"BM":
-                    w, h, pb = bmp_meta(p)
-                    rows.append(
-                        (doc_id, "image/bmp", len(p), None, None, w, h, pb)
-                    )
-                else:
-                    rows.append(
-                        (doc_id, "unknown", len(p), None, None, None, None, None)
-                    )
             yield pd.DataFrame(
-                rows,
+                [features(i, p) for i, p in zip(pdf[id_col], pdf["payload"])],
                 columns=[
                     "doc_id", "kind", "n_bytes", "sample_rate",
                     "duration_ms", "width", "height", "pixel_bytes",
@@ -402,3 +329,6 @@ def extract_mixed_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.select(F.col(id_col), "payload").mapInPandas(
         op, MIXED_FEATURE_SCHEMA
     )
+
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -59,13 +59,6 @@ def join_left_on_keys(
     ).drop(right[right_key])
 
 
-def dedup_by_key(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """D1 (order-insensitive form): drop duplicate rows by key
-    (challenge.py:91). Arbitrary survivor — cheapest plan, use when the
-    downstream contract is order-insensitive."""
-    return df.dropDuplicates(list(keys))
-
-
 def dedup_first_wins(
     df: DataFrame, keys: Sequence[str], order_by: Sequence[str]
 ) -> DataFrame:

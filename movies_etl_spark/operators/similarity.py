@@ -73,14 +73,7 @@ def topk_bruteforce(
             F.round(cosine_expr("qvec", "cvec"), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _topk_by_sim(scored, k)
 
 
 def label_centroids(
@@ -168,23 +161,7 @@ def topk_ivf(
             F.round(cosine_expr("qvec", "cvec"), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def sq_dist(a: Column, b: Column) -> Column:
-    """Squared euclidean distance as a left-to-right double fold (same
-    bit-reproducibility discipline as dedup.dot_expr/l2norm_expr)."""
-    diff = F.zip_with(
-        a,
-        b,
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-    return F.aggregate(diff, F.lit(0.0), lambda acc, v: acc + v)
+    return _topk_by_sim(scored, k)
 
 
 def _centroid_boundary(cents: DataFrame) -> DataFrame:
@@ -225,10 +202,10 @@ def _assign_cells(v_df: DataFrame, cents: DataFrame) -> DataFrame:
         F.collect_list(F.struct("cell", "centroid")).alias("cc")
     )
     # single-parse argmin (r19, guide §1.2 build cost): the python-HOF
-    # construction (transform lambda + sq_dist's zip_with/aggregate
-    # lambdas) cost ~0.3-0.5 s of py4j chatter per assignment pass;
-    # this is the identical expression tree — same casts, same fold
-    # order, same 6-place rounding — in one parse.
+    # construction (transform lambda + zip_with/aggregate lambdas) cost
+    # ~0.3-0.5 s of py4j chatter per assignment pass; this is the
+    # identical expression tree — same casts, same fold order, same
+    # 6-place rounding — in one parse.
     best = F.expr(
         "array_min(transform(cc, c -> struct("
         "round(aggregate(zip_with(vd, c.centroid, (x, y) -> "
@@ -397,11 +374,7 @@ def topk_bruteforce_vectorized(
     local = corpus.select(id_col, vec_col).mapInPandas(
         score, "query_id bigint, neighbor_id bigint, sim double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk_by_sim(local, k)
 
 
 # ---------------------------------------------------------------------------
@@ -422,33 +395,6 @@ def _rp_value(j: int, i: int) -> float:
 
     h = int(hashlib.md5(f"rp:{j}:{i}".encode()).hexdigest()[:6], 16)
     return (h % 2001 - 1000) / 1000.0
-
-
-RP_PLANES: list[list[float]] = [
-    [_rp_value(j, i) for i in range(RP_DIM)] for j in range(RP_N_PLANES)
-]
-
-
-#: probe-bucket XOR offsets for multi-probe sign-LSH at Hamming radius 2:
-#: every 8-bit mask with ≤2 bits set (1 + 8 + 28 = 37 probes of 256
-#: buckets ≈ 14% of the corpus at uniform occupancy). Derived, not
-#: random — both engines enumerate the identical literal list.
-MULTIPROBE_OFFSETS_H2: list[int] = (
-    [0]
-    + [1 << i for i in range(RP_N_PLANES)]
-    + [
-        (1 << i) | (1 << j)
-        for i in range(RP_N_PLANES)
-        for j in range(i + 1, RP_N_PLANES)
-    ]
-)
-
-#: Hamming-radius-1 probe set (1 + 8 = 9 of 256 buckets): the cheaper
-#: dial for CLUSTERED corpora, where a query's true neighbors share most
-#: signature bits and radius 1 already recovers them (measured on the
-#: clustered fixture below: recall@5 ≈ 0.97 at a ~14% scan, vs 0.35 at
-#: ~15% for radius 2 on isotropic vectors — tests/test_ann_recall.py).
-MULTIPROBE_OFFSETS_H1: list[int] = [0] + [1 << i for i in range(RP_N_PLANES)]
 
 
 def rp_planes_n(n_planes: int, dim: int = RP_DIM) -> list[list[float]]:
@@ -476,11 +422,33 @@ def multiprobe_offsets(n_planes: int, radius: int) -> list[int]:
     ]
 
 
-def rp_bucket_n(vec: str, n_planes: int) -> Column:
-    """Parametrized sign-LSH bucket in [0, 2^n_planes) over the shared
-    md5 plane family — :func:`rp_bucket` is the n_planes=8 member (same
-    rounding discipline: projection rounded to 6 before the sign test).
-    Pure per-row map, same scale shape as rp_bucket.
+#: the default-width plane family (rp_bucket at RP_N_PLANES)
+RP_PLANES: list[list[float]] = rp_planes_n(RP_N_PLANES)
+
+#: probe-bucket XOR offsets for multi-probe sign-LSH at Hamming radius 2:
+#: every 8-bit mask with ≤2 bits set (1 + 8 + 28 = 37 probes of 256
+#: buckets ≈ 14% of the corpus at uniform occupancy). Derived, not
+#: random — both engines enumerate the identical literal list.
+MULTIPROBE_OFFSETS_H2: list[int] = multiprobe_offsets(RP_N_PLANES, 2)
+
+#: Hamming-radius-1 probe set (1 + 8 = 9 of 256 buckets): the cheaper
+#: dial for CLUSTERED corpora, where a query's true neighbors share most
+#: signature bits and radius 1 already recovers them (measured on the
+#: clustered fixture below: recall@5 ≈ 0.97 at a ~14% scan, vs 0.35 at
+#: ~15% for radius 2 on isotropic vectors — tests/test_ann_recall.py).
+MULTIPROBE_OFFSETS_H1: list[int] = multiprobe_offsets(RP_N_PLANES, 1)
+
+
+def rp_bucket(vec: str, n_planes: int = RP_N_PLANES) -> Column:
+    """Sign-LSH bucket id in [0, 2^n_planes): bit j is the sign of the
+    dot product with hyperplane j of the shared md5 plane family
+    (:func:`rp_planes_n`), the dot rounded to 6 places before the sign
+    test so a near-zero projection cannot flip between engines. Pure
+    per-row map — the corpus is bucketed in the same scan that reads it,
+    and at scale the bucket doubles as the layout partition key exactly
+    like the IVF cell. The default width uses :data:`RP_PLANES`; wider
+    requests extend the same family, so a narrower signature is a prefix
+    of a wider one.
 
     ``vec`` is the NAME of an array column; it must be a plain name
     (``\\w+``; ValueError otherwise). The whole bucket column — each
@@ -513,10 +481,9 @@ def lsh_candidates(
     bucket, sim): each query probes its own ``n_planes``-bit bucket
     XORed with every mask in ``offsets``, and every corpus row in a
     probed bucket (bar the query itself) is scored by exact cosine
-    rounded to 6. The candidate stage of :func:`topk_multiprobe_lsh`
-    and :func:`topk_multiprobe_lsh_param`, exposed so a sweep can meter
-    SCAN WORK (candidate row count) separately from result quality
-    (recall of the top-k cut).
+    rounded to 6. The candidate stage of :func:`topk_multiprobe_lsh`,
+    exposed so a sweep can meter SCAN WORK (candidate row count)
+    separately from result quality (recall of the top-k cut).
 
     Scale shape: probes are queries × len(offsets) — a broadcast-sized
     frame — and candidate generation is a pure EQUI-join on the probe
@@ -528,13 +495,13 @@ def lsh_candidates(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cvec"),
-        rp_bucket_n(vec_col, n_planes).cast("int").alias("bucket"),
+        rp_bucket(vec_col, n_planes).cast("int").alias("bucket"),
         l2norm_expr(vec_col).alias("cnrm"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
-        rp_bucket_n(vec_col, n_planes).cast("int").alias("qbucket"),
+        rp_bucket(vec_col, n_planes).cast("int").alias("qbucket"),
         l2norm_expr(vec_col).alias("qnrm"),
     )
     probes = q.withColumn(
@@ -566,29 +533,6 @@ def _topk_by_sim(cands: DataFrame, k: int) -> DataFrame:
         F.col("rank") <= k
     )
 
-
-def topk_multiprobe_lsh_param(
-    corpus: DataFrame,
-    queries: DataFrame,
-    n_planes: int,
-    radius: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Top-k cut of :func:`lsh_candidates` over every probe within
-    Hamming ``radius`` of an ``n_planes``-bit signature — the tunable
-    operating-point form of :func:`topk_multiprobe_lsh` (which is the
-    frozen n_planes=8/radius=2 member). The ISOTROPIC operating point
-    the frontier sweep selected: n_planes=8, radius=3 — recall@5
-    0.625 at a 37% scan budget (0.675 at 39% for 10/4; see SCALE.md's
-    frontier table and the ann_frontier_sweep query) — against the
-    honest isotropic ceiling where recall-per-scan caps near ~1.7×;
-    clustered corpora reach 0.97@5 at 14% with radius 1."""
-    offs = multiprobe_offsets(n_planes, radius)
-    return _topk_by_sim(
-        lsh_candidates(corpus, queries, n_planes, offs, id_col, vec_col), k
-    )
 
 #: clustered-fixture noise scale: cluster member = center + NOISE·self.
 #: At 0.12 the within-cluster cosine is ≈ 0.97 — tight clusters like
@@ -633,20 +577,6 @@ def clustered_fixture(
     )
 
 
-def rp_bucket(vec: str) -> Column:
-    """Sign-LSH bucket id in [0, 2^RP_N_PLANES): bit j is the sign of the
-    dot product with hyperplane j (dot rounded to 6 places before the
-    sign test so a near-zero projection cannot flip between engines).
-    Pure per-row map — the corpus is bucketed in the same scan that
-    reads it, and at scale the bucket doubles as the layout partition
-    key exactly like the IVF cell.
-
-    This is :func:`rp_bucket_n`'s n=8 member (planes 0..7 of the md5
-    family ARE :data:`RP_PLANES` — the prefix property in rp_planes_n's
-    doc), so ``vec`` is likewise a plain column NAME."""
-    return rp_bucket_n(vec, RP_N_PLANES)
-
-
 def topk_multiprobe_lsh(
     corpus: DataFrame,
     queries: DataFrame,
@@ -667,8 +597,14 @@ def topk_multiprobe_lsh(
     The top-k cut of :func:`lsh_candidates` at RP_N_PLANES planes, with
     ``offsets`` defaulting to MULTIPROBE_OFFSETS_H2: the probe expansion
     is queries × 37 XOR offsets, and a 37-probe query prunes to 37 of
-    256 partitions at the FILE level at scale. Output: (query_id,
-    neighbor_id, bucket, sim, rank)."""
+    256 partitions at the FILE level at scale. ``offsets=[0]`` is
+    single-probe LSH (each query reranks only its own bucket). The
+    ISOTROPIC operating point the frontier sweep selected is
+    ``offsets=multiprobe_offsets(8, 3)`` — recall@5 0.625 at a 37% scan
+    budget (see SCALE.md's frontier table and the ann_frontier_sweep
+    query); clustered corpora reach 0.97@5 at 14% with
+    MULTIPROBE_OFFSETS_H1. Output: (query_id, neighbor_id, bucket, sim,
+    rank)."""
     offs = MULTIPROBE_OFFSETS_H2 if offsets is None else offsets
     return _topk_by_sim(
         lsh_candidates(corpus, queries, RP_N_PLANES, offs, id_col, vec_col), k

@@ -631,38 +631,9 @@ def q_similarity_ann_lsh(spark, sf_dir):
     in another bucket is missed — multi-probe or more tables raise it);
     the top-3-within-bucket output makes that trade-off inspectable
     against similarity_topk's exact answer."""
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        SIM.rp_bucket("embedding").cast("int").alias("bucket"),
-        D.l2norm_expr("embedding").alias("nrm"),
-    )
-    qs = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        F.col("bucket").alias("qbucket"),
-        F.col("nrm").alias("qnrm"),
-    )
-    cand = e.join(
-        F.broadcast(qs),
-        (F.col("bucket") == F.col("qbucket"))
-        & (F.col("vec_id") != F.col("query_id")),
-    )
-    sim = F.round(
-        D.dot_expr("qvec", "embedding") / (F.col("qnrm") * F.col("nrm")), 6
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        cand.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "bucket",
-            sim.alias("sim"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
+    e = _t(spark, sf_dir, "embeddings")
+    return SIM.topk_multiprobe_lsh(
+        e, e.filter(F.col("vec_id") < 8), k=3, offsets=[0]
     )
 
 
@@ -1171,44 +1142,7 @@ def q_multimodal_frame_sample(spark, sf_dir):
     RIFF/WAVE bytes, and offsets point at actual sample-data positions
     (44-byte canonical header + frame index × frame stride)."""
     d = _t(spark, sf_dir, "documents")
-    with_payload = MM.with_binary_payload(d)
-    frame = MM.FRAME_SAMPLES
-
-    def op(batches):
-        import struct as _struct
-
-        import pandas as pd
-
-        def parse(payload):
-            # inline RIFF walk (by-value pickling; see multimodal.py)
-            fmt = None
-            data_size = None
-            pos = 12
-            while pos + 8 <= len(payload):
-                cid = payload[pos : pos + 4]
-                (csz,) = _struct.unpack("<I", payload[pos + 4 : pos + 8])
-                if cid == b"fmt " and csz >= 16:
-                    fmt = _struct.unpack("<HHIIHH", payload[pos + 8 : pos + 24])
-                elif cid == b"data":
-                    data_size = csz
-                pos += 8 + csz + (csz & 1)
-            return fmt[4], data_size  # block_align, data bytes
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                ba, data_size = parse(payload)
-                n_samples = data_size // ba
-                n_frames = (n_samples + frame - 1) // frame
-                for i in range(0, n_frames, 2):  # sample every 2nd frame
-                    rows.append((doc_id, i, 44 + i * frame * ba))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "frame_offset"]
-            )
-
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        op, "doc_id bigint, frame_idx bigint, frame_offset bigint"
-    )
+    return MM.frame_offsets(MM.with_binary_payload(d))
 
 
 @query(
@@ -2414,9 +2348,7 @@ def q_ann_frontier_sweep(spark, sf_dir):
         sel = [
             F.col("vec_id").alias("neighbor_id"),
             F.col("embedding").alias("cvec"),
-            SIM.rp_bucket_n("embedding", width)
-            .cast("int")
-            .alias("bucket"),
+            SIM.rp_bucket("embedding", width).cast("int").alias("bucket"),
             l2norm_expr("embedding").alias("cnrm"),
         ]
         if cell_col is not None:
@@ -2835,7 +2767,7 @@ def q_similarity_ann_tuned(spark, sf_dir):
     itself regresses.
 
     Pure plan composition over green operators (clustered_fixture,
-    kmeans_assign, label_centroids, rp_bucket_n, multiprobe_offsets,
+    kmeans_assign, label_centroids, rp_bucket, multiprobe_offsets,
     topk_bruteforce) — ann_frontier_sweep itself is untouched. Plan
     shape follows the frontier's adopted shared-scan form: ONE
     signed+celled corpus checkpoint serves both families; each family
@@ -2867,9 +2799,7 @@ def q_similarity_ann_tuned(spark, sf_dir):
         cf.join(assigned, "vec_id").select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("embedding").alias("cvec"),
-            SIM.rp_bucket_n("embedding", 8).cast("int").alias(
-                "bucket"
-            ),
+            SIM.rp_bucket("embedding").cast("int").alias("bucket"),
             l2norm_expr("embedding").alias("cnrm"),
             "cell",
         ),

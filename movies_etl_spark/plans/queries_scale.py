@@ -2695,12 +2695,12 @@ def q_dedup_semantic_incremental(spark, sf_dir):
     numpy witness re-runs the chain.
 
     Pair scoring rides the delta-aware BLAS kernel
-    (cosine_pairs_vectorized_delta — the clusters sibling's blocked
-    shape with the incremental contract kept honest): one rectangular
-    delta×cell matmul per cell emits exactly the pairs the append
-    introduces (delta×existing, plus delta×delta above the diagonal),
-    so existing×existing entries — which the base ingestion already
-    decided — are never computed, and per-cell cost stays
+    (cosine_pairs_vectorized with ``cut`` — the clusters sibling's
+    blocked shape with the incremental contract kept honest): one
+    rectangular delta×cell matmul per cell emits exactly the pairs the
+    append introduces (delta×existing, plus delta×delta above the
+    diagonal), so existing×existing entries — which the base ingestion
+    already decided — are never computed, and per-cell cost stays
     O(|delta|·|cell|) as the contract above states, not the full-gram
     O(|cell|²). Mixed pairs sort the existing id left, so the gate
     rule's victim is id_b and the within-batch keep-the-atypical
@@ -2717,9 +2717,9 @@ def q_dedup_semantic_incremental(spark, sf_dir):
         SIM.kmeans_train_assign(base, e, k=4, iters=2)
     )
     m = asg.join(e.select("vec_id", "embedding"), "vec_id")
-    pairs = D.cosine_pairs_vectorized_delta(
-        m, cut=450, id_col="vec_id", vec_col="embedding", block_col="cell",
-        threshold=SEMDEDUP_TAU,
+    pairs = D.cosine_pairs_vectorized(
+        m, id_col="vec_id", vec_col="embedding", block_col="cell",
+        threshold=SEMDEDUP_TAU, cut=450,
     )
     d2s = asg.select("vec_id", "d2")
     victims = (

@@ -1,7 +1,7 @@
-"""Lakehouse table formats (Delta / Iceberg / Hudi) — gated stubs.
+"""Lakehouse table formats — a gated Delta sink stub.
 
-The v1 image ships no lakehouse jars; these helpers fail with a clear
-message instead of a classpath error, and become real with the jar on
+The v1 image ships no lakehouse jars; `write_delta` fails with a clear
+message instead of a classpath error, and becomes real with the jar on
 the classpath (`spark.jars.packages`). MERGE/SCD2 semantics are
 emulated engine-side meanwhile (anti-join + union + window — see
 `emulate_merge_into`).
@@ -34,12 +34,6 @@ def _require(module: str, package_hint: str):
 def write_delta(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     _require("delta", "io.delta:delta-spark_2.13")
     df.write.format("delta").mode(mode).save(path)
-
-
-def write_iceberg(df: DataFrame, table: str, mode: str = "overwrite") -> None:
-    _require("pyiceberg", "org.apache.iceberg:iceberg-spark-runtime")
-    writer = df.writeTo(table)
-    (writer.createOrReplace() if mode == "overwrite" else writer.append())
 
 
 def emulate_merge_into(

@@ -119,29 +119,21 @@ def test_plane_family_is_prefix_nested(spark):
     planes 0..7 of any wider request are exactly RP_PLANES (so every
     frontier config's signature is a prefix of the widest one — the
     property the sweep's single-signature scan relies on), and the
-    parametrized offset enumerator reproduces the frozen H1/H2 lists
-    verbatim."""
+    offset enumerator gives the H1/H2 probe sets in the order the
+    oracles' literal lists were first written: the query's own bucket,
+    then one bit, then each bit pair i < j."""
     assert SIM.rp_planes_n(16)[:8] == SIM.RP_PLANES
-    assert SIM.multiprobe_offsets(8, 1) == SIM.MULTIPROBE_OFFSETS_H1
-    assert SIM.multiprobe_offsets(8, 2) == SIM.MULTIPROBE_OFFSETS_H2
-
-
-def test_rp_bucket_n_8_matches_rp_bucket(spark, recall_frames):
-    """The parametrized bucketer's n=8 member is the frozen rp_bucket
-    bit-for-bit (same planes, same rounding discipline)."""
-    e, _, _ = recall_frames
-    both = e.select(
-        SIM.rp_bucket("embedding").cast("int").alias("b8"),
-        SIM.rp_bucket_n("embedding", 8).cast("int").alias("bn"),
-    )
-    assert both.filter(F.col("b8") != F.col("bn")).count() == 0
+    h1 = [0] + [1 << i for i in range(8)]
+    h2 = h1 + [(1 << i) | (1 << j) for i in range(8) for j in range(i + 1, 8)]
+    assert SIM.multiprobe_offsets(8, 1) == SIM.MULTIPROBE_OFFSETS_H1 == h1
+    assert SIM.multiprobe_offsets(8, 2) == SIM.MULTIPROBE_OFFSETS_H2 == h2
 
 
 def test_rp_bucket_n_str_matches_column(spark, recall_frames):
     """The single-parse bucket column matches an independent python
-    left fold over doubles at both widths (plane dot rounded to 6, sign
-    test per bit), and so do the fold kernels dot_expr, l2norm_expr
-    and cosine_expr."""
+    left fold over doubles at the default width and at width 16 (plane
+    dot rounded to 6, sign test per bit), and so do the fold kernels
+    dot_expr, l2norm_expr and cosine_expr."""
     import math
 
     from movies_etl_spark.operators import dedup as D
@@ -157,8 +149,8 @@ def test_rp_bucket_n_str_matches_column(spark, recall_frames):
     rows = e.select(
         F.col("embedding").alias("a"),
         F.reverse(F.col("embedding")).alias("b"),
-        SIM.rp_bucket_n("embedding", 8).cast("int").alias("b8"),
-        SIM.rp_bucket_n("embedding", 16).cast("int").alias("b16"),
+        SIM.rp_bucket("embedding").cast("int").alias("b8"),
+        SIM.rp_bucket("embedding", 16).cast("int").alias("b16"),
         D.dot_expr("a", "b").alias("d"),
         D.l2norm_expr("a").alias("n"),
         D.cosine_expr("a", "b").alias("c"),
@@ -185,9 +177,15 @@ def test_frontier_operating_point_floor(spark, recall_frames):
     (measured 0.625 there; 0.55 at this sf0.01 fixture — floor set
     under both), and radius must stay a monotone recall dial."""
     e, q, exact = recall_frames
-    r2 = SIM.recall_at_k(exact, SIM.topk_multiprobe_lsh_param(e, q, 8, 2))
-    r3 = SIM.recall_at_k(exact, SIM.topk_multiprobe_lsh_param(e, q, 8, 3))
-    r4 = SIM.recall_at_k(exact, SIM.topk_multiprobe_lsh_param(e, q, 8, 4))
+    r2, r3, r4 = (
+        SIM.recall_at_k(
+            exact,
+            SIM.topk_multiprobe_lsh(
+                e, q, offsets=SIM.multiprobe_offsets(8, r)
+            ),
+        )
+        for r in (2, 3, 4)
+    )
     assert r3 >= 0.45
     assert r4 >= 0.7
     assert r2 <= r3 <= r4

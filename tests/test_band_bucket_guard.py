@@ -150,25 +150,6 @@ def test_guard_helper_direct(spark):
         D.guard_band_buckets(bands, max_bucket_rows=4).count()
 
 
-def test_broadcast_guard_matches_window_guard(spark):
-    """The batch path's broadcast form and the incremental/streaming
-    window form enforce the same contract: identical pass-through rows
-    under the cap, identical trip over it."""
-    corpus = _docs(spark, n_dups=5, n_distinct=3)
-    bands = D.with_minhash_bands(
-        D.shingled(corpus, "text", "doc_id"), "doc_id"
-    ).persist()
-    try:
-        w = D.guard_band_buckets(bands, max_bucket_rows=5)
-        b = D.guard_band_buckets_broadcast(bands, max_bucket_rows=5)
-        assert sorted(b.columns) == sorted(w.columns)
-        assert sorted(map(tuple, b.collect())) == sorted(map(tuple, w.collect()))
-        with pytest.raises(Exception, match="Exact-dedup identical documents"):
-            D.guard_band_buckets_broadcast(bands, max_bucket_rows=4).count()
-    finally:
-        bands.unpersist()
-
-
 def test_streaming_guard_trips_when_index_bucket_goes_hot(spark, tmp_path):
     """End-to-end through the real foreachBatch stream: a template
     family accumulating in the band index must trip the guard once the

@@ -102,15 +102,15 @@ def test_shared_cli_parser():
         ("dump_plans", ["out", "sfx"]),
         ("dump_final_plans", ["out", "sfx", "q", "--sf"]),
         ("dump_final_plans", []),
-        ("build_exec_split", ["q", "--reps"]),
-        ("build_exec_split", ["q", "--reps=x"]),
-        ("build_exec_split", ["--sf", "dir"]),
+        ("survey_build_exec", ["q", "--reps"]),
+        ("survey_build_exec", ["q", "--reps=x"]),
+        ("survey_build_exec", ["--sf", "dir"]),
     ],
 )
 def test_tool_flag_errors_exit_with_usage(tool, argv, tmp_path):
-    """A trailing flag without its value, or missing positionals, ends
-    in the usage message before any Spark session starts — never in a
-    traceback."""
+    """A trailing flag without its value, an unparseable value, an
+    unknown flag or missing positionals ends in the usage message before
+    any Spark session starts — never in a traceback."""
     proc = subprocess.run(
         [sys.executable, str(ROOT / "tools" / f"{tool}.py"), *argv],
         cwd=tmp_path, capture_output=True, text=True, timeout=120,

@@ -217,14 +217,22 @@ def test_bounded_date_add_cliffs(spark):
 
 
 def test_parse_date_multiform(spark):
+    """The fused parser and the composed F7+F8 form it replaces
+    (``to_date_inferred(extract_date_multiform(c))``, the equivalence
+    parse_date_column's docstring claims) both meet every case."""
     df = spark.createDataFrame([(s,) for s, _ in DATE_CASES], "s string")
+    s = F.col("s")
     got = {
-        r["s"]: r["v"]
-        for r in df.select("s", E.parse_date_column(F.col("s")).alias("v")).collect()
+        r["s"]: (r["v"], r["w"])
+        for r in df.select(
+            "s",
+            E.parse_date_column(s).alias("v"),
+            E.to_date_inferred(E.extract_date_multiform(s)).alias("w"),
+        ).collect()
     }
-    for s, want in DATE_CASES:
-        v = got[s]
-        assert (str(v) if v else None) == want, f"{s!r}: {v} != {want}"
+    for text, want in DATE_CASES:
+        for v in got[text]:
+            assert (str(v) if v else None) == want, f"{text!r}: {v} != {want}"
 
 
 RUNTIME_CASES = [

@@ -188,6 +188,46 @@ def test_extract_mixed_features_spark(spark):
             assert r["width"] is None and r["pixel_bytes"] is None
 
 
+def test_codecs_run_on_a_worker_without_the_package(tmp_path):
+    """Python workers need not import ``movies_etl_spark``: the codecs
+    pickle by value (the module registers itself with cloudpickle), so
+    a fresh interpreter whose cwd and sys.path hold no checkout can load
+    and run them. Without the registration the load fails with
+    ModuleNotFoundError."""
+    import os
+    import pickle
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    codecs = (
+        MM.synth_wav_bytes,
+        MM.decode_wav_header,
+        MM.synth_bmp_bytes,
+        MM.decode_bmp_header,
+        MM.sniff_media_kind,
+    )
+
+    def run(synth_wav, decode_wav, synth_bmp, decode_bmp, sniff):
+        wav, bmp = synth_wav(b"worker payload"), synth_bmp(b"worker payload")
+        return decode_wav(wav), decode_bmp(bmp), sniff(wav), sniff(bmp)
+
+    code = (
+        "import pickle, sys\n"
+        "run, codecs = pickle.loads(sys.stdin.buffer.read())\n"
+        "sys.stdout.buffer.write(pickle.dumps(run(*codecs)))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        input=cloudpickle.dumps((run, codecs)),
+        cwd=tmp_path, env=env, capture_output=True, timeout=60,
+    )
+    assert proc.returncode == 0, proc.stderr.decode()
+    assert pickle.loads(proc.stdout) == run(*codecs)
+
+
 # --- Hypothesis: codec round-trips over arbitrary payload bytes ----------
 
 try:

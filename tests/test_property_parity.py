@@ -123,11 +123,9 @@ def test_delta_cosine_pairs_match_filtered_full_gram(spark):
     pair set restricted to not-both-existing (id_b >= cut, since ids
     sort ascending within a pair) — including sims — across the edge
     shapes: a block with no delta rows (emits nothing), an all-delta
-    block (pure upper triangle), and a mixed block."""
-    from movies_etl_spark.operators.dedup import (
-        cosine_pairs_vectorized,
-        cosine_pairs_vectorized_delta,
-    )
+    block (pure upper triangle), and a mixed block. A carried column
+    rides with each member on both paths."""
+    from movies_etl_spark.operators.dedup import cosine_pairs_vectorized
 
     rows = []
     rng_vals = [0.3, 1.7, 0.9, 2.2, 1.1, 0.5, 1.9, 0.2]
@@ -141,14 +139,19 @@ def test_delta_cosine_pairs_match_filtered_full_gram(spark):
         rows.append((i, [1.0, rng_vals[i % 8], 0.1], 2))
     df = spark.createDataFrame(
         rows, "vec_id bigint, embedding array<double>, label int"
-    )
+    ).withColumn("w", F.col("vec_id") * 10)
 
     def pairs_at(cut):
-        full = cosine_pairs_vectorized(df, threshold=-1.0).toPandas()
-        full = full[full.id_b >= cut]
-        delta = cosine_pairs_vectorized_delta(
-            df, cut=cut, threshold=-1.0
+        full = cosine_pairs_vectorized(
+            df, threshold=-1.0, carry_col="w"
         ).toPandas()
+        full = full[full.id_b >= cut]
+        delta = cosine_pairs_vectorized(
+            df, threshold=-1.0, carry_col="w", cut=cut
+        ).toPandas()
+        for got in (full, delta):
+            assert (got.w_a == got.id_a * 10).all()
+            assert (got.w_b == got.id_b * 10).all()
         a = sorted(map(tuple, full[["id_a", "id_b", "label", "sim"]].values))
         b = sorted(map(tuple, delta[["id_a", "id_b", "label", "sim"]].values))
         assert a == b, (cut, a[:5], b[:5])
@@ -170,20 +173,20 @@ def test_delta_cosine_guard_allows_big_base_small_delta(spark):
     remediation."""
     import pytest
 
-    from movies_etl_spark.operators.dedup import cosine_pairs_vectorized_delta
+    from movies_etl_spark.operators.dedup import cosine_pairs_vectorized
 
     rows = [(i, [float(i % 7), 1.0], 0) for i in range(30)]
     df = spark.createDataFrame(
         rows, "vec_id bigint, embedding array<double>, label int"
     )
     # 30 rows, 2 delta: 2*30=60 ≤ 8²=64 passes even though 30 > 8
-    ok = cosine_pairs_vectorized_delta(
-        df, cut=28, threshold=-1.0, max_block_rows=8
+    ok = cosine_pairs_vectorized(
+        df, threshold=-1.0, max_block_rows=8, cut=28
     )
     assert ok.count() == 2 * 28 + 1  # delta×existing + the delta pair
     # 30 delta rows: 30*30 > 64 fails loudly
-    bad = cosine_pairs_vectorized_delta(
-        df, cut=0, threshold=-1.0, max_block_rows=8
+    bad = cosine_pairs_vectorized(
+        df, threshold=-1.0, max_block_rows=8, cut=0
     )
     with pytest.raises(Exception, match="Sub-bucket the block key"):
         bad.collect()
@@ -196,7 +199,7 @@ def test_delta_cosine_absolute_block_bound(spark):
     n×dim matrix materializes in-task regardless of delta size."""
     import pytest
 
-    from movies_etl_spark.operators.dedup import cosine_pairs_vectorized_delta
+    from movies_etl_spark.operators.dedup import cosine_pairs_vectorized
 
     # 40 rows × dim 2 = 80 elements > 8² = 64, but 1 delta × 40 = 40 ≤ 64
     # passes the gram bound — only the absolute bound catches it
@@ -204,8 +207,8 @@ def test_delta_cosine_absolute_block_bound(spark):
     df = spark.createDataFrame(
         rows, "vec_id bigint, embedding array<double>, label int"
     )
-    bad = cosine_pairs_vectorized_delta(
-        df, cut=39, threshold=-1.0, max_block_rows=8
+    bad = cosine_pairs_vectorized(
+        df, threshold=-1.0, max_block_rows=8, cut=39
     )
     with pytest.raises(Exception, match="block matrix itself"):
         bad.collect()
@@ -1609,7 +1612,6 @@ def test_string_builders_reject_non_plain_names(spark):
         D.shingle_hashes,
         lambda n: D.shingled(df, n, "doc_id"),
         lambda n: D.with_minhash_bands(sh, "doc_id", sig_cols=["shingles", n]),
-        lambda n: SIM.rp_bucket_n(n, 4),
         SIM.rp_bucket,
         lambda n: SIM.kmeans_assign(df, id_col="doc_id", vec_col=n),
         lambda n: SIM.kmeans_train_assign(df, df, id_col="doc_id", vec_col=n),
@@ -1625,7 +1627,7 @@ def test_string_builders_reject_non_plain_names(spark):
         D.dot_expr("a", "b"),
         D.l2norm_expr("a"),
         D.cosine_expr("a", "b"),
-        SIM.rp_bucket_n("a", 3),
+        SIM.rp_bucket("a", 3),
         SIM.rp_bucket("a"),
         D.shingle_hashes("text"),
     ).collect()

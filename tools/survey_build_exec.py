@@ -19,14 +19,21 @@ status tracker): the actionable rows are build_sec > ~1 s AND
 build_jobs == 0 — seconds of driver time with zero cluster work is the
 plan-re-analysis signature that the r10 k-means/frontier fixes closed.
 
-Usage: python tools/survey_build_exec.py [--top N] [name ...]
-Prints one line per query sorted by build_sec desc, then a JSON tail.
+``--reps N`` times each query N times, interleaved rep-major (every
+query once, then every query again), so ambient drift on a shared box
+lands on all queries alike instead of on whichever ran last; the
+summaries use each query's (low) median over its reps.
+
+Usage: python tools/survey_build_exec.py [--top N] [--reps N] [name ...]
+Prints one line per query run, the summaries sorted by build_sec desc,
+then a JSON tail with every rep's row.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -48,11 +55,12 @@ def main() -> None:
     # e.g. '--topology')
     vals, args = _cli.parse_args(
         sys.argv[1:],
-        {"--top": int},
-        "usage: survey_build_exec.py [--top N] [name ...]",
+        {"--top": int, "--reps": int},
+        "usage: survey_build_exec.py [--top N] [--reps N] [name ...]",
         positionals=True,
     )
     top = vals.get("top", 25)
+    reps = vals.get("reps", 1)
     names = args or [n for n in bench.HEADLINE if n in registry.QUERIES]
     spark = get_spark()
     tracker = spark.sparkContext.statusTracker()
@@ -88,32 +96,46 @@ def main() -> None:
             return max(ids) if ids else -1
 
     rows = []
-    for name in names:
-        fn = registry.QUERIES[name]
-        spark._jvm.System.gc()
-        jobs_before = max_job_id()
-        t0 = time.perf_counter()
-        df = fn(spark, SF_DIR)
-        t1 = time.perf_counter()
-        build_jobs = max_job_id() - jobs_before
-        df.write.format("noop").mode("overwrite").save()
-        t2 = time.perf_counter()
-        rows.append(
-            {
-                "name": name,
-                "build_sec": round(t1 - t0, 3),
-                "build_jobs": build_jobs,
-                "exec_sec": round(t2 - t1, 3),
-            }
-        )
-        print(
-            f"{name:40s} build {t1 - t0:7.3f} ({build_jobs:3d} jobs)"
-            f"  exec {t2 - t1:7.3f}",
-            flush=True,
-        )
-    rows.sort(key=lambda r: -r["build_sec"])
+    for rep in range(reps):
+        for name in names:
+            fn = registry.QUERIES[name]
+            spark._jvm.System.gc()
+            jobs_before = max_job_id()
+            t0 = time.perf_counter()
+            df = fn(spark, SF_DIR)
+            t1 = time.perf_counter()
+            build_jobs = max_job_id() - jobs_before
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
+            rows.append(
+                {
+                    "name": name,
+                    "rep": rep,
+                    "build_sec": round(t1 - t0, 3),
+                    "build_jobs": build_jobs,
+                    "exec_sec": round(t2 - t1, 3),
+                }
+            )
+            print(
+                f"{name:40s} rep {rep} build {t1 - t0:7.3f}"
+                f" ({build_jobs:3d} jobs)  exec {t2 - t1:7.3f}",
+                flush=True,
+            )
+    summary = [
+        {
+            "name": name,
+            **{
+                k: statistics.median_low(
+                    r[k] for r in rows if r["name"] == name
+                )
+                for k in ("build_sec", "build_jobs", "exec_sec")
+            },
+        }
+        for name in names
+    ]
+    summary.sort(key=lambda r: -r["build_sec"])
     print("\n== top by build_sec ==")
-    for r in rows[:top]:
+    for r in summary[:top]:
         frac = r["build_sec"] / max(r["build_sec"] + r["exec_sec"], 1e-9)
         print(
             f"{r['name']:40s} build {r['build_sec']:7.3f}"
@@ -122,7 +144,7 @@ def main() -> None:
         )
     print("\n== pure-planning suspects (build > 1 s, zero build jobs) ==")
     suspects = [
-        r for r in rows if r["build_sec"] > 1.0 and r["build_jobs"] == 0
+        r for r in summary if r["build_sec"] > 1.0 and r["build_jobs"] == 0
     ]
     for r in suspects:
         print(f"{r['name']:40s} build {r['build_sec']:7.3f}")
