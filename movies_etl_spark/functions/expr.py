@@ -21,14 +21,6 @@ from pyspark.sql import functions as F
 # Regex vocabulary (reference: challenge.py:120-125)
 # ---------------------------------------------------------------------------
 
-#: money "form one": "$21.4 million" / "$1.2 billion" (misspelling-tolerant
-#: "milion"/"bilion" via `illi?on`) — challenge.py:120
-MONEY_FORM_ONE = r"\$\s*\d+\.?\d*\s*[mb]illi?on"
-
-#: money "form two": "$123,456,789" (1-3 leading digits then ,/. separated
-#: thousands, not followed by " million") — challenge.py:121
-MONEY_FORM_TWO = r"\$\s*\d{1,3}(?:[,\.]\d{3})+(?!\s[mb]illion)"
-
 _MONTHS = (
     "January|February|March|April|May|June|July|"
     "August|September|October|November|December"
@@ -82,7 +74,7 @@ def _extract_groups_bound(
     ``.`` so any ``.`` INSIDE the alternation keeps its default
     doesn't-match-newline meaning.
 
-    Why binding matters (r8, measured): Spark's subexpression
+    Why binding matters (measured): Spark's subexpression
     elimination deliberately skips CONDITIONALLY-evaluated subtrees —
     every `when` arm and every `coalesce` operand re-evaluates any
     shared subexpression it references. A fused-extract result consumed
@@ -147,49 +139,15 @@ def strip_citations(c: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def extract_money(c: Column) -> Column:
-    """F5: first match of form_one|form_two, case-insensitive
-    (challenge.py:133,146)."""
-    pat = f"(?i)({MONEY_FORM_ONE}|{MONEY_FORM_TWO})"
-    return _nullif_empty(F.regexp_extract(c, pat, 1))
-
-
-def parse_dollars(c: Column) -> Column:
-    """F6: money string → double (reference ``parse_dollars``,
-    challenge.py:102-118), as a pure when/otherwise chain:
-
-    - "$X million"  → X * 1e6 (misspelling "milion" tolerated)
-    - "$X billion"  → X * 1e9
-    - "$#,###,###"  → plain float ($ and , stripped)
-    - anything else → null (pandas np.nan)
-
-    The reference's patterns are ``re.match``-anchored → `^` here. The
-    numeric cast uses Spark cast-to-double (null on bad input), which also
-    null-safes the reference's `float()`-raises quirk on mixed separators
-    like "1.234.567" (SURVEY §7.3.2)."""
-    # One anchored extract distinguishes the million/billion branches
-    # (group = m/M/b/B), replacing two separate anchored rlike passes — the
-    # regex engine is the dominant cost of this operator at scale. The
-    # letter is compared in both cases, never lowered: see
-    # parse_money_column.
-    unit = F.regexp_extract(c, r"(?i)^\$\s*\d+\.?\d*\s*([mb])illi?on", 1)
-    comma = r"(?i)^\$\s*\d{1,3}(?:[,\.]\d{3})+(?!\s[mb]illion)"
-    digits = F.regexp_replace(c, r"[\$\sA-Za-z]", "").try_cast("double")
-    plain = F.regexp_replace(c, r"[\$,]", "").try_cast("double")
-    return (
-        F.when(unit.isin("m", "M"), digits * F.lit(1e6))
-        .when(unit.isin("b", "B"), digits * F.lit(1e9))
-        .when(c.rlike(comma), plain)
-        .otherwise(F.lit(None).cast("double"))
-    )
-
-
-#: fused F5+F6 alternation: the same two money forms as extract_money, with
-#: the branch-deciding pieces captured — (1) form-one number, (2) form-one
-#: unit letter, (3) form-two digit string. ``(?i)`` is scoped by Java to the
-#: enclosing group _extract_groups_bound wraps the alternation in. Alternation
-#: order (form one first) matches extract_money; leftmost match still wins
-#: across forms, exactly like regexp_extract.
+#: fused F5+F6 alternation — the reference's two money forms
+#: (challenge.py:120-121): "$21.4 million" / "$1.2 billion" (misspelling-
+#: tolerant "milion"/"bilion" via ``illi?on``) and "$123,456,789" (1-3
+#: leading digits then ,/. separated thousands, not followed by
+#: " million"), with the branch-deciding pieces captured — (1) form-one
+#: number, (2) form-one unit letter, (3) form-two digit string. ``(?i)`` is
+#: scoped by Java to the enclosing group _extract_groups_bound wraps the
+#: alternation in. Form one comes first, as in the reference; the leftmost
+#: match still wins across forms, exactly like regexp_extract.
 _MONEY_FUSED = (
     r"(?i)\$\s*(\d+\.?\d*)\s*([mb])illi?on"
     r"|\$\s*(\d{1,3}(?:[,\.]\d{3})+)(?!\s[mb]illion)"
@@ -201,20 +159,21 @@ def parse_money_column(c: Column) -> Column:
     (challenge.py:130-147): join list cells upstream, strip ranges,
     extract the money expression, convert to a double.
 
-    Single-pass form (VERDICT r1 #4): one range-strip regexp_replace plus
-    ONE fused extraction via :func:`_extract_groups_bound` — where the naive
-    composition ``parse_dollars(extract_money(...))`` costs four more regex
+    Single-pass form: one range-strip regexp_replace plus ONE fused
+    extraction via :func:`_extract_groups_bound`, where extracting the
+    money expression and then parsing it would cost four more regex
     passes over the full string (extract + unit-extract + rlike + digit
     strip). Branch dispatch then happens on the short captured groups:
     a non-null unit group ⇔ form one matched first (reference's
     million/billion branches, challenge.py:104-112), a non-null comma
     group ⇔ form two (challenge.py:113-116). try_cast null-safes the
     reference's ``float()``-raises quirk on mixed separators like
-    "1.234.567" identically to the composed form (SURVEY §7.3.2).
-    The extraction is BOUND to one evaluation (r8): the branch
-    dispatch references the groups from 6 conditional positions, and
-    unbound that re-ran the fused regex per position — see
-    :func:`_extract_groups_bound` (3.15 → 0.65 s at sf0.1).
+    "1.234.567" (SURVEY §7.3.2). The extraction is BOUND to one
+    evaluation: the branch dispatch references the groups from 6
+    conditional positions, and unbound that re-ran the fused regex per
+    position — see :func:`_extract_groups_bound` (3.15 → 0.65 s at
+    sf0.1). tests/test_hypothesis_expr.py property-tests it against
+    Python ``re`` over the same two forms.
 
     The unit group is compared as a letter (``isin("m", "M")``), never
     lowercased. Java's ``(?i)`` without ``UNICODE_CASE`` folds ASCII only,
@@ -262,7 +221,7 @@ def _bound_pydate(d: Column) -> Column:
     collected or Arrow-converted. The reference's strptime/pandas path
     raises on the same inputs and degrades to NaT/None (challenge.py:157
     via ``pd.to_datetime``), so null is also the parity-correct value.
-    Judge-reproduced falsifying input: ``"00007"`` (VERDICT r15 #1)."""
+    Falsifying input: ``"00007"`` (form four grabs year 0)."""
     return F.when(
         (d >= F.lit("0001-01-01").cast("date"))
         & (d <= F.lit("9999-12-31").cast("date")),
@@ -270,33 +229,8 @@ def _bound_pydate(d: Column) -> Column:
     )
 
 
-def extract_date_multiform(c: Column) -> Column:
-    """F7: first match of the four date shapes (challenge.py:157)."""
-    pat = f"({DATE_FORM_ONE}|{DATE_FORM_TWO}|{DATE_FORM_THREE}|{DATE_FORM_FOUR})"
-    return _nullif_empty(F.regexp_extract(c, pat, 1))
-
-
-def to_date_inferred(c: Column) -> Column:
-    """F8: parse the heterogeneous extracted date string to a date.
-
-    The reference leans on ``pd.to_datetime(..., infer_datetime_format=
-    True)`` (challenge.py:157); the four regex forms bound what it can see,
-    so a per-format ``try_to_timestamp`` coalesce chain is exact. "Month
-    YYYY" and bare "YYYY" default to day/month 1, matching pandas. The
-    result is bounded to the Python-representable year range — see
-    :func:`_bound_pydate` (year-0 crash, VERDICT r15 #1)."""
-    return _bound_pydate(
-        F.coalesce(
-            F.try_to_timestamp(c, F.lit("MMMM d, yyyy")).cast("date"),
-            F.try_to_timestamp(c, F.lit("yyyy-MM-dd")).cast("date"),
-            F.try_to_timestamp(c, F.lit("MMMM yyyy")).cast("date"),
-            F.try_to_timestamp(c, F.lit("yyyy")).cast("date"),
-        )
-    )
-
-
-#: fused F7+F8 alternation: the same four date shapes in the same priority
-#: order as extract_date_multiform, each wrapped in its own capture group so
+#: fused F7+F8 alternation: the four date shapes (challenge.py:157) in the
+#: reference's priority order, each wrapped in its own capture group so
 #: the matching FORM is known from which group participated.
 _DATE_FUSED = (
     f"({DATE_FORM_ONE})|({DATE_FORM_TWO})|({DATE_FORM_THREE})|({DATE_FORM_FOUR})"
@@ -307,23 +241,25 @@ def parse_date_column(c: Column) -> Column:
     """F7+F8 composed: the reference's release-date pipeline
     (challenge.py:155-162).
 
-    Single-pass form (VERDICT r1 #4): ONE fused extraction via
-    :func:`_extract_groups_bound` with one capture group per date shape, then a
-    per-form ``try_to_timestamp`` — the matched form is known from which
-    group participated, so each row attempts exactly one format instead of
-    the composed version's up-to-four-format coalesce chain.
+    Single-pass form: ONE fused extraction via :func:`_extract_groups_bound`
+    with one capture group per date shape, then a per-form
+    ``try_to_timestamp`` — the matched form is known from which group
+    participated, so each row attempts exactly one format. "Month YYYY"
+    and bare "YYYY" default to day/month 1, matching pandas'
+    ``to_datetime(..., infer_datetime_format=True)``.
 
-    Equivalent to ``to_date_inferred(extract_date_multiform(c))`` because
-    Spark's non-legacy datetime parser rejects trailing text: a string of
-    form k that its own format cannot parse (e.g. "July 39, 1994" — the
-    ``[123]\\d`` day quirk admits invalid days) is not parseable by any
-    OTHER format on the full string either, so the cross-format fallbacks
-    in the coalesce chain never fire across forms (asserted by the
-    equivalence corpus in tests/test_expr_unit.py). The extraction is
-    BOUND to one evaluation (r8): coalesce operands are conditionally
-    evaluated, so unbound the fused regex re-ran once per still-null
-    operand — see :func:`_extract_groups_bound` (1.19 → 0.57 s at
-    sf0.1)."""
+    Per-form parsing equals the reference's extract-then-infer pipeline
+    because Spark's non-legacy datetime parser rejects trailing text: a
+    string of form k that its own format cannot parse (e.g. "July 39,
+    1994" — the ``[123]\\d`` day quirk admits invalid days) is not
+    parseable by any OTHER format either. The property test
+    ``test_parse_date_matches_python_strptime``
+    (tests/test_hypothesis_expr.py) checks the claim against Python
+    ``re`` + ``strptime`` on each matched form, and the corpus in
+    tests/test_expr_unit.py pins the quirks. The extraction is BOUND to
+    one evaluation: coalesce operands are conditionally evaluated, so
+    unbound the fused regex re-ran once per still-null operand — see
+    :func:`_extract_groups_bound` (1.19 → 0.57 s at sf0.1)."""
 
     def build(g):
         g1, g2, g3, g4 = g
@@ -360,9 +296,9 @@ def to_date_std(c: Column) -> Column:
 #:
 #: - lower: CPython's ``fromtimestamp`` probes ``t − 24 h`` in local time
 #:   for fold detection, so the unrepresentable window is 24 h PLUS the
-#:   zone's year-1 LMT west offset (probed r18: America/New_York crashes
-#:   up to exact_min + 104 162 s = 24 h + 4:56:02 — the r17 one-day band
-#:   was LEAKY there). LMT offsets are longitude-bound (≤ ~12 h), so a
+#:   zone's year-1 LMT west offset (probed: America/New_York crashes
+#:   up to exact_min + 104 162 s = 24 h + 4:56:02 — a one-day band
+#:   leaks there). LMT offsets are longitude-bound (≤ ~12 h), so a
 #:   2-day band covers fold-probe + any west offset.
 #: - upper: no probe (it looks into the past), only the zone's year-9999
 #:   east offset (≤ +14 h, Pacific/Kiritimati) — one day suffices.
@@ -379,7 +315,7 @@ def from_unix_seconds(c: Column) -> Column:
     """F10: epoch seconds → timestamp (challenge.py:226); null outside
     the Python-representable instant range.
 
-    Same crash class as the F7-F9 year-0 bug (VERDICT r15 #1), three
+    Same crash class as the F7-F9 year-0 bug (see :func:`_bound_pydate`), three
     flavors probed: |v|·10⁶ beyond Long.MAX throws ``ArithmeticException:
     long overflow`` INSIDE ``timestamp_seconds``'s codegen — an
     executor-side job abort, so the guard must gate the INPUT (CASE WHEN
@@ -413,7 +349,7 @@ def from_unix_micros(c: Column) -> Column:
     ``applyInPandas``/``mapInPandas`` crashes executor-side (Arrow
     ``OutOfBoundsDatetime``) on values Spark itself collects fine — carry
     ``unix_micros`` longs through the kernel instead and rebuild the
-    timestamp with this builder on the way out (probed empirically, r17)."""
+    timestamp with this builder on the way out (probed empirically)."""
     return F.when(
         (c >= F.lit(UNIX_MICROS_MIN)) & (c <= F.lit(UNIX_MICROS_MAX)),
         F.timestamp_micros(c),
@@ -430,7 +366,7 @@ def bounded_date_add(d: Column, days) -> Column:
     so ``date_add(9999-12-15, 30)`` succeeds in the JVM and then crashes
     ``DateType.fromInternal`` at collect/Arrow time (``ValueError: year
     10000 is out of range``; symmetric ``ordinal must be >= 1`` below
-    0001-01-01 — both probed empirically, r17). Same contract as
+    0001-01-01 — both probed empirically). Same contract as
     :func:`_bound_pydate`: null is the fault-tolerant superset, in-range
     behavior identical, and the comparison itself is int-safe on
     out-of-range internals (no ``fromInternal`` until collect)."""

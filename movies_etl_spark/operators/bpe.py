@@ -10,12 +10,12 @@ vocabulary-bounded (millions of rows for a web corpus, not billions) —
 the standard industrial shape: HuggingFace/SentencePiece trainers
 likewise iterate on word-frequency tables IN MEMORY, never re-reading
 raw text. The merge loop therefore runs DRIVER-SIDE on the collected
-vocab table when it fits ``max_local_vocab`` rows (r12): the encode
+vocab table when it fits ``max_local_vocab`` rows: the encode
 step already broadcasts the entire encoded vocabulary back onto the
 corpus as a join, so collecting the same table to the driver is inside
 the size contract the pipeline already assumes — and it replaces
 ~2 Spark jobs per merge iteration (pair-count shuffle + argmax under
-AQE; 18 jobs for the standard 8-merge train, measured r12) with ONE
+AQE; 18 jobs for the standard 8-merge train, measured) with ONE
 count + ONE collect. Vocabularies over the cap fall back to the
 original distributed per-iteration loop
 (weighted pair-count shuffle + 1-row argmax collect — the bounded
@@ -49,12 +49,12 @@ EOW = "</w>"
 #: driver.
 MAX_LOCAL_VOCAB = 5_000_000
 
-#: Driver-side admission cap in total WORD CHARACTERS (ADVICE r12): row
+#: Driver-side admission cap in total WORD CHARACTERS: row
 #: count alone under-measures _train_local's footprint, because the
 #: Python structures scale with SYMBOLS, not rows — per word character
 #: the trainer holds a syms-string slot (~2-4 B), a pair-Counter
 #: contribution, and a pair→word-index set entry (~60-80 B), roughly
-#: 100 B per character all-in (tracemalloc-measured r13: 105.5 B/char
+#: 100 B per character all-in (tracemalloc-measured: 105.5 B/char
 #: peak on a 50k-word random vocab of 3-12-char words, 8 merges), an
 #: order of magnitude over the
 #: serialized broadcast the row cap was calibrated against. 50M chars
@@ -83,7 +83,7 @@ def initial_symbols(wc: DataFrame) -> DataFrame:
     doubles as the word→segmentation ENCODING MAP (bpe_pack_pipeline
     broadcasts it back onto the corpus).
 
-    Characters are CODE POINTS (r13, ADVICE r12): regexp_extract_all
+    Characters are CODE POINTS: regexp_extract_all
     over '(?s).' — Java regex matches supplementary characters as one
     code point — instead of F.split(word, ''), which splits by UTF-16
     CODE UNIT and would seed a non-BMP character (emoji, supplementary
@@ -176,8 +176,8 @@ def _train_local(
     iterations after the first cost O(affected words), the same
     asymptotic shape industrial in-memory trainers use.
 
-    Initial symbols split by CODE POINT (python iteration) — since r13
-    the distributed path seeds identically (initial_symbols uses a
+    Initial symbols split by CODE POINT (python iteration) — the
+    distributed path seeds identically (initial_symbols uses a
     code-point regex, not the UTF-16 code-unit F.split), so both engine
     paths and the DuckDB oracle agree on non-BMP characters; asserted
     with a planted-emoji vocab over both paths in
@@ -283,9 +283,9 @@ def bpe_train_with_vocab(
     the word rides along, so the result doubles as the
     word→segmentation ENCODING MAP ready to broadcast.
 
-    Execution split (r12, VERDICT r11 #1): vocabularies within
+    Execution split: vocabularies within
     ``max_local_vocab`` rows AND ``max_local_chars`` total word
-    characters (ADVICE r12 — the Python merge structures scale with
+    characters (the Python merge structures scale with
     symbols, not rows; see MAX_LOCAL_CHARS) train in one guard
     aggregate + one collect + an in-memory incremental merge loop
     (:func:`_train_local`) — the 18-job distributed loop collapsed to

@@ -32,8 +32,7 @@ _TRACKED: list[DataFrame] = []
 #: release would destroy a frame the driver may still collect. Their
 #: blocks free when the wrapper (and through it the JVM-side
 #: LogicalRDD) is garbage-collected and the ContextCleaner reaps the
-#: RDD — a per-session lifetime, not per-query (ADVICE r9: this was
-#: previously undocumented, weakening the bounded-cache audit story).
+#: RDD — a per-session lifetime, not per-query.
 #: ``live_checkpoints()`` keeps the accumulation auditable.
 _CHECKPOINTED: list[weakref.ref] = []
 
@@ -58,11 +57,11 @@ def live_checkpoints() -> int:
     return len(_CHECKPOINTED)
 
 
-#: One shared lazy checkpoint per (session, key) — ADVICE r15 #3: the
-#: recall audits minted a fresh corpus checkpoint on EVERY invocation,
-#: so a long multi-rep bench session pinned one resident corpus copy
-#: per rep until GC happened to reap the wrapper; storage-memory growth
-#: was load-bearing on GC timing. Strong refs are intentional (the
+#: One shared lazy checkpoint per (session, key): a fresh corpus
+#: checkpoint on EVERY recall-audit invocation would pin one resident
+#: corpus copy per rep in a long multi-rep bench session until GC
+#: happened to reap the wrapper, making storage-memory growth
+#: load-bearing on GC timing. Strong refs are intentional (the
 #: per-session lifetime IS the design — see _CHECKPOINTED); the session
 #: identity check drops entries from stopped/replaced sessions.
 _SHARED_CHECKPOINTS: dict[object, tuple[object, DataFrame]] = {}
@@ -88,8 +87,8 @@ def shared_local_checkpoint(df: DataFrame, key: object) -> DataFrame:
     checkpoint accumulation at one per key per session instead of one
     per invocation.
 
-    Every call first sweeps entries whose session has been stopped
-    (ADVICE r16 low): the previous same-key-recurrence eviction left a
+    Every call first sweeps entries whose session has been stopped:
+    an eviction on same-key recurrence alone would leave a
     stopped session's entry pinned for the process lifetime when its
     key never recurred — a strong ref holding the wrapper (and the
     JVM-side LogicalRDD) and still counting in the

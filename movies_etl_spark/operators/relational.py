@@ -89,3 +89,31 @@ def rename_columns(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
 def drop_columns(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     """P7: drop redundant columns (challenge.py:237)."""
     return df.drop(*columns)
+
+
+def snapshot_diff(
+    old: DataFrame, new: DataFrame, key: str, value: str
+) -> DataFrame:
+    """Churn between two ``(key, value)`` snapshots: one full outer join
+    on ``key``, then (key, status, old_<value>, new_<value>) for every
+    key that changed. Key presence decides ``added`` (only in ``new``)
+    and ``removed`` (only in ``old``). A key in both is ``changed`` when
+    ``NOT old <=> new``, so null → value and value → null are changes
+    and null → null is not. The unchanged-row filter runs before the
+    projection, so the output is proportional to the churn."""
+    o, n = F.col(f"o.{key}"), F.col(f"n.{key}")
+    ov, nv = F.col(f"o.{value}"), F.col(f"n.{value}")
+    return (
+        old.alias("o")
+        .join(new.alias("n"), o == n, "full_outer")
+        .filter(o.isNull() | n.isNull() | ~ov.eqNullSafe(nv))
+        .select(
+            F.coalesce(o, n).alias(key),
+            F.when(o.isNull(), "added")
+            .when(n.isNull(), "removed")
+            .otherwise("changed")
+            .alias("status"),
+            ov.alias(f"old_{value}"),
+            nv.alias(f"new_{value}"),
+        )
+    )

@@ -33,7 +33,7 @@ from movies_etl_spark.operators.dedup import (
 #: that matrix is broadcast-small: 100k × dim-32 float64 is ~25 MB of
 #: closure shipped to every task, the practical ceiling of the pattern.
 #: Every caller passes a contract-small probe set; this makes the
-#: contract ENFORCED rather than conventional (VERDICT r17 #4) — an
+#: contract ENFORCED rather than conventional — an
 #: over-cap probe frame fails loudly with remediation instead of
 #: silently OOMing the driver at 100 TB.
 MAX_LOCAL_QUERIES = 100_000
@@ -92,7 +92,7 @@ def label_centroids(
     fold (DuckDB's) in the last ulp — unrounded, that ulp leaks into
     every routing cosine and can flip a 6-decimal-rounded csim at a
     boundary, changing which cell a query probes (sporadic,
-    partition-count-dependent divergence; review catch, r11)."""
+    partition-count-dependent divergence)."""
     pos = corpus.select(
         label_col, F.posexplode(F.col(vec_col)).alias("pos", "v")
     )
@@ -171,7 +171,8 @@ def _centroid_boundary(cents: DataFrame) -> DataFrame:
     assignment's whole plan, so every consumer transformation re-walks
     the full train tree: `kmeans_train_assign` alone spent 3.7–4.4 s of
     DRIVER time building its plan at sf0.1, before any action (the same
-    per-job Catalyst re-analysis class as the r9 llm_corpus finding).
+    per-job Catalyst re-analysis class as llm_corpus_pipeline's stage
+    boundaries address).
     A lazy checkpoint swaps the train subtree for a LogicalRDD leaf AT
     BUILD TIME without running a job (the checkpoint materializes on
     the query's own first action), so downstream pair joins analyze
@@ -187,7 +188,7 @@ def _assign_cells(v_df: DataFrame, cents: DataFrame) -> DataFrame:
     """Assign each vector to its nearest centroid (rounded distance,
     ties to the lowest cell id — fully deterministic).
 
-    MAP-ONLY (r12): the k centroids aggregate into ONE packed row
+    MAP-ONLY: the k centroids aggregate into ONE packed row
     (collect_list — order-insensitive, the argmin is a min over
     structs), broadcast onto the corpus, and the argmin evaluates as an
     ``array_min`` over (d2, cell) structs per row — struct ordering is
@@ -201,7 +202,7 @@ def _assign_cells(v_df: DataFrame, cents: DataFrame) -> DataFrame:
     packed = cents.agg(
         F.collect_list(F.struct("cell", "centroid")).alias("cc")
     )
-    # single-parse argmin (r19, guide §1.2 build cost): the python-HOF
+    # single-parse argmin (driver build cost): the python-HOF
     # construction (transform lambda + zip_with/aggregate lambdas) cost
     # ~0.3-0.5 s of py4j chatter per assignment pass; this is the
     # identical expression tree — same casts, same fold order, same
@@ -266,7 +267,7 @@ def kmeans_assign(
     Fixed `iters` (not convergence-tested) keeps the plan static and the
     oracle finite; production runs pick iters from a held-out inertia
     check. Returns (vec_id, cell, d2 = rounded squared distance);
-    ``keep_vec=True`` (r12) additionally returns ``vd`` — the
+    ``keep_vec=True`` additionally returns ``vd`` — the
     double-cast input vector the assignment already scanned — so a
     consumer that needs (cell, d2, vector) per row (the SemDeDup memb
     frame) skips a whole shuffle-join back onto the embedding table;
@@ -728,7 +729,7 @@ def rerank_topk(cands: DataFrame, k: int = 3) -> DataFrame:
     plan shape (no shuffle added; the candidate frame is already
     ~n_candidates·|queries| rows, the model cost dominates and
     parallelizes per batch). Swap discipline as in multimodal.py's
-    decode (whose container parse became real in r18): the Spark-side
+    decode (a real container parse): the Spark-side
     plumbing (schema, batching, rank window) is real and tested; only
     the scorer body is swapped.
 

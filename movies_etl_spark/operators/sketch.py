@@ -176,7 +176,7 @@ HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)
 #: never evaluates inside either engine — libm transcendentals are not
 #: correctly rounded and can differ in the last ulp between the JVM and
 #: DuckDB, which on a .005 rounding boundary would flip the rounded
-#: estimate (ADVICE r5). Both engines parse the same decimal literal to
+#: estimate. Both engines parse the same decimal literal to
 #: the same IEEE double, so the estimate is now integer-deterministic in
 #: V. ``repr`` round-trips doubles exactly in both parsers.
 HLL_LINEAR_TABLE: tuple[float, ...] = tuple(
@@ -194,7 +194,7 @@ def hll_linear_sql(v_zero_expr: str = "v_zero") -> str:
     and its DECIMAL→DOUBLE cast is not correctly rounded (measured: 99 of
     512 table entries land 1 ulp off the IEEE double the same literal
     parses to in the JVM/Python), whereas the VARCHAR→DOUBLE cast is an
-    exact strtod round-trip of repr's shortest form (ADVICE r6)."""
+    exact strtod round-trip of repr's shortest form."""
     lits = ", ".join(f"'{x!r}'::DOUBLE" for x in HLL_LINEAR_TABLE)
     return f"([{lits}])[CAST({v_zero_expr} AS INT)]"
 
@@ -235,11 +235,10 @@ def hll_merge(partials: DataFrame) -> DataFrame:
 
 #: Per-session cache of the 512-row linear-counting lookup frame —
 #: building it is driver-side work (createDataFrame of HLL_M rows) that
-#: would otherwise repeat on every hll_estimate call. Evolution of the
-#: shape: an id(spark)-keyed dict pinned dead sessions for the process
-#: lifetime (ADVICE r7); the r8 single-slot replacement evicted a LIVE
-#: session's entry whenever two sessions interleaved (ADVICE r9 → this
-#: round's swap). Now a ``WeakKeyDictionary`` keyed on the session, so
+#: would otherwise repeat on every hll_estimate call. An id(spark)-keyed
+#: dict would pin dead sessions for the process lifetime, and a
+#: single-slot cache evicts a LIVE session's entry whenever two sessions
+#: interleave. So it is a ``WeakKeyDictionary`` keyed on the session:
 #: each live session keeps exactly one entry and a collected session's
 #: entry vanishes with it. The value is deliberately the JVM-side frame
 #: handle, NOT the Python ``DataFrame`` wrapper: the wrapper strongly
@@ -280,9 +279,8 @@ def hll_estimate(registers: DataFrame, group_cols: list[str] | None = None) -> D
     table's doc for the cross-engine ulp rationale) via a BROADCAST
     lookup join on the empty-register count rather than a 512-element
     array literal: embedding the table in the plan cost every
-    hll_estimate call ~15% in plan/codegen time (interleaved A/B, r7 —
-    VERDICT r6 flagged the HLL family as the one touched-and-slower
-    group), while an m-row post-aggregate BroadcastHashJoin is free.
+    hll_estimate call ~15% in plan/codegen time (interleaved A/B),
+    while an m-row post-aggregate BroadcastHashJoin is free.
     Same doubles either way — the lookup frame holds the same Python
     floats the oracle literals print."""
     gcols = list(group_cols or [])
@@ -431,7 +429,7 @@ def cms_inner_product_pair(merged: DataFrame) -> DataFrame:
     NO join: the dual table is already cell-aligned. NULL cells (from
     NULL keys: md5(NULL) → NULL cell) are dropped here, exactly as the
     (seed, cell) equi-join drops them (NULL never equi-matches), so the
-    identity holds for null-key inputs too (ADVICE r14 #2). Returns one
+    identity holds for null-key inputs too. Returns one
     row (est)."""
     per_seed = (
         merged.filter(F.col("cell").isNotNull())

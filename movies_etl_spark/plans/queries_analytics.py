@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from movies_etl_spark.operators import relational as REL
 from movies_etl_spark.plans.registry import _t, query
 
 
@@ -357,50 +358,36 @@ def q_quantile_bucket(spark, sf_dir):
            b.o_totalprice AS new_price
     FROM a FULL OUTER JOIN b ON a.o_orderkey = b.o_orderkey
     WHERE a.o_orderkey IS NULL OR b.o_orderkey IS NULL
-       OR a.o_totalprice != b.o_totalprice
+       OR a.o_totalprice IS DISTINCT FROM b.o_totalprice
     """,
 )
 def q_snapshot_diff(spark, sf_dir):
     """Snapshot diff — the lakehouse audit primitive (what changed
     between yesterday's table and today's?): full outer join on the key,
-    classify added / removed / changed, drop unchanged. Both snapshots
+    classify added / removed / changed, drop unchanged
+    (:func:`~movies_etl_spark.operators.relational.snapshot_diff`: key
+    presence decides added/removed, ``NOT old <=> new`` decides changed,
+    so a price that became null is a change and null → null is not;
+    the oracle says the same with ``IS DISTINCT FROM``). Both snapshots
     are deterministic slices of orders (new snapshot drops key%10==3,
     adds key%10==0, reprices key%7==0 — by an exact IEEE addition, not a
     scaled round: round-half of a double tie differs between engines,
-    which a 0.04% sample of repriced rows hit at sf0.01). One shuffle on the key for the
-    join; the unchanged-row filter happens BEFORE any wide projection,
-    so at 100 TB the output is proportional to the churn, not the table.
-    For partitioned lakes, run per-partition and prune unchanged
-    partitions by metadata first (see upsert_merge)."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    which a 0.04% sample of repriced rows hit at sf0.01). One shuffle on
+    the key for the join; the unchanged-row filter happens BEFORE any
+    wide projection, so at 100 TB the output is proportional to the
+    churn, not the table. For partitioned lakes, run per-partition and
+    prune unchanged partitions by metadata first (see upsert_merge)."""
+    o = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", F.col("o_totalprice").alias("price")
+    )
     a = o.filter(F.col("o_orderkey") % 10 != 0)
     b = o.filter(F.col("o_orderkey") % 10 != 3).select(
         "o_orderkey",
-        F.when(F.col("o_orderkey") % 7 == 0, F.col("o_totalprice") + 10.0)
-        .otherwise(F.col("o_totalprice"))
-        .alias("o_totalprice"),
+        F.when(F.col("o_orderkey") % 7 == 0, F.col("price") + 10.0)
+        .otherwise(F.col("price"))
+        .alias("price"),
     )
-    j = a.alias("a").join(
-        b.alias("b"), F.col("a.o_orderkey") == F.col("b.o_orderkey"), "full_outer"
-    )
-    return (
-        j.select(
-            F.coalesce(F.col("a.o_orderkey"), F.col("b.o_orderkey")).alias(
-                "o_orderkey"
-            ),
-            F.when(F.col("a.o_orderkey").isNull(), "added")
-            .when(F.col("b.o_orderkey").isNull(), "removed")
-            .otherwise("changed")
-            .alias("status"),
-            F.col("a.o_totalprice").alias("old_price"),
-            F.col("b.o_totalprice").alias("new_price"),
-        )
-        .filter(
-            F.col("old_price").isNull()
-            | F.col("new_price").isNull()
-            | (F.col("old_price") != F.col("new_price"))
-        )
-    )
+    return REL.snapshot_diff(a, b, "o_orderkey", "price")
 
 
 # ===========================================================================
@@ -576,9 +563,9 @@ def q_bm25_rank(spark, sf_dir):
     in one projection, and the resulting per-doc stats frame (a few
     numeric columns per doc — O(n_docs), no token rows) is persisted so
     the corpus-stats aggregate, the document-frequency count, and the
-    scoring join all reuse it instead of re-tokenizing (the pre-r3 shape
-    re-ran the regex 4x through unshared subtrees and exploded every
-    token just to keep 3). There is no explode and no (doc, token)
+    scoring join all reuse it instead of re-tokenizing (through
+    unshared subtrees the regex runs 4x and every token explodes
+    just to keep 3). There is no explode and no (doc, token)
     shuffle at corpus scale: tf rows materialize only for matching
     (doc, term) pairs via a 3-row stack. Corpus stats (N, total length)
     are a 1-row aggregate cross-joined broadcast; document frequencies a

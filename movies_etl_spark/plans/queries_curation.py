@@ -109,10 +109,9 @@ def q_decontaminate_ngram(spark, sf_dir):
         .distinct()
     )
     corpus = with_grams.filter(F.col("doc_id") % 97 != 0)
-    # no .distinct() on the contaminated ids (r13, completing the r12
-    # class): left_anti is set-semantic on its build side, so the
-    # distinct was one extra full exchange of the same rows the join
-    # carries anyway (llm_corpus_pipeline dropped its copy in r12)
+    # no .distinct() on the contaminated ids: left_anti is set-semantic
+    # on its build side, so a distinct would be one extra full exchange
+    # of the same rows the join carries anyway
     contaminated = (
         corpus.select("doc_id", F.explode("gr").alias("ng"))
         .join(F.broadcast(ev), "ng", "left_semi")
@@ -538,9 +537,8 @@ def q_curation_pipeline(spark, sf_dir):
         .distinct()
     )
     corpus2 = qual.filter(F.col("doc_id") % 97 != 0)
-    # no .distinct() on the contaminated ids (r13, completing the r12
-    # class): the sole consumer is the left_anti below, set-semantic on
-    # its build side (llm_corpus_pipeline dropped its copy in r12)
+    # no .distinct() on the contaminated ids: the sole consumer is the
+    # left_anti below, set-semantic on its build side
     contaminated = (
         corpus2.select("doc_id", F.explode(C.word_ngrams(toks, 5)).alias("ng"))
         .join(F.broadcast(ev), "ng", "left_semi")
@@ -917,29 +915,29 @@ def q_llm_corpus_pipeline(spark, sf_dir):
     Every stage is the already-audited standalone operator; the
     composite exists because stage ORDER and partition alignment are
     where chained pipelines break (the curation_pipeline lesson,
-    extended through the r5 tokenizer/semantic stages). Scale shape:
+    extended through the tokenizer/semantic stages). Scale shape:
     map-only quality filters prune at scan speed; exact dedup is ONE
     shuffle on the content hash; only survivors pay shingling/banding
     (band equi-join, never n²); SemDeDup pairs exist only within
     learned cells (guarded BLAS blocks, the assignment carrying vector
-    and d2 through the kernel so the stage adds zero stitch-joins —
-    r12); decontamination is a broadcast semi-join; BPE's sole
+    and d2 through the kernel so the stage adds zero stitch-joins);
+    decontamination is a broadcast semi-join; BPE's sole
     corpus-scale stage is the wordcount shuffle (the merge loop runs
     in-memory on the collected vocab — the same size contract the
     encode broadcast already assumes, with the distributed
-    per-iteration loop as the over-cap fallback — r12); packing is the
+    per-iteration loop as the over-cap fallback); packing is the
     two-phase distributed prefix sum. Stage boundaries are where a
     100 TB run would checkpoint to storage: ex persists (single
     action-tree consumer set), while mh and clean are EAGER
-    localCheckpoints (r9) — mh because SemDeDup embeds it in two join
+    localCheckpoints — mh because SemDeDup embeds it in two join
     branches, clean because the BPE count/collect and the pack action
     each re-analyze whatever plan sits under it, and a persist keeps
-    the full analyzed lineage (r9 measurement: 16.4 s → 3.9 s on the
-    train loop from a leaf; r12 job profile: 71 → ~35 builder jobs
-    from the local BPE loop + the three deleted SemDeDup joins, see
-    NOTES_r12.md). The DuckDB oracle replays the whole chain from the
-    standalone stages' own fragments; the independent python witness
-    re-runs it from scratch (tests/test_ground_truth.py)."""
+    the full analyzed lineage (measured: 16.4 s → 3.9 s on the train
+    loop from a leaf; the local BPE loop and the vector/d2-carrying
+    SemDeDup stage took the builder from 71 to ~35 jobs). The DuckDB
+    oracle replays the whole chain from the standalone stages' own
+    fragments; the independent python witness re-runs it from scratch
+    (tests/test_ground_truth.py)."""
     from movies_etl_spark.operators import bpe as B
     from movies_etl_spark.operators import caching
     from movies_etl_spark.operators import dedup as D
@@ -989,7 +987,7 @@ def q_llm_corpus_pipeline(spark, sf_dir):
         (F.size(toks) >= 10) & (C.duplicate_fraction(toks) <= 0.5)
     )
     # 2. exact dedup: keep the first doc per content hash — min(struct)
-    #    groupBy, not a window (r12): identical keep-first semantics
+    #    groupBy, not a window: identical keep-first semantics
     #    (doc_id leads the struct and is unique), but the aggregate
     #    combines MAP-SIDE, so duplicate families collapse before the
     #    shuffle instead of shipping every copy to a sorted window
@@ -1001,14 +999,14 @@ def q_llm_corpus_pipeline(spark, sf_dir):
         .select(F.col("__f.doc_id").alias("doc_id"), F.col("__f.text").alias("text"))
     )
     # 3. MinHash-LSH near-dedup: banded candidates, Jaccard-verify
-    #    (the shared fused role-explode form — dedup.verify_pairs, r12:
+    #    (the shared fused role-explode form — dedup.verify_pairs:
     #    one shingle join + one pair regroup; one full-shingle-table
     #    exchange instead of two at scale), drop the larger id of each
     #    verified pair.
     sh_all = caching.tracked_persist(D.shingled(ex, "text", "doc_id"))
     pairs = D.candidate_pairs_minhash(sh_all, "doc_id")
     verified = D.verify_pairs(pairs, sh_all)
-    # Stage boundary (r9): the MinHash survivor set is consumed by BOTH
+    # Stage boundary: the MinHash survivor set is consumed by BOTH
     # branches of the SemDeDup stage (memb→victims AND the sem
     # anti-join), so without a leaf here the candidate-generate+verify
     # lineage is embedded twice in one action — the exact bidirectional-
@@ -1017,7 +1015,7 @@ def q_llm_corpus_pipeline(spark, sf_dir):
     # the plan every downstream stage re-analyzes; on a fault-tolerant
     # cluster this is a checkpoint to storage (see the docstring).
     # left_anti is set-semantic on the probe side already — no
-    # .distinct() on the victim frames (r12): each distinct was a full
+    # .distinct() on the victim frames: each distinct would be a full
     # extra exchange of the same rows the join shuffle carries anyway.
     mh = caching.tracked_local_checkpoint(
         ex.join(
@@ -1028,13 +1026,12 @@ def q_llm_corpus_pipeline(spark, sf_dir):
     )
     # 4. SemDeDup: frozen quantizer (trained on the full embedding
     #    table), within-cell cosine, drop the member closer to its
-    #    centroid (keep the atypical exemplar). r12 shape (VERDICT r11
-    #    #1): the assignment carries the vector (keep_vec — no join
-    #    back onto the embedding table) and the kernel carries d2 onto
-    #    each pair (carry_col — no d2 stitch-joins), deleting three
-    #    shuffle joins from the stage with identical values: vd is the
-    #    exact double cast the kernel float64-casts anyway, and d2 is
-    #    the same rounded column the joins used to fetch.
+    #    centroid (keep the atypical exemplar). The assignment carries
+    #    the vector (keep_vec — no join back onto the embedding table)
+    #    and the kernel carries d2 onto each pair (carry_col — no d2
+    #    stitch-joins), which saves three shuffle joins with identical
+    #    values: vd is the exact double cast the kernel float64-casts
+    #    anyway, and d2 is the same rounded column a join would fetch.
     e = _t(spark, sf_dir, "embeddings")
     asg = caching.tracked_persist(
         SIM.kmeans_assign(e, k=4, iters=2, keep_vec=True)
@@ -1065,14 +1062,14 @@ def q_llm_corpus_pipeline(spark, sf_dir):
         .join(F.broadcast(ev), "ng", "left_semi")
         .select("doc_id")
     )
-    # Stage boundary (r9, consumers re-counted r12): clean feeds the
+    # Stage boundary: clean feeds the
     # BPE trainer's count+collect and the final pack action. A persist
     # caches the DATA but keeps the full analyzed plan, so each
-    # downstream job re-ANALYZES the entire upstream pipeline (the r9
-    # measurement: a train loop re-analyzing this lineage cost 16.4 s
+    # downstream job re-ANALYZES the entire upstream pipeline (measured:
+    # a train loop re-analyzing this lineage cost 16.4 s
     # vs 3.9 s against a leaf); localCheckpoint truncates to a
     # LogicalRDD leaf — storage checkpoint at 100 TB. Routed through
-    # the caching audit registry (r10): checkpoint blocks free on GC,
+    # the caching audit registry: checkpoint blocks free on GC,
     # not per-query — see caching._CHECKPOINTED for the
     # release-discipline contract.
     clean = caching.tracked_local_checkpoint(

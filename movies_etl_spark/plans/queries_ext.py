@@ -269,7 +269,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     corpus = _near_corpus(spark, sf_dir)
     sh_all = caching.tracked_persist(D.shingled(corpus, "text", "doc_id"))
     pairs = D.candidate_pairs_minhash(sh_all, "doc_id")
-    # shared fused verify (dedup.verify_pairs, r12): one shingle join +
+    # shared fused verify (dedup.verify_pairs): one shingle join +
     # one pair regroup — one full-shingle-table exchange instead of two
     # in the non-broadcastable regime (see the operator docstring)
     return D.verify_pairs(pairs, sh_all, keep_jaccard=True)
@@ -297,7 +297,7 @@ def q_dedup_minhash_incremental(spark, sf_dir):
     regime."""
     from movies_etl_spark.plans.registry import _scratch
 
-    # on-disk index schemas (r13): explicit on every store read — skips
+    # on-disk index schemas: explicit on every store read — skips
     # the per-read parquet schema-inference job (1 Spark job each; the
     # schema is the index contract, catalog-known in a real pipeline)
     sh_schema = "doc_id bigint, shingles array<bigint>"
@@ -309,10 +309,10 @@ def q_dedup_minhash_incremental(spark, sf_dir):
 
     # --- yesterday: build and persist the index over the base corpus ---
     # shingle once into a tracked cache; the shingle-store write and the
-    # band build both consume it (r18 opt round: the band build used to
-    # re-read the just-written shingle parquet — one extra scan job per
-    # run; banding from the cached frame is plan-identical data, and the
-    # stored index is still what every candidate join below reads)
+    # band build both consume it (re-reading the just-written shingle
+    # parquet would cost one extra scan job per run; banding from the
+    # cached frame is plan-identical data, and the stored index is still
+    # what every candidate join below reads)
     sh_base = caching.tracked_persist(D.shingled(base, "text", "doc_id"))
     sh_base.write.mode("overwrite").parquet(f"{store}/shingles")
     D.with_minhash_bands(sh_base, "doc_id").write.mode("overwrite").parquet(
@@ -334,17 +334,17 @@ def q_dedup_minhash_incremental(spark, sf_dir):
     sh_delta = caching.tracked_persist(D.shingled(delta, "text", "doc_id"))
     delta_bands = D.with_minhash_bands(sh_delta, "doc_id")
     new_pairs = D.incremental_candidate_pairs(index_bands, delta_bands, "doc_id")
-    # no distinct on the union (r13 write-audit find): the two sides are
+    # no distinct on the union: the two sides are
     # DISJOINT by construction — base_pairs has both ids < 1e6 (stored
     # index self-join) while every incremental pair carries ≥ 1 delta id
-    # ≥ 1e6 — and each side is internally distinct already, so the old
-    # .distinct() was a redundant full exchange of the pair set (the
-    # same class as the r12 anti-join distinct drops). verify_pairs'
+    # ≥ 1e6 — and each side is internally distinct already, so a
+    # .distinct() would be a redundant full exchange of the pair set.
+    # verify_pairs'
     # duplicate-free precondition still holds.
     all_pairs = base_pairs.unionByName(new_pairs)
 
     # --- verify against the shingle store ∪ delta shingles (shared
-    # fused form — dedup.verify_pairs, r12) ---
+    # fused form — dedup.verify_pairs) ---
     sh_all = spark.read.schema(sh_schema).parquet(
         f"{store}/shingles"
     ).unionByName(sh_delta)
@@ -353,10 +353,10 @@ def q_dedup_minhash_incremental(spark, sf_dir):
     # the shingle store, and appending the delta first would double the
     # delta's shingle rows under it (the returned frame is lazy). An
     # eager localCheckpoint pins the verified pair set without the
-    # parquet round-trip the r13 shape paid (write job + read-back scan
+    # parquet round-trip (write job + read-back scan
     # — the pair set is intra-query, not part of the maintained index;
     # a production run that also stores pairs would write them from
-    # this same materialized frame). Deployment caveat (ADVICE r18 #3):
+    # this same materialized frame). Deployment caveat:
     # localCheckpoint blocks are the ONLY copy (lineage truncated) and
     # live for the session (caching._CHECKPOINTED release discipline),
     # so on a non-local cluster an executor loss loses the frame where
@@ -465,7 +465,7 @@ _COS_SQL = """
 #: shared by the fold query and its BLAS twin: both round sims to 4
 #: places (threshold on 6) before output, and the rounded values agree —
 #: the last-ulp fold-vs-BLAS difference vanishes under the rounding, so
-#: the twin is fully oracle-gated too (closes the r2 `no_oracle` rows).
+#: the twin is fully oracle-gated too.
 _EMB_PAIRS_ORACLE = f"""
     SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label,
            round({_COS_SQL.format(a="a.embedding", b="b.embedding")}, 4) AS sim
@@ -841,7 +841,7 @@ def q_kmeans_assign(spark, sf_dir):
 def q_multimodal_extract(spark, sf_dir):
     """Multimodal columns: opaque binary payload + typed metadata,
     feature-extracted via Arrow-batched mapInPandas. The decode is a REAL
-    RIFF/WAVE chunk-walk + struct unpack (r18 — stub retired): payloads
+    RIFF/WAVE chunk-walk + struct unpack: payloads
     are valid PCM WAV files synthesized from the text column, so the
     oracle predicts what the parser must RECOVER from the header bytes
     (sample rate, channels, sample count, duration)."""
@@ -903,7 +903,7 @@ def q_streaming_sessionize(spark, sf_dir):
 
 @query("similarity_topk_vectorized", oracle=_TOPK_ORACLE)
 def q_similarity_topk_vectorized(spark, sf_dir):
-    """Numpy/Arrow fast path for brute-force ANN. Oracle-gated since r3:
+    """Numpy/Arrow fast path for brute-force ANN. Oracle-gated:
     both twins round sims to 6 places before ranking/output, and the
     fold-vs-BLAS difference (last ulp of the unrounded double) vanishes
     under that rounding, so the fold twin's SQL is exact for this one
@@ -1137,8 +1137,8 @@ def q_multimodal_frame_sample(spark, sf_dir):
     """1:N multimodal operator: frame sampling (every 2nd 64-sample frame)
     through mapInPandas — one input row yields a row per sampled frame
     with its byte offset into the container, the shape of a video/audio
-    frame-extraction stage. The frame grid comes from a REAL header parse
-    (r18 — stub retired): n_samples and block_align are recovered from the
+    frame-extraction stage. The frame grid comes from a REAL header
+    parse: n_samples and block_align are recovered from the
     RIFF/WAVE bytes, and offsets point at actual sample-data positions
     (44-byte canonical header + frame index × frame stride)."""
     d = _t(spark, sf_dir, "documents")
@@ -1175,7 +1175,7 @@ def q_embedding_normalize(spark, sf_dir):
 
 @query("dedup_embedding_cosine_vectorized", oracle=_EMB_PAIRS_ORACLE)
 def q_dedup_embedding_cosine_vectorized(spark, sf_dir):
-    """BLAS fast path for embedding near-dup. Oracle-gated since r3 (see
+    """BLAS fast path for embedding near-dup. Oracle-gated (see
     similarity_topk_vectorized: rounding to 4 places absorbs the
     fold-vs-BLAS ulp); pair-set equality with the fold twin stays
     asserted in tests as defense in depth."""
@@ -1246,7 +1246,7 @@ def q_dedup_cluster_components(spark, sf_dir):
     components → canonical cluster id (min member). The oracle computes
     the same components via a recursive transitive closure; the engine
     runs a count-guarded driver union-find over the verified edge list
-    (tiny relative to the corpus — one count + one collect, r13) with
+    (tiny relative to the corpus — one count + one collect) with
     iterative min-label propagation as the over-cap fallback (one
     label-table shuffle per round, 2-3 rounds at near-dup diameters)."""
     return D.connected_components(_verified_near_dup_edges(spark, sf_dir))
@@ -1262,7 +1262,7 @@ def verified_edges(corpus):
     """Jaccard-verified (≥ 0.5) MinHash-LSH near-dup edges over any
     (doc_id, text) corpus — also consumed by the curation_pipeline
     composite (queries_curation.py). Verification is the shared fused
-    role-explode form (dedup.verify_pairs, r12): one shingle join + one
+    role-explode form (dedup.verify_pairs): one shingle join + one
     pair regroup — one full-shingle-table exchange instead of the
     classic form's two (see the operator docstring)."""
     sh_all = caching.tracked_persist(D.shingled(corpus, "text", "doc_id"))
@@ -1282,13 +1282,13 @@ def verified_edges(corpus):
     """,
 )
 def q_dedup_cc_distributed(spark, sf_dir):
-    """The DISTRIBUTED connected-components path, explicitly (r18,
-    VERDICT r17 #3): every other CC consumer's verified edge list fits
-    MAX_LOCAL_EDGES, so the over-cap iterative min-label propagation
-    (dedup.py — per-round single label-table shuffle, localCheckpoint
-    leaf plans, monotone-convergence action) had parity coverage but no
-    correctness/bench row of its own. Here the cap is parameterized to 0,
-    which is exactly how a 100 TB run whose duplicate graph itself is
+    """The DISTRIBUTED connected-components path, explicitly: every
+    other CC consumer's verified edge list fits MAX_LOCAL_EDGES, so the
+    over-cap iterative min-label propagation (dedup.py — per-round
+    single label-table shuffle, localCheckpoint leaf plans,
+    monotone-convergence action) had parity coverage but no
+    correctness/bench row of its own. Here the cap is parameterized to
+    0, which is exactly how a 100 TB run whose duplicate graph itself is
     huge would execute.
 
     Graph: 20 synthetic nodes per document (doc_id*20+i — doc_ids are
@@ -1350,7 +1350,7 @@ def q_dedup_survivors(spark, sf_dir):
 
     Scale shape: every stage is the already-audited operator (band-bucket
     candidate join, blocked verification, guarded-local components with
-    the per-round label shuffle as over-cap fallback — r13); the
+    the per-round label shuffle as over-cap fallback); the
     final keep/drop decision is one broadcast-sized anti-join (the
     dropped set is small relative to the corpus). This is the query a
     user actually runs nightly; the pieces exist separately for
@@ -1908,8 +1908,8 @@ def q_ann_recall_eval(spark, sf_dir):
 
     e = _t(spark, sf_dir, "embeddings")
     # shared (memoized) per session+sf: a multi-rep bench session reuses
-    # one resident corpus copy instead of pinning one per rep (ADVICE
-    # r15 #3); the projection is immutable parquet, so reuse is sound.
+    # one resident corpus copy instead of pinning one per rep; the
+    # projection is immutable parquet, so reuse is sound.
     base = caching.shared_local_checkpoint(
         e.select("vec_id", "embedding"), key=("recall_corpus", sf_dir)
     )
@@ -2055,7 +2055,7 @@ ANN_FRONTIER_CONFIGS: list[tuple[int, int]] = [
 #: structure lives.
 ANN_FRONTIER_LSH_CLUSTERED: list[tuple[int, int]] = [(8, 1), (8, 2)]
 
-#: IVF-nprobe arm per corpus (VERDICT r10 #5): on the isotropic corpus
+#: IVF-nprobe arm per corpus: on the isotropic corpus
 #: the cells are the 10 given labels; on the clustered fixture the
 #: coarse quantizer is TRAINED (Lloyd's k=8, 2 iterations, seeds =
 #: first 8 ids — similarity.kmeans_assign), which is where IVF earns
@@ -2108,9 +2108,9 @@ def _topk_cte(src: str, k: int = 5) -> str:
 
 
 def _ann_frontier_oracle() -> str:
-    """Generated DuckDB replay of the FAMILY-COMPLETE frontier sweep
-    (VERDICT r10 #5): LSH and IVF arms on BOTH the isotropic corpus and
-    the planted clustered fixture. The md5 plane family makes every LSH
+    """Generated DuckDB replay of the FAMILY-COMPLETE frontier sweep:
+    LSH and IVF arms on BOTH the isotropic corpus and the planted
+    clustered fixture. The md5 plane family makes every LSH
     config's signature a PREFIX of the widest one, so each corpus is
     bucketed ONCE at its arm's max width and each config's bucket is a
     modulus; the exact top-5 CTE is shared per corpus across every arm,
@@ -2163,7 +2163,7 @@ def _ann_frontier_oracle() -> str:
             # width, where bucket < 2^p already):
             # the Spark side applies `% (1 << p)` unconditionally, and
             # keeping the two engines textually parallel is worth more
-            # than skipping a no-op (review catch, r11)
+            # than skipping a no-op
             mod = f" % {1 << p}"
             ctes.append(
                 f"""cand_{tag} AS (
@@ -2284,8 +2284,7 @@ def _ann_frontier_oracle() -> str:
 @query("ann_frontier_sweep", oracle=_ann_frontier_oracle())
 def q_ann_frontier_sweep(spark, sf_dir):
     """The FAMILY-COMPLETE ANN recall-vs-scan frontier, as one
-    oracle-gated query (VERDICT r8 #3; family/corpus unification
-    VERDICT r10 #5): every (family, corpus, config) point — multi-probe
+    oracle-gated query: every (family, corpus, config) point — multi-probe
     sign-LSH over ANN_FRONTIER_CONFIGS on the isotropic embeddings and
     ANN_FRONTIER_LSH_CLUSTERED on the planted clustered fixture, plus
     IVF-nprobe on both corpora (given-label cells on isotropic; a
@@ -2308,7 +2307,7 @@ def q_ann_frontier_sweep(spark, sf_dir):
     Plan shape: per corpus, the signature is computed ONCE at the arm's
     max width (prefix-nested plane family → narrower configs are
     moduli) and the exact top-5 frame ONCE — both as LAZY checkpoints
-    (r10: LogicalRDD leaves kill per-branch Catalyst re-analysis of the
+    (LogicalRDD leaves kill per-branch Catalyst re-analysis of the
     wide shared subtrees; data computes once on the query's first
     action). The clustered-IVF cell table and centroids are likewise
     checkpointed at the trained-artifact boundary, exactly where a
@@ -2331,11 +2330,11 @@ def q_ann_frontier_sweep(spark, sf_dir):
     def corpus_frames(corp, lo, hi, width, cell_col=None):
         """(signed corpus, query set, exact top-5, 1-row denominator) —
         ALL four checkpointed lazily, so every consumer branch analyzes
-        against LogicalRDD leaves, never the parquet subtrees. An r11
-        experiment dropped the exact/denom checkpoints after the fused
-        tail left them single-consumer: build fell only 0.7 s but exec
-        ROSE 2.4 s (their subtrees re-entered the monolithic final job
-        instead of materializing as compact side jobs) — reverted, the
+        against LogicalRDD leaves, never the parquet subtrees. An
+        experiment that dropped the exact/denom checkpoints after the
+        fused tail left them single-consumer: build fell only 0.7 s but
+        exec ROSE 2.4 s (their subtrees re-entered the monolithic final
+        job instead of materializing as compact side jobs), so the
         leaves stay. ``cell_col`` folds a given IVF cell key into the
         same signed frame (one scan serves both families)."""
         qset = corp.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
@@ -2754,7 +2753,7 @@ def _ann_tuned_oracle() -> str:
 
 @query("similarity_ann_tuned", oracle=_ann_tuned_oracle())
 def q_similarity_ann_tuned(spark, sf_dir):
-    """Recall-targeted ANN operating-point selection (VERDICT r16 #6):
+    """Recall-targeted ANN operating-point selection:
     given a target recall@5, evaluate the clustered corpus's candidate
     index configurations across BOTH families — multi-probe sign-LSH
     (p8_r1/p8_r2) and trained-quantizer IVF (np1/np2, the Lloyd's k=8
@@ -2829,7 +2828,7 @@ def q_similarity_ann_tuned(spark, sf_dir):
     # LSH arm: cfg-tagged probe union, ONE corpus join (both configs at
     # width 8, so no per-config modulus is needed)
     # one exploded (cfg, n_probes, off) struct-array literal instead of
-    # a per-config unionByName chain (r18 opt round — same move as the
+    # a per-config unionByName chain (same move as the
     # frontier arms: identical row multiset, one analyzed select,
     # smaller tree under every downstream analysis)
     lsh_items = []

@@ -377,7 +377,7 @@ def q_span_dedup_sliding(spark, sf_dir):
     run's offset in either document — the coverage ``span_dedup``'s
     fixed 20-token boundaries structurally lack (a shifted copy never
     reproduces the same chunk content unless the two copies start at
-    equal offsets mod 20; VERDICT r10 #4). A plain strided window has
+    equal offsets mod 20). A plain strided window has
     the same residue-class blindness (stride s only matches copies
     aligned mod s), which is why the sliding variant winnows instead of
     striding.
@@ -1251,15 +1251,16 @@ def q_triangle_count(spark, sf_dir):
     exploded adjacency, so the u-side hash join and the second persisted
     copy of the edge list both vanish — ONE join total (on v, attaching
     nb_v). The per-row nb payload is identical either way (the u-join
-    also attached it), so this strictly removes a shuffle join; r10
+    also attached it), so this strictly removes a shuffle join;
     interleaved A/B at sf0.1: 5.6–6.2 → 3.9–5.1 s warm, identical
     counts. At 100 TB the remaining join hash-partitions on its key —
     nothing is broadcast-sized by assumption.
     The DuckDB oracle deliberately keeps the wedge-join
     formulation, so engine and oracle run structurally different
     algorithms (the independent-formulation discipline the ground-truth
-    suite exists for — see the r4 wedge-ordering undercount lesson in
-    NOTES_r4.md, which motivated exactly this divergence)."""
+    suite exists for: a wedge join that ranks wedge endpoints by raw id
+    while the orientation ranks by (degree, id) undercounts, and an
+    oracle replaying the same formulation would not see it)."""
     edges = _basket_pairs(spark, sf_dir).distinct()
     edges = caching.tracked_persist(edges)
     deg = (
@@ -1284,7 +1285,7 @@ def q_triangle_count(spark, sf_dir):
         F.when(lower, F.col("pb")).otherwise(F.col("pa")).alias("v"),
     )
     # Intersection counting is symmetric, so the wedge-ordering subtlety
-    # that caused the r4 undercount (wedge endpoints ranked by raw id
+    # behind the wedge-join undercount (wedge endpoints ranked by raw id
     # while the orientation ranked by (degree, id)) cannot arise here —
     # there is no wedge pair to order.
     adj = oriented.groupBy("u").agg(F.collect_list("v").alias("nb"))
@@ -1507,12 +1508,12 @@ def q_hll_distinct_shards(spark, sf_dir):
     per_shard = SK.hll_estimate(parts, ["shard"])
     merged_est = SK.hll_estimate(SK.hll_merge(parts))
     # BOTH exact sides from ONE fact pass, in ONE aggregation subtree
-    # (r19; guide §2.4 — VERDICT r18 #6 adjudication): the r18 shape
-    # shared a lazy distinct (shard, partkey) pair set between two
-    # consumers and relied on runtime exchange reuse that the final plan
-    # never showed (still 3 lineitem scans, zero ReusedExchange — the
-    # optimizer collapses the global branch's distinct-of-distinct into
-    # a direct scan, so the two exchanges never canonicalize equal).
+    # (fewer passes): sharing a lazy distinct (shard, partkey) pair set
+    # between two consumers relies on runtime exchange reuse that the
+    # final plan never shows (still 3 lineitem scans, zero
+    # ReusedExchange — the optimizer collapses the global branch's
+    # distinct-of-distinct into a direct scan, so the two exchanges
+    # never canonicalize equal).
     # rollup(shard) computes the per-shard distincts AND the global
     # distinct in one Expand-based aggregation over one scan;
     # grouping() disambiguates the total row from a genuine null shard.
@@ -1630,13 +1631,13 @@ def q_heavy_hitters_cms(spark, sf_dir):
 def q_streaming_cms_freq(spark, sf_dir):
     """Streaming incremental frequency-sketch maintenance: the CMS cell
     table of heavy_hitters_cms kept continuously merged per micro-batch
-    by cell-SUM in foreachBatch (streaming/ops.incremental_cms_rollup)
-    — the frequency sibling of streaming_hll_distinct, closing the
-    sketch family's batch/streaming symmetry (NOTES_r5's one deferred
-    sketch twin). Same oracle as the batch query: the additive merge is
-    associative and the md5 cell hashing deterministic, so the
-    post-stream cell table equals the one-shot whole-corpus sketch
-    EXACTLY and the top-20 point estimates replay bit-for-bit.
+    by cell-SUM in foreachBatch (streaming/ops.incremental_cms_rollup) —
+    the frequency sibling of streaming_hll_distinct, closing the sketch
+    family's batch/streaming symmetry. Same oracle as the batch query:
+    the additive merge is associative and the md5 cell hashing
+    deterministic, so the post-stream cell table equals the one-shot
+    whole-corpus sketch EXACTLY and the top-20 point estimates replay
+    bit-for-bit.
 
     The twin's distinct lesson: sum-merge is NOT idempotent (register-
     max is), so the batch-id-versioned state discipline — each version
@@ -1694,8 +1695,7 @@ def q_dedup_semantic_clusters(spark, sf_dir):
     kmeans_assign LEARNS the blocking key (the same cells that feed the
     IVF index), the within-cell pairwise compare is the guarded BLAS
     kernel (cosine_pairs_vectorized — one gram matrix per cell instead
-    of millions of per-pair folds; the r4 verdict's "the vectorized
-    twin exists for exactly this", and the round-6 sim rounding absorbs
+    of millions of per-pair folds, and the 6-place sim rounding absorbs
     the fold-vs-BLAS ulp exactly as in the oracle-green vectorized
     twin; blocks bounded by cluster size — at 100 TB, k scales with
     corpus so cells stay under MAX_COSINE_BLOCK_ROWS and the O(b²)
@@ -2395,9 +2395,9 @@ def q_hll_set_overlap(spark, sf_dir):
 
     li = _t(spark, sf_dir, "lineitem")
     # ONE projected pass feeds both sketch tables AND all three exact
-    # counts (r18 opt round; guide §2.3 "aggregate before you shuffle" /
-    # §2.4 fewer passes): the r17 shape scanned lineitem FIVE times (one
-    # filtered scan per register table + one per exact countDistinct).
+    # counts ("aggregate before you shuffle", fewer passes) instead of
+    # FIVE lineitem scans (one filtered scan per register table + one
+    # per exact countDistinct).
     # Values are identical by construction — hll_partials grouped by
     # (flag, register) is exactly the union of the two per-flag builds,
     # and the per-order flag rollup reproduces each countDistinct.
@@ -2704,8 +2704,8 @@ def q_dedup_semantic_incremental(spark, sf_dir):
     O(|delta|·|cell|) as the contract above states, not the full-gram
     O(|cell|²). Mixed pairs sort the existing id left, so the gate
     rule's victim is id_b and the within-batch keep-the-atypical
-    compare is orientation-identical (kernel docstring). Late-r10
-    interleaved A/B at sf0.1 vs the per-pair fold-join form:
+    compare is orientation-identical (kernel docstring).
+    Interleaved A/B at sf0.1 vs the per-pair fold-join form:
     5.7–6.0 s → 1.7–1.9 s (0.30×), identical result frames every
     round (1550 verdicts / 305 dropped)."""
     from movies_etl_spark.operators import dedup as D

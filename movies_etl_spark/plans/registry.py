@@ -11,9 +11,10 @@ Contract (driver harness, __spark_entry__.py):
   column is aliased identically on both sides;
 - float aggregates are rounded identically on both sides (summation-order
   differences between engines live far below the rounded digit);
-- ``events.ts`` has shipped as both TIMESTAMP(NANOS) (r1-r2 testdata:
+- ``events.ts`` has shipped as both TIMESTAMP(NANOS) (older testdata:
   Spark reads a nanos long, DuckDB keeps nanos) and TIMESTAMP(MICROS)
-  with no timezone marker (r3+: Spark reads TIMESTAMP_NTZ) — queries
+  with no timezone marker (current testdata: Spark reads
+  TIMESTAMP_NTZ) — queries
   ``date_trunc`` to second or coarser on BOTH sides, and anything needing
   epoch arithmetic casts NTZ→timestamp first (UTC session, so the cast is
   value-preserving under either encoding).
@@ -1415,12 +1416,12 @@ def q_date_arithmetic(spark, sf_dir):
     (year/month/day-of-week — Spark dayofweek is 1=Sunday, DuckDB %w is
     0=Sunday; normalized to the 0-based convention).
 
-    due_date uses the TOTAL offset form (r17 totality sweep): plain
+    due_date uses the TOTAL offset form: plain
     date_add maps an in-range order date within 30 days of 9999-12-31 to
     an out-of-range internal that crashes at collect —
     :func:`movies_etl_spark.functions.expr.bounded_date_add` nulls it
     instead. datediff/year/month/dayofweek emit ints and are total even
-    over out-of-range date internals (probed, r17)."""
+    over out-of-range date internals (probed)."""
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders")
     j = li.join(o, li["l_orderkey"] == o["o_orderkey"])
@@ -1484,8 +1485,8 @@ def q_approx_stats(spark, sf_dir):
     distinct counts and t-digest quantiles — mergeable sketch partials,
     constant memory per group, one shuffle of sketches not values.
 
-    ERROR-BOUNDS ORACLE (r8, VERDICT r7 #6 — previously the union's one
-    rows-only row, because raw sketch estimates are engine-specific):
+    ERROR-BOUNDS ORACLE (raw sketch estimates are engine-specific, so
+    a value oracle cannot compare them):
     the query emits the EXACT statistics (cross-engine comparable)
     alongside boolean verdicts asserting each estimate sits inside its
     published bound — HLL++ at rsd=0.01 within ±2% (two standard

@@ -61,16 +61,16 @@ def temp_confs(spark: SparkSession, confs: dict[str, str]):
     ``unset``. The old per-site pattern — ``conf.get(key, <assumed
     default>)`` then ``set`` in finally — pinned unset confs to a
     hard-coded guess that silently diverges if a Spark upgrade or the
-    hosting session changes the real default (ADVICE r5).
+    hosting session changes the real default.
 
     Only the SPECIFIC cannot-resolve error maps to "unset" — a transient
     ``conf.get`` failure (py4j hiccup) on a user-set conf must propagate,
     not silently schedule an unset of the user's value; and the apply
     loop itself is rollback-protected, so a ``set`` failing mid-loop
-    restores the keys already applied (ADVICE r6). On PySpark builds
+    restores the keys already applied. On PySpark builds
     without ``SparkNoSuchElementException`` the classifier matches the
     Py4J-wrapped ``java.util.NoSuchElementException`` by class name
-    rather than re-widening to every exception (ADVICE r7)."""
+    rather than re-widening to every exception."""
     prior: dict[str, str | None] = {}
     applied: list[str] = []
 
@@ -156,7 +156,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # r18 optimization round: allow shuffled hash join where its size
+        # allow shuffled hash join where its size
         # conditions hold (public tuning guidance §3.1 — SMJ's sort is
         # pure overhead when one side's per-partition build fits memory;
         # AQE's OptimizeSkewedJoin still covers the skew case). Measured
@@ -211,7 +211,7 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
     already_decided = (
         spark.conf.get("spark.movies_etl.shufflePinned", "") == "1"
     )
-    # Uniform perf-pin opt-out (ADVICE r18 #2): a harness that
+    # Uniform perf-pin opt-out: a harness that
     # deliberately set the STOCK values (200 partitions, SMJ preferred,
     # snappy, INT96) before the first pin is indistinguishable from an
     # untouched default, so it can declare the intent up front —
@@ -226,7 +226,7 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
         spark.conf.set(
             "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
         )
-    # r18 perf defaults (same once-per-session discipline as the shuffle
+    # perf defaults (same once-per-session discipline as the shuffle
     # pin: replace only the untouched stock default, so a harness that
     # deliberately re-tunes after the first pin is never clobbered).
     # Rationale + measurements in get_spark above / OPTIMIZATION_r18.md.

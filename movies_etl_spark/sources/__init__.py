@@ -1,10 +1,8 @@
 from movies_etl_spark.sources.readers import (  # noqa: F401
     TPCH_TABLES,
     load_table,
-    load_tables,
     read_csv,
     read_json_records,
-    register_views,
 )
 from movies_etl_spark.sources.sinks import (  # noqa: F401
     write_jdbc,

@@ -71,18 +71,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TPCH_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every test table as a temp view (for the SQL API surface)."""
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables
-
-
 def read_json_records(
     spark: SparkSession,
     path: str,

@@ -200,12 +200,11 @@ def sessionize(
     ``state_partitions`` sizes the stateful stage's shuffle — which IS
     the state-store partition count, frozen into the checkpoint at first
     run — and defaults to None = inherit the session setting, so a
-    wide-cluster caller's tuning is never silently overridden (r7
-    hard-coded 8 here; ADVICE r7 flagged that, and the r8 steady-state
-    re-measurement showed the claimed 3.2→2.2 s win was a cold-vs-warm
-    artifact: interleaved warm A/B at sf0.1 reads 8-partition 2.0-2.2 s
-    vs inherited-32 1.8-2.0 s — within noise, slight edge to 32 on a
-    32-core box). The knob remains the real production control for a
+    wide-cluster caller's tuning is never silently overridden (a
+    hard-coded 8 buys nothing: interleaved warm A/B at sf0.1 reads
+    8-partition 2.0-2.2 s vs inherited-32 1.8-2.0 s — within noise,
+    slight edge to 32 on a 32-core box). The knob remains the real
+    production control for a
     LONG-RUNNING stream: the state-store count is frozen into the
     checkpoint at first run, and every partition pays a store
     open/commit per micro-batch even when empty, so size it to key
@@ -215,9 +214,9 @@ def sessionize(
     transfer itself — see SCALE.md "Streaming".
 
     Timestamps cross the Arrow/pandas boundary as epoch-micros int64, not
-    as a TIMESTAMP column (r17 totality sweep): pandas ``datetime64[ns]``
-    spans only [1677-09-21, 2262-04-11], so the previous TIMESTAMP
-    transport crashed the Python worker (``OutOfBoundsDatetime``,
+    as a TIMESTAMP column: pandas ``datetime64[ns]`` spans only
+    [1677-09-21, 2262-04-11], so a TIMESTAMP transport crashes the
+    Python worker (``OutOfBoundsDatetime``,
     executor-side job abort) on event times Spark itself collects fine —
     e.g. year 5000, probed empirically. The session arithmetic is
     identical on int64 (floor-to-second = floor-mod 1e6, which also
@@ -253,7 +252,7 @@ def sessionize(
 def sessionize_stateful(ev: DataFrame) -> DataFrame:
     """The stateful core of :func:`sessionize`: per-user 30-minute-gap
     sessions over any ``(user_id, ts_us)`` stream via
-    ``applyInPandasWithState`` — factored out (r18) so the state-growth
+    ``applyInPandasWithState`` — factored out so the state-growth
     soak test drives the ENGINE's operator through its own checkpointed
     micro-batches rather than a test-local copy. State is one row per
     distinct user (the open-session accumulator), independent of batch
@@ -402,31 +401,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _run_to_memory(joined, "append")
 
 
-def windowed_counts_watermarked(
-    spark: SparkSession, sf_dir: str, watermark: str = "2 hours"
-) -> DataFrame:
-    """Append-mode windowed aggregation WITH a watermark — the unbounded
-    form of :func:`windowed_counts`.
-
-    Append mode only emits a window once the watermark (max observed
-    event time minus ``watermark``) passes its end, and the watermark
-    only advances BETWEEN micro-batches — so on bounded input processed
-    as a single batch nothing emits, and trailing windows inside the
-    watermark horizon never emit. That is correct streaming semantics,
-    not a bug; the bounded-data tests assert the emitted set is the
-    complete set minus the un-finalized tail."""
-    ev = events_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    out = _run_to_memory(agg, "append")
-    return out.select(
-        F.col("w.start").alias("window_start"), "event_type", "cnt"
-    )
-
-
 def foreach_batch_to_parquet(
     spark: SparkSession, sf_dir: str, target_dir: str
 ) -> int:
@@ -497,7 +471,7 @@ def dedup_within_watermark(
     ts_col: str,
     horizon: str = "1 hour",
 ) -> DataFrame:
-    """TTL-bounded streaming dedup core (factored out r18 for the
+    """TTL-bounded streaming dedup core (factored out for the
     state-growth soak): watermark on ``ts_col`` + ``dropDuplicates
     WithinWatermark`` on ``key_cols``. State entries are evicted once the
     watermark passes them, so state size is bounded by (event rate ×
@@ -529,19 +503,19 @@ def incremental_hourly_rollup(
     The source is the events table pre-bucketed to (hour, cents) and
     split across ``n_source_files`` files with maxFilesPerTrigger=1, so
     the maintenance genuinely runs across multiple micro-batches on
-    bounded input (with the r18 hash-keyed split this multi-file spread
-    is statistical — 64·n keys over n files — rather than round-robin
-    by construction; ADVICE r18 #5). Returns the final version —
-    exactly the batch hourly aggregate, the oracle-checked invariant."""
+    bounded input (with the hash-keyed split this multi-file spread is
+    statistical — 64·n keys over n files — rather than round-robin by
+    construction). Returns the final version — exactly the batch hourly
+    aggregate, the oracle-checked invariant."""
     ev = _load_events_batch(spark, sf_dir)
-    # deterministic-key split into the landing files (r18 opt round,
-    # guide §2.5): keyless repartition(n) pays a local sort of its
-    # input (sortBeforeRepartition) to make retries reproducible; a
+    # deterministic-key split into the landing files: keyless
+    # repartition(n) pays a local sort of its input
+    # (sortBeforeRepartition) to make retries reproducible; a
     # deterministic hash key needs no sort and is retry-safe by
-    # construction. Batch composition is immaterial to the result —
-    # the versioned merge is an associative sum, so ANY split of the
-    # same rows yields the identical final aggregate (the oracle
-    # replays the whole input either way).
+    # construction. Batch composition is immaterial to the result — the
+    # versioned merge is an associative sum, so ANY split of the same
+    # rows yields the identical final aggregate (the oracle replays the
+    # whole input either way).
     landed = ev.select(
         F.date_trunc("hour", F.date_trunc("second", F.col("ts")))
         .cast("timestamp")
@@ -561,17 +535,17 @@ def incremental_hourly_rollup(
 
 
 def _tiny_merge_confs(spark: SparkSession):
-    """temp_confs preset for the versioned-state merges (r13, VERDICT
-    r12 #6): every incremental rollup's state table is bounded and tiny
-    — |hours| rows (hourly), days × 1024 registers (HLL), ≤ 2·d·w ≈ 8k
-    cells (CMS) — so the merge plan is a fixed two-stage aggregate
-    where adaptive stage materialization has nothing to decide. With
-    AQE on, a merge into a prior version runs its shuffle-map stage as
-    a job of its own: 2 jobs per merge; inside this block the same
-    merge is 1 job of 2 stages, values bit-identical
-    (test_streaming_extra pins both counts for all three states). AQE
-    off + a narrow shuffle for the duration of the merge only; the
-    streaming query itself is planned outside the block."""
+    """temp_confs preset for the versioned-state merges: every
+    incremental rollup's state table is bounded and tiny — |hours| rows
+    (hourly), days × 1024 registers (HLL), ≤ 2·d·w ≈ 8k cells (CMS) — so
+    the merge plan is a fixed two-stage aggregate where adaptive stage
+    materialization has nothing to decide. With AQE on, a merge into a
+    prior version runs its shuffle-map stage as a job of its own: 2 jobs
+    per merge; inside this block the same merge is 1 job of 2 stages,
+    values bit-identical (test_streaming_extra pins both counts for all
+    three states). AQE off + a narrow shuffle for the duration of the
+    merge only; the streaming query itself is planned outside the
+    block."""
     return temp_confs(
         spark,
         {
@@ -581,7 +555,7 @@ def _tiny_merge_confs(spark: SparkSession):
     )
 
 
-#: On-disk versioned-state schemas (r13): passed explicitly to every
+#: On-disk versioned-state schemas: passed explicitly to every
 #: prior-/final-version read, which skips the per-read parquet
 #: schema-inference job (measured: 1 Spark job per inferred read — one
 #: per merging micro-batch plus the post-stream read). The schema is
@@ -718,38 +692,36 @@ def _verify_dropped(
     cand: DataFrame, sh_all: DataFrame, sh_batch: DataFrame
 ) -> DataFrame:
     """Jaccard-verify LSH candidates against the accumulated shingle
-    store and return the batch doc_ids with a verified (≥0.5) partner
-    — as a bag, not a set (r12): the sole consumer is a left_anti
-    probe, which is set-semantic on its probe side, so the old trailing
-    ``.distinct()`` bought nothing but one more candidate-sized
-    exchange + AQE stage per micro-batch. Duplicate id_b rows stay
-    bounded by the same |cand| ≤ |batch| × cap broadcast contract.
+    store and return the batch doc_ids with a verified (≥0.5) partner —
+    as a bag, not a set: the sole consumer is a left_anti probe, which
+    is set-semantic on its probe side, so a trailing ``.distinct()``
+    would buy nothing but one more candidate-sized exchange + AQE stage
+    per micro-batch. Duplicate id_b rows stay bounded by the same |cand|
+    ≤ |batch| × cap broadcast contract.
 
-    Verify-shape adjudication, settled r11 in the CONTRACT regime
-    (VERDICT r10 #3): the candidate frame is BROADCAST EXPLICITLY into
-    the store join, so the store is probed map-side by construction —
-    cand is derived (bands self-join), its size statistic is unknown to
-    the static planner, and without the hint the store pays a full
-    shuffle-map pass before AQE converts the SMJ (AQE rewrites at the
-    stage boundary, AFTER both sides' exchanges ran their map phase).
-    |cand| ≤ |batch| × band-bucket cap — broadcast-size by the same
-    micro-batch contract as `touched`/`bnew` above. The r10-rejected
-    candidate-id broadcast SEMI-PRUNE of the store is retired
-    PERMANENTLY: measured across a 64× store-size range (10k → 640k
-    docs, small fixed batch — SCALE.md table), its extra prune pass
-    never beats the direct broadcast join, which already makes the
-    store map-only.
+    Verify shape, in the CONTRACT regime: the candidate frame is
+    BROADCAST EXPLICITLY into the store join, so the store is probed
+    map-side by construction — cand is derived (bands self-join), its
+    size statistic is unknown to the static planner, and without the
+    hint the store pays a full shuffle-map pass before AQE converts the
+    SMJ (AQE rewrites at the stage boundary, AFTER both sides' exchanges
+    ran their map phase). |cand| ≤ |batch| × band-bucket cap —
+    broadcast-size by the same micro-batch contract as `touched`/`bnew`
+    above. A candidate-id broadcast SEMI-PRUNE of the store does not
+    pay: measured across a 64× store-size range (10k → 640k docs, small
+    fixed batch — SCALE.md table), its extra prune pass never beats the
+    direct broadcast join, which already makes the store map-only.
 
-    ONE store pass, not two (r19, VERDICT r18 next-round #1): cand's
-    ``id_b`` side comes exclusively from the BATCH's own bands (``bnew``
-    in the caller — batch doc_ids are disjoint from the strictly-below
-    index), so the r18 shape's second full store map pass for the
-    ``id_b`` shingle lookup only ever matched batch rows. ``sh_batch``
-    (the batch's cached shingle frame, batch-size by the micro-batch
-    contract) replaces it as a broadcast build: per batch the store is
-    now scanned once for the ``id_a`` lookup and never again. Plan
-    shape pinned in test_plan_shapes.py: two BroadcastHashJoins, zero
-    Exchange on the store side, ONE store scan."""
+    ONE store pass, not two: cand's ``id_b`` side comes exclusively from
+    the BATCH's own bands (``bnew`` in the caller — batch doc_ids are
+    disjoint from the strictly-below index), so a second full store map
+    pass for the ``id_b`` shingle lookup would only ever match batch
+    rows. ``sh_batch`` (the batch's cached shingle frame, batch-size by
+    the micro-batch contract) replaces it as a broadcast build: per
+    batch the store is now scanned once for the ``id_a`` lookup and
+    never again. Plan shape pinned in test_plan_shapes.py: two
+    BroadcastHashJoins, zero Exchange on the store side, ONE store
+    scan."""
     va = sh_all.select(
         F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")
     )
@@ -775,7 +747,7 @@ def lsh_dedup_batch(
 ) -> None:
     """ONE micro-batch of the streaming MinHash-LSH near-dedup — the
     foreachBatch body of ``lsh_dedup_stream``, extracted to module level
-    (r14) so the store-side scale harness (tools/scale_lsh_store.py)
+    so the store-side scale harness (tools/scale_lsh_store.py)
     measures the EXACT shipped per-batch plan against pre-built stores
     instead of a reimplementation that could drift. Shingles + bands the
     batch's own documents, reads the accumulated band/shingle index for
@@ -787,10 +759,10 @@ def lsh_dedup_batch(
 
     sh_b = D.shingled(batch_df, "text", "doc_id").cache()
     bands_b = D.with_minhash_bands(sh_b, "doc_id").cache()
-    # Index writes FIRST (r19): a per-batch job profile showed the
-    # survivor plan's broadcast builds (touched/bnew/vb/cand)
-    # launching CONCURRENTLY on the broadcast-exchange thread pool
-    # and RACING to materialize the still-cold sh_b/bands_b caches —
+    # Index writes FIRST: a per-batch job profile shows that otherwise
+    # the survivor plan's broadcast builds (touched/bnew/vb/cand)
+    # launch CONCURRENTLY on the broadcast-exchange thread pool
+    # and RACE to materialize the still-cold sh_b/bands_b caches —
     # 4-5 near-identical 1-task jobs each re-running the full
     # shingle+band compute. Writing the
     # batch's bands/shingles index dirs up front materializes both
@@ -809,8 +781,8 @@ def lsh_dedup_batch(
         & set(_versions(f"{work_dir}/shingles", "batch=", batch_id))
     )
     if ids:
-        # explicit index schemas (r13): the per-batch store reads
-        # each paid a schema-inference job (see the state-schema
+        # explicit index schemas: an inferred per-batch store read
+        # pays a schema-inference job (see the state-schema
         # constants above for the rationale)
         index_bands = spark.read.schema(LSH_BAND_SCHEMA).parquet(
             *(f"{work_dir}/bands/batch={i}" for i in ids)
@@ -825,23 +797,23 @@ def lsh_dedup_batch(
     # pair with this batch), then the same bucket-size hard-fail as
     # the batch path — a viral template accumulating in one band
     # bucket fails loudly instead of squaring the candidate join.
-    # The batch-derived sides are broadcast EXPLICITLY (r10): the
+    # The batch-derived sides are broadcast EXPLICITLY: the
     # scale contract already assumes the micro-batch is
     # broadcast-size (docstring), so the touched-bucket prune and
     # the candidate probe must stay map-only over the index read
     # instead of shuffling it — AQE would usually get there, but
     # only after planning with a shuffle it then rewrites.
-    # no .distinct() on touched/cand/dropped (r12): the semi join,
+    # no .distinct() on touched/cand/dropped: the semi join,
     # the verify, and the anti join are all set-semantic on these
     # inputs already (the broadcast hash build dedups touched's
     # keys; duplicate candidate pairs re-verify the same partner;
     # duplicate dropped ids anti-probe identically), and each
-    # distinct cost a batch-sized exchange + AQE stage per
-    # micro-batch — measured 93 → 74 jobs for the 4-batch suite
-    # fixture (NOTES_r12.md).
+    # distinct costs a batch-sized exchange + AQE stage per
+    # micro-batch — measured 93 vs 74 jobs for the 4-batch suite
+    # fixture.
     # ONE broadcast serves both the touched-bucket prune and the
-    # candidate probe (r19): the r18 shape broadcast a separate
-    # `touched` key projection for the semi join — but a left_semi on
+    # candidate probe: no separate `touched` key projection is
+    # broadcast for the semi join — a left_semi on
     # (band_id, band_key) against broadcast(bnew) prunes the identical
     # bucket set (the build side dedups keys; bnew's extra id_b column
     # is unused), and because BOTH joins then reference the same bnew
@@ -930,17 +902,16 @@ def lsh_dedup_stream(
 
     src = _landing(work_dir)
     os.makedirs(src, exist_ok=True)
-    # One-pass chunk scaffolding (r10): the r9 shape ran corpus.count()
-    # plus FOUR filtered writes, each recomputing the global
-    # Window.orderBy sort — the profiling breakdown (NOTES_r10.md)
-    # charged ~5.9 s of the query's cold wall to five executions of the
-    # same sort. ntile() yields the identical id-ranged ascending chunks
-    # without needing n up front, and partitionBy writes every chunk in
-    # ONE job; repartition(n_chunks, "__c__") puts each chunk in exactly
-    # one task, so each chunk dir holds exactly one file. Chunk
-    # boundaries shift by ±1 row vs the old ceil-division for
-    # non-divisible n, which is immaterial: the decision rule is
-    # batching-invariant (docstring above).
+    # One-pass chunk scaffolding: corpus.count() plus FOUR filtered
+    # writes would each recompute the global Window.orderBy sort — a
+    # profiling breakdown charged ~5.9 s of the query's cold wall to
+    # five executions of the same sort. ntile() yields the identical
+    # id-ranged ascending chunks without needing n up front, and
+    # partitionBy writes every chunk in ONE job; repartition(n_chunks,
+    # "__c__") puts each chunk in exactly one task, so each chunk dir
+    # holds exactly one file. Chunk boundaries shift by ±1 row vs
+    # ceil-division for non-divisible n, which is immaterial: the
+    # decision rule is batching-invariant (docstring above).
     w = Window.orderBy("doc_id")
     staged = f"{work_dir}/chunk_staged"
     (
@@ -1035,8 +1006,7 @@ def incremental_cms_rollup(
     keeps a count-min cell table continuously merged as corpus batches
     arrive — the streaming twin of heavy_hitters_cms, closing the
     sketch-family symmetry (HLL has hll_distinct_shards +
-    streaming_hll_distinct; CMS previously had only the batch side —
-    NOTES_r5's deferred item, VERDICT r7 #7).
+    streaming_hll_distinct; this is CMS's streaming side).
 
     Each micro-batch reduces to its own ≤ d·w-row (seed, cell, cnt)
     table (sketch.cms_partials — bounded regardless of batch size) and

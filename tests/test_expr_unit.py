@@ -51,19 +51,15 @@ def _oracle_money(s):
 
 
 def test_parse_money_matches_oracle(spark):
-    """The fused parser and the composed F3+F5+F6 form both match."""
+    """The fused parser matches the F3+F5+F6 oracle on every case."""
     df = spark.createDataFrame([(s,) for s in MONEY_CASES], "s string")
-    composed = E.parse_dollars(E.extract_money(E.strip_money_ranges(F.col("s"))))
-    rows = df.select(
-        "s", E.parse_money_column(F.col("s")).alias("v"), composed.alias("w")
-    ).collect()
+    rows = df.select("s", E.parse_money_column(F.col("s")).alias("v")).collect()
     for r in rows:
-        want = _oracle_money(r["s"])
-        for got in (r["v"], r["w"]):
-            if want is None:
-                assert got is None, f"{r['s']!r}: {got} != None"
-            else:
-                assert got == pytest.approx(want), f"{r['s']!r}"
+        want, got = _oracle_money(r["s"]), r["v"]
+        if want is None:
+            assert got is None, f"{r['s']!r}: {got} != None"
+        else:
+            assert got == pytest.approx(want), f"{r['s']!r}"
 
 
 DATE_CASES = [
@@ -76,9 +72,8 @@ DATE_CASES = [
     ("released July 11, 1990 in the US", "1990-07-11"),
     ("no date here", None),
     (None, None),
-    # Fused-extraction equivalence corpus (see parse_date_column): a form-k
-    # match that format k cannot parse must yield null exactly as the
-    # composed 4-format coalesce chain did — the strict-trailing parser
+    # Fused-extraction corpus (see parse_date_column): a form-k match that
+    # format k cannot parse must yield null — the strict-trailing parser
     # means no OTHER format can rescue the full match either.
     ("July 39, 1994", None),          # [123]\d quirk admits invalid day 39
     ("1990/07/11", None),             # form two any-separator, not ISO
@@ -217,22 +212,16 @@ def test_bounded_date_add_cliffs(spark):
 
 
 def test_parse_date_multiform(spark):
-    """The fused parser and the composed F7+F8 form it replaces
-    (``to_date_inferred(extract_date_multiform(c))``, the equivalence
-    parse_date_column's docstring claims) both meet every case."""
+    """The fused date parser meets every case, including the corpus of
+    form-k matches that format k cannot parse (see parse_date_column)."""
     df = spark.createDataFrame([(s,) for s, _ in DATE_CASES], "s string")
-    s = F.col("s")
     got = {
-        r["s"]: (r["v"], r["w"])
-        for r in df.select(
-            "s",
-            E.parse_date_column(s).alias("v"),
-            E.to_date_inferred(E.extract_date_multiform(s)).alias("w"),
-        ).collect()
+        r["s"]: r["v"]
+        for r in df.select("s", E.parse_date_column(F.col("s")).alias("v")).collect()
     }
     for text, want in DATE_CASES:
-        for v in got[text]:
-            assert (str(v) if v else None) == want, f"{text!r}: {v} != {want}"
+        v = got[text]
+        assert (str(v) if v else None) == want, f"{text!r}: {v} != {want}"
 
 
 RUNTIME_CASES = [

@@ -1598,6 +1598,68 @@ def test_snapshot_diff_matches_python_dicts(spark, sf_dir):
     assert got == want
 
 
+def test_snapshot_diff_null_prices(spark, tmp_path):
+    """Nulls in the diffed value: key presence decides added/removed, and
+    a key in both snapshots is changed exactly when ``NOT old <=> new`` —
+    null/10 and 10/null are changes, null/null and 10/10 are not. Then
+    the registered query and its DuckDB oracle agree on an orders table
+    whose null prices stay null after the repricing."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from movies_etl_spark.operators import relational as REL
+
+    old = spark.createDataFrame(
+        [(1, None), (2, None), (3, 10.0), (4, 10.0), (5, 10.0)],
+        "k long, v double",
+    )
+    new = spark.createDataFrame(
+        [(1, None), (2, 10.0), (3, 10.0), (4, None), (6, 10.0)],
+        "k long, v double",
+    )
+    got = {
+        r["k"]: (r["status"], r["old_v"], r["new_v"])
+        for r in REL.snapshot_diff(old, new, "k", "v").collect()
+    }
+    assert got == {
+        2: ("changed", None, 10.0),
+        4: ("changed", 10.0, None),
+        5: ("removed", 10.0, None),
+        6: ("added", None, 10.0),
+    }
+
+    # 1 and 7 keep a null price in both snapshots (7 is repriced: null + 10
+    # is null); 14 is repriced; 3 drops out of the new snapshot; 10 is new
+    orders = pa.table(
+        {
+            "o_orderkey": pa.array([1, 2, 3, 7, 10, 14], pa.int64()),
+            "o_totalprice": pa.array([None, 2.0, 3.0, None, 4.0, 5.0], pa.float64()),
+        }
+    )
+    pq.write_table(orders, str(tmp_path / "orders.parquet"))
+    want = {
+        3: ("removed", 3.0, None),
+        10: ("added", None, 4.0),
+        14: ("changed", 5.0, 15.0),
+    }
+    got = {
+        r["o_orderkey"]: (r["status"], r["old_price"], r["new_price"])
+        for r in QUERIES["snapshot_diff"](spark, str(tmp_path)).collect()
+    }
+    assert got == want
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW orders AS SELECT * FROM read_parquet('{tmp_path}/orders.parquet')"
+    )
+    oracle = {
+        k: (s, o, n)
+        for k, s, o, n in con.execute(entrymod.oracle_sql()["snapshot_diff"]).fetchall()
+    }
+    con.close()
+    assert oracle == want
+
+
 def test_simhash_pairs_match_bruteforce_hamming(spark, sf_dir):
     """The nibble-banded SimHash pair query against a brute-force
     ALL-PAIRS numpy Hamming scan (no banding at all): the pigeonhole

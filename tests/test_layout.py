@@ -1,6 +1,7 @@
 """Storage-layout tests: partition pruning and bucketed (shuffle-free)
 joins — the two layout disciplines SCALE.md leans on — plus the code
-layout rule that every public engine function has a caller."""
+layout rules: every engine function and class is reachable from a real
+entry point, and live engine modules carry no round history."""
 
 from __future__ import annotations
 
@@ -207,38 +208,108 @@ def test_parse_kernels_have_no_case_mapping_calls():
     assert not hits, hits
 
 
-def test_public_engine_functions_are_referenced():
-    """Every public top-level function of the engine library (operators,
-    functions, sources, streaming and the session module) is used in
-    code somewhere in the repo — called, passed or imported by name, as
-    a plain name or a module attribute — by its own module, a query, a
-    tool, the bench or a test. A name in a docstring, a comment or a
-    registry string does not count. A function nothing uses is dead
-    surface: delete it, or give it a caller."""
-    root = Path(__file__).resolve().parent.parent
-    pkg = root / "movies_etl_spark"
+def _names_used(nodes) -> set[str]:
+    """Names a piece of code reads: plain names and attribute names. A
+    name in a string, a comment, an import or an assignment target does
+    not count."""
     used = set()
-    for path in root.rglob("*.py"):
-        if any(part.startswith(".") for part in path.relative_to(root).parts):
-            continue
-        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
-            if isinstance(node, ast.Name):
-                used.add(node.id)
-            elif isinstance(node, ast.Attribute):
-                used.add(node.attr)
-            elif isinstance(node, ast.ImportFrom):
-                used.update(a.name for a in node.names)
-    engine = [pkg / "session.py"] + [
-        p
-        for sub in ("operators", "functions", "sources", "streaming")
-        for p in sorted((pkg / sub).rglob("*.py"))
-    ]
-    unused = [
-        f"{mod.relative_to(root)}::{node.name}"
-        for mod in engine
-        for node in ast.parse(mod.read_text(encoding="utf-8")).body
-        if isinstance(node, ast.FunctionDef)
-        and not node.name.startswith("_")
-        and node.name not in used
-    ]
-    assert not unused, unused
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                used.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                used.add(n.attr)
+    return used
+
+
+def _is_registered_query(node) -> bool:
+    for d in node.decorator_list:
+        f = d.func if isinstance(d, ast.Call) else d
+        if getattr(f, "id", getattr(f, "attr", None)) == "query":
+            return True
+    return False
+
+
+#: reference implementations that only a test calls, kept to check the
+#: engine's kernel against: test_property_parity compares
+#: cms_inner_product_pair with cms_inner_product
+REFERENCE_ONLY = {"cms_inner_product"}
+
+
+def test_public_engine_functions_are_referenced():
+    """Every top-level function and class in ``movies_etl_spark/`` is
+    reachable from a real entry point, not only from a test. The roots
+    are every ``@query``-registered function, every module-level
+    statement of the package, ``__spark_entry__.py``, ``bench.py``,
+    ``bench_reference_scale.py``, ``perfbench/`` and ``tools/``. A
+    reached definition reaches every definition whose name its body
+    reads, transitively; ``tests/`` is not a root. Code only a test runs
+    is dead surface: delete it, or give it a query, a tool or a bench."""
+    root = Path(__file__).resolve().parent.parent
+    defs: dict[str, list[str]] = {}
+    bodies: dict[str, list] = {}
+    roots: set[str] = set()
+    for path in sorted((root / "movies_etl_spark").rglob("*.py")):
+        for node in ast.parse(path.read_text(encoding="utf-8")).body:
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                roots |= _names_used([node])
+                continue
+            defs.setdefault(node.name, []).append(
+                f"{path.relative_to(root)}:{node.lineno} {node.name}"
+            )
+            bodies.setdefault(node.name, []).extend(node.body)
+            # decorators, bases and defaults run when the module loads
+            roots |= _names_used(node.decorator_list)
+            if isinstance(node, ast.ClassDef):
+                roots |= _names_used(node.bases + node.keywords)
+            else:
+                roots |= _names_used(node.args.defaults + node.args.kw_defaults)
+                if _is_registered_query(node):
+                    roots.add(node.name)
+    entry = [root / n for n in ("__spark_entry__.py", "bench.py", "bench_reference_scale.py")]
+    for path in entry + sorted((root / "perfbench").rglob("*.py")) + sorted(
+        (root / "tools").rglob("*.py")
+    ):
+        roots |= _names_used([ast.parse(path.read_text(encoding="utf-8"))])
+    reached, todo = set(), list(roots)
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo.extend(_names_used(bodies.get(name, [])))
+    unreached = sorted(
+        site
+        for name, sites in defs.items()
+        if name not in reached | REFERENCE_ONLY
+        for site in sites
+    )
+    assert not unreached, unreached
+    assert REFERENCE_ONLY <= defs.keys(), "a reference implementation is gone"
+
+
+def test_engine_modules_carry_no_round_history():
+    """Comments and strings in ``movies_etl_spark/`` keep the reason for
+    a choice, not the round or review that made it: no ``rNN`` round
+    tag, no ``VERDICT``/``ADVICE`` citation, no ``NOTES_rN`` file and no
+    ``ISSUE N``. History lives in git and the round notes."""
+    import tokenize
+
+    root = Path(__file__).resolve().parent.parent
+    pat = re.compile(r"\br\d{1,2}\b|VERDICT|ADVICE|NOTES_r\d|ISSUE \d+")
+    # f-string text is its own token kind from Python 3.12 on
+    kinds = {
+        tokenize.COMMENT,
+        tokenize.STRING,
+        getattr(tokenize, "FSTRING_MIDDLE", tokenize.STRING),
+    }
+    hits = []
+    for path in sorted((root / "movies_etl_spark").rglob("*.py")):
+        with path.open("rb") as f:
+            for tok in tokenize.tokenize(f.readline):
+                if tok.type not in kinds:
+                    continue
+                for i, line in enumerate(tok.string.splitlines()):
+                    if pat.search(line):
+                        rel = path.relative_to(root)
+                        hits.append(f"{rel}:{tok.start[0] + i} {line.strip()}")
+    assert not hits, hits

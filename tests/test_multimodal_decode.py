@@ -1,4 +1,4 @@
-"""Real RIFF/WAVE decode (r18, VERDICT r17 #5 — stub retired).
+"""Real RIFF/WAVE decode.
 
 Independent witness: the parser must correctly decode a WAV produced by
 Python's STDLIB ``wave`` writer (a third-party producer that inserts its
@@ -85,107 +85,20 @@ def test_stdlib_wave_reads_synth_output():
     r.close()
 
 
-# --- r18 image path: BMP + mixed-modality dispatcher ---------------------
-
-GOLDEN_BMP_2x2 = (
-    # hand-assembled 2x2 24-bit BI_RGB BMP (the classic wiki example
-    # layout): 54-byte header + 2 rows of 8 bytes (6 pixel + 2 pad)
-    b"BM"
-    + (70).to_bytes(4, "little") + b"\x00\x00\x00\x00"
-    + (54).to_bytes(4, "little")
-    + (40).to_bytes(4, "little")
-    + (2).to_bytes(4, "little") + (2).to_bytes(4, "little")
-    + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
-    + (0).to_bytes(4, "little") + (16).to_bytes(4, "little")
-    + (2835).to_bytes(4, "little") + (2835).to_bytes(4, "little")
-    + (0).to_bytes(4, "little") + (0).to_bytes(4, "little")
-    + b"\x00\x00\xff\xff\xff\xff\x00\x00"   # row 0: red, white + pad
-    + b"\xff\x00\x00\x00\xff\x00\x00\x00"   # row 1: blue, green + pad
-)
-
-
-def test_decode_golden_bmp():
-    got = MM.decode_bmp_header(GOLDEN_BMP_2x2)
-    assert got == {
-        "n_bytes": 70,
-        "width": 2,
-        "height": 2,
-        "top_down": False,
-        "bits_per_pixel": 24,
-        "stride": 8,
-        "pixel_bytes": 16,
-        "pixel_offset": 54,
-        "file_size": 70,
-    }
-
-
-def test_bmp_synth_roundtrip_matches_oracle_arithmetic():
-    for text in ["x", "hello world", "a" * 553, "Ünïcødé — ↯" * 7]:
-        data = text.encode("utf-8")
-        n = len(data)
-        got = MM.decode_bmp_header(MM.synth_bmp_bytes(data))
-        w = n % 13 + 4
-        h = n % 7 + 3
-        stride = (3 * w + 3) // 4 * 4
-        assert got["width"] == w
-        assert got["height"] == h
-        assert got["stride"] == stride
-        assert got["pixel_bytes"] == stride * h
-        assert got["n_bytes"] == 54 + stride * h
-        assert got["file_size"] == got["n_bytes"]
-
-
-def test_bmp_decode_handles_top_down_and_rejects_malformed():
-    import struct
-
-    wav = MM.synth_wav_bytes(b"not a bmp")
-    with pytest.raises(ValueError):
-        MM.decode_bmp_header(wav)
-    with pytest.raises(ValueError):
-        MM.decode_bmp_header(None)
-    # top-down variant (negative height) of the golden file
-    td = bytearray(GOLDEN_BMP_2x2)
-    td[22:26] = struct.pack("<i", -2)
-    got = MM.decode_bmp_header(bytes(td))
-    assert got["height"] == 2 and got["top_down"] is True
-    # RLE-compressed refused (parser only does BI_RGB)
-    rle = bytearray(GOLDEN_BMP_2x2)
-    rle[30:34] = struct.pack("<I", 1)
-    with pytest.raises(ValueError):
-        MM.decode_bmp_header(bytes(rle))
-
-
-def test_sniff_media_kind_routes_both_containers():
-    assert MM.sniff_media_kind(MM.synth_wav_bytes(b"abc")) == "audio/wav"
-    assert MM.sniff_media_kind(MM.synth_bmp_bytes(b"abc")) == "image/bmp"
-    assert MM.sniff_media_kind(b"GIF89a...") == "unknown"
-    assert MM.sniff_media_kind(None) == "unknown"
-
-
-def test_extract_mixed_features_spark(spark):
-    rows = [(i, f"doc text number {i} " * (i + 1)) for i in range(8)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = MM.extract_mixed_features(MM.with_mixed_payload(df)).collect()
-    assert len(out) == 8
-    by_id = {r["doc_id"]: r for r in out}
-    for i, text in rows:
-        n = len(text.encode("utf-8"))
-        r = by_id[i]
-        if i % 2 == 0:
-            assert r["kind"] == "image/bmp"
-            w = n % 13 + 4
-            h = n % 7 + 3
-            stride = (3 * w + 3) // 4 * 4
-            assert (r["width"], r["height"]) == (w, h)
-            assert r["pixel_bytes"] == stride * h
-            assert r["sample_rate"] is None and r["duration_ms"] is None
-        else:
-            assert r["kind"] == "audio/wav"
-            ch = n % 2 + 1
-            sr = 8000 + (n % 7) * 1000
-            assert r["sample_rate"] == sr
-            assert r["duration_ms"] == (n // (ch * 2)) * 1000 // sr
-            assert r["width"] is None and r["pixel_bytes"] is None
+def test_null_text_gives_null_features_and_no_frames(spark):
+    """A null text is a null payload: extract_features keeps its doc_id
+    with every feature null, frame_offsets emits no frame for it, and
+    the non-null rows decode as usual."""
+    df = spark.createDataFrame(
+        [(1, "hello world"), (2, None)], "doc_id long, text string"
+    )
+    payload = MM.with_binary_payload(df)
+    feats = {r["doc_id"]: r for r in MM.extract_features(payload).collect()}
+    assert set(feats) == {1, 2}
+    assert all(feats[2][c] is None for c in feats[2].asDict() if c != "doc_id")
+    assert feats[1]["n_bytes"] == len(b"hello world") + 44
+    frames = MM.frame_offsets(payload).collect()
+    assert frames and {r["doc_id"] for r in frames} == {1}
 
 
 def test_codecs_run_on_a_worker_without_the_package(tmp_path):
@@ -201,17 +114,10 @@ def test_codecs_run_on_a_worker_without_the_package(tmp_path):
 
     from pyspark import cloudpickle
 
-    codecs = (
-        MM.synth_wav_bytes,
-        MM.decode_wav_header,
-        MM.synth_bmp_bytes,
-        MM.decode_bmp_header,
-        MM.sniff_media_kind,
-    )
+    codecs = (MM.synth_wav_bytes, MM.decode_wav_header)
 
-    def run(synth_wav, decode_wav, synth_bmp, decode_bmp, sniff):
-        wav, bmp = synth_wav(b"worker payload"), synth_bmp(b"worker payload")
-        return decode_wav(wav), decode_bmp(bmp), sniff(wav), sniff(bmp)
+    def run(synth_wav, decode_wav):
+        return decode_wav(synth_wav(b"worker payload"))
 
     code = (
         "import pickle, sys\n"
@@ -259,78 +165,13 @@ if HAVE_HYP:
         assert got["duration_ms"] == (n // (ch * 2)) * 1000 // sr
 
     @settings(max_examples=_MAX, deadline=None)
-    @given(st.binary(min_size=0, max_size=4096))
-    def test_bmp_roundtrip_property(data):
-        n = len(data)
-        got = MM.decode_bmp_header(MM.synth_bmp_bytes(data))
-        w = n % 13 + 4
-        h = n % 7 + 3
-        stride = (3 * w + 3) // 4 * 4
-        assert (got["width"], got["height"]) == (w, h)
-        assert got["pixel_bytes"] == stride * h
-        assert got["n_bytes"] == got["file_size"] == 54 + stride * h
-
-    @settings(max_examples=_MAX, deadline=None)
     @given(st.binary(min_size=0, max_size=256))
-    def test_sniff_never_crashes_and_parsers_reject_noise(data):
-        """Arbitrary (possibly magic-prefixed) noise: sniff is total; a
-        parser either returns a consistent dict or raises ValueError —
-        never any other exception (the fault-tolerant decode contract)."""
-        kind = MM.sniff_media_kind(data)
-        assert kind in ("audio/wav", "image/bmp", "unknown")
-        for parse in (MM.decode_wav_header, MM.decode_bmp_header):
-            try:
-                out = parse(data)
-                assert out["n_bytes"] == len(data)
-            except ValueError:
-                pass
-
-
-# --- r19-ready: mixed-modality decode, full oracle parity (unregistered) --
-
-#: the DuckDB oracle the r19 `multimodal_mixed_decode` registration will
-#: carry — validated here end-to-end so the registration is a pure
-#: @query wrap (the r18 one-in-window-registration slot went to
-#: dedup_cc_distributed)
-MIXED_DECODE_ORACLE = """
-    WITH m AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents)
-    SELECT doc_id,
-           CASE WHEN doc_id % 2 = 0 THEN 'image/bmp' ELSE 'audio/wav' END AS kind,
-           CAST(CASE WHEN doc_id % 2 = 0
-                THEN 54 + ((3 * (n % 13 + 4) + 3) // 4 * 4) * (n % 7 + 3)
-                ELSE n + 44 END AS BIGINT) AS n_bytes,
-           CAST(CASE WHEN doc_id % 2 = 1
-                THEN 8000 + (n % 7) * 1000 END AS BIGINT) AS sample_rate,
-           CAST(CASE WHEN doc_id % 2 = 1
-                THEN (n // ((n % 2 + 1) * 2)) * 1000 // (8000 + (n % 7) * 1000)
-                END AS BIGINT) AS duration_ms,
-           CAST(CASE WHEN doc_id % 2 = 0 THEN n % 13 + 4 END AS BIGINT) AS width,
-           CAST(CASE WHEN doc_id % 2 = 0 THEN n % 7 + 3 END AS BIGINT) AS height,
-           CAST(CASE WHEN doc_id % 2 = 0
-                THEN ((3 * (n % 13 + 4) + 3) // 4 * 4) * (n % 7 + 3)
-                END AS BIGINT) AS pixel_bytes
-    FROM m
-"""
-
-
-def test_mixed_decode_oracle_parity(spark, duck, sf_dir):
-    """Exact full-frame parity of extract_mixed_features(with_mixed_payload)
-    vs the closed-form DuckDB oracle over the real documents table — the
-    same comparison the driver runs, ahead of the r19 registration."""
-    import pandas as pd
-
-    from movies_etl_spark.sources import readers
-
-    d = readers.load_table(spark, sf_dir, "documents")
-    got = MM.extract_mixed_features(MM.with_mixed_payload(d)).toPandas()
-    want = duck.execute(MIXED_DECODE_ORACLE).df()
-
-    def norm(df):
-        cols = sorted(df.columns)
-        out = df[cols].copy()
-        for c in cols:
-            out[c] = out[c].astype(str)
-        return out.sort_values(cols).reset_index(drop=True)
-
-    assert sorted(got.columns) == sorted(want.columns)
-    pd.testing.assert_frame_equal(norm(got), norm(want))
+    def test_wav_parser_rejects_noise(data):
+        """Arbitrary bytes: the parser either
+        returns a consistent dict or raises ValueError — never any other
+        exception (the fault-tolerant decode contract)."""
+        try:
+            out = MM.decode_wav_header(data)
+            assert out["n_bytes"] == len(data)
+        except ValueError:
+            pass

@@ -14,10 +14,13 @@ localCheckpoints, convergence loops, and foreachBatch streams run jobs
 at build time, which this tool attributes to build (correctly: they
 happen before the caller's first action).  To separate "real work that
 happens to run in the builder" from "pure Catalyst analysis", each row
-also records build_jobs (Spark jobs submitted during build, via the
-status tracker): the actionable rows are build_sec > ~1 s AND
+also records build_jobs (Spark jobs submitted during build: the
+difference of ``perfbench.probe.StatusProbe.mark()``, the highest job id
+in the status store, which sees jobs in every job group and survives the
+store evicting old jobs): the actionable rows are build_sec > ~1 s AND
 build_jobs == 0 — seconds of driver time with zero cluster work is the
-plan-re-analysis signature that the r10 k-means/frontier fixes closed.
+plan-re-analysis signature (the k-means and frontier builders once
+showed it).
 
 ``--reps N`` times each query N times, interleaved rep-major (every
 query once, then every query again), so ambient drift on a shared box
@@ -43,6 +46,7 @@ sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
 import _cli  # noqa: E402  (tools/_cli.py — shared flag parsing)
 from movies_etl_spark.session import get_spark  # noqa: E402
 from movies_etl_spark.plans import registry  # noqa: E402
+from perfbench.probe import StatusProbe  # noqa: E402
 import __spark_entry__  # noqa: E402,F401  (imports every query module so registry.QUERIES is fully populated)
 import bench  # noqa: E402
 
@@ -50,9 +54,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    # exact flag match + guarded value lookup via the shared parser
-    # (ADVICE r10: a hand-rolled startswith('--top') also swallowed
-    # e.g. '--topology')
+    # exact flag match + guarded value lookup via the shared parser (a
+    # hand-rolled startswith('--top') also swallowed e.g. '--topology')
     vals, args = _cli.parse_args(
         sys.argv[1:],
         {"--top": int, "--reps": int},
@@ -63,48 +66,18 @@ def main() -> None:
     reps = vals.get("reps", 1)
     names = args or [n for n in bench.HEADLINE if n in registry.QUERIES]
     spark = get_spark()
-    tracker = spark.sparkContext.statusTracker()
-
-    def max_job_id() -> int:
-        # job ids are monotonically increasing; diffing the MAX id is
-        # robust to the UI store evicting old jobs (len() diffs are not:
-        # past spark.ui.retainedJobs both lengths saturate and every
-        # later query would read ~0 build jobs, polluting the
-        # pure-planning suspect list).
-        # Primary source is the AppStatusStore, which sees jobs in EVERY
-        # job group — statusTracker().getJobIdsForGroup(None) returns
-        # only group-LESS jobs, so a builder that sets spark.jobGroup
-        # would read build_jobs==0 and land falsely on the pure-planning
-        # suspect list (ADVICE r10).
-        try:
-            # the CORE AppStatusStore (SparkContext.statusStore) — NOT
-            # sharedState().statusStore(), which is the SQLAppStatusStore
-            # and has no jobsList (the first r11 fix used it and silently
-            # fell through to the fallback every call — caught in review,
-            # then verified live: the core store sees a jobGroup-tagged
-            # job the tracker path misses)
-            jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
-            n = jobs.size()
-            if n == 0:
-                return -1
-            # jobsList is ordered (descending by id in practice);
-            # checking both ends stays correct whichever direction
-            return max(jobs.apply(0).jobId(), jobs.apply(n - 1).jobId())
-        except Exception:
-            # fallback: assumes no builder sets a job group
-            ids = tracker.getJobIdsForGroup(None)
-            return max(ids) if ids else -1
+    probe = StatusProbe(spark)
 
     rows = []
     for rep in range(reps):
         for name in names:
             fn = registry.QUERIES[name]
             spark._jvm.System.gc()
-            jobs_before = max_job_id()
+            jobs_before = probe.mark()
             t0 = time.perf_counter()
             df = fn(spark, SF_DIR)
             t1 = time.perf_counter()
-            build_jobs = max_job_id() - jobs_before
+            build_jobs = probe.mark() - jobs_before
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
             rows.append(
