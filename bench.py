@@ -244,7 +244,7 @@ def _ann_recall(spark) -> dict[str, float]:
 
     emb = readers.load_table(spark, SF_DIR, "embeddings")
     qset = emb.filter(F.col("vec_id") < 8)
-    exact = SIM.topk_bruteforce(emb, qset, k=5).cache()
+    exact = SIM.topk_bruteforce(emb, qset).cache()
     exact.count()
     arms = {
         "lsh_single_probe": SIM.topk_multiprobe_lsh(emb, qset, k=5, offsets=[0]),
@@ -266,7 +266,7 @@ def _ann_recall(spark) -> dict[str, float]:
     clq = cl.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
     recall["lsh_h1_clustered"] = round(
         SIM.recall_at_k(
-            SIM.topk_bruteforce(cl, clq, k=5),
+            SIM.topk_bruteforce(cl, clq),
             SIM.topk_multiprobe_lsh(cl, clq, k=5, offsets=SIM.MULTIPROBE_OFFSETS_H1),
         ),
         3,

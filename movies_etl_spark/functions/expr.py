@@ -431,9 +431,9 @@ def cast_double(c: Column) -> Column:
     return c.try_cast("double")
 
 
-def cast_bool_eq(c: Column, truthy: str = "True") -> Column:
+def cast_bool_eq(c: Column) -> Column:
     """F14: ``col == 'True'`` → boolean (challenge.py:183)."""
-    return c == F.lit(truthy)
+    return c == F.lit("True")
 
 
 def fill_if_zero(keep: Column, fallback: Column) -> Column:

@@ -222,20 +222,12 @@ def _train_local(
     return merges, [(w, s, f) for w, s, f in words]
 
 
-def bpe_train(
-    spark: SparkSession,
-    wc: DataFrame,
-    n_merges: int = 8,
-    max_local_vocab: int = MAX_LOCAL_VOCAB,
-    max_local_chars: int = MAX_LOCAL_CHARS,
-) -> DataFrame:
-    """Train ``n_merges`` BPE merges over a (word, freq) table; returns
-    the learned merge table (step, sym_a, sym_b, pair_cnt) — the
-    artifact a tokenizer ships. See :func:`bpe_train_with_vocab` for
-    the local/distributed execution split."""
-    merges, _ = bpe_train_with_vocab(
-        spark, wc, n_merges, max_local_vocab, max_local_chars
-    )
+def bpe_train(spark: SparkSession, wc: DataFrame) -> DataFrame:
+    """Train 8 BPE merges over a (word, freq) table; returns the learned
+    merge table (step, sym_a, sym_b, pair_cnt) — the artifact a
+    tokenizer ships. See :func:`bpe_train_with_vocab` for the
+    local/distributed execution split."""
+    merges, _ = bpe_train_with_vocab(spark, wc)
     return merges
 
 

@@ -80,9 +80,9 @@ def _token_hash_sql(tok: str) -> str:
     return f"cast(conv(substring(md5({tok}), 1, 12), 16, 10) as bigint)"
 
 
-def _shingle_hash_array_sql(toks: str, k: int = 3) -> str:
-    """SQL text of the integer k-shingle hashes of a token-array
-    fragment: md5 ONCE PER TOKEN (not per shingle), then each k-shingle
+def _shingle_hash_array_sql(toks: str) -> str:
+    """SQL text of the integer 3-shingle hashes of a token-array
+    fragment: md5 ONCE PER TOKEN (not per shingle), then each 3-shingle
     hash is an arithmetic combination of consecutive token hashes. That
     drops both shingle-string construction and per-shingle md5, the
     dominant costs of text near-dedup at corpus scale. 31-bit space;
@@ -105,7 +105,7 @@ def _shingle_hash_array_sql(toks: str, k: int = 3) -> str:
     )
     s2 = f"zip_with({s1}, slice({th}, 3, {n}), (x, y) -> (x + y) % {MINHASH_P})"
     return (
-        f"CASE WHEN {n} >= {k} THEN slice({s2}, 1, {n} - {k - 1}) "
+        f"CASE WHEN {n} >= 3 THEN slice({s2}, 1, {n} - 2) "
         f"ELSE cast(array() as array<bigint>) END"
     )
 
@@ -724,8 +724,6 @@ CC_CHECK_EVERY = 2
 
 def connected_components(
     edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
     max_iter: int = 20,
     max_local_edges: int = MAX_LOCAL_EDGES,
 ) -> DataFrame:
@@ -769,7 +767,7 @@ def connected_components(
     # BOTH paths see the same well-defined edge list; the filter rides
     # the persist scan (zero extra jobs).
     e0 = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
         .persist()
     )

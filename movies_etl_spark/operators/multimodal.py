@@ -120,11 +120,11 @@ def decode_wav_header(payload: bytes) -> dict:
     }
 
 
-def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_binary_payload(df: DataFrame) -> DataFrame:
     """Make an opaque binary payload column + typed metadata (media kind,
     declared size). Real pipelines read the bytes from object storage;
     here the payload is a VALID PCM WAV file whose sample data is the
-    utf-8 encoding of the text column — deterministic, oracle-checkable,
+    utf-8 encoding of the ``text`` column — deterministic, oracle-checkable,
     and genuinely parseable by any WAV reader. The synth
     (:func:`synth_wav_bytes`) runs as an Arrow-batched scalar pandas UDF
     (binary out). A null text gives a null payload, as a Spark built-in
@@ -136,7 +136,7 @@ def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
             lambda t: None if t is None else synth_wav_bytes(t.encode("utf-8"))
         )
 
-    return df.withColumn("payload", wav_payload(F.col(text_col))).withColumn(
+    return df.withColumn("payload", wav_payload(F.col("text"))).withColumn(
         "media_meta",
         F.struct(
             F.lit("audio/wav").alias("kind"),
@@ -145,7 +145,7 @@ def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def extract_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload column:
     a real RIFF/WAVE header parse per payload (see
     :func:`decode_wav_header`) — the canonical shape for decode / resize /
@@ -159,13 +159,13 @@ def extract_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 {} if p is None else decode_wav_header(p) for p in pdf["payload"]
             ]
             out = pd.DataFrame(headers, columns=cols)
-            out.insert(0, "doc_id", pdf[id_col].values)
+            out.insert(0, "doc_id", pdf["doc_id"].values)
             yield out
 
-    return df.select(F.col(id_col), "payload").mapInPandas(op, FEATURE_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(op, FEATURE_SCHEMA)
 
 
-def frame_offsets(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def frame_offsets(df: DataFrame) -> DataFrame:
     """1:N frame sampling over the WAV payload column: one output row per
     sampled frame (every 2nd :data:`FRAME_SAMPLES`-sample frame) with its
     byte offset into the container — the shape of a video/audio
@@ -179,7 +179,7 @@ def frame_offsets(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 if payload is None:
                     continue
                 h = decode_wav_header(payload)
@@ -191,7 +191,7 @@ def frame_offsets(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 rows, columns=["doc_id", "frame_idx", "frame_offset"]
             )
 
-    return df.select(F.col(id_col), "payload").mapInPandas(
+    return df.select("doc_id", "payload").mapInPandas(
         op, "doc_id bigint, frame_idx bigint, frame_offset bigint"
     )
 

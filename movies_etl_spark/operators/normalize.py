@@ -114,11 +114,10 @@ def collect_map_column(
     df: DataFrame,
     keys: Sequence[str] | None = None,
     target: str = "alt_titles",
-    drop_sources: bool = True,
 ) -> DataFrame:
     """P10: gather the alt-language title columns into one
-    ``MapType(String,String)`` column, keeping only non-null entries
-    (challenge.py:45-58)."""
+    ``MapType(String,String)`` column, keeping only non-null entries,
+    and drop the source columns (challenge.py:45-58)."""
     keys = [k for k in (keys or ALT_TITLE_KEYS) if k in df.columns]
     if not keys:
         return df.withColumn(
@@ -128,10 +127,9 @@ def collect_map_column(
         F.array(*[F.lit(k) for k in keys]),
         F.array(*[F.col(f"`{k}`").cast("string") for k in keys]),
     )
-    out = df.withColumn(target, F.map_filter(m, lambda _, v: v.isNotNull()))
-    if drop_sources:
-        out = out.drop(*keys)
-    return out
+    return df.withColumn(
+        target, F.map_filter(m, lambda _, v: v.isNotNull())
+    ).drop(*keys)
 
 
 def _null_count(c: str) -> Column:

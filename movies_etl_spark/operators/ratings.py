@@ -67,18 +67,16 @@ def pivot_counts(
     )
 
 
-def rating_counts(ratings: DataFrame, prefix: str = "rating_") -> DataFrame:
+def rating_counts(ratings: DataFrame) -> DataFrame:
     """The reference's exact block: per-movie rating-bucket counts with
     nulls filled to 0 BEFORE the join (challenge.py:276-283 — movies with
     no ratings at all still get nulls post-join; see SURVEY F16 note)."""
     return pivot_counts(
-        ratings, "movieId", "rating", RATING_BUCKETS, prefix=prefix, fill_zero=True
+        ratings, "movieId", "rating", RATING_BUCKETS, prefix="rating_", fill_zero=True
     )
 
 
-def attach_rating_counts(
-    movies: DataFrame, ratings: DataFrame, movies_key: str = "kaggle_id"
-) -> DataFrame:
+def attach_rating_counts(movies: DataFrame, ratings: DataFrame) -> DataFrame:
     """J2: movies LEFT JOIN bucket counts on kaggle_id = movieId
     (challenge.py:285).
 
@@ -89,11 +87,11 @@ def attach_rating_counts(
     unfiltered join's. ``movies`` is read twice (keys and join side), so
     callers pass a cached frame when it is expensive to rebuild. The
     counts side is dimension-sized → broadcast."""
-    keys = movies.select(movies_key)
+    keys = movies.select("kaggle_id")
     kept = ratings.join(
-        F.broadcast(keys), ratings["movieId"] == keys[movies_key], "left_semi"
+        F.broadcast(keys), ratings["movieId"] == keys["kaggle_id"], "left_semi"
     )
     counts = rating_counts(kept)
     return movies.join(
-        F.broadcast(counts), movies[movies_key] == counts["movieId"], "left"
+        F.broadcast(counts), movies["kaggle_id"] == counts["movieId"], "left"
     ).drop(counts["movieId"])

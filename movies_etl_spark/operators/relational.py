@@ -22,11 +22,10 @@ def join_with_suffixes(
     left: DataFrame,
     right: DataFrame,
     on: str | list[str],
-    how: str = "inner",
     suffixes: tuple[str, str] = ("_x", "_y"),
     broadcast_right: bool = False,
 ) -> DataFrame:
-    """J1: equi-join with pandas-style collision suffixes
+    """J1: inner equi-join with pandas-style collision suffixes
     (reference: ``pd.merge(..., suffixes=['_wiki','_kaggle'])``,
     challenge.py:235). Spark has no suffix mechanism — colliding non-key
     columns are renamed before the join."""
@@ -38,7 +37,7 @@ def join_with_suffixes(
         right = right.withColumnRenamed(c, c + rsuf)
     if broadcast_right:
         right = F.broadcast(right)
-    return left.join(right, keys, how)
+    return left.join(right, keys, "inner")
 
 
 def join_left_on_keys(
@@ -46,14 +45,11 @@ def join_left_on_keys(
     right: DataFrame,
     left_key: str,
     right_key: str,
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """J2: left equi-join on differently-named keys, dropping the right key
     (reference: ``pd.merge(..., left_on='kaggle_id', right_index=True,
     how='left')``, challenge.py:285 — the pandas index becomes an ordinary
     column in Spark)."""
-    if broadcast_right:
-        right = F.broadcast(right)
     return left.join(
         right, left[left_key] == right[right_key], "left"
     ).drop(right[right_key])

@@ -1,6 +1,7 @@
 """Similarity search over embedding columns (north star): brute-force
 cosine top-k as the exact baseline, and an IVF-style partitioned variant
-as the scale path.
+as the scale path. The search functions read ``(vec_id, embedding)``
+frames.
 
 Scale design:
 - Brute force broadcasts the (small) query set and scans the corpus once
@@ -46,23 +47,18 @@ def _double_vec(vec_col: str) -> Column:
     return F.expr(f"transform({_plain_name(vec_col)}, x -> cast(x as double))")
 
 
-def topk_bruteforce(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Exact top-k cosine neighbors per query (excluding self).
+def topk_bruteforce(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact top-5 cosine neighbors per query (excluding self), over
+    (vec_id, embedding) frames.
 
     Ties broken on (rounded sim desc, neighbor id asc) — fully
     deterministic. Plan: broadcast queries × one corpus scan → window
-    top-k per query."""
+    top-5 per query."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec")
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -73,14 +69,13 @@ def topk_bruteforce(
             F.round(cosine_expr("qvec", "cvec"), 6).alias("sim"),
         )
     )
-    return _topk_by_sim(scored, k)
+    return _topk_by_sim(scored, 5)
 
 
 def label_centroids(
     corpus: DataFrame,
     vec_col: str = "embedding",
     label_col: str = "label",
-    dim: int = 64,
 ) -> DataFrame:
     """Element-wise mean vector per partition label (the IVF coarse
     quantizer, here over the precomputed partition). One shuffle on
@@ -116,8 +111,6 @@ def label_centroids(
 def topk_ivf(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     label_col: str = "label",
     k: int = 3,
     nprobe: int = 1,
@@ -128,9 +121,9 @@ def topk_ivf(
     multi-probe LSH's (nprobe/n_cells of the corpus scanned; recall
     floors measured in tests/test_ann_recall.py). Returns
     (query_id, probe_label, neighbor_id, sim, rank)."""
-    cents = label_centroids(corpus, vec_col, label_col)
+    cents = label_centroids(corpus, "embedding", label_col)
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     # route: top-nprobe centroid cosine per query (n_queries × n_labels)
     routed = q.crossJoin(F.broadcast(cents)).select(
@@ -147,8 +140,8 @@ def topk_ivf(
     )
     # search only the probed partition (partition-pruned scan at scale)
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cvec"),
         F.col(label_col).alias("probe_label"),
     )
     scored = (
@@ -250,12 +243,11 @@ def _recompute_centroids(assigned: DataFrame) -> DataFrame:
 def kmeans_assign(
     corpus: DataFrame,
     k: int = 4,
-    iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_vec: bool = False,
 ) -> DataFrame:
-    """Lloyd's k-means, fixed iteration count, pure DataFrame ops — the
+    """Lloyd's k-means, two iterations, pure DataFrame ops — the
     IVF coarse-quantizer TRAINER (topk_ivf consumes the resulting cell
     assignment as its partition key; here the cells are learned instead
     of given). Seeds are the first k vectors by id (deterministic, so
@@ -264,9 +256,9 @@ def kmeans_assign(
     Per iteration: one broadcast-assignment scan of the corpus + one
     (cell, position) shuffle for the mean recompute — the corpus is
     never self-joined and nothing iterative accumulates driver state.
-    Fixed `iters` (not convergence-tested) keeps the plan static and the
-    oracle finite; production runs pick iters from a held-out inertia
-    check. Returns (vec_id, cell, d2 = rounded squared distance);
+    A fixed iteration count (not convergence-tested) keeps the plan
+    static and the oracle finite; production runs pick it from a
+    held-out inertia check. Returns (vec_id, cell, d2 = rounded squared distance);
     ``keep_vec=True`` additionally returns ``vd`` — the
     double-cast input vector the assignment already scanned — so a
     consumer that needs (cell, d2, vector) per row (the SemDeDup memb
@@ -277,8 +269,7 @@ def kmeans_assign(
     cents = v.filter(F.col(id_col) < k).select(
         F.col(id_col).alias("cell"), F.col("vd").alias("centroid")
     )
-    for _ in range(iters - 1):
-        cents = _recompute_centroids(_assign_cells(v, cents))
+    cents = _recompute_centroids(_assign_cells(v, cents))
     assigned = _assign_cells(v, _centroid_boundary(cents))
     cols = [id_col, "cell", F.round(F.col("d2"), 4).alias("d2")]
     if keep_vec:
@@ -289,12 +280,10 @@ def kmeans_assign(
 def topk_bruteforce_vectorized(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
     max_local_queries: int = MAX_LOCAL_QUERIES,
 ) -> DataFrame:
-    """Numpy-vectorized brute-force top-k: the 100 TB fast path.
+    """Numpy-vectorized brute-force top-5 over (vec_id, embedding)
+    frames: the 100 TB fast path.
 
     The query matrix (small) is captured in the UDF closure and each
     Arrow batch of corpus vectors is scored with one BLAS matmul —
@@ -304,8 +293,8 @@ def topk_bruteforce_vectorized(
     summation agrees with the sequential fold post-rounding and the
     same SQL oracle gates both.
 
-    Per-partition local top-k → global top-k: only k rows (plus any ties
-    at the k-th boundary) per partition per query reach the final window,
+    Per-partition local top-5 → global top-5: only 5 rows (plus any ties
+    at the 5th boundary) per partition per query reach the final window,
     so the shuffle is O(k·queries·partitions), independent of corpus
     size.
 
@@ -318,7 +307,7 @@ def topk_bruteforce_vectorized(
 
     # take(cap+1) IS the collect when under cap (limit returns every row
     # once n >= count), and stops early when over — one job either way.
-    q_rows = queries.select(id_col, vec_col).take(max_local_queries + 1)
+    q_rows = queries.select("vec_id", "embedding").take(max_local_queries + 1)
     if len(q_rows) > max_local_queries:
         raise ValueError(
             f"topk_bruteforce_vectorized: query frame exceeds "
@@ -330,16 +319,16 @@ def topk_bruteforce_vectorized(
             f"collect) / an ANN family (similarity_ann_multiprobe, "
             f"similarity_ann_ivf) for large query sets."
         )
-    q_ids = [r[id_col] for r in q_rows]
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
+    q_ids = [r["vec_id"] for r in q_rows]
+    q_mat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
     q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
 
     def score(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy()
-            c = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            ids = pdf["vec_id"].to_numpy()
+            c = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             c /= np.linalg.norm(c, axis=1, keepdims=True)
             sims = c @ q_mat.T  # (batch, n_queries)
             out = []
@@ -349,7 +338,7 @@ def topk_bruteforce_vectorized(
                 col = np.round(sims[:, qi], 6)
                 mask = ids != qid
                 m_ids, m_sims = ids[mask], col[mask]
-                take = min(k, m_ids.size)
+                take = min(5, m_ids.size)
                 if take == 0:
                     # batch held only the query row itself — nothing to
                     # emit (argpartition(kth=-1) on empty would raise)
@@ -372,10 +361,10 @@ def topk_bruteforce_vectorized(
             if out:
                 yield pd.concat(out, ignore_index=True)
 
-    local = corpus.select(id_col, vec_col).mapInPandas(
+    local = corpus.select("vec_id", "embedding").mapInPandas(
         score, "query_id bigint, neighbor_id bigint, sim double"
     )
-    return _topk_by_sim(local, k)
+    return _topk_by_sim(local, 5)
 
 
 # ---------------------------------------------------------------------------
@@ -398,14 +387,14 @@ def _rp_value(j: int, i: int) -> float:
     return (h % 2001 - 1000) / 1000.0
 
 
-def rp_planes_n(n_planes: int, dim: int = RP_DIM) -> list[list[float]]:
+def rp_planes_n(n_planes: int) -> list[list[float]]:
     """First ``n_planes`` hyperplanes of the md5-derived family — plane
     j is independent of how many planes are requested, so planes 0..7
     are exactly :data:`RP_PLANES` and a sweep over plane counts varies
     only signature LENGTH, never the planes themselves (each config's
     signature is a prefix of the next — the property that makes the
     recall frontier a clean one-variable comparison)."""
-    return [[_rp_value(j, i) for i in range(dim)] for j in range(n_planes)]
+    return [[_rp_value(j, i) for i in range(RP_DIM)] for j in range(n_planes)]
 
 
 def multiprobe_offsets(n_planes: int, radius: int) -> list[int]:
@@ -475,8 +464,6 @@ def lsh_candidates(
     queries: DataFrame,
     n_planes: int,
     offsets: list[int],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Scored multi-probe sign-LSH candidates (query_id, neighbor_id,
     bucket, sim): each query probes its own ``n_planes``-bit bucket
@@ -494,16 +481,16 @@ def lsh_candidates(
     at scale the bucket is the layout partition key, so a probe set
     prunes to its buckets at the FILE level."""
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        rp_bucket(vec_col, n_planes).cast("int").alias("bucket"),
-        l2norm_expr(vec_col).alias("cnrm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cvec"),
+        rp_bucket("embedding", n_planes).cast("int").alias("bucket"),
+        l2norm_expr("embedding").alias("cnrm"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        rp_bucket(vec_col, n_planes).cast("int").alias("qbucket"),
-        l2norm_expr(vec_col).alias("qnrm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        rp_bucket("embedding", n_planes).cast("int").alias("qbucket"),
+        l2norm_expr("embedding").alias("qnrm"),
     )
     probes = q.withColumn(
         "off", F.explode(F.array(*[F.lit(o) for o in offsets]))
@@ -543,37 +530,32 @@ CLUSTER_FIXTURE_NOISE = 0.12
 CLUSTER_FIXTURE_K = 8
 
 
-def clustered_fixture(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = CLUSTER_FIXTURE_K,
-    noise: float = CLUSTER_FIXTURE_NOISE,
-) -> DataFrame:
-    """Deterministic planted-cluster corpus derived from an existing
-    embedding table: vector i is assigned to cluster ``i % n_clusters``
-    and becomes ``center + noise·self``, where the centers are the
-    first ``n_clusters`` vectors. Everything is float→double casts,
+def clustered_fixture(corpus: DataFrame) -> DataFrame:
+    """Deterministic planted-cluster corpus derived from a (vec_id,
+    embedding) table: vector i is assigned to cluster
+    ``i % CLUSTER_FIXTURE_K`` and becomes
+    ``center + CLUSTER_FIXTURE_NOISE·self``, where the centers are the
+    first ``CLUSTER_FIXTURE_K`` vectors. Everything is float→double casts,
     one multiply, and one add — correctly-rounded IEEE ops that replay
     bit-identically in the DuckDB oracle (unlike any RNG-based
     mixture), so recall measured on the fixture sits under the exact
     value gate. This is the structured-data counterpart to the
     isotropic corpus: the demonstration that the SAME index machinery
     reaches high recall cheaply when structure exists."""
-    centers = corpus.filter(F.col(id_col) < n_clusters).select(
-        F.col(id_col).alias("__cid"), F.col(vec_col).alias("__cv")
+    centers = corpus.filter(F.col("vec_id") < CLUSTER_FIXTURE_K).select(
+        F.col("vec_id").alias("__cid"), F.col("embedding").alias("__cv")
     )
-    lit = F.lit(float(noise))
+    lit = F.lit(CLUSTER_FIXTURE_NOISE)
     return (
-        corpus.withColumn("__cid", F.col(id_col) % n_clusters)
+        corpus.withColumn("__cid", F.col("vec_id") % CLUSTER_FIXTURE_K)
         .join(F.broadcast(centers), "__cid")
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.zip_with(
                 "__cv",
-                vec_col,
+                "embedding",
                 lambda c, v: c.cast("double") + lit * v.cast("double"),
-            ).alias(vec_col),
+            ).alias("embedding"),
         )
     )
 
@@ -581,8 +563,6 @@ def clustered_fixture(
 def topk_multiprobe_lsh(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     offsets: list[int] | None = None,
 ) -> DataFrame:
@@ -608,7 +588,7 @@ def topk_multiprobe_lsh(
     rank)."""
     offs = MULTIPROBE_OFFSETS_H2 if offsets is None else offsets
     return _topk_by_sim(
-        lsh_candidates(corpus, queries, RP_N_PLANES, offs, id_col, vec_col), k
+        lsh_candidates(corpus, queries, RP_N_PLANES, offs), k
     )
 
 
@@ -633,8 +613,6 @@ def retrieve_quantized_multiprobe(
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_candidates: int = 20,
-    offsets: list[int] | None = None,
 ) -> DataFrame:
     """RETRIEVE stage of the retrieve→rerank pattern: multi-probe
     sign-LSH candidate generation scored with INT8-QUANTIZED dot
@@ -645,7 +623,7 @@ def retrieve_quantized_multiprobe(
     The quantized score is engine-portable by construction: integer dot
     (exact in 64-bit), times the two symmetric scales, over the exact
     float norms, rounded to 6 — the DuckDB oracle reproduces it
-    bit-for-bit. Returns the top ``n_candidates`` per query with BOTH
+    bit-for-bit. Returns the top 20 per query with BOTH
     full-precision vectors carried along for the rerank stage
     (query_id, neighbor_id, qvec, cvec, retrieval_sim, retrieval_rank).
 
@@ -653,7 +631,8 @@ def retrieve_quantized_multiprobe(
     candidate generation is an equi-join on the probe bucket (file-level
     pruning at scale), corpus never shuffles; the int8 columns would be
     the STORED index at 100 TB (the float vectors live in the rerank
-    store, fetched only for the ~n_candidates winners)."""
+    store, fetched only for the ~20 winners). The probes are
+    :data:`MULTIPROBE_OFFSETS_H2`."""
     from movies_etl_spark.operators.curation import int8_quantize, int8_scale
 
     def prep(df, prefix):
@@ -668,11 +647,10 @@ def retrieve_quantized_multiprobe(
             rp_bucket(vec_col).cast("int").alias(f"{prefix}bucket"),
         )
 
-    offs = MULTIPROBE_OFFSETS_H2 if offsets is None else offsets
     c = prep(corpus, "c")
     q = prep(queries, "q")
     probes = q.withColumn(
-        "off", F.explode(F.array(*[F.lit(o) for o in offs]))
+        "off", F.explode(F.array(*[F.lit(o) for o in MULTIPROBE_OFFSETS_H2]))
     ).select(
         F.col("qid").alias("query_id"),
         "qvec",
@@ -710,14 +688,14 @@ def retrieve_quantized_multiprobe(
             qsim.alias("retrieval_sim"),
         )
         .withColumn("retrieval_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("retrieval_rank") <= n_candidates)
+        .filter(F.col("retrieval_rank") <= 20)
     )
 
 
-def rerank_topk(cands: DataFrame, k: int = 3) -> DataFrame:
+def rerank_topk(cands: DataFrame) -> DataFrame:
     """RERANK stage: score the retrieved candidates with the EXPENSIVE
     model in an Arrow-batched Python worker (mapInPandas) and keep the
-    top ``k`` per query by the reranked score.
+    top 3 per query by the reranked score.
 
     The scorer here is full-precision float64 cosine over the carried
     vector pair — deterministic arithmetic the DuckDB oracle replicates,
@@ -727,7 +705,7 @@ def rerank_topk(cands: DataFrame, k: int = 3) -> DataFrame:
     (tokenize(query,doc) → GPU forward pass → score), keeping the exact
     same contract — Arrow batch in, one score per row out — and the same
     plan shape (no shuffle added; the candidate frame is already
-    ~n_candidates·|queries| rows, the model cost dominates and
+    ~20·|queries| rows, the model cost dominates and
     parallelizes per batch). Swap discipline as in multimodal.py's
     decode (a real container parse): the Spark-side
     plumbing (schema, batching, rank window) is real and tested; only
@@ -771,14 +749,12 @@ def rerank_topk(cands: DataFrame, k: int = 3) -> DataFrame:
     )
     return scored.withColumn(
         "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= k)
+    ).filter(F.col("rank") <= 3)
 
 
 def kmeans_train_assign(
     train: DataFrame,
     assign: DataFrame,
-    k: int = 4,
-    iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -792,13 +768,10 @@ def kmeans_train_assign(
     final training centroids then assign ``assign``'s vectors. Returns
     (id, cell, d2 rounded 4)."""
     vt = train.select(id_col, _double_vec(vec_col).alias("vd"))
-    cents = vt.filter(F.col(id_col) < k).select(
+    cents = vt.filter(F.col(id_col) < 4).select(
         F.col(id_col).alias("cell"), F.col("vd").alias("centroid")
     )
-    assigned = _assign_cells(vt, cents)
-    for _ in range(iters - 1):
-        cents = _recompute_centroids(assigned)
-        assigned = _assign_cells(vt, cents)
+    cents = _recompute_centroids(_assign_cells(vt, cents))
     va = assign.select(id_col, _double_vec(vec_col).alias("vd"))
     return _assign_cells(va, _centroid_boundary(cents)).select(
         id_col, "cell", F.round(F.col("d2"), 4).alias("d2")

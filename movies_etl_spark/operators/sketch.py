@@ -184,10 +184,10 @@ HLL_LINEAR_TABLE: tuple[float, ...] = tuple(
 )
 
 
-def hll_linear_sql(v_zero_expr: str = "v_zero") -> str:
+def hll_linear_sql() -> str:
     """DuckDB expression for the linear-counting estimate: the shared
-    literal table indexed (1-based) by the empty-register count. Callers
-    guard with ``v_zero > 0`` exactly like the Spark side.
+    literal table indexed (1-based) by the empty-register count
+    ``v_zero``. Callers guard with ``v_zero > 0`` exactly like the Spark side.
 
     Literals are emitted as STRING-cast doubles ('…'::DOUBLE), not bare
     decimals: DuckDB types a bare 17-digit decimal literal DECIMAL(19,15)
@@ -196,7 +196,7 @@ def hll_linear_sql(v_zero_expr: str = "v_zero") -> str:
     parses to in the JVM/Python), whereas the VARCHAR→DOUBLE cast is an
     exact strtod round-trip of repr's shortest form."""
     lits = ", ".join(f"'{x!r}'::DOUBLE" for x in HLL_LINEAR_TABLE)
-    return f"([{lits}])[CAST({v_zero_expr} AS INT)]"
+    return f"([{lits}])[CAST(v_zero AS INT)]"
 
 
 def hll_partials(df: DataFrame, key_col: str, shard_col) -> DataFrame:
@@ -479,11 +479,7 @@ def cms_point_estimate(
     return joined.groupBy(key_col).agg(F.min("cnt").alias("cms_est"))
 
 
-def cdf_from_centroids(
-    centroids: DataFrame,
-    probes: Sequence[float],
-    group_cols: Sequence[str] = (),
-) -> DataFrame:
+def cdf_from_centroids(centroids: DataFrame, probes: Sequence[float]) -> DataFrame:
     """The quantile dual: estimated CDF (rank fraction) at each probe
     value, read from the SAME centroid tables merge_centroid_quantiles
     consumes — rank(v) ≈ weight of centroids with mean ≤ v over total
@@ -491,31 +487,8 @@ def cdf_from_centroids(
     and percentile-rank lookup), which is the operational point: the
     partials are stored once and answer both dashboards. Probes are a
     tiny broadcast side; the estimate inherits the ~1/k-per-shard rank
-    error contract. Returns (*group_cols, probe, est_cdf UNROUNDED)."""
-    gcols = list(group_cols)
+    error contract. Returns (probe, est_cdf UNROUNDED)."""
     pr = F.array(*[F.lit(float(p)) for p in probes])
-    if gcols:
-        pdf = (
-            centroids.select(*gcols)
-            .distinct()
-            .select(
-                *[F.col(c).alias(f"__g_{c}") for c in gcols],
-                F.explode(pr).alias("probe"),
-            )
-        )
-        cond = F.lit(True)
-        for c in gcols:
-            cond = cond & (F.col(f"__g_{c}") == F.col(c))
-        joined = pdf.join(centroids, cond, "inner")
-        out = joined.groupBy(*[f"__g_{c}" for c in gcols], "probe").agg(
-            (
-                F.sum(F.when(F.col("m") <= F.col("probe"), F.col("w")).otherwise(0))
-                / F.sum("w")
-            ).alias("est_cdf")
-        )
-        return out.select(
-            *[F.col(f"__g_{c}").alias(c) for c in gcols], "probe", "est_cdf"
-        )
     pdf = centroids.sparkSession.range(1).select(F.explode(pr).alias("probe"))
     return (
         pdf.crossJoin(centroids)

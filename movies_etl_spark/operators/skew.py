@@ -22,20 +22,19 @@ def salted_groupby_agg(
     df: DataFrame,
     keys: Sequence[str],
     aggs: dict[str, tuple[str, str]],
-    n_salts: int = 16,
 ) -> DataFrame:
-    """Two-stage skew-safe aggregation.
+    """Two-stage skew-safe aggregation over 16 salts.
 
     ``aggs`` maps output column → (input column, fn) with fn in
     {"sum", "count", "min", "max"} — the algebraic aggregates that
     decompose into partial/final pairs (count re-aggregates as sum).
 
-    Stage 1 groups by (keys + random salt) — hot keys fan out over
-    ``n_salts`` reducers; stage 2 groups by keys alone over ``n_salts``
-    partial rows per key. The salt is random per row, which is safe
+    Stage 1 groups by (keys + random salt) — hot keys fan out over 16
+    reducers; stage 2 groups by keys alone over 16 partial rows per
+    key. The salt is random per row, which is safe
     because every listed aggregate is decomposable."""
     salted = df.withColumn(
-        "__salt__", (F.rand(seed=42) * n_salts).cast("int")
+        "__salt__", (F.rand(seed=42) * 16).cast("int")
     )
     partial_exprs: list[Column] = []
     final_exprs: list[Column] = []

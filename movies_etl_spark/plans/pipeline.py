@@ -185,8 +185,7 @@ def merge_movies(wiki: DataFrame, kaggle: DataFrame) -> DataFrame:
     ``caching.release_tracked()`` — which the query registry calls when
     the next query builds — or until the session stops."""
     movies = REL.join_with_suffixes(
-        wiki, kaggle, on="imdb_id", how="inner", suffixes=("_wiki", "_kaggle"),
-        broadcast_right=False,
+        wiki, kaggle, on="imdb_id", suffixes=("_wiki", "_kaggle")
     )
     movies = REL.drop_columns(
         movies,
@@ -214,7 +213,7 @@ def merge_movies(wiki: DataFrame, kaggle: DataFrame) -> DataFrame:
 
 def movies_with_ratings(movies: DataFrame, ratings: DataFrame) -> DataFrame:
     """A1-A3 + F16 + J2 (challenge.py:276-285)."""
-    return R.attach_rating_counts(movies, ratings, movies_key="kaggle_id")
+    return R.attach_rating_counts(movies, ratings)
 
 
 def run_pipeline(

@@ -890,7 +890,6 @@ def _llm_corpus_oracle() -> str:
               WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
     """
     return _bpe_oracle(
-        8,
         final_select=_bpe_pack_final("clean"),
         carry_word=True,
         corpus_ref="clean",
@@ -1034,7 +1033,7 @@ def q_llm_corpus_pipeline(spark, sf_dir):
     #    anyway, and d2 is the same rounded column a join would fetch.
     e = _t(spark, sf_dir, "embeddings")
     asg = caching.tracked_persist(
-        SIM.kmeans_assign(e, k=4, iters=2, keep_vec=True)
+        SIM.kmeans_assign(e, k=4, keep_vec=True)
     )
     memb = mh.select("doc_id").join(
         asg.withColumnRenamed("vec_id", "doc_id"), "doc_id"

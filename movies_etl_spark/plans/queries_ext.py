@@ -534,7 +534,7 @@ def q_similarity_topk(spark, sf_dir):
     set, scan the corpus once, window top-k. Ordering on (rounded sim,
     neighbor id) is fully deterministic."""
     e = _t(spark, sf_dir, "embeddings")
-    return SIM.topk_bruteforce(e, e.filter(F.col("vec_id") < 8), k=5)
+    return SIM.topk_bruteforce(e, e.filter(F.col("vec_id") < 8))
 
 
 @query(
@@ -743,10 +743,8 @@ def q_ann_rerank(spark, sf_dir):
     equi-join on probe bucket, the Python stage sees only
     |queries|·20 rows — the float vectors travel only for winners."""
     e = _t(spark, sf_dir, "embeddings")
-    cands = SIM.retrieve_quantized_multiprobe(
-        e, e.filter(F.col("vec_id") < 8), n_candidates=20
-    )
-    return SIM.rerank_topk(cands, k=3)
+    cands = SIM.retrieve_quantized_multiprobe(e, e.filter(F.col("vec_id") < 8))
+    return SIM.rerank_topk(cands)
 
 
 #: squared euclidean distance, same fold discipline as _COS_SQL
@@ -759,13 +757,13 @@ _D2_SQL = """
 """
 
 
-def kmeans_cte(train_where: str = "TRUE", assign_from: str = "v") -> str:
+def kmeans_cte(train_where: str = "TRUE") -> str:
     """The two fixed Lloyd's iterations (k=4, seeds = first k ids) as a
     WITH body — shared verbatim by the kmeans_assign oracle, the
     SemDeDup composite's oracle (queries_scale), and the incremental
     variant (which TRAINS on a base subset via ``train_where`` but
     assigns the full table), so every consumer replays the IDENTICAL
-    iterations. ``a2`` assigns rows of ``assign_from`` to the final
+    iterations. ``a2`` assigns every row of ``v`` to the final
     centroids."""
     return f"""
     v AS (SELECT vec_id,
@@ -790,7 +788,7 @@ def kmeans_cte(train_where: str = "TRUE", assign_from: str = "v") -> str:
                    row_number() OVER (PARTITION BY v.vec_id
                        ORDER BY round({_D2_SQL.format(a="v.vd", b="c.centroid")}, 6),
                                 c.cell) AS r
-            FROM {assign_from} v, c1 c) WHERE r = 1)
+            FROM v, c1 c) WHERE r = 1)
 """
 
 
@@ -816,7 +814,7 @@ def q_kmeans_assign(spark, sf_dir):
     (cell, position) for the mean recompute — never self-joined. The
     oracle replays both iterations verbatim in SQL."""
     e = _t(spark, sf_dir, "embeddings")
-    return SIM.kmeans_assign(e, k=4, iters=2)
+    return SIM.kmeans_assign(e, k=4)
 
 
 # ===========================================================================
@@ -910,7 +908,7 @@ def q_similarity_topk_vectorized(spark, sf_dir):
     too. The pair-set equality test (test_property_parity.py) remains as
     the defense-in-depth check."""
     e = _t(spark, sf_dir, "embeddings")
-    return SIM.topk_bruteforce_vectorized(e, e.filter(F.col("vec_id") < 8), k=5)
+    return SIM.topk_bruteforce_vectorized(e, e.filter(F.col("vec_id") < 8))
 
 
 _SIMHASH_CORPUS_CTE = f"""
@@ -1914,7 +1912,7 @@ def q_ann_recall_eval(spark, sf_dir):
         e.select("vec_id", "embedding"), key=("recall_corpus", sf_dir)
     )
     qset = base.filter(F.col("vec_id") < 8)
-    exact = SIM.topk_bruteforce(base, qset, k=5).select(
+    exact = SIM.topk_bruteforce(base, qset).select(
         "query_id", "neighbor_id"
     )
     ann = SIM.topk_multiprobe_lsh(base, qset, k=5).select(
@@ -2022,7 +2020,7 @@ def q_ann_recall_clustered(spark, sf_dir):
         SIM.clustered_fixture(e), key=("recall_clustered_fixture", sf_dir)
     )
     qset = cl.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
-    exact = SIM.topk_bruteforce(cl, qset, k=5).select("query_id", "neighbor_id")
+    exact = SIM.topk_bruteforce(cl, qset).select("query_id", "neighbor_id")
     ann = SIM.topk_multiprobe_lsh(
         cl, qset, k=5, offsets=SIM.MULTIPROBE_OFFSETS_H1
     ).select(F.col("query_id").alias("aq"), F.col("neighbor_id").alias("an"))
@@ -2097,14 +2095,14 @@ def _frontier_row_sql(
                      / (SELECT count(*) FROM {exact}), 4) AS recall"""
 
 
-def _topk_cte(src: str, k: int = 5) -> str:
+def _topk_cte(src: str) -> str:
     return f"""
         SELECT query_id, neighbor_id FROM (
             SELECT query_id, neighbor_id,
                    row_number() OVER (PARTITION BY query_id
                         ORDER BY sim DESC, neighbor_id) AS rank
             FROM {src})
-        WHERE rank <= {k}"""
+        WHERE rank <= 5"""
 
 
 def _ann_frontier_oracle() -> str:
@@ -2339,7 +2337,7 @@ def q_ann_frontier_sweep(spark, sf_dir):
         same signed frame (one scan serves both families)."""
         qset = corp.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
         exact = caching.tracked_local_checkpoint(
-            SIM.topk_bruteforce(corp, qset, k=5).select(
+            SIM.topk_bruteforce(corp, qset).select(
                 "query_id", "neighbor_id"
             ),
             eager=False,
@@ -2525,7 +2523,7 @@ def q_ann_frontier_sweep(spark, sf_dir):
     # trained coarse quantizer: Lloyd's k=8 cells + their centroids,
     # checkpointed at the trained-artifact boundary
     assigned = caching.tracked_local_checkpoint(
-        SIM.kmeans_assign(cf, k=8, iters=2).select("vec_id", "cell"),
+        SIM.kmeans_assign(cf, k=8).select("vec_id", "cell"),
         eager=False,
     )
     cells_c = cc.join(
@@ -2785,12 +2783,12 @@ def q_similarity_ann_tuned(spark, sf_dir):
     )
     qset = cf.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
     exact = caching.tracked_local_checkpoint(
-        SIM.topk_bruteforce(cf, qset, k=5).select("query_id", "neighbor_id"),
+        SIM.topk_bruteforce(cf, qset).select("query_id", "neighbor_id"),
         eager=False,
     )
     # trained-artifact boundary, checkpointed exactly as the frontier
     assigned = caching.tracked_local_checkpoint(
-        SIM.kmeans_assign(cf, k=8, iters=2).select("vec_id", "cell"),
+        SIM.kmeans_assign(cf, k=8).select("vec_id", "cell"),
         eager=False,
     )
     # ONE signed+celled corpus frame serves both family arms

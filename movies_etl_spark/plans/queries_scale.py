@@ -1710,7 +1710,7 @@ def q_dedup_semantic_clusters(spark, sf_dir):
     from movies_etl_spark.operators import similarity as SIM
 
     e = _t(spark, sf_dir, "embeddings")
-    asg = caching.tracked_persist(SIM.kmeans_assign(e, k=4, iters=2))
+    asg = caching.tracked_persist(SIM.kmeans_assign(e, k=4))
     m = asg.join(e.select("vec_id", "embedding"), "vec_id")
     pairs = D.cosine_pairs_vectorized(
         m, id_col="vec_id", vec_col="embedding", block_col="cell",
@@ -1889,13 +1889,12 @@ def q_bloom_join_prune(spark, sf_dir):
 
 
 def _bpe_oracle(
-    n_merges: int = 8,
     final_select: str | None = None,
     carry_word: bool = False,
     corpus_ref: str = "documents",
     prelude_ctes: str = "",
 ) -> str:
-    """Replay the BPE training run: the same wordcount, the same
+    """Replay the 8-merge BPE training run: the same wordcount, the same
     (count DESC, pair) argmax, the same double-space replace merge —
     one CTE block per iteration, generated mechanically.
     ``final_select`` overrides the default merge-table projection (the
@@ -1918,7 +1917,7 @@ def _bpe_oracle(
                   AS syms, freq
            FROM wc)"""
     ]
-    for i in range(1, n_merges + 1):
+    for i in range(1, 9):
         parts.append(
             f"""p{i} AS (SELECT s[p] AS sym_a, s[p + 1] AS sym_b,
                       CAST(sum(freq) AS BIGINT) AS cnt
@@ -1936,12 +1935,12 @@ def _bpe_oracle(
         )
     selects = final_select or " UNION ALL ".join(
         f"SELECT {i} AS step, sym_a, sym_b, cnt AS pair_cnt FROM m{i}"
-        for i in range(1, n_merges + 1)
+        for i in range(1, 9)
     )
     return "WITH " + ",\n    ".join(parts) + "\n    " + selects
 
 
-@query("bpe_train_merges", oracle=_bpe_oracle(8))
+@query("bpe_train_merges", oracle=_bpe_oracle())
 def q_bpe_train_merges(spark, sf_dir):
     """BPE tokenizer training (operators.bpe — Sennrich et al. 2016):
     learn the first 8 merge rules from the corpus and return the merge
@@ -1962,13 +1961,12 @@ def q_bpe_train_merges(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     wc = caching.tracked_persist(B.word_counts(d, "text"))
-    return B.bpe_train(spark, wc, n_merges=8)
+    return B.bpe_train(spark, wc)
 
 
 @query(
     "bpe_subword_stats",
     oracle=_bpe_oracle(
-        8,
         final_select="""SELECT subword, CAST(sum(freq) AS BIGINT) AS n_occurrences
     FROM (SELECT unnest(string_split(syms, ' ')) AS subword, freq FROM w8)
     GROUP BY subword ORDER BY n_occurrences DESC, subword LIMIT 30""",
@@ -2501,7 +2499,7 @@ _BPE_PACK_FINAL = _bpe_pack_final()
 
 @query(
     "bpe_pack_pipeline",
-    oracle=_bpe_oracle(8, final_select=_BPE_PACK_FINAL, carry_word=True),
+    oracle=_bpe_oracle(final_select=_BPE_PACK_FINAL, carry_word=True),
 )
 def q_bpe_pack_pipeline(spark, sf_dir):
     """Tokenize-then-pack — the end-to-end bridge from the trained
@@ -2714,7 +2712,7 @@ def q_dedup_semantic_incremental(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     base = e.filter(F.col("vec_id") < 450)
     asg = caching.tracked_persist(
-        SIM.kmeans_train_assign(base, e, k=4, iters=2)
+        SIM.kmeans_train_assign(base, e)
     )
     m = asg.join(e.select("vec_id", "embedding"), "vec_id")
     pairs = D.cosine_pairs_vectorized(

@@ -258,8 +258,7 @@ def q_join_inner_equi(spark, sf_dir):
         F.col("n_regionkey").alias("regionkey"),
     )
     return REL.join_with_suffixes(
-        cust, nat, on="nationkey", how="inner",
-        suffixes=("_cust", "_nat"), broadcast_right=True,
+        cust, nat, on="nationkey", suffixes=("_cust", "_nat"), broadcast_right=True
     )
 
 
@@ -541,9 +540,7 @@ def q_collect_map_column(spark, sf_dir):
         F.when(F.col("o_orderstatus") == "O", F.col("o_orderpriority")).alias("open"),
         F.when(F.col("o_orderstatus") == "F", F.col("o_orderpriority")).alias("done"),
     )
-    mapped = N.collect_map_column(
-        base, keys=["open", "done"], target="m", drop_sources=True
-    )
+    mapped = N.collect_map_column(base, keys=["open", "done"], target="m")
     return mapped.select(
         "o_orderkey",
         F.col("m")["open"].alias("m_open"),
@@ -888,20 +885,26 @@ def q_sink_append_chunked(spark, sf_dir):
     oracle="""
     SELECT o_custkey, o_orderkey,
            round(sum(o_totalprice) OVER (PARTITION BY o_custkey
-                 ORDER BY o_orderdate, o_orderkey
+                 ORDER BY o_orderdate NULLS LAST, o_orderkey
                  ROWS UNBOUNDED PRECEDING), 2) AS running_total,
            round(o_totalprice - coalesce(lag(o_totalprice) OVER (
-                 PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey), 0.0),
+                 PARTITION BY o_custkey
+                 ORDER BY o_orderdate NULLS LAST, o_orderkey), 0.0),
                  2) AS delta_prev
     FROM orders
     """,
 )
 def q_window_running_sum(spark, sf_dir):
     """Analytic windows (SURVEY §2.7 extension): running sum + lag delta
-    per customer, deterministic ordering. One shuffle on the partition
-    key; both functions share the same window frame/sort."""
+    per customer, deterministic ordering. The order is ``o_orderdate``
+    ascending with NULLS LAST, stated on both sides (Spark's ascending
+    default is NULLS FIRST, DuckDB's is NULLS LAST), then
+    ``o_orderkey``. One shuffle on the partition key; both functions
+    share the same window frame/sort."""
     o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    w = Window.partitionBy("o_custkey").orderBy(
+        F.col("o_orderdate").asc_nulls_last(), "o_orderkey"
+    )
     running = F.sum("o_totalprice").over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
@@ -1028,7 +1031,7 @@ def q_groupby_count_salted(spark, sf_dir):
     only 3 hot values — the canonical skewed-key shape. Semantics are
     identical to a plain groupBy (the oracle is the plain GROUP BY); the
     plan differs: partial agg over (key, salt) then final agg over key,
-    bounding any one reducer's fan-in at 1/n_salts of a hot key."""
+    bounding any one reducer's fan-in at 1/16 of a hot key."""
     from movies_etl_spark.operators.skew import salted_groupby_agg
 
     li = _t(spark, sf_dir, "lineitem")
@@ -1036,7 +1039,6 @@ def q_groupby_count_salted(spark, sf_dir):
         li,
         ["l_returnflag"],
         {"cnt": ("l_quantity", "count"), "sum_qty_raw": ("l_quantity", "sum")},
-        n_salts=16,
     )
     return out.select(
         "l_returnflag", "cnt", F.round(F.col("sum_qty_raw"), 2).alias("sum_qty")
@@ -1072,7 +1074,6 @@ def q_groupby_count_salted_aqe_off(spark, sf_dir):
             li,
             ["l_returnflag"],
             {"cnt": ("l_quantity", "count"), "sum_qty_raw": ("l_quantity", "sum")},
-            n_salts=16,
         )
         out.select(
             "l_returnflag", "cnt", F.round(F.col("sum_qty_raw"), 2).alias("sum_qty")
@@ -1608,17 +1609,29 @@ def q_scan_text(spark, sf_dir):
 def q_scan_binary_files(spark, sf_dir):
     """binaryFile source — the multimodal ingest path: opaque payloads
     land as (path, length, content) rows; metadata joins by filename.
-    50 deterministic payload files round-tripped."""
+    50 deterministic payload files round-tripped. A document with a null
+    text has no payload file, so its name LEFT JOINs to no listing row
+    and reads ``n_bytes`` NULL."""
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     path = _scratch("scan_binfiles", sf_dir)
-    for r in d.select("doc_id", "text").collect():  # 50 small files
-        with open(f"{path}/doc_{r['doc_id']}.bin", "wb") as f:
-            f.write(r["text"].encode("utf-8"))
-    b = spark.read.format("binaryFile").load(f"{path}/*.bin")
-    return b.select(
+    rows = d.select("doc_id", "text").collect()  # 50 small files
+    for r in rows:
+        if r["text"] is not None:
+            with open(f"{path}/doc_{r['doc_id']}.bin", "wb") as f:
+                f.write(r["text"].encode("utf-8"))
+    names = spark.createDataFrame(
+        [(f"doc_{r['doc_id']}.bin",) for r in rows], "fname string"
+    )
+    b = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.bin")
+        .load(path)
+    )
+    listing = b.select(
         F.element_at(F.split(F.col("path"), "/"), -1).alias("fname"),
         F.length(F.col("content")).cast("long").alias("n_bytes"),
     )
+    return names.join(listing, "fname", "left")
 
 
 @query(

@@ -102,12 +102,12 @@ def read_csv(
     spark: SparkSession,
     path: str,
     schema: T.StructType | None = None,
-    header: bool = True,
     infer: bool = False,
 ) -> DataFrame:
-    """S2/S3: CSV scan. Explicit schema preferred; inference mirrors the
-    reference's whole-file dtype inference (``low_memory=False``)."""
-    reader = spark.read.option("header", "true" if header else "false")
+    """S2/S3: CSV scan with a header row. Explicit schema preferred;
+    inference mirrors the reference's whole-file dtype inference
+    (``low_memory=False``)."""
+    reader = spark.read.option("header", "true")
     if schema is not None:
         reader = reader.schema(schema)
     elif infer:

@@ -19,16 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def write_parquet(df: DataFrame, path: str) -> None:
+    """Replace ``path`` with ``df`` as parquet."""
+    df.write.mode("overwrite").parquet(path)
 
 
 def write_parquet_then_append(first: DataFrame, rest: list[DataFrame], path: str) -> None:

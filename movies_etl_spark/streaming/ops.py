@@ -186,9 +186,7 @@ def hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sessionize(
-    spark: SparkSession, sf_dir: str, state_partitions: int | None = None
-) -> DataFrame:
+def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator: per-user session windows with a 30-minute
     inactivity gap, via ``applyInPandasWithState``.
 
@@ -197,21 +195,19 @@ def sessionize(
     micro-batches; with an unbounded source the same function emits
     completed sessions incrementally and times out idle users.
 
-    ``state_partitions`` sizes the stateful stage's shuffle — which IS
-    the state-store partition count, frozen into the checkpoint at first
-    run — and defaults to None = inherit the session setting, so a
+    The stateful stage's shuffle — which IS the state-store partition
+    count — takes the session's ``spark.sql.shuffle.partitions``, so a
     wide-cluster caller's tuning is never silently overridden (a
     hard-coded 8 buys nothing: interleaved warm A/B at sf0.1 reads
     8-partition 2.0-2.2 s vs inherited-32 1.8-2.0 s — within noise,
-    slight edge to 32 on a 32-core box). The knob remains the real
-    production control for a
-    LONG-RUNNING stream: the state-store count is frozen into the
-    checkpoint at first run, and every partition pays a store
-    open/commit per micro-batch even when empty, so size it to key
-    parallelism (distinct users ÷ target keys per store) when creating
-    a checkpoint, not to the scan-sized shuffle default. The remaining
-    gap to the native session_window twin is the Arrow+Python state
-    transfer itself — see SCALE.md "Streaming".
+    slight edge to 32 on a 32-core box). That conf is the real
+    production control for a LONG-RUNNING stream: the state-store count
+    is frozen into the checkpoint at first run, and every partition pays
+    a store open/commit per micro-batch even when empty, so set it to
+    key parallelism (distinct users ÷ target keys per store) when
+    creating a checkpoint, not to the scan-sized shuffle default. The
+    remaining gap to the native session_window twin is the Arrow+Python
+    state transfer itself — see SCALE.md "Streaming".
 
     Timestamps cross the Arrow/pandas boundary as epoch-micros int64, not
     as a TIMESTAMP column: pandas ``datetime64[ns]`` spans only
@@ -241,12 +237,7 @@ def sessionize(
             "n_events",
         )
 
-    if state_partitions is None:
-        return finish(_run_to_memory(sessions, "append"))
-    with temp_confs(
-        spark, {"spark.sql.shuffle.partitions": str(state_partitions)}
-    ):
-        return finish(_run_to_memory(sessions, "append"))
+    return finish(_run_to_memory(sessions, "append"))
 
 
 def sessionize_stateful(ev: DataFrame) -> DataFrame:
@@ -466,23 +457,21 @@ def dedup_stream_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def dedup_within_watermark(
-    ev: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    horizon: str = "1 hour",
+    ev: DataFrame, key_cols: list[str], ts_col: str
 ) -> DataFrame:
     """TTL-bounded streaming dedup core (factored out for the
-    state-growth soak): watermark on ``ts_col`` + ``dropDuplicates
-    WithinWatermark`` on ``key_cols``. State entries are evicted once the
-    watermark passes them, so state size is bounded by (event rate ×
-    horizon) — the property the soak test asserts batch by batch."""
-    return ev.withWatermark(ts_col, horizon).dropDuplicatesWithinWatermark(
+    state-growth soak): a one-hour watermark on ``ts_col`` +
+    ``dropDuplicatesWithinWatermark`` on ``key_cols``. State entries are
+    evicted once the watermark passes them, so state size is bounded by
+    (event rate × one hour) — the property the soak test asserts batch
+    by batch."""
+    return ev.withWatermark(ts_col, "1 hour").dropDuplicatesWithinWatermark(
         key_cols
     )
 
 
 def incremental_hourly_rollup(
-    spark: SparkSession, sf_dir: str, work_dir: str, n_source_files: int = 4
+    spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Incremental materialized-view maintenance: a foreachBatch sink
     keeps an HOURLY aggregate table continuously up to date as event
@@ -501,28 +490,16 @@ def incremental_hourly_rollup(
     bounded by |hours|, not stream length.
 
     The source is the events table pre-bucketed to (hour, cents) and
-    split across ``n_source_files`` files with maxFilesPerTrigger=1, so
-    the maintenance genuinely runs across multiple micro-batches on
-    bounded input (with the hash-keyed split this multi-file spread is
-    statistical — 64·n keys over n files — rather than round-robin by
-    construction). Returns the final version — exactly the batch hourly
-    aggregate, the oracle-checked invariant."""
+    split across 4 files with maxFilesPerTrigger=1, so the maintenance
+    genuinely runs across multiple micro-batches on bounded input (see
+    :func:`_versioned_rollup` for the split). Returns the final version
+    — exactly the batch hourly aggregate, the oracle-checked invariant."""
     ev = _load_events_batch(spark, sf_dir)
-    # deterministic-key split into the landing files: keyless
-    # repartition(n) pays a local sort of its input
-    # (sortBeforeRepartition) to make retries reproducible; a
-    # deterministic hash key needs no sort and is retry-safe by
-    # construction. Batch composition is immaterial to the result — the
-    # versioned merge is an associative sum, so ANY split of the same
-    # rows yields the identical final aggregate (the oracle replays the
-    # whole input either way).
-    landed = ev.select(
+    source = ev.select(
         F.date_trunc("hour", F.date_trunc("second", F.col("ts")))
         .cast("timestamp")
         .alias("h"),
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
-    ).repartition(
-        n_source_files, F.pmod(F.xxhash64("h", "cents"), F.lit(64 * n_source_files))
     )
 
     def partials(batch_df: DataFrame) -> DataFrame:
@@ -531,7 +508,9 @@ def incremental_hourly_rollup(
             F.sum("cents").alias("sum_cents"),
         )
 
-    return _versioned_rollup(spark, landed, work_dir, partials, ROLLUP_STATE)
+    return _versioned_rollup(
+        spark, source, ("h", "cents"), work_dir, partials, ROLLUP_STATE
+    )
 
 
 def _tiny_merge_confs(spark: SparkSession):
@@ -660,17 +639,28 @@ def _merge_versioned(
 
 def _versioned_rollup(
     spark: SparkSession,
-    landed: DataFrame,
+    source: DataFrame,
+    split_keys: tuple[str, ...],
     work_dir: str,
     partials: Callable[[DataFrame], DataFrame],
     state: VersionedState,
 ) -> DataFrame:
-    """The shared body of the incremental rollups: land ``landed`` in
-    :func:`_landing` (one file per partition), stream it back one file
-    per micro-batch, merge each batch's ``partials`` into the versioned
+    """The shared body of the incremental rollups: split ``source`` into
+    4 files in :func:`_landing`, stream them back one file per
+    micro-batch, merge each batch's ``partials`` into the versioned
     store under :func:`_tiny_merge_confs`, and return the last version
-    — the whole-input aggregate, since every merge is associative."""
+    — the whole-input aggregate, since every merge is associative.
+
+    The split hashes ``split_keys`` into 256 buckets over the 4 files,
+    so the spread is statistical rather than round-robin by
+    construction: keyless repartition(n) pays a local sort of its input
+    (sortBeforeRepartition) to make retries reproducible, while a
+    deterministic hash key needs no sort and is retry-safe by
+    construction. Batch composition never reaches the result — ANY
+    split of the same rows merges to the identical final state (the
+    oracles replay the whole input either way)."""
     src = _landing(work_dir)
+    landed = source.repartition(4, F.pmod(F.xxhash64(*split_keys), F.lit(256)))
     landed.write.mode("overwrite").parquet(src)
     stream = (
         spark.readStream.schema(landed.schema)
@@ -955,7 +945,7 @@ def _load_events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def incremental_distinct_rollup(
-    spark: SparkSession, sf_dir: str, work_dir: str, n_source_files: int = 4
+    spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Incremental DISTINCT-count maintenance: a foreachBatch sink keeps
     per-day HyperLogLog register tables continuously merged as event
@@ -977,17 +967,11 @@ def incremental_distinct_rollup(
     from movies_etl_spark.operators import sketch as SK
 
     ev = _load_events_batch(spark, sf_dir)
-    # deterministic-key split, same rationale as the hourly twin (the
-    # register-max merge is associative AND idempotent, so batch
-    # composition cannot change the final register table)
-    landed = ev.select(
+    source = ev.select(
         F.date_trunc("day", F.date_trunc("second", F.col("ts")))
         .cast("date")
         .alias("day"),
         F.col("user_id").cast("long").alias("user_id"),
-    ).repartition(
-        n_source_files,
-        F.pmod(F.xxhash64("day", "user_id"), F.lit(64 * n_source_files)),
     )
 
     def partials(batch_df: DataFrame) -> DataFrame:
@@ -995,12 +979,14 @@ def incremental_distinct_rollup(
             "shard", "day"
         )
 
-    regs = _versioned_rollup(spark, landed, work_dir, partials, HLL_STATE)
+    regs = _versioned_rollup(
+        spark, source, ("day", "user_id"), work_dir, partials, HLL_STATE
+    )
     return SK.hll_estimate(regs, ["day"])
 
 
 def incremental_cms_rollup(
-    spark: SparkSession, sf_dir: str, work_dir: str, n_source_files: int = 4
+    spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Incremental FREQUENCY-sketch maintenance: a foreachBatch sink
     keeps a count-min cell table continuously merged as corpus batches
@@ -1050,17 +1036,15 @@ def incremental_cms_rollup(
             )
         ).alias("bigram")
     )
-    # deterministic-key split, same rationale as the hourly twin (the
-    # cell-sum merge is associative; exact/candidate tails read the
-    # whole landing zone, so the split never reaches the output)
-    landed = bg.repartition(
-        n_source_files, F.pmod(F.xxhash64("bigram"), F.lit(64 * n_source_files))
-    )
 
     def partials(batch_df: DataFrame) -> DataFrame:
         return SK.cms_partials(batch_df, "bigram", F.lit(0)).drop("shard")
 
-    merged = _versioned_rollup(spark, landed, work_dir, partials, CMS_STATE)
+    # the exact/candidate tails read the whole landing zone, so the
+    # split never reaches the output
+    merged = _versioned_rollup(
+        spark, bg, ("bigram",), work_dir, partials, CMS_STATE
+    )
     bgb = spark.read.schema("bigram STRING").parquet(_landing(work_dir))
     exact = bgb.groupBy("bigram").agg(F.count(F.lit(1)).alias("exact_cnt"))
     cands = exact.orderBy(F.col("exact_cnt").desc(), "bigram").limit(20)

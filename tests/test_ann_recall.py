@@ -42,14 +42,14 @@ pytestmark = pytest.mark.skipif(
 def recall_frames(spark):
     e = readers.load_table(spark, RECALL_SF_DIR, "embeddings")
     q = e.filter(F.col("vec_id") < 8)
-    exact = SIM.topk_bruteforce(e, q, k=5).cache()
+    exact = SIM.topk_bruteforce(e, q).cache()
     exact.count()
     return e, q, exact
 
 
 def test_vectorized_bruteforce_is_exact(spark, recall_frames):
     e, q, exact = recall_frames
-    vec = SIM.topk_bruteforce_vectorized(e, q, k=5)
+    vec = SIM.topk_bruteforce_vectorized(e, q)
     assert SIM.recall_at_k(exact, vec) == 1.0
 
 
@@ -204,7 +204,7 @@ def test_clustered_fixture_high_recall_low_scan(spark):
     n_corpus = cl.count()
     q = cl.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
     n_queries = q.count()
-    exact = SIM.topk_bruteforce(cl, q, k=5)
+    exact = SIM.topk_bruteforce(cl, q)
     ann = SIM.topk_multiprobe_lsh(
         cl, q, k=5, offsets=SIM.MULTIPROBE_OFFSETS_H1
     )
@@ -231,10 +231,10 @@ def test_clustered_ivf_trained_quantizer_operating_point(spark):
     n_corpus = cl.count()
     q = cl.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
     n_queries = q.count()
-    exact = SIM.topk_bruteforce(cl, q, k=5)
+    exact = SIM.topk_bruteforce(cl, q)
 
     # train the coarse quantizer on the clustered corpus (Lloyd's k=8)
-    assigned = SIM.kmeans_assign(cl, k=8, iters=2).select("vec_id", "cell")
+    assigned = SIM.kmeans_assign(cl, k=8).select("vec_id", "cell")
     corpus_cells = cl.join(assigned, "vec_id")
     ivf = SIM.topk_ivf(corpus_cells, q, k=5, nprobe=1, label_col="cell")
     assert SIM.recall_at_k(exact, ivf) >= 0.9  # measured 1.0
@@ -267,7 +267,7 @@ def test_ann_tuned_selects_cheapest_meeting_arm(spark):
     e = readers.load_table(spark, RECALL_SF_DIR, "embeddings")
     cl = SIM.clustered_fixture(e)
     q = cl.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
-    exact = SIM.topk_bruteforce(cl, q, k=5).select("query_id", "neighbor_id")
+    exact = SIM.topk_bruteforce(cl, q).select("query_id", "neighbor_id")
     got = out.select("query_id", "neighbor_id")
     assert got.count() == exact.count()
     assert got.exceptAll(exact).count() == 0
@@ -281,7 +281,7 @@ def test_vectorized_probe_collect_cap(spark, recall_frames):
     e, q, _ = recall_frames
     n_q = q.count()  # 8
     with pytest.raises(ValueError, match="max_local_queries"):
-        SIM.topk_bruteforce_vectorized(e, q, k=5, max_local_queries=n_q - 1)
+        SIM.topk_bruteforce_vectorized(e, q, max_local_queries=n_q - 1)
     # exactly at cap: allowed, and still exact
-    at_cap = SIM.topk_bruteforce_vectorized(e, q, k=5, max_local_queries=n_q)
+    at_cap = SIM.topk_bruteforce_vectorized(e, q, max_local_queries=n_q)
     assert SIM.recall_at_k(recall_frames[2], at_cap) == 1.0

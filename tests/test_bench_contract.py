@@ -8,6 +8,7 @@ test runs a copy with a two-query headline in its own process, because
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import re
@@ -100,8 +101,8 @@ def test_shared_cli_parser():
     [
         ("dump_plans", ["out", "sfx", "q", "--sf"]),
         ("dump_plans", ["out", "sfx"]),
-        ("dump_final_plans", ["out", "sfx", "q", "--sf"]),
-        ("dump_final_plans", []),
+        ("dump_plans", ["out", "sfx", "q", "--top", "3"]),
+        ("dump_plans", []),
         ("survey_build_exec", ["q", "--reps"]),
         ("survey_build_exec", ["q", "--reps=x"]),
         ("survey_build_exec", ["--sf", "dir"]),
@@ -118,6 +119,82 @@ def test_tool_flag_errors_exit_with_usage(tool, argv, tmp_path):
     assert proc.returncode == 1, proc.stderr
     assert f"usage: {tool}.py" in proc.stderr
     assert "Traceback" not in proc.stderr
+
+
+#: the engine calls the benchmark makes, found by name so a parse that
+#: resolves nothing cannot pass vacuously
+PERFBENCH_CALLS = {
+    "read_json_records", "read_csv", "clean_wiki", "clean_kaggle",
+    "clean_ratings", "merge_movies", "movies_with_ratings", "write_parquet",
+    "lsh_dedup_batch", "get_spark", "release_tracked", "live_checkpoints",
+}
+
+
+def _engine_names(tree: ast.Module) -> dict:
+    """Local name → engine module or function, from every import of
+    ``movies_etl_spark`` or ``__spark_entry__`` in ``tree``."""
+    import importlib
+
+    names = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] in {"movies_etl_spark", "__spark_entry__"}:
+                    names[a.asname or a.name] = importlib.import_module(a.name)
+        elif isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+            "movies_etl_spark"
+        ):
+            mod = importlib.import_module(node.module)
+            for a in node.names:
+                try:
+                    obj = importlib.import_module(f"{node.module}.{a.name}")
+                except ImportError:
+                    obj = getattr(mod, a.name)
+                names[a.asname or a.name] = obj
+    return names
+
+
+def test_perfbench_engine_calls_bind():
+    """Every call ``perfbench/`` makes into the engine binds to the
+    engine's current signature: the same positional count and keyword
+    names (``run.attempt(fn, *args)`` binds ``args`` to ``fn``). A
+    dropped or renamed parameter fails here, not as failed benchmark
+    runs."""
+    import inspect
+
+    bound = set()
+    for path in sorted((ROOT / "perfbench").glob("*.py")):
+        if path.name.startswith("test_"):
+            continue
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        names = _engine_names(tree)
+
+        def resolve(node):
+            if isinstance(node, ast.Name):
+                return names.get(node.id)
+            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+                owner = names.get(node.value.id)
+                return getattr(owner, node.attr) if inspect.ismodule(owner) else None
+            return None
+
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            fn, args = resolve(call.func), call.args
+            if getattr(call.func, "attr", None) == "attempt" and args:
+                fn, args = resolve(args[0]), args[1:]
+            if not inspect.isfunction(fn):
+                continue
+            where = f"{path.name}:{call.lineno} {ast.unparse(call)[:80]}"
+            try:
+                inspect.signature(fn).bind(
+                    *[None] * len(args),
+                    **{k.arg: None for k in call.keywords if k.arg is not None},
+                )
+            except TypeError as exc:
+                raise AssertionError(f"{where}: {exc}") from None
+            bound.add(fn.__name__)
+    assert PERFBENCH_CALLS <= bound, sorted(PERFBENCH_CALLS - bound)
 
 
 def test_engine_fingerprint_stable_on_clean_tree():

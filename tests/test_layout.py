@@ -1,7 +1,8 @@
 """Storage-layout tests: partition pruning and bucketed (shuffle-free)
 joins — the two layout disciplines SCALE.md leans on — plus the code
 layout rules: every engine function and class is reachable from a real
-entry point, and live engine modules carry no round history."""
+entry point, every engine option is given a second value somewhere, and
+live engine modules carry no round history."""
 
 from __future__ import annotations
 
@@ -285,6 +286,81 @@ def test_public_engine_functions_are_referenced():
     )
     assert not unreached, unreached
     assert REFERENCE_ONLY <= defs.keys(), "a reference implementation is gone"
+
+
+#: defaulted engine parameters kept although no call varies them:
+#: ``get_spark(master)`` is a deployment setting, chosen where the
+#: engine is deployed, not in this repository
+DEPLOYMENT_SETTINGS = {("get_spark", "master")}
+
+
+def _same_value(arg: ast.expr, default: ast.expr) -> bool:
+    """Whether a call argument is the parameter's default: equal
+    literals (of the same type), or the same expression text. Any other
+    argument, a name or call included, counts as a second value."""
+    try:
+        a, d = ast.literal_eval(arg), ast.literal_eval(default)
+    except (ValueError, TypeError, SyntaxError):
+        return ast.dump(arg) == ast.dump(default)
+    return type(a) is type(d) and a == d
+
+
+def test_every_engine_option_takes_two_values():
+    """Every defaulted parameter of a top-level function in
+    ``movies_etl_spark/`` is passed a value other than its default by
+    some call in the repository (the engine, ``__spark_entry__.py``,
+    ``bench*.py``, ``perfbench/``, ``tools/`` or ``tests/``). Calls
+    resolve by name, as in the reachability test above; a call with
+    ``*args`` or ``**kwargs`` may pass anything. A parameter that only
+    ever takes its default is a constant dressed as an option: each one
+    doubles the configurations the tests would have to cover. Use the
+    value in the body instead."""
+    root = Path(__file__).resolve().parent.parent
+    options: dict[str, list] = {}
+    for path in sorted((root / "movies_etl_spark").rglob("*.py")):
+        for node in ast.parse(path.read_text(encoding="utf-8")).body:
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            a = node.args
+            index = [p.arg for p in a.posonlyargs + a.args]
+            pairs = list(zip(index[len(index) - len(a.defaults):], a.defaults))
+            pairs += [
+                (p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            ]
+            for param, d in pairs:
+                pos = index.index(param) if param in index else None
+                site = (
+                    f"{path.relative_to(root)}:{node.lineno} "
+                    f"{node.name}({param}={ast.unparse(d)})"
+                )
+                options.setdefault(node.name, []).append((param, pos, d, site))
+    entry = ("__spark_entry__.py", "bench.py", "bench_reference_scale.py")
+    sources = [root / n for n in entry]
+    for sub in ("movies_etl_spark", "perfbench", "tools", "tests"):
+        sources += sorted((root / sub).rglob("*.py"))
+    varied: set[tuple[str, str]] = set()
+    for path in sources:
+        for call in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", getattr(call.func, "attr", None))
+            splat = any(isinstance(x, ast.Starred) for x in call.args) or any(
+                k.arg is None for k in call.keywords
+            )
+            keywords = {k.arg: k.value for k in call.keywords}
+            for param, pos, default, _ in options.get(name, []):
+                arg = keywords.get(param)
+                if arg is None and pos is not None and pos < len(call.args):
+                    arg = call.args[pos]
+                if splat or (arg is not None and not _same_value(arg, default)):
+                    varied.add((name, param))
+    unvaried = sorted(
+        site
+        for name, params in options.items()
+        for param, _, _, site in params
+        if (name, param) not in varied | DEPLOYMENT_SETTINGS
+    )
+    assert not unvaried, unvaried
 
 
 def test_engine_modules_carry_no_round_history():

@@ -101,3 +101,57 @@ def test_parse_money_oracle_at_rounding_ties(spark, tmp_path):
     con.close()
     assert got == want
     assert got[1] == 4.44 * 1e9 and got[6] == 0.15 * 1e9 and got[11] == 1.01 * 1e9
+
+
+def _assert_matches_oracle(spark, name, sf_dir):
+    """The registered query against its oracle over the tables in
+    ``sf_dir`` only, with the parity test's comparison."""
+    from pathlib import Path
+
+    import duckdb
+
+    con = duckdb.connect()
+    for table in Path(sf_dir).glob("*.parquet"):
+        con.execute(
+            f"CREATE VIEW {table.stem} AS SELECT * FROM read_parquet('{table}')"
+        )
+    want = _normalize(con.execute(ORACLES[name]).df())
+    con.close()
+    got = _normalize(QUERIES[name](spark, str(sf_dir)).toPandas())
+    assert list(got.columns) == list(want.columns), name
+    pd.testing.assert_frame_equal(
+        got, want, check_dtype=False, check_exact=True, obj=name
+    )
+    return got
+
+
+def _with_nulls(sf_dir, table, column, keys, tmp_path):
+    """A copy of ``sf_dir``'s ``table`` in ``tmp_path`` with ``column``
+    nulled on the rows whose first column is in ``keys``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{sf_dir}/{table}.parquet")
+    hit = pc.is_in(t.column(0), pa.array(keys, t.schema.field(0).type))
+    i = t.schema.get_field_index(column)
+    nulls = pa.nulls(len(t), t.schema.field(i).type)
+    t = t.set_column(i, t.schema.field(i), pc.if_else(hit, nulls, t.column(i)))
+    pq.write_table(t, str(tmp_path / f"{table}.parquet"))
+    return tmp_path
+
+
+def test_scan_binary_files_null_text(spark, sf_dir, tmp_path):
+    """A document with a null text has no payload file: its name reads
+    ``n_bytes`` NULL, as in the oracle, instead of failing the query."""
+    sf = _with_nulls(sf_dir, "documents", "text", [3], tmp_path)
+    got = _assert_matches_oracle(spark, "scan_binary_files", sf)
+    assert got.loc[got.fname == "doc_3.bin", "n_bytes"].isna().all()
+    assert len(got) == 50
+
+
+def test_window_running_sum_null_dates(spark, sf_dir, tmp_path):
+    """Orders with a null ``o_orderdate`` sort last in their customer's
+    window on both engines (Spark's ascending default is NULLS FIRST)."""
+    sf = _with_nulls(sf_dir, "orders", "o_orderdate", [0, 3, 5, 8, 9], tmp_path)
+    _assert_matches_oracle(spark, "window_running_sum", sf)

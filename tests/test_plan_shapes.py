@@ -637,9 +637,7 @@ def test_salted_agg_balances_reducers_aqe_off(spark, sf_dir):
         # (key, salt), final on key), no AdaptiveSparkPlan node
         from movies_etl_spark.operators.skew import salted_groupby_agg
 
-        out = salted_groupby_agg(
-            li, ["l_returnflag"], {"cnt": ("l_quantity", "count")}, n_salts=16
-        )
+        out = salted_groupby_agg(li, ["l_returnflag"], {"cnt": ("l_quantity", "count")})
         jvm_mode = (
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"

@@ -750,7 +750,7 @@ def test_ann_rerank_containment_and_scorer_parity(spark, sf_dir):
 
     e = readers.load_table(spark, sf_dir, "embeddings")
     cands = SIM.retrieve_quantized_multiprobe(
-        e, e.filter(F.col("vec_id") < 8), n_candidates=20
+        e, e.filter(F.col("vec_id") < 8)
     ).toPandas()
     top20 = set(zip(cands.query_id, cands.neighbor_id))
     assert set(zip(out.query_id, out.neighbor_id)) <= top20

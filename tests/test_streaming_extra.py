@@ -104,7 +104,7 @@ def test_incremental_rollup_is_actually_incremental(spark, sf_dir, tmp_path):
     from movies_etl_spark.streaming import ops
 
     work = str(tmp_path / "inc")
-    out = ops.incremental_hourly_rollup(spark, sf_dir, work, n_source_files=4)
+    out = ops.incremental_hourly_rollup(spark, sf_dir, work)
     versions = sorted(glob.glob(f"{work}/agg/v=*"))
     assert len(versions) >= 2, versions
     direct = (
