@@ -276,7 +276,9 @@ def prune_and_validated_cast(
     The attached-parse frame is cached (``caching.tracked_persist``; the
     default level spills to disk) between the auxiliary aggregate and the
     caller's final action, so an expensive source (ragged JSON: parse +
-    synonym coalesce + dedup shuffle + regex battery) is computed ONCE
+    synonym coalesce + dedup window + regex battery; the window shuffles
+    only for a source above ``spark.sql.files.openCostInBytes``, which
+    ``sources.readers`` reads in more than one partition) is computed ONCE
     instead of once per action. The query registry releases the tracked
     cache when the next query builds; a caller outside it calls
     ``caching.release_tracked()`` once its result is materialized, or the

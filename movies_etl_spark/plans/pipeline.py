@@ -12,6 +12,11 @@ Differences by design (SURVEY.md §3.1):
 - the 26M-row ratings table is semi-joined to a broadcast of the merged
   movies' keys, then aggregated (one shuffle on movieId) into at most one
   row per kept movie BEFORE joining — the join itself is a broadcast;
+- that movieId shuffle, like the wiki dedup's and the validation
+  tallies' shuffles, applies only to sources above
+  ``spark.sql.files.openCostInBytes`` (4 MB by default):
+  ``sources.readers`` reads a smaller source as one partition, which
+  every window, aggregate and join above it already satisfies;
 - the merged movies are built once: ``merge_movies`` caches its frame, so
   the ``movies`` and ``movies_ratings`` sinks and the key broadcast share
   one parse of the kaggle CSV and one wiki join;

@@ -805,7 +805,10 @@ def q_scan_json(spark, sf_dir):
 )
 def q_scan_csv(spark, sf_dir):
     """S2/S3 (challenge.py:26-27): header-CSV scan with explicit schema.
-    Written distributed (one file per partition), read back distributed."""
+    Written distributed (one file per partition), read back as one
+    partition while the part files total at most
+    ``spark.sql.files.openCostInBytes`` (``sources.readers``), in
+    parallel above it."""
     c = _t(spark, sf_dir, "customer")
     path = _scratch("scan_csv", sf_dir)
     c.write.mode("overwrite").option("header", "true").csv(f"{path}/customer_csv")

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import uuid
 from collections.abc import Callable
 from typing import NamedTuple
@@ -744,7 +745,11 @@ def lsh_dedup_batch(
     the committed batches strictly below ``batch_id``, candidate-joins
     batch-touched
     buckets, Jaccard-verifies, and writes survivors/bands/shingles into
-    ``batch=N``-addressed dirs (overwrite → retry-idempotent)."""
+    ``batch=N``-addressed dirs (overwrite → retry-idempotent).
+
+    A failed survivor write (a band-bucket guard trip) un-commits the
+    batch's index before the error propagates, so a caller that skips
+    the batch dedups later batches only against documents it emitted."""
     from movies_etl_spark.operators import dedup as D
 
     sh_b = D.shingled(batch_df, "text", "doc_id").cache()
@@ -760,11 +765,12 @@ def lsh_dedup_batch(
     # broadcast build afterwards is a cache read. Write order within
     # the batch is free to choose: a retried batch never reads its own
     # writes (_versions lists strictly below it) and every write
-    # overwrites its own batch=N dir, so idempotence is unchanged; a
-    # guard trip now lands after the index writes, which a retry (or
-    # the next manual run) overwrites identically.
-    _write_version(bands_b, f"{work_dir}/bands/batch={batch_id}")
-    _write_version(sh_b, f"{work_dir}/shingles/batch={batch_id}")
+    # overwrites its own batch=N dir, so idempotence is unchanged. A
+    # guard trip lands after the index writes, so the survivor write
+    # below takes them back out when it fails.
+    index_dirs = [f"{work_dir}/{d}/batch={batch_id}" for d in ("bands", "shingles")]
+    _write_version(bands_b, index_dirs[0])
+    _write_version(sh_b, index_dirs[1])
     # a batch joins the index only once BOTH its dirs are committed
     ids = sorted(
         set(_versions(f"{work_dir}/bands", "batch=", batch_id))
@@ -839,11 +845,22 @@ def lsh_dedup_batch(
         batch_df["doc_id"] == dropped["id_b"],
         "left_anti",
     )
-    survivors.write.mode("overwrite").parquet(
-        f"{work_dir}/out/batch={batch_id}"
-    )
-    sh_b.unpersist()
-    bands_b.unpersist()
+    try:
+        survivors.write.mode("overwrite").parquet(
+            f"{work_dir}/out/batch={batch_id}"
+        )
+    except Exception:
+        # markers first: from then on _versions skips both dirs, even if
+        # the removal below is cut short
+        for d in index_dirs:
+            if os.path.exists(f"{d}/_SUCCESS"):
+                os.remove(f"{d}/_SUCCESS")
+        for d in index_dirs:
+            shutil.rmtree(d, ignore_errors=True)
+        raise
+    finally:
+        sh_b.unpersist()
+        bands_b.unpersist()
 
 
 def lsh_dedup_stream(

@@ -99,6 +99,8 @@ def test_shared_cli_parser():
 @pytest.mark.parametrize(
     "tool, argv",
     [
+        ("driver_sim", ["--sf"]),
+        ("driver_sim", ["--bogus"]),
         ("dump_plans", ["out", "sfx", "q", "--sf"]),
         ("dump_plans", ["out", "sfx"]),
         ("dump_plans", ["out", "sfx", "q", "--top", "3"]),

@@ -512,6 +512,42 @@ def test_movies_ratings_reads_cached_movies(spark, sf_dir):
     assert len(live) == 1 and "movieId:" in live[0], leaves
 
 
+def _shuffles(df) -> int:
+    """Shuffle Exchanges in ``df``'s final executed plan, cached plans
+    included (a BroadcastExchange or ReusedExchange is not counted)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(re.findall(r"(?<![A-Za-z])Exchange ", plan))
+
+
+def test_small_sources_pipeline_never_shuffles(spark, sf_dir, tmp_path):
+    """Sources under ``spark.sql.files.openCostInBytes`` are read as one
+    partition, so no window, aggregate or join of the reference pipeline
+    above them shuffles. Lowered below the fixture files' sizes, the
+    same pipeline shuffles again and still matches its goldens."""
+    from test_oracle_parity import _assert_matches_oracle
+
+    from movies_etl_spark.operators import caching
+    from movies_etl_spark.plans import fixtures, pipeline
+    from movies_etl_spark.session import temp_confs
+
+    paths = fixtures.write_fixture_files(str(tmp_path))
+    try:
+        outs = pipeline.run_pipeline(spark, *paths)
+        assert {k: _shuffles(df) for k, df in outs.items()} == dict.fromkeys(outs, 0)
+        caching.release_tracked()
+        with temp_confs(spark, {"spark.sql.files.openCostInBytes": "1024"}):
+            outs = pipeline.run_pipeline(spark, *paths)
+            assert sum(_shuffles(df) for df in outs.values()) >= 1
+            caching.release_tracked()
+            for name in ("movies_etl_movies", "movies_etl_movies_ratings",
+                         "movies_etl_ratings"):
+                _assert_matches_oracle(spark, name, sf_dir)
+                caching.release_tracked()
+    finally:
+        caching.release_tracked()
+
+
 def test_pagerank_single_fact_scan(spark, sf_dir):
     """The PageRank edge table is built once (persisted) from one scan
     of the fact table; the per-round joins must consume the cached edge

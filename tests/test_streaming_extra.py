@@ -321,6 +321,41 @@ def test_lsh_torn_index_batch_is_not_read(spark, tmp_path):
     assert survivors(torn) == survivors(fresh) == [2, 3]
 
 
+def test_lsh_guard_trip_uncommits_its_batch_index(spark, tmp_path):
+    """A batch whose band-bucket guard trips leaves no index behind: a
+    caller that catches the error and skips the batch dedups the next
+    batch exactly as if the tripped batch had never arrived."""
+    import os
+
+    from movies_etl_spark.streaming.ops import lsh_dedup_batch
+
+    text = "the quick brown fox jumps over the lazy dog by the river bank"
+    schema = "doc_id BIGINT, text STRING"
+    b0 = spark.createDataFrame(
+        [(1, "versioned parquet stores list committed dirs only")], schema
+    )
+    b1 = spark.createDataFrame([(10 + i, text) for i in range(8)], schema)
+    b2 = spark.createDataFrame(
+        [(30, text), (31, "a micro batch joins the index once it commits")],
+        schema,
+    )
+    tripped, fresh = str(tmp_path / "tripped"), str(tmp_path / "fresh")
+    lsh_dedup_batch(spark, b0, 0, tripped)
+    with pytest.raises(Exception, match="band bucket"):
+        lsh_dedup_batch(spark, b1, 1, tripped, max_bucket_rows=4)
+    for store in ("bands", "shingles"):
+        assert not os.path.exists(f"{tripped}/{store}/batch=1")
+    lsh_dedup_batch(spark, b2, 2, tripped)
+    lsh_dedup_batch(spark, b0, 0, fresh)
+    lsh_dedup_batch(spark, b2, 2, fresh)
+
+    def survivors(store):
+        out = spark.read.parquet(f"{store}/out/batch=2").collect()
+        return sorted(r.doc_id for r in out)
+
+    assert survivors(tripped) == survivors(fresh) == [30, 31]
+
+
 @pytest.mark.parametrize(
     "state_name,row",
     [

@@ -3,7 +3,13 @@
 name at sf0.01 on a VANILLA session (driver-style) and exact-compare
 values against the DuckDB oracle — stricter than the driver's hash
 (sorted full-frame string equality, date-normalized per the /verify
-gotcha)."""
+gotcha).
+
+Usage: python tools/driver_sim.py [--all] [--sf DIR] [name ...]
+``--all`` sweeps every registered query, positional names run just
+those, and ``--sf`` points at another testdata directory (default
+sf0.01).
+"""
 from __future__ import annotations
 
 import os
@@ -11,13 +17,16 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
 
-import duckdb
-from pyspark.sql import SparkSession
+import duckdb  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
 
-import __spark_entry__ as m
+import _cli  # noqa: E402  (tools/_cli.py — shared flag parsing)
+import __spark_entry__ as m  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
+USAGE = "usage: driver_sim.py [--all] [--sf DIR] [name ...]"
 
 
 def norm(df):
@@ -29,6 +38,25 @@ def norm(df):
 
 
 def main() -> None:
+    vals, names = _cli.parse_args(
+        sys.argv[1:], {"--all": _cli.BOOL, "--sf": str}, USAGE, positionals=True
+    )
+    sf = vals.get("sf", SF)
+    qs, osql = m.queries(), m.oracle_sql()
+    # --all sweeps every registered query (the union the judge replays),
+    # not just the driver's 50-name round window — run it after any
+    # late-round rewrite to prove no off-window row went stale.
+    # Positional names run just those queries — the fast loop while
+    # iterating on a rewrite, before the full-window pass.
+    if vals.get("all"):
+        window = list(qs)
+    elif names:
+        unknown = [n for n in names if n not in qs]
+        if unknown:
+            sys.exit(f"unknown queries: {unknown}\n{USAGE}")
+        window = names
+    else:
+        window = m._CURRENT_PRIORITY[:50]
     spark = SparkSession.builder.master("local[8]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
@@ -37,29 +65,13 @@ def main() -> None:
         "orders", "lineitem", "events", "documents", "embeddings",
     ]:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
         )
-    qs, osql = m.queries(), m.oracle_sql()
-    # --all sweeps every registered query (the union the judge replays),
-    # not just the driver's 50-name round window — run it after any
-    # late-round rewrite to prove no off-window row went stale.
-    # Positional names (r12) run just those queries — the fast loop
-    # while iterating on a rewrite, before the full-window pass.
-    names = [a for a in sys.argv[1:] if not a.startswith("--")]
-    if "--all" in sys.argv:
-        window = list(m.queries())
-    elif names:
-        unknown = [n for n in names if n not in qs]
-        if unknown:
-            raise SystemExit(f"unknown queries: {unknown}")
-        window = names
-    else:
-        window = m._CURRENT_PRIORITY[:50]
     failures = []
     for i, name in enumerate(window):
         t0 = time.perf_counter()
         try:
-            got = qs[name](spark, SF).toPandas()
+            got = qs[name](spark, sf).toPandas()
             if name not in osql:
                 print(f"{i+1:2d} {name}: rows-only ({len(got)} rows)")
                 continue
