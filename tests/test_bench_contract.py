@@ -99,8 +99,6 @@ def test_shared_cli_parser():
 @pytest.mark.parametrize(
     "tool, argv",
     [
-        ("driver_sim", ["--sf"]),
-        ("driver_sim", ["--bogus"]),
         ("dump_plans", ["out", "sfx", "q", "--sf"]),
         ("dump_plans", ["out", "sfx"]),
         ("dump_plans", ["out", "sfx", "q", "--top", "3"]),
@@ -108,6 +106,8 @@ def test_shared_cli_parser():
         ("survey_build_exec", ["q", "--reps"]),
         ("survey_build_exec", ["q", "--reps=x"]),
         ("survey_build_exec", ["--sf", "dir"]),
+        ("driver_sim", ["--sf"]),
+        ("driver_sim", ["--bogus"]),
     ],
 )
 def test_tool_flag_errors_exit_with_usage(tool, argv, tmp_path):
