@@ -211,16 +211,8 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
     already_decided = (
         spark.conf.get("spark.movies_etl.shufflePinned", "") == "1"
     )
-    # Uniform perf-pin opt-out: a harness that
-    # deliberately set the STOCK values (200 partitions, SMJ preferred,
-    # snappy, INT96) before the first pin is indistinguishable from an
-    # untouched default, so it can declare the intent up front —
-    # SPARK_GRAFT_KEEP_SESSION_CONFS=1 skips every perf pin below
-    # (documented in SCALE.md).
-    keep_all = os.environ.get("SPARK_GRAFT_KEEP_SESSION_CONFS") == "1"
     if (
         not already_decided
-        and not keep_all
         and spark.conf.get("spark.sql.shuffle.partitions", "200") == "200"
     ):
         spark.conf.set(
@@ -230,7 +222,7 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
     # pin: replace only the untouched stock default, so a harness that
     # deliberately re-tunes after the first pin is never clobbered).
     # Rationale + measurements in get_spark above / OPTIMIZATION_r18.md.
-    if not already_decided and not keep_all:
+    if not already_decided:
         if spark.conf.get("spark.sql.join.preferSortMergeJoin", "true") == "true":
             spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
         if (

@@ -20,6 +20,10 @@ def spark():
         extra_conf={
             # keep catalog tables (bucketing tests) out of the repo cwd
             "spark.sql.warehouse.dir": "/tmp/movies_etl_warehouse",
+            # keep every stage in the status store: past the default
+            # 1,000, eviction drops skipped stages first, including ones
+            # a StatusProbe.since in a later test still reads
+            "spark.ui.retainedStages": "100000",
         },
     )
     yield spark

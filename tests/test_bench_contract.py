@@ -65,9 +65,10 @@ def test_bench_output_contract(tmp_path, sf_dir):
 
 
 def test_shared_cli_parser():
-    """tools/_cli.parse_args — the one flag-parsing loop the three
-    diagnostic tools share (r11 consolidated three hand-rolled copies
-    that had each needed the same guard fixes individually)."""
+    """tools/_cli.parse_args — the one flag-parsing loop that
+    driver_sim, query_profile and scale_lsh_store share (r11
+    consolidated three hand-rolled copies that had each needed the same
+    guard fixes individually)."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -96,24 +97,22 @@ def test_shared_cli_parser():
         cli.parse_args(["stray"], flags, "u")
 
 
+# explicit ids: adding or removing a case renames no other case
 @pytest.mark.parametrize(
     "tool, argv",
     [
-        ("dump_plans", ["out", "sfx", "q", "--sf"]),
-        ("dump_plans", ["out", "sfx"]),
-        ("dump_plans", ["out", "sfx", "q", "--top", "3"]),
-        ("dump_plans", []),
-        ("survey_build_exec", ["q", "--reps"]),
-        ("survey_build_exec", ["q", "--reps=x"]),
-        ("survey_build_exec", ["--sf", "dir"]),
-        ("driver_sim", ["--sf"]),
-        ("driver_sim", ["--bogus"]),
+        pytest.param("query_profile", ["q", "--sf"], id="query_profile:--sf"),
+        pytest.param("query_profile", ["q", "--reps=x"], id="query_profile:--reps=x"),
+        pytest.param("query_profile", ["q", "--top", "3"], id="query_profile:--top"),
+        pytest.param("query_profile", ["--plans"], id="query_profile:--plans"),
+        pytest.param("driver_sim", ["--sf"], id="driver_sim:--sf"),
+        pytest.param("driver_sim", ["--bogus"], id="driver_sim:--bogus"),
     ],
 )
 def test_tool_flag_errors_exit_with_usage(tool, argv, tmp_path):
-    """A trailing flag without its value, an unparseable value, an
-    unknown flag or missing positionals ends in the usage message before
-    any Spark session starts — never in a traceback."""
+    """A trailing flag without its value, an unparseable value or an
+    unknown flag ends in the usage message before any Spark session
+    starts — never in a traceback."""
     proc = subprocess.run(
         [sys.executable, str(ROOT / "tools" / f"{tool}.py"), *argv],
         cwd=tmp_path, capture_output=True, text=True, timeout=120,

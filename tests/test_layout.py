@@ -138,19 +138,6 @@ def test_pin_session_conf_replaces_stock_int96_once(spark):
     assert spark.conf.get(key) == PARQUET_TIMESTAMP_TYPE
 
 
-def test_pin_session_conf_keep_env_leaves_int96(spark, monkeypatch):
-    """SPARK_GRAFT_KEEP_SESSION_CONFS=1 skips the timestamp-type pin like
-    every other perf pin."""
-    from movies_etl_spark.session import pin_session_conf
-
-    key = "spark.sql.parquet.outputTimestampType"
-    monkeypatch.setenv("SPARK_GRAFT_KEEP_SESSION_CONFS", "1")
-    fresh = spark.newSession()
-    fresh.conf.set(key, "INT96")
-    pin_session_conf(fresh)
-    assert fresh.conf.get(key) == "INT96"
-
-
 def test_no_module_level_bool_gates():
     """No engine module binds an UPPER_CASE name to a True/False literal
     at module level: each query and kernel has one code path, not an

@@ -1194,8 +1194,9 @@ def test_cms_join_size_fused_scans_lineitem_twice(spark, sf_dir):
 
 
 def test_funnel_one_pass_scans_events_once(spark, sf_dir):
-    """r14 one-pass funnel (found by tools/audit_scans.py — the
-    per-stage form read events five times at runtime): one fact scan,
+    """r14 one-pass funnel (found by the resident-scan count that
+    tools/query_profile.py prints — the per-stage form read events
+    five times at runtime): one fact scan,
     and the three conditional stage minimums stack over ONE user_id
     exchange (windows share the partitioning; the dedup aggregate
     reuses it — the only other exchanges are the 1-row global count

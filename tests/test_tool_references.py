@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import ast
 import re
+import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -32,7 +33,7 @@ def test_every_named_tool_exists():
     }
     # README and SCALE.md name these live tools; missing matches mean
     # the pattern or the scanned paths broke and the check is vacuous
-    assert {"survey_build_exec", "audit_scans", "scale_curves"} <= {
+    assert {"query_profile", "scale_curves"} <= {
         name for _, name in refs
     }
     dangling = sorted(
@@ -64,3 +65,13 @@ def test_no_tool_puts_a_literal_absolute_path_on_sys_path():
             ):
                 offenders.append(f"{tool.name}:{node.lineno}")
     assert not offenders, offenders
+
+
+def test_no_tool_shadows_a_stdlib_module():
+    """Running ``tools/<name>.py`` puts ``tools/`` first on ``sys.path``,
+    so a tool named like a stdlib module replaces it for every import in
+    that process: a tool named ``profile.py`` breaks pyspark, whose
+    ``import cProfile`` imports ``profile``."""
+    stems = {p.stem for p in (ROOT / "tools").glob("*.py")}
+    shadows = sorted(stems & sys.stdlib_module_names)
+    assert not shadows, shadows

@@ -1,8 +1,8 @@
 """Shared flag parsing for the diagnostic tools.
 
 One implementation of the ``--flag VALUE`` / ``--flag=VALUE`` /
-unknown-arg-usage-error loop, used by audit_scans, driver_sim,
-dump_plans, scale_lsh_store and survey_build_exec.
+unknown-arg-usage-error loop, used by driver_sim, query_profile and
+scale_lsh_store.
 Hand-rolled copies of it had each needed the same guard fixes
 individually (one was a ``startswith`` prefix bug; others raised
 ``IndexError`` on a trailing ``--sf``), so copies diverge by
